@@ -26,6 +26,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // a failing entry must leave NO output: a previous run's parquet
+      // left in place would be scored against the oracle as a pass
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(outDir, name))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -122,6 +122,12 @@ object Bbox {
   }
 }
 
+/** One clipped voxel of [[Geom.clipWalk]]: its coordinates and its
+  * index into the decoded block (primitive arguments, so the per-voxel
+  * call boxes nothing).
+  */
+trait VoxelSink { def apply(x: Long, y: Long, z: Long, i: Int): Unit }
+
 object Geom {
   /** Ceil division for non-negative denominators. */
   def ceilDiv(a: Long, b: Long): Long = Math.floorDiv(a + b - 1, b)
@@ -151,6 +157,57 @@ object Geom {
     val lo = volumeBounds.minpt + grid * chunkSize
     val hi = lo + chunkSize
     Bbox(lo, hi.min(volumeBounds.maxpt))
+  }
+
+  /** The decode-and-clip walk every cutout shares (rx.py:239-379's
+    * paste of each decoded chunk into the request buffer, as a
+    * generator): visit each voxel of the F-order block at `lo` of
+    * shape `bs` that lies inside `clip`, z-major, handing `sink` its
+    * coordinates and its index into the block. `n` is the decoded
+    * voxel count; with `planes` stacked planes (channel-slowest
+    * layouts) it must be exactly `planes` block volumes, so a short,
+    * oversized or mis-shaped chunk fails here as an
+    * IllegalArgumentException, never as an index error or as voxels
+    * pasted into a neighbour's cell.
+    */
+  def clipWalk(n: Int, lo: Vec3, bs: Vec3, clip: Bbox, planes: Int = 1)(
+      sink: VoxelSink): Unit = {
+    val vol = bs.x * bs.y * bs.z
+    require(n == vol * planes,
+      s"decoded block has $n voxels; shape $bs at $lo needs ${vol * planes}")
+    val lox = math.max(lo.x, clip.minpt.x); val hix = math.min(lo.x + bs.x, clip.maxpt.x)
+    val loy = math.max(lo.y, clip.minpt.y); val hiy = math.min(lo.y + bs.y, clip.maxpt.y)
+    val loz = math.max(lo.z, clip.minpt.z); val hiz = math.min(lo.z + bs.z, clip.maxpt.z)
+    var z = loz
+    while (z < hiz) {
+      var y = loy
+      while (y < hiy) {
+        var i = ((lox - lo.x) + bs.x * ((y - lo.y) + bs.y * (z - lo.z))).toInt
+        var x = lox
+        while (x < hix) {
+          sink(x, y, z, i)
+          i += 1
+          x += 1
+        }
+        y += 1
+      }
+      z += 1
+    }
+  }
+
+  /** [[clipWalk]] collected as (x, y, z, value) rows, into one array
+    * sized up front from the clipped extent.
+    */
+  def clipRows(vox: Array[Long], lo: Vec3, bs: Vec3, clip: Bbox)
+      : Seq[(Long, Long, Long, Long)] = {
+    val out = new Array[(Long, Long, Long, Long)](
+      Bbox(lo, lo + bs).intersection(clip).volume.toInt)
+    var k = 0
+    clipWalk(vox.length, lo, bs, clip) { (x, y, z, i) =>
+      out(k) = (x, y, z, vox(i))
+      k += 1
+    }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
   }
 
   /** All chunk filenames covering bbox (image/common.py:137-155). */

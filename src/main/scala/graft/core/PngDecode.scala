@@ -95,6 +95,15 @@ object PngDecode {
         if (k == 0 && (inf.needsInput() || inf.needsDictionary())) return None
         off += k
       }
+      // drain to the end of the zlib stream: the adler32 trailer is
+      // only checked (DataFormatException on mismatch) once the
+      // inflater reads past the last data byte, and a stream that
+      // still yields output here is longer than its IHDR allows
+      val spare = new Array[Byte](1)
+      while (!inf.finished()) {
+        if (inf.inflate(spare) > 0 || inf.needsInput() || inf.needsDictionary())
+          return None
+      }
     } catch {
       case _: java.util.zip.DataFormatException => return None
     } finally inf.end()

@@ -135,25 +135,7 @@ object ChunkEngine {
       val vox =
         if (payload == null) new Array[Long]((CsX * CsY * CsZ).toInt)
         else Codec.decodeRawToLongs(payload, dtypeBytes)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      var dz = 0L
-      while (dz < CsZ) {
-        var dy = 0L
-        while (dy < CsY) {
-          var dx = 0L
-          while (dx < CsX) {
-            val x = gx * CsX + dx; val y = gy * CsY + dy; val z = gz * CsZ + dz
-            if (bbox.contains(Vec3(x, y, z))) {
-              val v = vox((dx + CsX * (dy + CsY * dz)).toInt)
-              out += ((x, y, z, v))
-            }
-            dx += 1
-          }
-          dy += 1
-        }
-        dz += 1
-      }
-      out.toSeq
+      Geom.clipRows(vox, Vec3(gx * CsX, gy * CsY, gz * CsZ), chunkSize, bbox)
     })
     pruned
       .select(explode(decodeUdf(col("gx"), col("gy"), col("gz"),

@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Bbox, Codec, Compresso, Vec3}
+import graft.core.{Bbox, Codec, Compresso, Geom, Vec3}
 import graft.sources.{PrecomputedIO, ShardedIO}
 
 /** Golden-fixture parity over the reference's OWN committed compresso
@@ -100,24 +100,14 @@ object CompressoQueries {
             val (nx, ny, nz) = ((bx1 - bx0).toInt, (by1 - by0).toInt,
               (zhi - zlo).toInt)
             val sub = new Array[Long](nx * ny * nz)
+            val slab = Bbox(Vec3(bx0, by0, zlo), Vec3(bx1, by1, zhi))
             it.foreach { case (cx0, cy0, cz0, path) =>
               val (cd, vox) = Compresso.decode(
                 Codec.gunzip(Files.readAllBytes(Paths.get(path))))
-              var z = zlo
-              while (z < zhi) {
-                var y = math.max(by0, cy0)
-                val yHi = math.min(by1, cy0 + cdim)
-                while (y < yHi) {
-                  var x = math.max(bx0, cx0)
-                  val xHi = math.min(bx1, cx0 + cdim)
-                  while (x < xHi) {
-                    sub(((x - bx0) + nx * ((y - by0) + ny * (z - zlo))).toInt) =
-                      vox(((x - cx0) + cd.x * ((y - cy0) + cd.y * (z - cz0))).toInt)
-                    x += 1
-                  }
-                  y += 1
-                }
-                z += 1
+              Geom.clipWalk(vox.length, Vec3(cx0, cy0, cz0), cd, slab) {
+                (x, y, z, i) =>
+                  sub(((x - bx0) + nx * ((y - by0) + ny * (z - zlo))).toInt) =
+                    vox(i)
               }
             }
             // renumber: slab-local dense alphabet, first-seen in F-order

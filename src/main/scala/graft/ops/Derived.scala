@@ -174,34 +174,19 @@ object Derived {
   val clipVoxelsFn: (Long, Long, Long, Long, Long, Long, Array[Byte],
       Long, Long, Long, Long, Long, Long) => Seq[ClipVox] =
     (x0, y0, z0, x1, y1, z1, payload, bx0, by0, bz0, bx1, by1, bz1) => {
-      val sx = x1 - x0; val sy = y1 - y0
       // corrupt-input contract (HostileDecodeSpec): a null payload
       // (fill_missing view) or a short/truncated chunk must fail as a
       // typed IllegalArgumentException at the decode boundary, not as
-      // an NPE/AIOOBE from the voxel indexing below
+      // an NPE/AIOOBE from the voxel indexing (clipWalk checks the size)
       require(payload != null,
         "graft_clip_voxels: null payload (fill_missing view rows " +
           "must be filtered or coalesced before the clip)")
       val vox = Codec.decodeRawToLongs(payload, 4)
-      require(vox.length == sx * sy * (z1 - z0),
-        s"graft_clip_voxels: chunk [$x0,$y0,$z0..$x1,$y1,$z1] declares " +
-          s"${sx * sy * (z1 - z0)} voxels but payload decodes " +
-          s"${vox.length} (truncated or mis-sized chunk object)")
       val out = scala.collection.mutable.ArrayBuffer.empty[ClipVox]
-      var z = math.max(z0, bz0)
-      while (z < math.min(z1, bz1)) {
-        var y = math.max(y0, by0)
-        while (y < math.min(y1, by1)) {
-          var x = math.max(x0, bx0)
-          while (x < math.min(x1, bx1)) {
-            out += ClipVox(x, y, z,
-              vox(((x - x0) + sx * ((y - y0) + sy * (z - z0))).toInt))
-            x += 1
-          }
-          y += 1
-        }
-        z += 1
-      }
+      Geom.clipWalk(vox.length, Vec3(x0, y0, z0),
+        Vec3(x1 - x0, y1 - y0, z1 - z0),
+        Bbox(Vec3(bx0, by0, bz0), Vec3(bx1, by1, bz1)))(
+        (x, y, z, i) => out += ClipVox(x, y, z, vox(i)))
       out.toSeq
     }
 }

@@ -387,23 +387,11 @@ object RealLayerQueries {
       f: Long => Long): DataFrame = {
     val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
         z1: Long, payload: Array[Byte]) => {
-      val sx = x1 - x0; val sy = y1 - y0
       val vox = Codec.decodeRawToLongs(payload, 4)
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      var z = math.max(z0, bbox.minpt.z)
-      while (z < math.min(z1, bbox.maxpt.z)) {
-        var y = math.max(y0, bbox.minpt.y)
-        while (y < math.min(y1, bbox.maxpt.y)) {
-          var x = math.max(x0, bbox.minpt.x)
-          while (x < math.min(x1, bbox.maxpt.x)) {
-            val v = vox(((x - x0) + sx * ((y - y0) + sy * (z - z0))).toInt)
-            out += ((x, y, z, f(v)))
-            x += 1
-          }
-          y += 1
-        }
-        z += 1
-      }
+      Geom.clipWalk(vox.length, Vec3(x0, y0, z0),
+        Vec3(x1 - x0, y1 - y0, z1 - z0), bbox)(
+        (x, y, z, i) => out += ((x, y, z, f(vox(i)))))
       out.toSeq
     })
     chunks

@@ -218,45 +218,24 @@ object N5IO {
     val dtb = m.dtypeBytes
     val comp = m.compression
     val bounds = Bbox(Vec3(0, 0, 0), m.dimensions)
-    val pts = Geom.gridpoints(bbox, bounds, bs)
-    val clip = bbox.intersection(bounds)
-    val dirStr = dir
-    val dsName = ds
-    val fm = fillMissing
-    import spark.implicits._
-    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6; shared rule in ScanSizing)
-      .repartition(ScanSizing.partitions(spark, pts.size,
-        bs.x * bs.y * bs.z * dtb))
-      .flatMap { case (gx, gy, gz) =>
-        val p = Paths.get(dirStr, dsName, gx.toString, gy.toString,
-          gz.toString)
-        val (dims, vox) =
-          if (!Files.exists(p)) {
-            if (!fm) throw new java.util.NoSuchElementException(
-              s"missing N5 block ($gx,$gy,$gz) in $dirStr — pass " +
-                "fillMissing=true to read absent blocks as background")
-            val cb = Geom.chunkBbox(Vec3(gx, gy, gz), bounds, bs)
-            (cb.size, new Array[Long]((cb.size.x * cb.size.y * cb.size.z).toInt))
-          } else decodeBlock(Files.readAllBytes(p), dtb, comp)
-        val lo = Vec3(gx * bs.x, gy * bs.y, gz * bs.z)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-        var z = math.max(lo.z, clip.minpt.z)
-        while (z < math.min(lo.z + dims.z, clip.maxpt.z)) {
-          var y = math.max(lo.y, clip.minpt.y)
-          while (y < math.min(lo.y + dims.y, clip.maxpt.y)) {
-            var x = math.max(lo.x, clip.minpt.x)
-            while (x < math.min(lo.x + dims.x, clip.maxpt.x)) {
-              out += ((x, y, z,
-                vox(((x - lo.x) + dims.x * ((y - lo.y) + dims.y * (z - lo.z))).toInt)))
-              x += 1
-            }
-            y += 1
-          }
-          z += 1
+    ScanSizing.cutoutGrid(spark, bbox, bounds, bs, bs.x * bs.y * bs.z * dtb,
+      { g =>
+        val p = Paths.get(dir, ds, g.x.toString, g.y.toString, g.z.toString)
+        if (!Files.exists(p)) {
+          if (!fillMissing) throw new java.util.NoSuchElementException(
+            s"missing N5 block (${g.x},${g.y},${g.z}) in $dir — pass " +
+              "fillMissing=true to read absent blocks as background")
+          val cb = Geom.chunkBbox(g, bounds, bs)
+          (cb.size, new Array[Long](cb.volume.toInt))
+        } else {
+          val (dims, vox) = decodeBlock(Files.readAllBytes(p), dtb, comp)
+          // edge blocks carry clamped dims; a header claiming MORE than
+          // the block size would paste voxels into the neighbour's cell
+          require(dims.x <= bs.x && dims.y <= bs.y && dims.z <= bs.z,
+            s"corrupt n5 block $p: header dims $dims exceed blockSize $bs")
+          (dims, vox)
         }
-        out
-      }.toDF("x", "y", "z", "label")
+      })
   }
 
   /** Cutout one level of a multiScale pyramid: requires the root

@@ -226,11 +226,9 @@ final class NgDataWriter(layerDir: String, key: String, bounds: Bbox,
   override def write(r: InternalRow): Unit = {
     val g = Vec3(r.getLong(idx(0)), r.getLong(idx(1)), r.getLong(idx(2)))
     val payload = r.getBinary(idx(3))
-    val name = Geom.chunkBbox(g, bounds, cs).toFilename
-    if (gzipped)
-      java.nio.file.Files.write(dir.resolve(name + ".gz"), Codec.gzip(payload))
-    else
-      java.nio.file.Files.write(dir.resolve(name), payload)
+    PrecomputedIO.writeChunkObject(dir.toString,
+      Geom.chunkBbox(g, bounds, cs).toFilename, payload,
+      if (gzipped) "gzip" else "none")
     n += 1
   }
   override def commit(): WriterCommitMessage = NgCommitMessage(n)
@@ -602,19 +600,11 @@ final class NgPartitionReader(part: NgInputPartition, required: StructType,
     val cb = Geom.chunkBbox(g, bounds, cs)
     val payload: Array[Byte] =
       if (!needPayload) null
-      else {
-        val p = java.nio.file.Paths.get(part.layerDir, part.key, cb.toFilename)
-        val gz = java.nio.file.Paths.get(p.toString + ".gz")
-        val br = java.nio.file.Paths.get(p.toString + ".br")
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.readAllBytes(p)
-        else if (java.nio.file.Files.exists(gz))
-          Codec.gunzip(java.nio.file.Files.readAllBytes(gz))
-        else if (java.nio.file.Files.exists(br))
-          Brotli.decompress(java.nio.file.Files.readAllBytes(br),
-            maxOutput = PrecomputedIO.chunkDecodeCeiling(cs))
-        else if (fillMissing) null
-        else throw new java.io.FileNotFoundException(
+      else PrecomputedIO.readChunkObject(
+          java.nio.file.Paths.get(part.layerDir, part.key, cb.toFilename), cs) match {
+        case Some(b) => b
+        case None if fillMissing => null
+        case None => throw new java.io.FileNotFoundException(
           s"missing chunk ${cb.toFilename} (set fill_missing=true to background-fill)")
       }
     val all: Array[Any] = Array(g.x, g.y, g.z,

@@ -40,12 +40,18 @@ object PrecomputedIO {
     Paths.get(layerDir, scale.key, name)
   }
 
-  /** Read one chunk object; tries `name` then `name.gz` (gunzipping).
+  /** Read one chunk object; tries `name`, `name.gz`, `name.br`.
     * Returns None when the object is missing (S15 fill_missing decides
     * what that means upstream).
     */
-  def readChunkBytes(layerDir: String, scale: ScaleMeta, g: Vec3): Option[Array[Byte]] = {
-    val p = chunkPath(layerDir, scale, g)
+  def readChunkBytes(layerDir: String, scale: ScaleMeta, g: Vec3): Option[Array[Byte]] =
+    readChunkObject(chunkPath(layerDir, scale, g), scale.chunkSize)
+
+  /** The one object get for precomputed chunks: the stored object is
+    * `p` itself, or `p.gz` / `p.br` when second-stage compressed (the
+    * suffix names the codec, datasource/precomputed/common.py:18-29).
+    */
+  def readChunkObject(p: Path, chunkSize: Vec3): Option[Array[Byte]] = {
     val gz = Paths.get(p.toString + ".gz")
     val br = Paths.get(p.toString + ".br")
     if (Files.exists(p)) Some(Files.readAllBytes(p))
@@ -54,15 +60,23 @@ object PrecomputedIO {
       // ceiling = chunk voxels x widest dtype (uint64) + slack: a corrupt
       // object must error, not OOM the executor (see Brotli.decompress)
       Some(Brotli.decompress(Files.readAllBytes(br),
-        maxOutput = chunkDecodeCeiling(scale)))
+        maxOutput = chunkDecodeCeiling(chunkSize)))
     else None
+  }
+
+  /** The one object put for precomputed chunks: `payload` under
+    * `dir/name`, second-stage compressed per `method` ("gzip" -> `.gz`,
+    * "br" -> `.br`, "none" -> bare name; the dual of [[readChunkObject]]).
+    */
+  def writeChunkObject(dir: String, name: String, payload: Array[Byte],
+      method: String): Unit = method match {
+    case "gzip" => Files.write(Paths.get(dir, name + ".gz"), Codec.gzip(payload))
+    case "br" => Files.write(Paths.get(dir, name + ".br"), Brotli.compress(payload))
+    case _ => Files.write(Paths.get(dir, name), payload)
   }
 
   /** Decoded-payload ceiling for one chunk (second-stage decompression
     * bound; the image codec then enforces exact size). */
-  def chunkDecodeCeiling(scale: ScaleMeta): Int =
-    chunkDecodeCeiling(scale.chunkSize)
-
   def chunkDecodeCeiling(chunkSize: Vec3): Int = {
     val voxels = chunkSize.x * chunkSize.y * chunkSize.z
     (math.min(voxels * 8L + (1L << 20), Int.MaxValue.toLong)).toInt
@@ -106,18 +120,8 @@ object PrecomputedIO {
           val g = Vec3(r.getLong(0), r.getLong(1), r.getLong(2))
           val payload = r.getAs[Array[Byte]](3)
           val black = deleteBlack.exists(bg => java.util.Arrays.equals(bg, payload))
-          if (!black) {
-            val name = Geom.chunkBbox(g, bounds, cs).toFilename
-            method match {
-              case "gzip" =>
-                Files.write(Paths.get(dirStr, name + ".gz"), Codec.gzip(payload))
-              case "br" =>
-                Files.write(Paths.get(dirStr, name + ".br"),
-                  graft.core.Brotli.compress(payload))
-              case _ =>
-                Files.write(Paths.get(dirStr, name), payload)
-            }
-          }
+          if (!black) writeChunkObject(dirStr,
+            Geom.chunkBbox(g, bounds, cs).toFilename, payload, method)
         }
       }
   }
@@ -133,6 +137,15 @@ object PrecomputedIO {
       .option("mip", mip)
       .option("fill_missing", fillMissing)
       .load(layerDir)
+
+  /** Chunk rows overlapping `bbox`; the overlap filter is pushed into
+    * the scan as planning-time grid pruning. */
+  private def chunksIn(spark: SparkSession, layerDir: String, bbox: Bbox,
+      mip: Int, fillMissing: Boolean): DataFrame =
+    readChunks(spark, layerDir, mip, fillMissing)
+      .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&
+        col("y1") > bbox.minpt.y && col("y0") < bbox.maxpt.y &&
+        col("z1") > bbox.minpt.z && col("z0") < bbox.maxpt.z)
 
   /** S4 cutout read: decode chunks intersecting `bbox` into clipped
     * voxel rows (x, y, z, label). Decode happens once per chunk in the
@@ -167,11 +180,8 @@ object PrecomputedIO {
         ((col("id") / (sz.x * sz.y)).cast("long") + clip.minpt.z).as("z"),
         lit(background).as("label"))
     }
-    val chunks = readChunks(spark, layerDir, mip, fillMissing)
-      .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&
-        col("y1") > bbox.minpt.y && col("y0") < bbox.maxpt.y &&
-        col("z1") > bbox.minpt.z && col("z0") < bbox.maxpt.z)
-    decodeToVoxels(chunks, bbox, scale, meta.dtypeBytes, background)
+    decodeToVoxels(chunksIn(spark, layerDir, bbox, mip, fillMissing), bbox,
+      scale, meta.dtypeBytes, background)
   }
 
   /** S4 float-image cutout (float32/float64 raw layers — the
@@ -191,35 +201,17 @@ object PrecomputedIO {
     require(scale.encoding == "raw",
       s"float cutout reads raw encoding, not ${scale.encoding}")
     val dtb = meta.dtypeBytes
-    val chunks = readChunks(spark, layerDir, mip, fillMissing)
-      .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&
-        col("y1") > bbox.minpt.y && col("y0") < bbox.maxpt.y &&
-        col("z1") > bbox.minpt.z && col("z0") < bbox.maxpt.z)
+    val chunks = chunksIn(spark, layerDir, bbox, mip, fillMissing)
     val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
         z1: Long, payload: Array[Byte]) => {
-      val sx = x1 - x0; val sy = y1 - y0; val sz = z1 - z0
+      val bs = Vec3(x1 - x0, y1 - y0, z1 - z0)
       val vox =
-        if (payload == null) new Array[Double]((sx * sy * sz).toInt)
+        if (payload == null) new Array[Double]((bs.x * bs.y * bs.z).toInt)
         else Codec.decodeRawFloatsToDoubles(payload, dtb)
       val out = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long, Double)]
-      val lox = math.max(x0, bbox.minpt.x); val hix = math.min(x1, bbox.maxpt.x)
-      val loy = math.max(y0, bbox.minpt.y); val hiy = math.min(y1, bbox.maxpt.y)
-      val loz = math.max(z0, bbox.minpt.z); val hiz = math.min(z1, bbox.maxpt.z)
-      var z = loz
-      while (z < hiz) {
-        var y = loy
-        while (y < hiy) {
-          var x = lox
-          while (x < hix) {
-            val i = (x - x0) + sx * ((y - y0) + sy * (z - z0))
-            out += ((x, y, z, vox(i.toInt)))
-            x += 1
-          }
-          y += 1
-        }
-        z += 1
-      }
+      Geom.clipWalk(vox.length, Vec3(x0, y0, z0), bs, bbox)(
+        (x, y, z, i) => out += ((x, y, z, vox(i))))
       out.toSeq
     })
     chunks
@@ -261,14 +253,11 @@ object PrecomputedIO {
     require(channels.nonEmpty && channels.forall(c => c >= 0 && c < nc),
       s"channel slice $channels out of range for $nc channels")
     val chans = channels.toArray
-    val chunks = readChunks(spark, layerDir, mip, fillMissing)
-      .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&
-        col("y1") > bbox.minpt.y && col("y0") < bbox.maxpt.y &&
-        col("z1") > bbox.minpt.z && col("z0") < bbox.maxpt.z)
+    val chunks = chunksIn(spark, layerDir, bbox, mip, fillMissing)
     val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
         z1: Long, payload: Array[Byte]) => {
-      val sx = x1 - x0; val sy = y1 - y0; val sz = z1 - z0
-      val plane = (sx * sy * sz).toInt
+      val bs = Vec3(x1 - x0, y1 - y0, z1 - z0)
+      val plane = (bs.x * bs.y * bs.z).toInt
       val vox =
         if (payload == null) new Array[Long](plane * nc)
         else if (isPng) Codec.decodePngChannelsToLongs(payload, nc)
@@ -276,26 +265,13 @@ object PrecomputedIO {
         else Codec.decodeRawToLongs(payload, dtb)
       val out = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long, Long, Long)]
-      val lox = math.max(x0, bbox.minpt.x); val hix = math.min(x1, bbox.maxpt.x)
-      val loy = math.max(y0, bbox.minpt.y); val hiy = math.min(y1, bbox.maxpt.y)
-      val loz = math.max(z0, bbox.minpt.z); val hiz = math.min(z1, bbox.maxpt.z)
-      var z = loz
-      while (z < hiz) {
-        var y = loy
-        while (y < hiy) {
-          var x = lox
-          while (x < hix) {
-            val i = ((x - x0) + sx * ((y - y0) + sy * (z - z0))).toInt
-            var ci = 0
-            while (ci < chans.length) {
-              out += ((x, y, z, chans(ci).toLong, vox(i + plane * chans(ci))))
-              ci += 1
-            }
-            x += 1
+      Geom.clipWalk(vox.length, Vec3(x0, y0, z0), bs, bbox, planes = nc) {
+        (x, y, z, i) =>
+          var ci = 0
+          while (ci < chans.length) {
+            out += ((x, y, z, chans(ci).toLong, vox(i + plane * chans(ci))))
+            ci += 1
           }
-          y += 1
-        }
-        z += 1
       }
       out.toSeq
     })
@@ -325,36 +301,24 @@ object PrecomputedIO {
     // background value the gate must credit to null payloads
     val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
         z1: Long, payload: Array[Byte]) => {
-      val sx = x1 - x0; val sy = y1 - y0; val sz = z1 - z0
+      val bs = Vec3(x1 - x0, y1 - y0, z1 - z0)
+      // codecs that carry their own dims must agree with the chunk's:
+      // a permuted shape has the right voxel count but scrambles them
+      def shaped(d: (Vec3, Array[Long])): Array[Long] = {
+        require(d._1 == bs, s"chunk $bs at ($x0,$y0,$z0) decodes as ${d._1}")
+        d._2
+      }
       val vox =
-        if (payload == null) Array.fill((sx * sy * sz).toInt)(bg)
+        if (payload == null) Array.fill((bs.x * bs.y * bs.z).toInt)(bg)
         else if (enc == "compressed_segmentation")
-          Cseg.decode(payload, Vec3(sx, sy, sz), csegBs, dtb)
-        else if (enc == "compresso") Compresso.decode(payload)._2
+          Cseg.decode(payload, bs, csegBs, dtb)
+        else if (enc == "compresso") shaped(Compresso.decode(payload))
         else if (enc == "png" && dtb == 2) Codec.decodePng16(payload)
         else if (enc == "png")
           Codec.decodeRawToLongs(Codec.decodePng(payload), 1)
-        else if (enc == "npz") Codec.decodeNpz(payload)._2
+        else if (enc == "npz") shaped(Codec.decodeNpz(payload))
         else Codec.decodeRawToLongs(payload, dtb)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      val lox = math.max(x0, bbox.minpt.x); val hix = math.min(x1, bbox.maxpt.x)
-      val loy = math.max(y0, bbox.minpt.y); val hiy = math.min(y1, bbox.maxpt.y)
-      val loz = math.max(z0, bbox.minpt.z); val hiz = math.min(z1, bbox.maxpt.z)
-      var z = loz
-      while (z < hiz) {
-        var y = loy
-        while (y < hiy) {
-          var x = lox
-          while (x < hix) {
-            val i = (x - x0) + sx * ((y - y0) + sy * (z - z0))
-            out += ((x, y, z, vox(i.toInt)))
-            x += 1
-          }
-          y += 1
-        }
-        z += 1
-      }
-      out.toSeq
+      Geom.clipRows(vox, Vec3(x0, y0, z0), bs, bbox)
     }).withName(s"graft_decode_voxels:$enc:$dtb:" +
       s"${csegBs.x}_${csegBs.y}_${csegBs.z}:$bg")
     chunks

@@ -1,7 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-import graft.core.Geom
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import graft.core.{Bbox, Geom, Vec3}
 
 /** Session-conf wrapper around [[Geom.scanPartitions]] — the shared
   * scan-task sizing rule for every chunk/block/object reader (DSv2
@@ -28,6 +28,40 @@ object ScanSizing {
     val openC = spark.conf.get(OpenCostBytesKey, (64L << 10).toString).toLong
     Geom.scanPartitions(nChunks, estBytes,
       math.max(spark.sparkContext.defaultParallelism, 1), minB, openC)
+  }
+
+  /** The one grid-read pipeline: grid points enumerated at planning
+    * time become a dataset sized by [[partitions]] (`estBytes` per
+    * point), and `read` runs once per point in the executor tasks.
+    */
+  def scanGrid[T: Encoder](spark: SparkSession, pts: Seq[Vec3],
+      estBytes: Long)(read: Vec3 => IterableOnce[T]): Dataset[T] = {
+    import spark.implicits._
+    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
+      .repartition(partitions(spark, pts.size, estBytes))
+      .flatMap { case (gx, gy, gz) => read(Vec3(gx, gy, gz)) }
+  }
+
+  /** Cutout over a volume stored one object per block (N5, zarr2,
+    * unsharded zarr3): only the blocks `bbox` touches are read, each
+    * through `readBlock` (grid point -> (block dims, F-order voxels)),
+    * then clipped to the request by [[Geom.clipRows]]. The block at
+    * grid point g starts at `volume.minpt + g * block`. Each format
+    * keeps only its own differences inside `readBlock`: key naming,
+    * fill value, byte order, C/F order, frame slot, missing-block
+    * policy.
+    *
+    * @return voxel rows (x, y, z, label)
+    */
+  def cutoutGrid(spark: SparkSession, bbox: Bbox, volume: Bbox, block: Vec3,
+      estBytes: Long, readBlock: Vec3 => (Vec3, Array[Long])): DataFrame = {
+    val clip = bbox.intersection(volume)
+    val origin = volume.minpt
+    import spark.implicits._
+    scanGrid(spark, Geom.gridpoints(bbox, volume, block), estBytes) { g =>
+      val (dims, vox) = readBlock(g)
+      Geom.clipRows(vox, origin + g * block, dims, clip)
+    }.toDF("x", "y", "z", "label")
   }
 
   /** Shuffle width for an in-memory state table of `rows` rows — the

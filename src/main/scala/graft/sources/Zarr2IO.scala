@@ -508,113 +508,49 @@ object Zarr2IO {
       case None => require(c == 0, s"$dir has no channel axis (c=$c)")
     }
     val m = o.meta
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val meta = m
     val sep = m.separator
     val lead =
       (if (o.timeFrames.isDefined) Seq(t.toString) else Seq.empty) ++
         (if (o.channels.isDefined) Seq(c.toString) else Seq.empty)
-    val bounds = Bbox(Vec3(0, 0, 0), m.shape)
-    val pts = Geom.gridpoints(bbox, bounds, cs)
-    val clip = bbox.intersection(bounds)
-    val dirStr = chunkBase
-    val fill = m.fillValue
-    // honor the .zarray dtype byte order like the non-OME cutout path
-    val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
-    import spark.implicits._
-    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6; shared rule in ScanSizing)
-      .repartition(ScanSizing.partitions(spark, pts.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { case (gx, gy, gz) =>
-        val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN
-        val parts = lead ++ Seq(gz.toString, gy.toString, gx.toString)
-        val p = Paths.get(dirStr, parts.mkString(sep))
-        val vox =
-          if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
-          else Codec.decodeRawToLongs(unpack(meta, Files.readAllBytes(p)),
-            dtb, bo)
-        // a corrupt object decoding to the wrong voxel count must fail
-        // here, not as a raw index error in the clip loop below
-        require(vox.length == cs.x * cs.y * cs.z,
-          s"corrupt zarr2 chunk $p: ${vox.length} voxels != chunk shape $cs")
-        val lo = Vec3(gx * cs.x, gy * cs.y, gz * cs.z)
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long, Long)]
-        var z = math.max(lo.z, clip.minpt.z)
-        while (z < math.min(lo.z + cs.z, clip.maxpt.z)) {
-          var y = math.max(lo.y, clip.minpt.y)
-          while (y < math.min(lo.y + cs.y, clip.maxpt.y)) {
-            var x = math.max(lo.x, clip.minpt.x)
-            while (x < math.min(lo.x + cs.x, clip.maxpt.x)) {
-              out += ((x, y, z,
-                vox(((x - lo.x) + cs.x * ((y - lo.y) + cs.y * (z - lo.z))).toInt)))
-              x += 1
-            }
-            y += 1
-          }
-          z += 1
-        }
-        out
-      }.toDF("x", "y", "z", "label")
+    // C order of (t=1, c=1, z, y, x) is x-fastest = F order of the
+    // spatial block, so the OME chunk decodes like an F-order chunk
+    cutoutChunks(spark, chunkBase, m, bbox, isF = true,
+      g => (lead ++ Seq(g.z.toString, g.y.toString, g.x.toString)).mkString(sep))
   }
 
   /** S18 zarr2 cutout (same plan shape as zarr3). */
   def cutoutVoxels(spark: SparkSession, dir: String, bbox: Bbox): DataFrame = {
     val m = readMeta(dir)
+    val sep = m.separator
+    cutoutChunks(spark, dir, m, bbox, isF = m.order == "F",
+      g => s"${g.x}$sep${g.y}$sep${g.z}")
+  }
+
+  /** Shared zarr2 block read: chunk object `dir/<key(g)>`, absent key =
+    * fill_value chunk (zarr v2 semantics; the reference's fill_missing
+    * path, zarr2/image.py:55-75), decoded in the .zarray byte order and
+    * C->F transposed unless the chunk is already F order.
+    */
+  private def cutoutChunks(spark: SparkSession, dir: String, m: Zarr2Meta,
+      bbox: Bbox, isF: Boolean, key: Vec3 => String): DataFrame = {
     val cs = m.chunkShape
     val dtb = m.dtypeBytes
-    val meta = m
-    val isF = m.order == "F"
-    val sep = m.separator
-    val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
-    val bounds = Bbox(Vec3(0, 0, 0), m.shape)
-    val pts = Geom.gridpoints(bbox, bounds, cs)
-    val clip = bbox.intersection(bounds)
-    val dirStr = dir
     val fill = m.fillValue
-    import spark.implicits._
-    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6; shared rule in ScanSizing)
-      .repartition(ScanSizing.partitions(spark, pts.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { case (gx, gy, gz) =>
+    // ByteOrder is not Serializable — ship a flag, rehydrate per task
+    val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
+    ScanSizing.cutoutGrid(spark, bbox, Bbox(Vec3(0, 0, 0), m.shape), cs,
+      cs.x * cs.y * cs.z * dtb, { g =>
         val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
           else java.nio.ByteOrder.LITTLE_ENDIAN
-        val p = Paths.get(dirStr, s"$gx$sep$gy$sep$gz")
-        // absent chunk key = fill_value chunk (zarr v2 semantics; the
-        // reference's fill_missing path, zarr2/image.py:55-75)
+        val p = Paths.get(dir, key(g))
         val vox =
           if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
           else {
-            val raw0 = Files.readAllBytes(p)
-            val raw = unpack(meta, raw0)
+            val raw = unpack(m, Files.readAllBytes(p))
             if (isF) Codec.decodeRawToLongs(raw, dtb, bo)
             else Zarr3IO.decodeChunkToF(raw, cs, dtb, bo)
           }
-        // decodeChunkToF validates the count; the F path must too — a
-        // corrupt object fails loudly, not as a raw index error below
-        require(vox.length == cs.x * cs.y * cs.z,
-          s"corrupt zarr2 chunk $p: ${vox.length} voxels != chunk shape $cs")
-        val lo = Vec3(gx * cs.x, gy * cs.y, gz * cs.z)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-        var z = math.max(lo.z, clip.minpt.z)
-        while (z < math.min(lo.z + cs.z, clip.maxpt.z)) {
-          var y = math.max(lo.y, clip.minpt.y)
-          while (y < math.min(lo.y + cs.y, clip.maxpt.y)) {
-            var x = math.max(lo.x, clip.minpt.x)
-            while (x < math.min(lo.x + cs.x, clip.maxpt.x)) {
-              out += ((x, y, z,
-                vox(((x - lo.x) + cs.x * ((y - lo.y) + cs.y * (z - lo.z))).toInt)))
-              x += 1
-            }
-            y += 1
-          }
-          z += 1
-        }
-        out
-      }.toDF("x", "y", "z", "label")
+        (cs, vox)
+      })
   }
 }

@@ -542,20 +542,15 @@ object Zarr3IO {
     import spark.implicits._
     val grid = for {
       gz <- 0L until g.z; gy <- 0L until g.y; gx <- 0L until g.x
-    } yield (gx, gy, gz)
-    spark.createDataset(grid)
-      // bytes-aware split sizing (guide §6; shared rule in ScanSizing)
-      .repartition(ScanSizing.partitions(spark, grid.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { t: (Long, Long, Long) =>
-        val (gx, gy, gz) = t
-        val key = spatialKey(m, gx, gy, gz)
-        val p = Paths.get(dirStr, "c", key(0), key(1), key(2))
-        if (!Files.exists(p)) None
-        else Some((gx, gy, gz,
-          decodeFrameToF(m, unpack(m, Files.readAllBytes(p)), cs, dtb)
-            .toSeq))
-      }.toDF("gx", "gy", "gz", "vox")
+    } yield Vec3(gx, gy, gz)
+    ScanSizing.scanGrid(spark, grid, cs.x * cs.y * cs.z * dtb) { c =>
+      val key = spatialKey(m, c.x, c.y, c.z)
+      val p = Paths.get(dirStr, "c", key(0), key(1), key(2))
+      if (!Files.exists(p)) None
+      else Some((c.x, c.y, c.z,
+        decodeFrameToF(m, unpack(m, Files.readAllBytes(p)), cs, dtb)
+          .toSeq))
+    }.toDF("gx", "gy", "gz", "vox")
   }
 
   /** Write 4-D chunk rows (tc, gx, gy, gz, vox) where `vox` is
@@ -665,30 +660,6 @@ object Zarr3IO {
     if (m.zyx) Seq(gz.toString, gy.toString, gx.toString)
     else Seq(gx.toString, gy.toString, gz.toString)
 
-  /** Clip a decoded F-order block at origin `lo` of shape `bs` to
-    * `clip` and emit (x, y, z, label) rows — the shared tail of every
-    * cutout path.
-    */
-  private def emitClipped(vox: Array[Long], lo: Vec3, bs: Vec3,
-      clip: Bbox): Seq[(Long, Long, Long, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var z = math.max(lo.z, clip.minpt.z)
-    while (z < math.min(lo.z + bs.z, clip.maxpt.z)) {
-      var y = math.max(lo.y, clip.minpt.y)
-      while (y < math.min(lo.y + bs.y, clip.maxpt.y)) {
-        var x = math.max(lo.x, clip.minpt.x)
-        while (x < math.min(lo.x + bs.x, clip.maxpt.x)) {
-          out += ((x, y, z,
-            vox(((x - lo.x) + bs.x * ((y - lo.y) + bs.y * (z - lo.z))).toInt)))
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    out.toSeq
-  }
-
   /** Unsharded cutout core: enumerate the pruned grid at planning
     * time, read + unpack chunk objects in executor tasks, slice out
     * frame `frameSlot` (lead t/c axes; 0 and whole-chunk for 3-D),
@@ -703,20 +674,13 @@ object Zarr3IO {
     val dtb = m.dtypeBytes
     val frameBytes = (cs.x * cs.y * cs.z).toInt * dtb
     val fOff = (frameSlot * frameBytes).toInt
-    val bounds = Bbox(Vec3(0, 0, 0), m.shape)
-    val pts = Geom.gridpoints(bbox, bounds, cs)
     val dirStr = dir
-    val clip = bbox.intersection(bounds)
     val fill = m.fillValue
     val keyParts = prefix.map(_.toString)
-    import spark.implicits._
-    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6; shared rule in ScanSizing)
-      .repartition(ScanSizing.partitions(spark, pts.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { case (gx, gy, gz) =>
+    ScanSizing.cutoutGrid(spark, bbox, Bbox(Vec3(0, 0, 0), m.shape), cs,
+      cs.x * cs.y * cs.z * dtb, { g =>
         var p = Paths.get(dirStr, "c")
-        (keyParts ++ spatialKey(m, gx, gy, gz)).foreach(k => p = p.resolve(k))
+        (keyParts ++ spatialKey(m, g.x, g.y, g.z)).foreach(k => p = p.resolve(k))
         // zarr defines an absent chunk key as a fill_value-filled chunk
         // (the reference raises EmptyVolumeException unless
         // fill_missing; zarr3/image.py:49-139)
@@ -734,8 +698,8 @@ object Zarr3IO {
               else java.util.Arrays.copyOfRange(raw, fOff, fOff + frameBytes)
             decodeFrameToF(m, frame, cs, dtb)
           }
-        emitClipped(vox, Vec3(gx * cs.x, gy * cs.y, gz * cs.z), cs, clip)
-      }.toDF("x", "y", "z", "label")
+        (cs, vox)
+      })
   }
 
   /** Cutout one xyz bbox at a single (t, c) point of the lead axes
@@ -804,53 +768,50 @@ object Zarr3IO {
     val fill = m.fillValue
     val bounds = Bbox(Vec3(0, 0, 0), m.shape)
     val clip = bbox.intersection(bounds)
-    val shardPts = Geom.gridpoints(bbox, bounds, cs)
     val dirStr = dir
     import spark.implicits._
-    spark.createDataset(shardPts.map(g => (g.x, g.y, g.z)))
-      // bytes-aware split sizing (guide §6); the full-shard volume
-      // OVERestimates the ranged read, which only costs parallelism
-      .repartition(ScanSizing.partitions(spark, shardPts.size,
-        cs.x * cs.y * cs.z * dtb))
-      .flatMap { case (sx, sy, sz) =>
-        val file = Paths.get(dirStr, "c", sx.toString, sy.toString,
-          sz.toString)
-        val shardLo = Vec3(sx * cs.x, sy * cs.y, sz * cs.z)
-        val index: Option[Array[(Long, Long)]] =
-          if (Files.exists(file)) Some(readShardIndex(file, m)) else None
-        // absent shard / Missing slot -> fill_value chunk (allocated
-        // once per shard task, shared across its elided inner chunks)
-        lazy val fillChunk = Array.fill((inner.x * inner.y * inner.z).toInt)(fill)
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long, Long)]
-        var cx = 0L
-        while (cx < ig.x) {
-          var cy = 0L
-          while (cy < ig.y) {
-            var cz = 0L
-            while (cz < ig.z) {
-              val lo = Vec3(shardLo.x + cx * inner.x,
-                shardLo.y + cy * inner.y, shardLo.z + cz * inner.z)
-              val hit = Bbox(lo, lo + inner).intersection(clip)
-              if (hit.volume > 0) {
-                val vox = index match {
-                  case None => fillChunk // whole shard absent
-                  case Some(idx) =>
-                    val (off, len) = idx(innerSlot(Vec3(cx, cy, cz), ig))
-                    if (off == Missing) fillChunk
-                    else decodeChunkToF(unpack(m, readRange(file, off, len)),
-                      inner, dtb)
-                }
-                out ++= emitClipped(vox, lo, inner, clip)
+    // the full-shard volume OVERestimates the ranged read, which only
+    // costs parallelism
+    ScanSizing.scanGrid(spark, Geom.gridpoints(bbox, bounds, cs),
+      cs.x * cs.y * cs.z * dtb) { sg =>
+      val file = Paths.get(dirStr, "c", sg.x.toString, sg.y.toString,
+        sg.z.toString)
+      val shardLo = sg * cs
+      val index: Option[Array[(Long, Long)]] =
+        if (Files.exists(file)) Some(readShardIndex(file, m)) else None
+      // absent shard / Missing slot -> fill_value chunk (allocated
+      // once per shard task, shared across its elided inner chunks)
+      lazy val fillChunk = Array.fill((inner.x * inner.y * inner.z).toInt)(fill)
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Long, Long, Long)]
+      var cx = 0L
+      while (cx < ig.x) {
+        var cy = 0L
+        while (cy < ig.y) {
+          var cz = 0L
+          while (cz < ig.z) {
+            val lo = Vec3(shardLo.x + cx * inner.x,
+              shardLo.y + cy * inner.y, shardLo.z + cz * inner.z)
+            val hit = Bbox(lo, lo + inner).intersection(clip)
+            if (hit.volume > 0) {
+              val vox = index match {
+                case None => fillChunk // whole shard absent
+                case Some(idx) =>
+                  val (off, len) = idx(innerSlot(Vec3(cx, cy, cz), ig))
+                  if (off == Missing) fillChunk
+                  else decodeChunkToF(unpack(m, readRange(file, off, len)),
+                    inner, dtb)
               }
-              cz += 1
+              out ++= Geom.clipRows(vox, lo, inner, clip)
             }
-            cy += 1
+            cz += 1
           }
-          cx += 1
+          cy += 1
         }
-        out
-      }.toDF("x", "y", "z", "label")
+        cx += 1
+      }
+      out
+    }.toDF("x", "y", "z", "label")
   }
 
   // ---- OME-NGFF 0.5 multiscale GROUP (zarr v3 group node) ----

@@ -449,4 +449,78 @@ class HostileDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"expected IllegalArgumentException in the cause chain, got $e")
     } finally spark.stop()
   }
+
+  // ---- the shared decode-and-clip boundary (Geom.clipWalk) ----------
+
+  private def withSpark(body: SparkSession => Unit): Unit = {
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try body(spark) finally spark.stop()
+  }
+
+  private def failsTyped(run: => Any): Unit = {
+    val e = intercept[Exception](run)
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Seq.empty else t +: causes(t.getCause)
+    assert(causes(e).exists(_.isInstanceOf[IllegalArgumentException]),
+      s"expected IllegalArgumentException in the cause chain, got $e")
+  }
+
+  /** decodeToVoxels over one chunk row at [0, size) of a 1-scale layer. */
+  private def decodeOne(spark: SparkSession, enc: String, size: Vec3,
+      payload: Array[Byte]): Long = {
+    import graft.sources.PrecomputedIO
+    import spark.implicits._
+    val scale = ScaleMeta(key = "1_1_1", encoding = enc,
+      resolution = Seq(1, 1, 1), chunkSize = size, size = size,
+      voxelOffset = Vec3(0, 0, 0))
+    val chunks = Seq((0L, 0L, 0L, size.x, size.y, size.z, payload))
+      .toDF("x0", "y0", "z0", "x1", "y1", "z1", "payload")
+    PrecomputedIO.decodeToVoxels(chunks, Bbox(Vec3(0, 0, 0), size), scale, 4)
+      .count()
+  }
+
+  test("decodeToVoxels: a payload whose dims permute the chunk's fails " +
+      "instead of scrambling voxels") {
+    val vox = Array.tabulate(32)(i => (i % 5).toLong + 1)
+    withSpark { spark =>
+      // both payloads hold 32 voxels for a 4x8x1 chunk, shaped 8x4x1
+      failsTyped(decodeOne(spark, "compresso", Vec3(4, 8, 1),
+        Compresso.encode(vox, Vec3(8, 4, 1))))
+      failsTyped(decodeOne(spark, "npz", Vec3(4, 8, 1),
+        Codec.encodeNpz(vox, Vec3(8, 4, 1), 4)))
+      // the matching shape still decodes
+      assert(decodeOne(spark, "compresso", Vec3(8, 4, 1),
+        Compresso.encode(vox, Vec3(8, 4, 1))) == 32)
+    }
+  }
+
+  test("decodeToVoxels: a short raw chunk fails typed, not as an " +
+      "index error") {
+    withSpark { spark =>
+      failsTyped(decodeOne(spark, "raw", Vec3(4, 4, 4), new Array[Byte](4 * 60)))
+    }
+  }
+
+  test("n5: a block header larger than blockSize cannot emit voxels " +
+      "into the neighbouring block") {
+    val dir = Files.createTempDirectory("graft_hostile_n5_dims").toString
+    val m = N5IO.N5Meta(dimensions = Vec3(8, 4, 4), blockSize = Vec3(4, 4, 4),
+      dataType = "uint32", compression = "raw")
+    N5IO.writeMeta(dir, m)
+    def put(gx: Int, dims: Vec3): Unit = {
+      val p = Paths.get(dir, "s0", gx.toString, "0")
+      Files.createDirectories(p)
+      Files.write(p.resolve("0"), N5IO.encodeBlock(
+        Array.fill((dims.x * dims.y * dims.z).toInt)(gx + 1L), dims, 4, "raw"))
+    }
+    put(0, Vec3(8, 4, 4)) // claims the whole volume: 2x the block size
+    put(1, Vec3(4, 4, 4))
+    withSpark { spark =>
+      failsTyped(N5IO.cutoutVoxels(spark, dir,
+        Bbox(Vec3(0, 0, 0), Vec3(8, 4, 4))).collect())
+    }
+  }
 }

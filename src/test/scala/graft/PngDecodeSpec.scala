@@ -139,6 +139,60 @@ class PngDecodeSpec extends AnyFunSuite {
     assert(PngDecode.gray16(ok).isEmpty)
   }
 
+  /** PNG chunks as (type, data), and back with fresh lengths + CRCs. */
+  private def chunks(png: Array[Byte]): Seq[(Int, Array[Byte])] = {
+    val bb = java.nio.ByteBuffer.wrap(png)
+    var pos = 8
+    val out = Seq.newBuilder[(Int, Array[Byte])]
+    while (pos + 12 <= png.length) {
+      val len = bb.getInt(pos)
+      out += ((bb.getInt(pos + 4), png.slice(pos + 8, pos + 8 + len)))
+      pos += 12 + len
+    }
+    out.result()
+  }
+  private def png(cs: Seq[(Int, Array[Byte])]): Array[Byte] = {
+    val o = new java.io.ByteArrayOutputStream()
+    o.write(Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
+    val d = new java.io.DataOutputStream(o)
+    cs.foreach { case (t, data) =>
+      val crc = new java.util.zip.CRC32()
+      val tb = java.nio.ByteBuffer.allocate(4).putInt(t).array()
+      crc.update(tb); crc.update(data)
+      d.writeInt(data.length); d.write(tb); d.write(data)
+      d.writeInt(crc.getValue.toInt)
+    }
+    o.toByteArray
+  }
+  private val Idat = 0x49444154
+
+  test("the zlib stream must end in a matching adler32 trailer") {
+    val ok = Codec.encodePng(rnd(2, 25 * 17), 25)
+    assert(PngDecode.gray8(ok).isDefined)
+    val cs = chunks(ok)
+    // one IDAT holding the whole zlib stream, trailer = its last 4 bytes
+    val z = cs.filter(_._1 == Idat).flatMap(_._2).toArray
+    val rest = cs.filter(_._1 != Idat)
+    def withStream(s: Array[Byte]): Array[Byte] =
+      png(rest.init ++ Seq((Idat, s)) ++ Seq(rest.last))
+    assert(PngDecode.gray8(withStream(z)).isDefined)
+    val flipped = z.clone()
+    flipped(z.length - 1) = (flipped(z.length - 1) ^ 0x01).toByte
+    assert(PngDecode.gray8(withStream(flipped)).isEmpty)
+    // the image bytes are all there but the trailer is cut: nothing
+    // checked them
+    assert(PngDecode.gray8(withStream(z.dropRight(4))).isEmpty)
+    assert(PngDecode.gray8(withStream(z.dropRight(2))).isEmpty)
+    // a stream that inflates to more rows than IHDR declares
+    val shorter = rest.map {
+      case (t, d) if t == 0x49484452 =>
+        val h = d.clone(); java.nio.ByteBuffer.wrap(h).putInt(4, 16); (t, h)
+      case c => c
+    }
+    assert(PngDecode.gray8(png(shorter.init ++ Seq((Idat, z)) ++
+      Seq(shorter.last))).isEmpty)
+  }
+
   test("Codec decode entry points route through the fast path unchanged") {
     val vox = rnd(5, 25 * 17)
     assert(java.util.Arrays.equals(
