@@ -348,12 +348,12 @@ object XferQueries {
     // S16 pathway 2b, reversed: sharded -> unsharded migration. The
     // reference flips the metadata with to_unsharded (image/
     // __init__.py:855-857 pops the sharding spec) and moves the data
-    // with transfer_to; here the shard files are read chunk-level
-    // (index + coalesced byte-range reads, one task per shard — never
-    // whole-file), each task re-emits its chunks, and the unsharded
-    // sink writes one object per chunk. No shuffle at all: chunks
-    // already arrive grouped by shard and the writer is
-    // embarrassingly parallel — the plan a petabyte un-sharding needs.
+    // with transfer_to; here the neuroglancer scan reads the shards
+    // chunk-level (index + coalesced byte-range reads, each shard's
+    // chunks planned into one task — never whole-file), and the
+    // unsharded sink writes one object per chunk. No shuffle at all:
+    // the scan groups chunks by shard at planning time and the writer
+    // is embarrassingly parallel — the plan a petabyte un-sharding needs.
     // delete-and-rewrite of a fixed target dir: serialized on the
     // object lock (same discipline as the ensure* builders) so two
     // concurrent invocations can't interleave deletes with writes

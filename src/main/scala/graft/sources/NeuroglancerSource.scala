@@ -1,5 +1,6 @@
 package graft.sources
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -30,10 +31,13 @@ import graft.core._
   *    chunk object is opened at all — pure metadata execution.
   *  - Grid coordinates are evenly range-split across input partitions
   *    so a 1000-executor scan load-balances without a shuffle.
+  *  - A **sharded** scale is read by the same scan, with each shard's
+  *    pruned chunks planned into one task (rx.py:39-155).
   *
   * Options: `mip` (default 0), `fill_missing` (default false — missing
   * chunk objects raise, per EmptyVolumeException rx.py:864-870; true
-  * yields a null payload the consumer background-fills, S15).
+  * yields a null payload the consumer background-fills, S15). A chunk
+  * absent from its shard yields no row, whatever `fill_missing` says.
   */
 class NeuroglancerSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "neuroglancer"
@@ -118,6 +122,8 @@ final class NgTable(props: Map[String, String]) extends Table
       throw new IllegalStateException(
         s"mip $mip is write-locked (scale ${meta.scale(mip).key})")
     val scale = meta.scale(mip)
+    require(!scale.isSharded, s"scale ${scale.key} is sharded, so per-chunk " +
+      "objects would never be read back — use ShardedIO.writeSharded")
     val gzipped = Option(info.options.get("compress")).map(_.toBoolean)
       .getOrElse(Codec.shouldCompress(scale.encoding))
     val sch = info.schema()
@@ -321,9 +327,10 @@ final class NgScanBuilder(layerDir: String, mip: Int, fillMissing: Boolean,
   }
 }
 
+/** Grid points of one task; on a sharded scale they are whole shard
+  * groups (see [[NgScan.partitionsOf]]). */
 final case class NgInputPartition(
-    layerDir: String, key: String, chunks: Array[Array[Long]],
-    boundsMin: Array[Long], boundsMax: Array[Long], chunkSize: Array[Long])
+    layerDir: String, scale: ScaleMeta, chunks: Array[Array[Long]])
   extends InputPartition
 
 final class NgScan(layerDir: String, scale: ScaleMeta, dtypeBytes: Int,
@@ -335,9 +342,12 @@ final class NgScan(layerDir: String, scale: ScaleMeta, dtypeBytes: Int,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new NgMicroBatchStream(layerDir, scale, lo, hi, required, fillMissing,
-      checkpointLocation, maxChunksPerTrigger)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    require(!scale.isSharded, s"scale ${scale.key} is sharded; the stream " +
+      "discovers per-chunk objects, which a sharded scale never has")
+    new NgMicroBatchStream(layerDir, scale, dtypeBytes, lo, hi, required,
+      fillMissing, checkpointLocation, maxChunksPerTrigger)
+  }
   // PushedFilters is named to match the V1 EXPLAIN convention so a
   // plan read (EXPLAIN.md) can confirm pruning fired from pure SQL
   override def description(): String =
@@ -345,28 +355,43 @@ final class NgScan(layerDir: String, scale: ScaleMeta, dtypeBytes: Int,
       s"cols=${required.fieldNames.mkString(",")} " +
       s"PushedFilters: [${pushed.mkString(", ")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val pts = for {
+  override def planInputPartitions(): Array[InputPartition] =
+    NgScan.partitionsOf(layerDir, scale, dtypeBytes, for {
       gz <- lo.z to hi.z
       gy <- lo.y to hi.y
       gx <- lo.x to hi.x
-    } yield Array(gx, gy, gz)
-    if (pts.isEmpty) return Array.empty
-    // bytes-aware split sizing (guide §6): tiny grids decode in one
-    // task instead of one launch-dominated task per core; real-scale
-    // grids keep the parallelism/64-chunks-per-task rule
-    val nParts = ScanSizing.partitions(SparkSession.active, pts.size,
-      scale.chunkSize.x * scale.chunkSize.y * scale.chunkSize.z * dtypeBytes)
-    val b = scale.bounds
-    pts.grouped(Geom.ceilDiv(pts.size, nParts).toInt).map { group =>
-      NgInputPartition(layerDir, scale.key, group.toArray,
-        b.minpt.toArray, b.maxpt.toArray, scale.chunkSize.toArray)
-        : InputPartition
-    }.toArray
-  }
+    } yield Vec3(gx, gy, gz))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new NgReaderFactory(required, fillMissing)
+}
+
+object NgScan {
+  /** The one grid-to-partition split, shared by the batch scan and the
+    * stream, sized by [[ScanSizing.partitions]]. On a sharded scale the
+    * points are grouped by shard file and whole groups are packed into
+    * the partitions, so each task reads a shard's index once.
+    */
+  private[sources] def partitionsOf(layerDir: String, scale: ScaleMeta,
+      dtypeBytes: Int, pts: Seq[Vec3]): Array[InputPartition] = {
+    if (pts.isEmpty) return Array.empty
+    val cs = scale.chunkSize
+    val per = Geom.ceilDiv(pts.size, ScanSizing.partitions(
+      SparkSession.active, pts.size, cs.x * cs.y * cs.z * dtypeBytes)).toInt
+    val groups = scale.sharding match {
+      case None => pts.grouped(per).toSeq
+      case Some(spec) => pts.groupBy(g =>
+          spec.shardLocation(Morton.encode(g, scale.gridSize))._1)
+        .toSeq.sortBy(_._1).map(_._2)
+    }
+    val parts = ArrayBuffer(ArrayBuffer.empty[Vec3])
+    for (grp <- groups) {
+      if (parts.last.size >= per) parts += ArrayBuffer.empty
+      parts.last ++= grp
+    }
+    parts.map(p => NgInputPartition(layerDir, scale,
+      p.map(_.toArray).toArray): InputPartition).toArray
+  }
 }
 
 /** Offset = count of chunk objects journaled so far; the journal
@@ -406,8 +431,8 @@ final case class NgStreamOffset(n: Long)
   *    scans get the same window from real filter pushdown).
   */
 final class NgMicroBatchStream(layerDir: String, scale: ScaleMeta,
-    lo: Vec3, hi: Vec3, required: StructType, fillMissing: Boolean,
-    checkpointLocation: String, maxChunksPerTrigger: Int)
+    dtypeBytes: Int, lo: Vec3, hi: Vec3, required: StructType,
+    fillMissing: Boolean, checkpointLocation: String, maxChunksPerTrigger: Int)
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
   with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -545,20 +570,8 @@ final class NgMicroBatchStream(layerDir: String, scale: ScaleMeta,
       end: Offset): Array[InputPartition] = {
     val a = start.asInstanceOf[NgStreamOffset].n.toInt
     val b = end.asInstanceOf[NgStreamOffset].n.toInt
-    val grids = entries.slice(a, b).flatMap(gridOf)
-    if (grids.isEmpty) return Array.empty
-    val bd = scale.bounds
-    // same bytes-aware split math as the batch scan (dtype bytes are
-    // not plumbed into the stream; 4 B/voxel is the segmentation
-    // default and only biases the estimate, never correctness)
-    val nParts = ScanSizing.partitions(SparkSession.active, grids.size,
-      scale.chunkSize.x * scale.chunkSize.y * scale.chunkSize.z * 4L)
-    grids.map(g => Array(g.x, g.y, g.z))
-      .grouped(Geom.ceilDiv(grids.size, nParts).toInt).map { group =>
-        NgInputPartition(layerDir, scale.key, group.toArray,
-          bd.minpt.toArray, bd.maxpt.toArray, scale.chunkSize.toArray)
-          : InputPartition
-      }.toArray
+    NgScan.partitionsOf(layerDir, scale, dtypeBytes,
+      entries.slice(a, b).flatMap(gridOf).toSeq)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -572,7 +585,10 @@ final class NgReaderFactory(required: StructType, fillMissing: Boolean)
 }
 
 /** Executor-side reader: one file open per chunk, gunzip, emit row.
-  * Skips IO entirely when `payload` was pruned away.
+  * Skips IO entirely when `payload` was pruned away. On a sharded
+  * scale each shard group is one ranged read through the shard's index
+  * (also when `payload` was pruned: only the index knows which chunks
+  * exist), and an absent chunk yields no row.
   */
 final class NgPartitionReader(part: NgInputPartition, required: StructType,
     fillMissing: Boolean) extends PartitionReader[InternalRow] {
@@ -584,29 +600,40 @@ final class NgPartitionReader(part: NgInputPartition, required: StructType,
     case "x1" => 6; case "y1" => 7; case "z1" => 8
     case "payload" => 9
   }
-  private val bounds = Bbox(
-    Vec3(part.boundsMin(0), part.boundsMin(1), part.boundsMin(2)),
-    Vec3(part.boundsMax(0), part.boundsMax(1), part.boundsMax(2)))
-  private val cs = Vec3(part.chunkSize(0), part.chunkSize(1), part.chunkSize(2))
+  private val scale = part.scale
+  private val bounds = scale.bounds
+  private val cs = scale.chunkSize
 
-  private var i = -1
+  private def chunkObject(g: Vec3): Array[Byte] =
+    PrecomputedIO.readChunkBytes(part.layerDir, scale, g) match {
+      case Some(b) => b
+      case None if fillMissing => null
+      case None => throw new java.io.FileNotFoundException(
+        s"missing chunk ${Geom.chunkBbox(g, bounds, cs).toFilename} " +
+          "(set fill_missing=true to background-fill)")
+    }
+
+  // (grid point, payload) of every chunk that yields a row
+  private val chunks: Iterator[(Vec3, Array[Byte])] = {
+    val pts = part.chunks.iterator.map(c => Vec3(c(0), c(1), c(2)))
+    scale.sharding match {
+      case None => pts.map(g => (g, if (needPayload) chunkObject(g) else null))
+      case Some(spec) =>
+        val byLabel = pts.map(g => Morton.encode(g, scale.gridSize) -> g).toMap
+        byLabel.keys.toSeq.groupBy(spec.shardLocation(_)._1).iterator
+          .flatMap { case (shard, labels) => ShardedIO.readLabelsRanged(
+            s"${part.layerDir}/${scale.key}/${spec.shardFilename(shard)}",
+            spec, labels) }
+          .map { case (l, payload) => (byLabel(l), payload) }
+    }
+  }
+
   private var row: InternalRow = _
 
   override def next(): Boolean = {
-    i += 1
-    if (i >= part.chunks.length) return false
-    val c = part.chunks(i)
-    val g = Vec3(c(0), c(1), c(2))
+    if (!chunks.hasNext) return false
+    val (g, payload) = chunks.next()
     val cb = Geom.chunkBbox(g, bounds, cs)
-    val payload: Array[Byte] =
-      if (!needPayload) null
-      else PrecomputedIO.readChunkObject(
-          java.nio.file.Paths.get(part.layerDir, part.key, cb.toFilename), cs) match {
-        case Some(b) => b
-        case None if fillMissing => null
-        case None => throw new java.io.FileNotFoundException(
-          s"missing chunk ${cb.toFilename} (set fill_missing=true to background-fill)")
-      }
     val all: Array[Any] = Array(g.x, g.y, g.z,
       cb.minpt.x, cb.minpt.y, cb.minpt.z, cb.maxpt.x, cb.maxpt.y, cb.maxpt.z,
       payload)

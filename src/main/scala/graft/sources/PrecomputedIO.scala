@@ -139,8 +139,9 @@ object PrecomputedIO {
       .load(layerDir)
 
   /** Chunk rows overlapping `bbox`; the overlap filter is pushed into
-    * the scan as planning-time grid pruning. */
-  private def chunksIn(spark: SparkSession, layerDir: String, bbox: Bbox,
+    * the scan as planning-time grid pruning. Sharded and unsharded
+    * scales both read through this one scan. */
+  private[sources] def chunksIn(spark: SparkSession, layerDir: String, bbox: Bbox,
       mip: Int, fillMissing: Boolean): DataFrame =
     readChunks(spark, layerDir, mip, fillMissing)
       .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&

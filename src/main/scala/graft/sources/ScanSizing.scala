@@ -84,12 +84,13 @@ object ScanSizing {
     * (VERDICT r18 item 7): the directory stream is spooled straight to
     * a names file — O(1) driver heap, the local-fs analogue of a paged
     * object-store listing — and comes back as a distributed text scan
-    * sized by the shared rule above. The names file lives under the
-    * session's listing dir keyed by the layer path, is rewritten per
-    * invocation (never a result cache — it holds names only), and is
-    * read lazily by however many actions consume the returned dataset.
+    * sized by the shared rule above. Each call spools to its own names
+    * file under the session's listing dir (never a result cache — it
+    * holds names only): the returned dataset reads it lazily, by
+    * however many actions consume it, so a later listing must never
+    * replace it. The files go when the JVM exits.
     *
-    * @param keep     filename filter (regular files only are listed)
+    * @param keep     filename filter, applied to regular files only
     * @param estBytes estimated decoded bytes PER OBJECT for the
     *                 scan-sizing rule (same meaning as [[partitions]])
     * @param repartitionBySize size the scan with [[partitions]]
@@ -105,12 +106,10 @@ object ScanSizing {
     val spool = Paths.get("/tmp/graft_fixture/.listings",
       spark.sparkContext.applicationId)
     Files.createDirectories(spool)
-    val f = spool.resolve(
-      java.lang.Long.toHexString(dir.toAbsolutePath.toString.hashCode
-        & 0xffffffffL) + ".txt")
-    val tmp = spool.resolve(f.getFileName.toString + ".tmp")
+    val f = Files.createTempFile(spool, "names", ".txt")
+    f.toFile.deleteOnExit()
     var n = 0L
-    val w = Files.newBufferedWriter(tmp)
+    val w = Files.newBufferedWriter(f)
     try {
       val st = Files.list(dir)
       try {
@@ -118,14 +117,12 @@ object ScanSizing {
         while (it.hasNext) {
           val p = it.next()
           val nm = p.getFileName.toString
-          if (keep(nm) && Files.isRegularFile(p)) {
+          if (Files.isRegularFile(p) && keep(nm)) {
             w.write(nm); w.newLine(); n += 1
           }
         }
       } finally st.close()
     } finally w.close()
-    Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     val ds = spark.read.textFile(f.toString)
     if (repartitionBySize) ds.repartition(partitions(spark, n, estBytes))
     else ds

@@ -16,6 +16,9 @@ import graft.core._
   * coalesced into bundles (sharding.py:731-766) — the same access
   * pattern object-store byte-range GETs need at 100 TB.
   *
+  * Chunk reads are the `neuroglancer` scan's: it plans each shard's
+  * chunks into one task, which reads them with [[readLabelsRanged]].
+  *
   * Write = S12 shard synthesis: `groupByKey(shard)` shuffles each
   * shard's chunks to one task, which assembles the file with
   * ShardCodec.synthesizeShard (sharding.py:868-983). One shuffle,
@@ -174,54 +177,20 @@ object ShardedIO {
     }.toDF("shard_file", "minishard", "label", "offset", "size")
   }
 
-  /** Chunk-level sharded read: enumerate the pruned grid
-    * (planning-time, metadata-sized), group chunk requests by shard
-    * file, then each task does index reads + coalesced byte-range
-    * data reads for its shard and emits decoded-payload chunk rows
-    * (same schema as PrecomputedIO.readChunks). Shared by the S5
-    * cutout and the sharded->unsharded transfer path.
+  /** Chunk rows (same schema as PrecomputedIO.readChunks) of the
+    * sharded scale's chunks overlapping `bbox`: the pruned
+    * `neuroglancer` scan, which resolves each task's shard groups
+    * through the shard indexes. A chunk absent from its shard yields no
+    * row. Shared by the S5 cutout and the sharded->unsharded transfer.
     */
   def readChunksSharded(spark: SparkSession, layerDir: String, bbox: Bbox,
-      mip: Int = 0): DataFrame = {
-    val meta = PrecomputedIO.readInfo(layerDir)
-    val scale = meta.scale(mip)
-    val spec = scale.sharding.get
-    val grid = scale.gridSize
-    val bounds = scale.bounds
-    val cs = scale.chunkSize
-    val dir = Paths.get(layerDir, scale.key).toString
-    val pts = Geom.gridpoints(bbox, bounds, cs)
-    import spark.implicits._
-    val requests = spark.createDataset(pts.map { g =>
-      val m = Morton.encode(g, grid)
-      (spec.shardFilename(spec.shardLocation(m)._1), m, g.x, g.y, g.z)
-    })
-    val chunkRows = requests.groupByKey(_._1)
-      .flatMapGroups { (shardFile, it) =>
-        val wanted = it.map(t => (t._2, Vec3(t._3, t._4, t._5))).toSeq
-        val byLabel = wanted.toMap
-        readLabelsRanged(Paths.get(dir, shardFile).toString, spec,
-          wanted.map(_._1))
-          .iterator.map { case (label, payload) =>
-            val g = byLabel(label)
-            val cb = Geom.chunkBbox(g, bounds, cs)
-            (g.x, g.y, g.z, cb.minpt.x, cb.minpt.y, cb.minpt.z,
-              cb.maxpt.x, cb.maxpt.y, cb.maxpt.z, payload)
-          }
-      }
-      .toDF("gx", "gy", "gz", "x0", "y0", "z0", "x1", "y1", "z1", "payload")
-    chunkRows
-  }
+      mip: Int = 0): DataFrame =
+    PrecomputedIO.chunksIn(spark, layerDir, bbox, mip, fillMissing = false)
 
-  /** S5 sharded cutout: chunk-level sharded read clipped and decoded
-    * to voxel rows.
+  /** S5 sharded cutout: [[PrecomputedIO.cutoutVoxels]], which reads a
+    * sharded scale through the same scan.
     */
   def cutoutVoxelsSharded(spark: SparkSession, layerDir: String, bbox: Bbox,
-      mip: Int = 0): DataFrame = {
-    val meta = PrecomputedIO.readInfo(layerDir)
-    val scale = meta.scale(mip)
-    PrecomputedIO.decodeToVoxels(
-      readChunksSharded(spark, layerDir, bbox, mip), bbox, scale,
-      meta.dtypeBytes)
-  }
+      mip: Int = 0): DataFrame =
+    PrecomputedIO.cutoutVoxels(spark, layerDir, bbox, mip)
 }

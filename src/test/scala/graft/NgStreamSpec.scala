@@ -234,4 +234,32 @@ class NgStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val journal = Paths.get(ckpt2, "sources", "0", "ng_chunk_log")
     assert(Files.readAllLines(journal).size() == 2)
   }
+
+  test("a stream over a sharded scale is refused, not silently empty") {
+    // the stream discovers per-chunk objects; a sharded scale only has
+    // shard files, which no chunk name parse accepts
+    val sharded = s"$dir/layer_sharded"
+    val sm = meta.copy(scales = Seq(meta.scale(0).copy(
+      sharding = Some(ShardingSpec(0, 0, 1)))))
+    PrecomputedIO.writeInfo(sharded, sm)
+    val s = spark
+    import s.implicits._
+    graft.sources.ShardedIO.writeSharded(Seq((0L, 0L, 0L,
+        Codec.encodeRawFromLongs(Array.fill(64)(7L), 4)))
+      .toDF("gx", "gy", "gz", "payload"), sharded, sm, 0)
+    val e = intercept[Exception] {
+      val q = spark.readStream.format("neuroglancer")
+        .option("path", sharded)
+        .load().select("gx", "gy", "gz")
+        .writeStream.format("memory").queryName("ng_stream_sharded")
+        .option("checkpointLocation", s"$dir/ckpt_sharded")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    def causes(t: Throwable): Seq[String] =
+      if (t == null) Nil else t.getMessage +: causes(t.getCause)
+    assert(causes(e).exists(m => m != null && m.contains("is sharded")),
+      causes(e).mkString(" | "))
+  }
 }

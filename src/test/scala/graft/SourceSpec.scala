@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.core._
-import graft.sources.PrecomputedIO
+import graft.sources.{Neuroglancer, PrecomputedIO}
 
 /** DSv2 `neuroglancer` source behaviors that the oracle rows can't
   * see: planning-time partition pruning, column-pruning-skips-IO,
@@ -318,6 +318,16 @@ class SourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val back2 = PrecomputedIO.readChunks(spark, sink2, fillMissing = true)
       .filter(col("payload").isNotNull)
     assert(back2.count() == orig.count())
+    // a sharded scale holds shard files, so per-chunk objects written
+    // there would never be read back: refused at plan time
+    val shardedDir = s"$dir/layer_sink_sharded"
+    PrecomputedIO.writeInfo(shardedDir, meta.copy(scales = Seq(
+      meta.scale(0).copy(sharding = Some(ShardingSpec(0, 0, 1))))))
+    val es = intercept[IllegalArgumentException] {
+      orig.write.format("neuroglancer").mode("append").save(shardedDir)
+    }
+    assert(es.getMessage.contains("ShardedIO.writeSharded"), es.getMessage)
+    assert(!Files.exists(Paths.get(shardedDir, "1_1_1")))
   }
 
   test("reference fixture info parses (test_cv, 5 scales, cseg)") {
@@ -518,5 +528,138 @@ class SourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(rows.toSet == expect, s"$name $b")
       }
     }
+  }
+
+  test("sharded and unsharded copies of one volume read identically " +
+      "through one pruned scan, without a shuffle") {
+    import graft.sources.{NgInputPartition, NgScan, ShardedIO}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    val s = spark
+    import s.implicits._
+    val dims = Vec3(13, 11, 7)
+    val cs = Vec3(4, 4, 4) // 4x3x2 grid, 5-bit morton codes
+    val bounds = Bbox(Vec3(0, 0, 0), dims)
+    val rnd = new scala.util.Random(20261018)
+    val src = Array.fill((dims.x * dims.y * dims.z).toInt)(
+      rnd.nextLong() & 0xffffffffL)
+    val value = (x: Long, y: Long, z: Long) =>
+      src((x + dims.x * (y + dims.y * z)).toInt)
+    // 2 minishards x 4 shards: each shard holds 4 to 8 chunks
+    val spec = ShardingSpec(preshiftBits = 0, minishardBits = 1,
+      shardBits = 2, minishardIndexEncoding = "gzip", dataEncoding = "gzip")
+    val um = VolumeMeta(layerType = "segmentation", dataType = "uint32",
+      numChannels = 1, scales = Seq(ScaleMeta(key = "1_1_1",
+        encoding = "raw", resolution = Seq(1, 1, 1), chunkSize = cs,
+        size = dims, voxelOffset = Vec3(0, 0, 0))))
+    val sm = um.copy(scales = Seq(um.scale(0).copy(sharding = Some(spec))))
+    val grid = sm.scale(0).gridSize
+    val shardOf = (g: Vec3) => spec.shardLocation(Morton.encode(g, grid))._1
+    def chunks(keep: Vec3 => Boolean) =
+      Geom.gridpoints(bounds, bounds, cs).filter(keep).map { g =>
+        val cb = Geom.chunkBbox(g, bounds, cs)
+        val vox = for (z <- cb.minpt.z until cb.maxpt.z;
+          y <- cb.minpt.y until cb.maxpt.y; x <- cb.minpt.x until cb.maxpt.x)
+          yield value(x, y, z)
+        (g.x, g.y, g.z, Codec.encodeRawFromLongs(vox.toArray, 4))
+      }.toDF("gx", "gy", "gz", "payload")
+    val unsharded = s"$dir/diff_unsharded"
+    PrecomputedIO.writeInfo(unsharded, um)
+    PrecomputedIO.writeChunks(chunks(_ => true), unsharded, um, 0)
+    val sharded = s"$dir/diff_sharded"
+    PrecomputedIO.writeInfo(sharded, sm)
+    ShardedIO.writeSharded(chunks(_ => true), sharded, sm, 0)
+    assert(Geom.gridpoints(bounds, bounds, cs).groupBy(shardOf)
+      .forall(_._2.size > 1), "every shard should hold several chunks")
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("x", "y", "z", "label").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    for (b <- Seq(
+        Bbox(Vec3(1, 2, 3), Vec3(10, 9, 6)), // unaligned, interior
+        Bbox(Vec3(5, 3, 1), Vec3(6, 4, 2)), // one voxel
+        Bbox(Vec3(7, 6, 2), Vec3(20, 30, 9)), // crosses the far edges
+        Bbox(Vec3(-3, -2, -1), Vec3(3, 5, 4)))) { // crosses the origin
+      val c = b.intersection(bounds)
+      val expect = (for (z <- c.minpt.z until c.maxpt.z;
+          y <- c.minpt.y until c.maxpt.y; x <- c.minpt.x until c.maxpt.x)
+        yield (x, y, z, value(x, y, z))).toSet
+      val u = rows(PrecomputedIO.cutoutVoxels(spark, unsharded, b))
+      val sh = rows(PrecomputedIO.cutoutVoxels(spark, sharded, b))
+      assert(u.length == expect.size && u.toSet == expect, s"unsharded $b")
+      assert(sh.length == u.length && sh.toSet == u.toSet, s"sharded $b")
+      val cut = ShardedIO.cutoutVoxelsSharded(spark, sharded, b)
+      assert(rows(cut).toSet == expect, s"cutoutVoxelsSharded $b")
+      val plan = cut.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), plan)
+    }
+
+    // grid-key filters push into the sharded scan, which plans only the
+    // pruned chunks, packed so that no shard spans two tasks
+    def pruned(layer: String) = Neuroglancer.requirePushedFilters(
+      PrecomputedIO.readChunks(spark, layer)
+        .filter(col("gx") >= 1 && col("gy") <= 1 && col("gz") === 1))
+    def chunkRows(df: org.apache.spark.sql.DataFrame) =
+      df.select("gx", "gy", "gz", "payload").collect().map(r =>
+        ((r.getLong(0), r.getLong(1), r.getLong(2)),
+          r.getAs[Array[Byte]](3).toSeq)).toMap
+    val want = Geom.gridpoints(bounds, bounds, cs)
+      .filter(g => g.x >= 1 && g.y <= 1 && g.z == 1).toSet
+    spark.conf.set("spark.graft.scan.minBytesPerTask", (96L << 10).toString)
+    try {
+      val df = pruned(sharded)
+      val parts = df.queryExecution.optimizedPlan.collect {
+        case r: DataSourceV2ScanRelation => r.scan
+      }.collect { case sc: NgScan => sc.toBatch.planInputPartitions() }
+        .flatten.map(_.asInstanceOf[NgInputPartition].chunks
+          .map(c => Vec3(c(0), c(1), c(2))).toSeq)
+      assert(parts.length > 1, "packing should yield several tasks")
+      assert(parts.flatten.toSet == want && parts.flatten.length == want.size)
+      val shardSets = parts.map(_.map(shardOf).toSet)
+      assert(shardSets.flatten.length == shardSets.flatten.distinct.length,
+        s"a shard group was split across tasks: $parts")
+      assert(chunkRows(df) == chunkRows(pruned(unsharded)))
+    } finally spark.conf.unset("spark.graft.scan.minBytesPerTask")
+
+    // a chunk absent from its shard, or a whole missing shard file,
+    // yields no row — with fill_missing and with payload pruned alike
+    val sparse = s"$dir/diff_sharded_sparse"
+    val gone = (g: Vec3) => shardOf(g) == 3 || g == Vec3(1, 1, 0)
+    PrecomputedIO.writeInfo(sparse, sm)
+    ShardedIO.writeSharded(chunks(g => !gone(g)), sparse, sm, 0)
+    assert(!Files.exists(Paths.get(sparse, "1_1_1", spec.shardFilename(3))))
+    val present = Geom.gridpoints(bounds, bounds, cs).filterNot(gone)
+      .map(g => (g.x, g.y, g.z)).toSet
+    for (fill <- Seq(false, true)) {
+      val all = PrecomputedIO.readChunks(spark, sparse, fillMissing = fill)
+      assert(chunkRows(all).keySet == present, s"fill_missing=$fill")
+      val keys = all.select("gx", "gy", "gz").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(keys.length == present.size && keys.toSet == present,
+        s"payload pruned, fill_missing=$fill")
+    }
+  }
+
+  test("listedNames: a later listing never replaces an earlier one's names") {
+    import graft.sources.ScanSizing
+    // sibling paths with equal String.hashCode ("Aa" and "BB" collide)
+    val root = Files.createTempDirectory("listed")
+    val (a, b) = (root.resolve("Aa"), root.resolve("BB"))
+    assert(a.toAbsolutePath.toString.hashCode == b.toAbsolutePath.toString.hashCode)
+    Files.createDirectories(a); Files.createDirectories(b)
+    Files.write(a.resolve("1"), Array[Byte](1))
+    Files.write(b.resolve("2"), Array[Byte](2))
+    val la = ScanSizing.listedNames(spark, a, _ => true, 0L)
+    val lb = ScanSizing.listedNames(spark, b, _ => true, 0L)
+    assert(la.collect().toSeq == Seq("1"))
+    assert(lb.collect().toSeq == Seq("2"))
+  }
+
+  test("listedNames: the name filter sees regular files only") {
+    import graft.sources.ScanSizing
+    val d = Files.createTempDirectory("listed_numeric")
+    Files.write(d.resolve("1"), Array[Byte](1))
+    Files.createDirectories(d.resolve("sub"))
+    val numeric = ScanSizing.listedNames(spark, d, _.toLong < 8, 0L)
+    assert(numeric.collect().toSeq == Seq("1"))
   }
 }
