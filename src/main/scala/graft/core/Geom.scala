@@ -128,6 +128,50 @@ object Bbox {
   */
 trait VoxelSink { def apply(x: Long, y: Long, z: Long, i: Int): Unit }
 
+/** The voxels of the F-order block at `lo` of shape `bs` that lie
+  * inside `clip`, as a pull cursor: each [[next]] moves to the next
+  * one, z-major with x fastest, and exposes its coordinates and its
+  * index `i` into the block. This is the one definition of a cutout's
+  * clip bounds and voxel order; [[Geom.clipWalk]] drives it for
+  * push-style callers. `n` is the decoded voxel count; with `planes`
+  * stacked planes (channel-slowest layouts) it must be exactly
+  * `planes` block volumes, so a short, oversized or mis-shaped chunk
+  * fails here as an IllegalArgumentException, never as an index error
+  * or as voxels pasted into a neighbour's cell.
+  */
+final class ClipCursor(n: Int, lo: Vec3, bs: Vec3, clip: Bbox, planes: Int = 1) {
+  private val vol = bs.x * bs.y * bs.z
+  require(n == vol * planes,
+    s"decoded block has $n voxels; shape $bs at $lo needs ${vol * planes}")
+  private val lox = math.max(lo.x, clip.minpt.x)
+  private val hix = math.min(lo.x + bs.x, clip.maxpt.x)
+  private val loy = math.max(lo.y, clip.minpt.y)
+  private val hiy = math.min(lo.y + bs.y, clip.maxpt.y)
+  private val loz = math.max(lo.z, clip.minpt.z)
+  private val hiz = math.min(lo.z + bs.z, clip.maxpt.z)
+  private val empty = lox >= hix || loy >= hiy || loz >= hiz
+
+  /** Clipped voxel count (0 when the block misses `clip`). */
+  val size: Long = if (empty) 0L else (hix - lox) * (hiy - loy) * (hiz - loz)
+
+  private var rowsLeft = if (empty) 0L else (hiy - loy) * (hiz - loz)
+  var x: Long = hix
+  var y: Long = loy - 1
+  var z: Long = loz
+  var i: Int = 0
+
+  def next(): Boolean =
+    if (x + 1 < hix) { x += 1; i += 1; true }
+    else if (rowsLeft > 0) {
+      rowsLeft -= 1
+      y += 1
+      if (y == hiy) { y = loy; z += 1 }
+      x = lox
+      i = ((x - lo.x) + bs.x * ((y - lo.y) + bs.y * (z - lo.z))).toInt
+      true
+    } else false
+}
+
 object Geom {
   /** Ceil division for non-negative denominators. */
   def ceilDiv(a: Long, b: Long): Long = Math.floorDiv(a + b - 1, b)
@@ -162,37 +206,13 @@ object Geom {
   /** The decode-and-clip walk every cutout shares (rx.py:239-379's
     * paste of each decoded chunk into the request buffer, as a
     * generator): visit each voxel of the F-order block at `lo` of
-    * shape `bs` that lies inside `clip`, z-major, handing `sink` its
-    * coordinates and its index into the block. `n` is the decoded
-    * voxel count; with `planes` stacked planes (channel-slowest
-    * layouts) it must be exactly `planes` block volumes, so a short,
-    * oversized or mis-shaped chunk fails here as an
-    * IllegalArgumentException, never as an index error or as voxels
-    * pasted into a neighbour's cell.
+    * shape `bs` that lies inside `clip`, in [[ClipCursor]] order,
+    * handing `sink` its coordinates and its index into the block.
     */
   def clipWalk(n: Int, lo: Vec3, bs: Vec3, clip: Bbox, planes: Int = 1)(
       sink: VoxelSink): Unit = {
-    val vol = bs.x * bs.y * bs.z
-    require(n == vol * planes,
-      s"decoded block has $n voxels; shape $bs at $lo needs ${vol * planes}")
-    val lox = math.max(lo.x, clip.minpt.x); val hix = math.min(lo.x + bs.x, clip.maxpt.x)
-    val loy = math.max(lo.y, clip.minpt.y); val hiy = math.min(lo.y + bs.y, clip.maxpt.y)
-    val loz = math.max(lo.z, clip.minpt.z); val hiz = math.min(lo.z + bs.z, clip.maxpt.z)
-    var z = loz
-    while (z < hiz) {
-      var y = loy
-      while (y < hiy) {
-        var i = ((lox - lo.x) + bs.x * ((y - lo.y) + bs.y * (z - lo.z))).toInt
-        var x = lox
-        while (x < hix) {
-          sink(x, y, z, i)
-          i += 1
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
+    val c = new ClipCursor(n, lo, bs, clip, planes)
+    while (c.next()) sink(c.x, c.y, c.z, c.i)
   }
 
   /** [[clipWalk]] collected as (x, y, z, value) rows, into one array
@@ -200,11 +220,11 @@ object Geom {
     */
   def clipRows(vox: Array[Long], lo: Vec3, bs: Vec3, clip: Bbox)
       : Seq[(Long, Long, Long, Long)] = {
-    val out = new Array[(Long, Long, Long, Long)](
-      Bbox(lo, lo + bs).intersection(clip).volume.toInt)
+    val c = new ClipCursor(vox.length, lo, bs, clip)
+    val out = new Array[(Long, Long, Long, Long)](c.size.toInt)
     var k = 0
-    clipWalk(vox.length, lo, bs, clip) { (x, y, z, i) =>
-      out(k) = (x, y, z, vox(i))
+    while (c.next()) {
+      out(k) = (c.x, c.y, c.z, vox(c.i))
       k += 1
     }
     scala.collection.immutable.ArraySeq.unsafeWrapArray(out)

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.util.zip.Inflater
+import java.util.zip.{CRC32, Inflater}
 
 /** Minimal pure-JVM PNG scanline decoder for the engine's read paths —
   * non-interlaced, bit depth 8/16, color types 0 (gray), 2 (RGB) and
@@ -45,7 +45,10 @@ object PngDecode {
 
   /** Decode to defiltered samples; None when the stream is outside the
     * supported envelope or malformed (callers fall back to ImageIO,
-    * whose error reporting then applies).
+    * whose error reporting then applies). A CRC32 mismatch on IHDR,
+    * IDAT or IEND fails here as an IllegalArgumentException instead:
+    * ImageIO's reader does not check chunk CRCs, so falling back would
+    * accept the corrupt bytes.
     */
   def decodeRaw(png: Array[Byte]): Option[Raw] = {
     if (png.length < 33) return None
@@ -60,6 +63,12 @@ object PngDecode {
       val len = be32(png, pos)
       val typ = be32(png, pos + 4)
       if (len < 0 || pos + 12 + len > png.length) return None
+      if (typ == 0x49484452 || typ == 0x49444154 || typ == 0x49454e44) {
+        val crc = new CRC32()
+        crc.update(png, pos + 4, 4 + len)
+        require(crc.getValue.toInt == be32(png, pos + 8 + len),
+          f"png chunk CRC mismatch at byte $pos (type 0x$typ%08x)")
+      }
       typ match {
         case 0x49484452 => // IHDR
           if (len < 13) return None

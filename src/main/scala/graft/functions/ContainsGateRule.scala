@@ -21,14 +21,14 @@ import graft.core.{Codec, Compresso, Cseg, Vec3}
   * Matched shape (what the built-in optimizer leaves after pushing the
   * user's filter through the x/y/z/label projection):
   *
-  *   Filter (vx#N._4 = K [AND ...])
-  *   +- Generate explode(graft_decode_voxels:<enc>:<dtb>:<bs>(x0..z1, payload))
+  *   Filter (label#N = K [AND ...])
+  *   +- Generate decode_voxels(x0..z1, payload), [x, y, z, label#N]
   *      +- <chunk relation>
   *
   * rewritten to
   *
-  *   Filter (vx#N._4 = K [AND ...])
-  *   +- Generate explode(...)
+  *   Filter (label#N = K [AND ...])
+  *   +- Generate decode_voxels(...)
   *      +- Filter graft_contains_gate(x0..z1, payload)
   *         +- <chunk relation>
   *
@@ -36,26 +36,25 @@ import graft.core.{Codec, Compresso, Cseg, Vec3}
   * chunk producing such a row contains K and passes the gate, so the
   * rewrite never changes results (the gate only drops chunks whose
   * every decoded row the upper filter would discard). A null payload
-  * (fill_missing) decodes to zeros, so the gate passes it iff K = 0.
-  * The decode UDF's name carries the codec parameters (encoding, dtype
-  * bytes, cseg block size) that the gate needs; for cseg the gate
-  * reads only the palette blocks (Cseg.labels), for raw it scans
-  * words without materializing voxel rows. Encodings with no cheap
-  * membership probe (png/jpeg) are left untouched.
+  * (fill_missing) decodes to the generator's background value, so the
+  * gate passes it iff K is that value. The [[DecodeVoxels]] generator
+  * carries the codec parameters (encoding, dtype bytes, cseg block
+  * size) the gate needs; for cseg the gate reads only the palette
+  * blocks (Cseg.labels), for raw it scans words without materializing
+  * voxel rows. Encodings with no cheap membership probe (png/jpeg),
+  * and the float and channel cutouts, are left untouched.
   */
 object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  val DecodePrefix = "graft_decode_voxels:"
   val GateName = "graft_contains_gate"
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond,
-        gen @ Generate(Explode(u: ScalaUDF), _, _, _, genOut, gchild))
-        if u.udfName.exists(_.startsWith(DecodePrefix)) &&
-          !alreadyGated(gchild) =>
-      labelSet(cond, genOut) match {
+        gen @ Generate(d: DecodeVoxels, _, _, _, genOut, gchild))
+        if d.labelOrdinal.isDefined && !alreadyGated(gchild) =>
+      labelSet(cond, genOut(d.labelOrdinal.get)) match {
         case Some(ks) =>
-          mkGate(u, ks)
+          mkGate(d, ks)
             .map(g => f.copy(child = gen.copy(child = Filter(g, gchild))))
             .getOrElse(f)
         case None => f
@@ -68,14 +67,13 @@ object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Extract the label set from a membership conjunct over this
-    * Generate's output struct (ordinal 3 = label): `vx._4 = K`
-    * (either literal order), `vx._4 IN (...)`, or its InSet form.
+    * Generate's `label` output: `label = K` (either literal order),
+    * `label IN (...)`, or its InSet form.
     */
   private def labelSet(cond: Expression,
-      genOut: Seq[Attribute]): Option[Seq[Long]] = {
-    val vx = genOut.headOption.map(_.exprId)
+      label: Attribute): Option[Seq[Long]] = {
     def isLabel(e: Expression): Boolean = e match {
-      case GetStructField(a: AttributeReference, 3, _) => vx.contains(a.exprId)
+      case a: AttributeReference => a.exprId == label.exprId
       case _ => false
     }
     splitConjunctivePredicates(cond).collectFirst {
@@ -90,24 +88,16 @@ object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** Build the gate ScalaUDF over the SAME children as the decode UDF
+  /** Build the gate ScalaUDF over the SAME children as the decode
     * (x0, y0, z0, x1, y1, z1, payload): pass iff the payload contains
     * ANY of the sought labels.
     */
-  private def mkGate(u: ScalaUDF, ks: Seq[Long]): Option[Expression] = {
-    val parts = u.udfName.get.stripPrefix(DecodePrefix).split(":")
-    val enc = parts(0)
-    val dtb = parts(1).toInt
-    val bs = parts(2).split("_").map(_.toLong) match {
-      case Array(a, b, c) => Vec3(a, b, c)
-      case _ => return None
-    }
+  private def mkGate(d: DecodeVoxels, ks: Seq[Long]): Option[Expression] = {
+    val enc = d.encoding
     if (enc != "raw" && enc != "compressed_segmentation" && enc != "compresso")
       return None
     if (ks.isEmpty) return None
-    // a missing (null-payload) chunk reads back as all-background —
-    // the decode name's trailing field (absent on older names = 0)
-    val bg = if (parts.length > 3) parts(3).toLong else 0L
+    val (dtb, bs, bg) = (d.dtypeBytes, d.csegBlock, d.background)
     val karr = ks.toArray
     val fn = (x0: Long, y0: Long, z0: Long, x1: Long, y1: Long, z1: Long,
         p: Array[Byte]) =>
@@ -118,7 +108,7 @@ object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
       } else if (enc == "compresso")
         karr.exists(k => Compresso.contains(p, k))
       else karr.exists(k => Codec.rawContains(p, dtb, k))
-    Some(ScalaUDF(fn, BooleanType, u.children, Nil, None, Some(GateName),
+    Some(ScalaUDF(fn, BooleanType, d.children, Nil, None, Some(GateName),
       false, true))
   }
 

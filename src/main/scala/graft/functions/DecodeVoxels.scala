@@ -1,0 +1,116 @@
+package graft.functions
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
+import graft.core.{Bbox, ClipCursor, Codec, Compresso, Cseg, Vec3}
+
+/** The cutout decode stage as one native Catalyst generator: each chunk
+  * row (x0, y0, z0, x1, y1, z1, payload) is decoded once and its voxels
+  * inside `clip` stream out as (x, y, z, label) rows, in [[ClipCursor]]
+  * order, written into one reused row (GenerateExec copies each row
+  * into its own buffer before asking for the next), so no per-voxel
+  * object is made between the decode and Spark's row buffer.
+  *
+  * The fields carry what the decode needs and what
+  * [[ContainsGateRule]] reads to gate payloads below it: the scale's
+  * `encoding`, dtype bytes, cseg block size and the `background` a
+  * null (fill_missing) payload reads back as. Two cutout shapes ride
+  * the same stage:
+  *   - `valueType = DoubleType`: IEEE float raw chunks, column `value`
+  *   - non-empty `channels`: `planes` channel-slowest planes per chunk,
+  *     one (x, y, z, c, value) row per requested channel
+  */
+case class DecodeVoxels(children: Seq[Expression], encoding: String,
+    dtypeBytes: Int, clip: Bbox, csegBlock: Vec3 = Vec3(8, 8, 8),
+    background: Long = 0L, valueType: DataType = LongType,
+    channels: Seq[Int] = Nil, planes: Int = 1)
+    extends Generator with CodegenFallback {
+  require(children.length == 7,
+    "decode_voxels(x0, y0, z0, x1, y1, z1, payload) takes 7 arguments")
+
+  override def prettyName: String = "decode_voxels"
+
+  /** The output column a `label = K` filter gates on, if any. */
+  def labelOrdinal: Option[Int] =
+    if (channels.isEmpty && valueType == LongType) Some(3) else None
+
+  override def elementSchema: StructType = StructType(
+    Seq("x", "y", "z").map(StructField(_, LongType, nullable = false)) ++
+      (if (channels.isEmpty) Nil
+       else Seq(StructField("c", LongType, nullable = false))) :+
+      StructField(if (labelOrdinal.isDefined) "label" else "value",
+        valueType, nullable = false))
+
+  private def decodeLongs(p: Array[Byte], bs: Vec3, at: Vec3): Array[Long] = {
+    // codecs that carry their own dims must agree with the chunk's:
+    // a permuted shape has the right voxel count but scrambles them
+    def shaped(d: (Vec3, Array[Long])): Array[Long] = {
+      require(d._1 == bs, s"chunk $bs at $at decodes as ${d._1}")
+      d._2
+    }
+    encoding match {
+      case "compressed_segmentation" => Cseg.decode(p, bs, csegBlock, dtypeBytes)
+      case "compresso" => shaped(Compresso.decode(p))
+      case "npz" => shaped(Codec.decodeNpz(p))
+      case "png" if channels.nonEmpty => Codec.decodePngChannelsToLongs(p, planes)
+      case "jpeg" if channels.nonEmpty => Codec.decodeJpegChannelsToLongs(p)
+      case "png" if dtypeBytes == 2 => Codec.decodePng16(p)
+      case "png" => Codec.decodeRawToLongs(Codec.decodePng(p), 1)
+      case _ => Codec.decodeRawToLongs(p, dtypeBytes)
+    }
+  }
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    def long(k: Int): Long = children(k).eval(input).asInstanceOf[Long]
+    val at = Vec3(long(0), long(1), long(2))
+    val bs = Vec3(long(3), long(4), long(5)) - at
+    val p = children(6).eval(input).asInstanceOf[Array[Byte]]
+    val row = new SpecificInternalRow(elementSchema.map(_.dataType))
+    val vi = row.numFields - 1
+    // a null payload reads back as `background` everywhere: the value
+    // field is written once and only the coordinates move
+    val longs = if (p == null || valueType != LongType) null else decodeLongs(p, bs, at)
+    val doubles =
+      if (p == null || valueType == LongType) null
+      else Codec.decodeRawFloatsToDoubles(p, dtypeBytes)
+    val n =
+      if (longs != null) longs.length
+      else if (doubles != null) doubles.length
+      else (bs.x * bs.y * bs.z * planes).toInt
+    if (p == null) {
+      if (valueType == LongType) row.setLong(vi, background)
+      else row.setDouble(vi, background.toDouble)
+    }
+    val c = new ClipCursor(n, at, bs, clip, planes)
+    val plane = (bs.x * bs.y * bs.z).toInt
+    val chans = if (channels.isEmpty) Array(0) else channels.toArray
+    val withC = channels.nonEmpty
+    new Iterator[InternalRow] {
+      private var ci = chans.length - 1
+      private var ready = false
+      def hasNext: Boolean = {
+        if (!ready) {
+          if (ci + 1 < chans.length) { ci += 1; ready = true }
+          else if (c.next()) { ci = 0; ready = true }
+        }
+        ready
+      }
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("decode_voxels")
+        ready = false
+        row.setLong(0, c.x); row.setLong(1, c.y); row.setLong(2, c.z)
+        if (withC) row.setLong(3, chans(ci))
+        val i = c.i + plane * chans(ci)
+        if (longs != null) row.setLong(vi, longs(i))
+        else if (doubles != null) row.setDouble(vi, doubles(i))
+        row
+      }
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
+}

@@ -129,9 +129,12 @@ object SimilarityQueries {
     // the query-term probe shrinks the corpus to <= 12 terms'
     // postings BEFORE any stats attach; dl/df are SEMI-JOIN-REDUCED
     // to exactly the probe's rows (df: <= |qterms| rows, dl: one row
-    // per hit doc), so every broadcast is probe-sized — the r18 plan
-    // broadcast the FULL doc-count dl and vocab-sized df, which
-    // cannot broadcast at 100 TB (VERDICT r18 item 3)
+    // per hit doc). The broadcasts are bounded by the probe's
+    // postings, not by a constant: the hits-side doc_id set and dlRed
+    // hold one row per hit document, postings-sized (up to the whole
+    // corpus) for a high-df term. The r18 plan broadcast the FULL
+    // doc-count dl and vocab-sized df whatever the probe (VERDICT r18
+    // item 3)
     val hits = tf
       .join(broadcast(qterms), Seq("term"))
       // exclude the query document itself — symmetric with the

@@ -2850,10 +2850,13 @@ object TextQueries {
         // the query-term probe shrinks the corpus to the postings of
         // <= 12 terms BEFORE any stats attach; dl/df are then
         // SEMI-JOIN-REDUCED to exactly the rows the scored side needs
-        // (df: <= |qterms| rows; dl: one row per hit doc) so every
-        // broadcast below is probe-sized, never corpus-proportional —
-        // the r18 plan broadcast the FULL doc-count dl and vocab df,
-        // which cannot broadcast at 100 TB (VERDICT r18 item 3).
+        // (df: <= |qterms| rows; dl: one row per hit doc). The
+        // broadcasts below are bounded by the probe's postings, not
+        // by a constant: qterms and df are <= 12 rows, but the
+        // hits-side doc_id set and dl hold one row per hit document,
+        // which is postings-sized (up to the whole corpus) for a
+        // high-df term. The r18 plan broadcast the FULL doc-count dl
+        // and vocab df whatever the probe (VERDICT r18 item 3).
         // (hits re-derives from the checkpointed tf for each consumer —
         // a broadcast probe over blocks, cheaper than a checkpoint job;
         // the semi-join build sides skip distinct — a semi join is

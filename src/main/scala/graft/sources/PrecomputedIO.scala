@@ -2,8 +2,12 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types.DoubleType
 import graft.core._
+import graft.functions.DecodeVoxels
 
 /** Real Neuroglancer precomputed layer I/O on a filesystem.
   *
@@ -187,9 +191,9 @@ object PrecomputedIO {
 
   /** S4 float-image cutout (float32/float64 raw layers — the
     * reference's float dtype support; fpzip-compressed float chunks
-    * are n/a with the other C++ codecs). Same pruned scan + clip loop
-    * as the integer path, but voxels decode as IEEE doubles and the
-    * value column is DOUBLE.
+    * are n/a with the other C++ codecs). Same pruned scan and decode
+    * stage as the integer path, but voxels decode as IEEE doubles and
+    * the value column is DOUBLE.
     *
     * @return voxel rows (x, y, z, value: double)
     */
@@ -201,25 +205,9 @@ object PrecomputedIO {
       s"${meta.dataType} layer — use cutoutVoxels")
     require(scale.encoding == "raw",
       s"float cutout reads raw encoding, not ${scale.encoding}")
-    val dtb = meta.dtypeBytes
-    val chunks = chunksIn(spark, layerDir, bbox, mip, fillMissing)
-    val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
-        z1: Long, payload: Array[Byte]) => {
-      val bs = Vec3(x1 - x0, y1 - y0, z1 - z0)
-      val vox =
-        if (payload == null) new Array[Double]((bs.x * bs.y * bs.z).toInt)
-        else Codec.decodeRawFloatsToDoubles(payload, dtb)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Double)]
-      Geom.clipWalk(vox.length, Vec3(x0, y0, z0), bs, bbox)(
-        (x, y, z, i) => out += ((x, y, z, vox(i))))
-      out.toSeq
-    })
-    chunks
-      .select(explode(decodeUdf(col("x0"), col("y0"), col("z0"),
-        col("x1"), col("y1"), col("z1"), col("payload"))).as("vx"))
-      .select(col("vx._1").as("x"), col("vx._2").as("y"),
-        col("vx._3").as("z"), col("vx._4").as("value"))
+    decodeStage(chunksIn(spark, layerDir, bbox, mip, fillMissing),
+      DecodeVoxels(chunkCols, scale.encoding, meta.dtypeBytes, bbox,
+        valueType = DoubleType))
   }
 
   /** P2/S4 multi-channel cutout: chunk payloads hold all channels in
@@ -229,7 +217,7 @@ object PrecomputedIO {
     * `channels` is the reified channel slice of the reference's 4-D
     * __getitem__ (frontends/precomputed.py:582-588 channel_slice):
     * only requested channels become rows, so the selection prunes
-    * inside the decode rather than after the explode.
+    * inside the decode stage.
     *
     * @return voxel rows (x, y, z, c, value)
     */
@@ -247,85 +235,37 @@ object PrecomputedIO {
     val isJpeg = scale.encoding == "jpeg"
     require(!(isPng || isJpeg) || meta.dataType == "uint8",
       s"${scale.encoding} encoding requires uint8, not ${meta.dataType}")
-    val dtb = meta.dtypeBytes
     val nc = meta.numChannels
     require(!isJpeg || nc == 3,
       s"jpeg multi-channel requires 3 channels, got $nc")
     require(channels.nonEmpty && channels.forall(c => c >= 0 && c < nc),
       s"channel slice $channels out of range for $nc channels")
-    val chans = channels.toArray
-    val chunks = chunksIn(spark, layerDir, bbox, mip, fillMissing)
-    val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
-        z1: Long, payload: Array[Byte]) => {
-      val bs = Vec3(x1 - x0, y1 - y0, z1 - z0)
-      val plane = (bs.x * bs.y * bs.z).toInt
-      val vox =
-        if (payload == null) new Array[Long](plane * nc)
-        else if (isPng) Codec.decodePngChannelsToLongs(payload, nc)
-        else if (isJpeg) Codec.decodeJpegChannelsToLongs(payload)
-        else Codec.decodeRawToLongs(payload, dtb)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Long, Long)]
-      Geom.clipWalk(vox.length, Vec3(x0, y0, z0), bs, bbox, planes = nc) {
-        (x, y, z, i) =>
-          var ci = 0
-          while (ci < chans.length) {
-            out += ((x, y, z, chans(ci).toLong, vox(i + plane * chans(ci))))
-            ci += 1
-          }
-      }
-      out.toSeq
-    })
-    chunks
-      .select(explode(decodeUdf(col("x0"), col("y0"), col("z0"),
-        col("x1"), col("y1"), col("z1"), col("payload"))).as("vx"))
-      .select(col("vx._1").as("x"), col("vx._2").as("y"),
-        col("vx._3").as("z"), col("vx._4").as("c"),
-        col("vx._5").as("value"))
+    decodeStage(chunksIn(spark, layerDir, bbox, mip, fillMissing),
+      DecodeVoxels(chunkCols, scale.encoding, meta.dtypeBytes, bbox,
+        channels = channels.toList, planes = nc))
   }
 
   /** Shared decode stage: chunk rows (x0..z1, payload) -> voxel rows
-    * clipped to `bbox`, dispatching on the scale's encoding.
-    * `background` is the fill value for missing (null-payload) chunks —
-    * the reference's background_color option (image/rx.py background
-    * buffers; test_cloudvolume.py:85-140), default 0.
+    * (x, y, z, label) clipped to `bbox`, dispatching on the scale's
+    * encoding. One native generator ([[DecodeVoxels]]) decodes each
+    * chunk once and streams its clipped voxels straight into Spark's
+    * row buffer, z-major and x fastest within a chunk. `background` is
+    * the fill value for missing (null-payload) chunks — the
+    * reference's background_color option (image/rx.py background
+    * buffers; test_cloudvolume.py:85-140), default 0. A label-equality
+    * filter above this stage gets a payload-level contains() gate
+    * below it when [[graft.functions.ContainsGateRule]] is installed.
     */
   def decodeToVoxels(chunks: DataFrame, bbox: Bbox, scale: ScaleMeta,
-      dtb: Int, background: Long = 0L): DataFrame = {
-    val enc = scale.encoding
-    val csegBs = scale.csegBlockSize.getOrElse(Vec3(8, 8, 8))
-    val bg = background
-    // the UDF name carries the codec parameters so the ContainsGateRule
-    // optimizer rule can synthesize a payload-level contains() gate
-    // for label-equality filters above this decode (see
-    // graft.functions.ContainsGateRule); the trailing field is the
-    // background value the gate must credit to null payloads
-    val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
-        z1: Long, payload: Array[Byte]) => {
-      val bs = Vec3(x1 - x0, y1 - y0, z1 - z0)
-      // codecs that carry their own dims must agree with the chunk's:
-      // a permuted shape has the right voxel count but scrambles them
-      def shaped(d: (Vec3, Array[Long])): Array[Long] = {
-        require(d._1 == bs, s"chunk $bs at ($x0,$y0,$z0) decodes as ${d._1}")
-        d._2
-      }
-      val vox =
-        if (payload == null) Array.fill((bs.x * bs.y * bs.z).toInt)(bg)
-        else if (enc == "compressed_segmentation")
-          Cseg.decode(payload, bs, csegBs, dtb)
-        else if (enc == "compresso") shaped(Compresso.decode(payload))
-        else if (enc == "png" && dtb == 2) Codec.decodePng16(payload)
-        else if (enc == "png")
-          Codec.decodeRawToLongs(Codec.decodePng(payload), 1)
-        else if (enc == "npz") shaped(Codec.decodeNpz(payload))
-        else Codec.decodeRawToLongs(payload, dtb)
-      Geom.clipRows(vox, Vec3(x0, y0, z0), bs, bbox)
-    }).withName(s"graft_decode_voxels:$enc:$dtb:" +
-      s"${csegBs.x}_${csegBs.y}_${csegBs.z}:$bg")
-    chunks
-      .select(explode(decodeUdf(col("x0"), col("y0"), col("z0"),
-        col("x1"), col("y1"), col("z1"), col("payload"))).as("vx"))
-      .select(col("vx._1").as("x"), col("vx._2").as("y"),
-        col("vx._3").as("z"), col("vx._4").as("label"))
-  }
+      dtb: Int, background: Long = 0L): DataFrame =
+    decodeStage(chunks, DecodeVoxels(chunkCols, scale.encoding, dtb, bbox,
+      scale.csegBlockSize.getOrElse(Vec3(8, 8, 8)), background))
+
+  /** The chunk-row columns the decode stage reads, in its child order. */
+  private def chunkCols: Seq[Expression] =
+    Seq("x0", "y0", "z0", "x1", "y1", "z1", "payload")
+      .map(c => ColumnShim.expression(col(c)))
+
+  private def decodeStage(chunks: DataFrame, d: DecodeVoxels): DataFrame =
+    chunks.select(ColumnShim.column(d))
 }

@@ -90,6 +90,13 @@ object ScanSizing {
     * however many actions consume it, so a later listing must never
     * replace it. The files go when the JVM exits.
     *
+    * Assumes a filesystem shared by the driver and every executor: the
+    * names file is written under the driver-local
+    * `/tmp/graft_fixture/.listings/<applicationId>/` and the returned
+    * text scan reads that path from the executors, which holds in local
+    * mode or on a shared mount but not on a cluster whose executors
+    * have their own `/tmp`.
+    *
     * @param keep     filename filter, applied to regular files only
     * @param estBytes estimated decoded bytes PER OBJECT for the
     *                 scan-sizing rule (same meaning as [[partitions]])

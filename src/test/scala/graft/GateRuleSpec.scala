@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.core.{Bbox, Vec3}
+import graft.core.{Bbox, Codec, ScaleMeta, Vec3, VolumeMeta}
 import graft.functions.ContainsGateRule
 import graft.ops.RealLayerQueries
 import graft.sources.PrecomputedIO
@@ -14,7 +14,8 @@ import graft.sources.PrecomputedIO
   * codec contains() gate before decode. Asserts (a) results are
   * byte-identical with the rule on and off, (b) the gate actually
   * lands in the optimized plan, (c) a no-match label returns empty
-  * through the gated plan, (d) non-equality filters are untouched.
+  * through the gated plan, (d) non-equality filters are untouched,
+  * (e) a missing chunk read with fill_missing gates as its background.
   */
 class GateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -94,5 +95,46 @@ class GateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!df.queryExecution.optimizedPlan.toString
       .contains(ContainsGateRule.GateName))
     assert(df.count() > 0)
+  }
+
+  test("fill_missing: a missing chunk gates as its background value") {
+    val dir = java.nio.file.Files.createTempDirectory("gate_fill").toString
+    val meta = VolumeMeta(layerType = "segmentation", dataType = "uint32",
+      numChannels = 1, scales = Seq(ScaleMeta(key = "1_1_1",
+        encoding = "raw", resolution = Seq(1, 1, 1), chunkSize = Vec3(4, 4, 4),
+        size = Vec3(8, 8, 8), voxelOffset = Vec3(0, 0, 0))))
+    PrecomputedIO.writeInfo(dir, meta)
+    val s = spark
+    import s.implicits._
+    // stored labels are 1..5; the background K = 42 is in no object
+    val rows = for (gz <- 0L to 1L; gy <- 0L to 1L; gx <- 0L to 1L) yield
+      (gx, gy, gz, Codec.encodeRawFromLongs(
+        Array.tabulate(64)(i => (i + gx + 2 * gy + 4 * gz) % 5 + 1), 4))
+    PrecomputedIO.writeChunks(rows.toDF("gx", "gy", "gz", "payload"), dir,
+      meta, 0, compress = Some(false))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "1_1_1", "4-8_0-4_4-8"))
+    val box = Bbox(Vec3(1, 1, 1), Vec3(7, 7, 7))
+    def filtered = PrecomputedIO.cutoutVoxels(spark, dir, box,
+        fillMissing = true, background = 42L)
+      .filter(col("label") === 42L)
+    def voxels(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val want = (for (z <- 4L to 6L; y <- 1L to 3L; x <- 4L to 6L)
+      yield (x, y, z, 42L)).toSet
+
+    val rules = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = rules.filterNot(_ == ContainsGateRule)
+    try assert(voxels(filtered) == want)
+    finally spark.experimental.extraOptimizations = rules
+
+    ContainsGateRule.install(spark)
+    val df = filtered
+    val plan = df.queryExecution.optimizedPlan.toString
+    val gateLine = plan.linesIterator.indexWhere(
+      _.contains(ContainsGateRule.GateName))
+    val genLine = plan.linesIterator.indexWhere(_.contains("Generate"))
+    assert(genLine >= 0 && gateLine > genLine,
+      s"gate not below Generate (gen=$genLine gate=$gateLine):\n$plan")
+    assert(voxels(df) == want)
   }
 }

@@ -193,6 +193,27 @@ class PngDecodeSpec extends AnyFunSuite {
       Seq(shorter.last))).isEmpty)
   }
 
+  test("a CRC mismatch on IHDR, IDAT or IEND fails typed, not through " +
+      "the ImageIO fallback") {
+    val ok8 = Codec.encodePng(rnd(3, 25 * 17), 25)
+    val ok16 = Codec.encodePng16(Array.tabulate(25 * 17)(_ * 151L % 65536L), 25)
+    /** `png` with the last CRC byte of its first chunk of type `t`
+      * flipped; every data byte is left as it was. */
+    def badCrc(png: Array[Byte], t: Int): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.wrap(png)
+      var pos = 8
+      while (bb.getInt(pos + 4) != t) pos += 12 + bb.getInt(pos)
+      val out = png.clone()
+      val at = pos + 11 + bb.getInt(pos)
+      out(at) = (out(at) ^ 0x01).toByte
+      out
+    }
+    for (t <- Seq(0x49484452, Idat, 0x49454e44)) {
+      intercept[IllegalArgumentException](Codec.decodePng(badCrc(ok8, t)))
+      intercept[IllegalArgumentException](Codec.decodePng16(badCrc(ok16, t)))
+    }
+  }
+
   test("Codec decode entry points route through the fast path unchanged") {
     val vox = rnd(5, 25 * 17)
     assert(java.util.Arrays.equals(
