@@ -216,7 +216,8 @@ object Geom {
   }
 
   /** [[clipWalk]] collected as (x, y, z, value) rows, into one array
-    * sized up front from the clipped extent.
+    * sized up front from the clipped extent: the reference the
+    * `DecodeVoxels` generator is tested against (no cutout calls it).
     */
   def clipRows(vox: Array[Long], lo: Vec3, bs: Vec3, clip: Bbox)
       : Seq[(Long, Long, Long, Long)] = {

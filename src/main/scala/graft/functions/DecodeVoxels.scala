@@ -1,12 +1,17 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import graft.core.{Bbox, ClipCursor, Codec, Compresso, Cseg, Vec3}
 
-/** The cutout decode stage as one native Catalyst generator: each chunk
+/** The cutout decode stage as one native Catalyst generator, and the
+  * one voxel emitter of every grid cutout (precomputed, zarr2, zarr3,
+  * N5, the chunk-table engine): each chunk
   * row (x0, y0, z0, x1, y1, z1, payload) is decoded once and its voxels
   * inside `clip` stream out as (x, y, z, label) rows, in [[ClipCursor]]
   * order, written into one reused row (GenerateExec copies each row
@@ -113,4 +118,14 @@ case class DecodeVoxels(children: Seq[Expression], encoding: String,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(children = newChildren)
+}
+
+object DecodeVoxels {
+  /** The chunk-row columns the stage reads, in its child order. */
+  def chunkCols: Seq[Expression] = Seq("x0", "y0", "z0", "x1", "y1", "z1",
+    "payload").map(c => ColumnShim.expression(col(c)))
+
+  /** Chunk rows (x0..z1, payload) -> the voxel rows of `d`. */
+  def stage(chunks: DataFrame, d: DecodeVoxels): DataFrame =
+    chunks.select(ColumnShim.column(d))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core._
+import graft.functions.DecodeVoxels
 
 /** The chunk-table volume engine (SURVEY.md §1): a volume is a
   * DataFrame of chunk rows `(gx, gy, gz, payload)` where payload is the
@@ -118,10 +119,11 @@ object ChunkEngine {
 
   /** Read back a cutout as voxel rows from the chunk table (S4
     * download path, rx.py:239-379): partition-prune chunks against the
-    * request bbox, decode only intersecting chunks, emit voxel rows
-    * clipped to the bbox. Chunks absent from the table are
-    * background-filled (S15 fill_missing, rx.py:864-870) via a left
-    * join of the request's grid against the chunk table.
+    * request bbox, decode only intersecting chunks in the shared
+    * [[DecodeVoxels]] stage, emit voxel rows clipped to the bbox.
+    * Chunks absent from the table are background-filled (S15
+    * fill_missing, rx.py:864-870): a left join of the request's grid
+    * against the chunk table leaves them a null payload.
     */
   def cutoutVoxels(chunks: DataFrame, bbox: Bbox, dtypeBytes: Int = 8): DataFrame = {
     val s = chunks.sparkSession
@@ -131,16 +133,11 @@ object ChunkEngine {
       .map(g => (g.x, g.y, g.z))
     val pruned = expected.toDF("gx", "gy", "gz")
       .join(chunks, Seq("gx", "gy", "gz"), "left")
-    val decodeUdf = udf((gx: Long, gy: Long, gz: Long, payload: Array[Byte]) => {
-      val vox =
-        if (payload == null) new Array[Long]((CsX * CsY * CsZ).toInt)
-        else Codec.decodeRawToLongs(payload, dtypeBytes)
-      Geom.clipRows(vox, Vec3(gx * CsX, gy * CsY, gz * CsZ), chunkSize, bbox)
-    })
-    pruned
-      .select(explode(decodeUdf(col("gx"), col("gy"), col("gz"),
-        col("payload"))).as("vx"))
-      .select(col("vx._1").as("x"), col("vx._2").as("y"),
-        col("vx._3").as("z"), col("vx._4").as("label"))
+    DecodeVoxels.stage(pruned.select(
+        (col("gx") * CsX).as("x0"), (col("gy") * CsY).as("y0"),
+        (col("gz") * CsZ).as("z0"), ((col("gx") + 1) * CsX).as("x1"),
+        ((col("gy") + 1) * CsY).as("y1"), ((col("gz") + 1) * CsZ).as("z1"),
+        col("payload")),
+      DecodeVoxels(DecodeVoxels.chunkCols, "raw", dtypeBytes, bbox))
   }
 }

@@ -380,25 +380,11 @@ object RealLayerQueries {
   private def containsUdf(l: Long) =
     udf((p: Array[Byte]) => Codec.rawContains(p, 4, l))
 
-  /** Decode a chunk row into voxel rows clipped to `bbox`; used by the
-    * mask queries. `f` maps a label to the emitted value.
-    */
-  private def explodeVoxels(chunks: DataFrame, bbox: Bbox,
-      f: Long => Long): DataFrame = {
-    val decodeUdf = udf((x0: Long, y0: Long, z0: Long, x1: Long, y1: Long,
-        z1: Long, payload: Array[Byte]) => {
-      val vox = Codec.decodeRawToLongs(payload, 4)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      Geom.clipWalk(vox.length, Vec3(x0, y0, z0),
-        Vec3(x1 - x0, y1 - y0, z1 - z0), bbox)(
-        (x, y, z, i) => out += ((x, y, z, f(vox(i)))))
-      out.toSeq
-    })
-    chunks
-      .select(explode(decodeUdf(col("x0"), col("y0"), col("z0"),
-        col("x1"), col("y1"), col("z1"), col("payload"))).as("vx"))
-      .select(col("vx._1").as("x"), col("vx._2").as("y"),
-        col("vx._3").as("z"), col("vx._4").as("v"))
+  /** The raw layer's chunk rows -> voxel rows (x, y, z, label) inside
+    * `bbox`, through the shared decode stage; used by the mask queries. */
+  private def layerVoxels(chunks: DataFrame, bbox: Bbox): DataFrame = {
+    val meta = PrecomputedIO.readInfo(LayerDir)
+    PrecomputedIO.decodeToVoxels(chunks, bbox, meta.scale(0), meta.dtypeBytes)
   }
 
   private def overlapFilter(bbox: Bbox) =
@@ -1175,13 +1161,14 @@ object RealLayerQueries {
         ensure(s, dir)
         val L = 7L
         val bbox = Bbox(Vec3(0, 0, 0), Vec3(48, 48, 24))
+        // a chunk lacking L rides as a null payload: it reads as the
+        // background 0 and is never decoded
         val chunks = PrecomputedIO.readChunks(s, LayerDir)
           .filter(overlapFilter(bbox))
-        val hit = chunks.filter(containsUdf(L)(col("payload")))
-        val miss = chunks.filter(!containsUdf(L)(col("payload")))
-        explodeVoxels(hit, bbox, v => if (v == L) 1L else 0L)
-          .unionAll(explodeVoxels(miss, bbox, _ => 0L))
-          .withColumnRenamed("v", "mask")
+          .withColumn("payload",
+            when(containsUdf(L)(col("payload")), col("payload")))
+        layerVoxels(chunks, bbox).select(col("x"), col("y"), col("z"),
+          when(col("label") === L, 1L).otherwise(0L).as("mask"))
       },
       Some(s"""SELECT x, y, z,
         |  CAST(CASE WHEN label = 7 THEN 1 ELSE 0 END AS BIGINT) AS mask
@@ -1193,11 +1180,12 @@ object RealLayerQueries {
     "p7_mask_except" -> Q(
       (s, dir) => {
         ensure(s, dir)
-        val keep = Set(7L, 11L, 13L, 501L, 502L)
+        val keep = Seq(7L, 11L, 13L, 501L, 502L)
         val bbox = Bbox(Vec3(0, 0, 0), Vec3(SX, SY, SZ))
-        explodeVoxels(PrecomputedIO.readChunks(s, LayerDir), bbox,
-          v => if (keep.contains(v)) v else 0L)
-          .withColumnRenamed("v", "label")
+        layerVoxels(PrecomputedIO.readChunks(s, LayerDir), bbox)
+          .select(col("x"), col("y"), col("z"),
+            when(col("label").isin(keep: _*), col("label"))
+              .otherwise(0L).as("label"))
       },
       Some(s"""SELECT x, y, z,
         |  CASE WHEN label IN (7, 11, 13, 501, 502) THEN label ELSE 0 END AS label

@@ -219,23 +219,22 @@ object N5IO {
     val comp = m.compression
     val bounds = Bbox(Vec3(0, 0, 0), m.dimensions)
     ScanSizing.cutoutGrid(spark, bbox, bounds, bs, bs.x * bs.y * bs.z * dtb,
-      { g =>
-        val p = Paths.get(dir, ds, g.x.toString, g.y.toString, g.z.toString)
-        if (!Files.exists(p)) {
-          if (!fillMissing) throw new java.util.NoSuchElementException(
-            s"missing N5 block (${g.x},${g.y},${g.z}) in $dir — pass " +
-              "fillMissing=true to read absent blocks as background")
-          val cb = Geom.chunkBbox(g, bounds, bs)
-          (cb.size, new Array[Long](cb.volume.toInt))
-        } else {
-          val (dims, vox) = decodeBlock(Files.readAllBytes(p), dtb, comp)
-          // edge blocks carry clamped dims; a header claiming MORE than
-          // the block size would paste voxels into the neighbour's cell
-          require(dims.x <= bs.x && dims.y <= bs.y && dims.z <= bs.z,
-            s"corrupt n5 block $p: header dims $dims exceed blockSize $bs")
-          (dims, vox)
-        }
-      })
+        fill = 0L) { g =>
+      val p = Paths.get(dir, ds, g.x.toString, g.y.toString, g.z.toString)
+      if (!Files.exists(p)) {
+        if (!fillMissing) throw new java.util.NoSuchElementException(
+          s"missing N5 block (${g.x},${g.y},${g.z}) in $dir — pass " +
+            "fillMissing=true to read absent blocks as background")
+        (Geom.chunkBbox(g, bounds, bs).size, null)
+      } else {
+        val (dims, vox) = decodeBlock(Files.readAllBytes(p), dtb, comp)
+        // edge blocks carry clamped dims; a header claiming MORE than
+        // the block size would paste voxels into the neighbour's cell
+        require(dims.x <= bs.x && dims.y <= bs.y && dims.z <= bs.z,
+          s"corrupt n5 block $p: header dims $dims exceed blockSize $bs")
+        (dims, vox)
+      }
+    }
   }
 
   /** Cutout one level of a multiScale pyramid: requires the root

@@ -2,12 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.DoubleType
 import graft.core._
 import graft.functions.DecodeVoxels
+import graft.functions.DecodeVoxels.{chunkCols, stage}
 
 /** Real Neuroglancer precomputed layer I/O on a filesystem.
   *
@@ -205,7 +204,7 @@ object PrecomputedIO {
       s"${meta.dataType} layer — use cutoutVoxels")
     require(scale.encoding == "raw",
       s"float cutout reads raw encoding, not ${scale.encoding}")
-    decodeStage(chunksIn(spark, layerDir, bbox, mip, fillMissing),
+    stage(chunksIn(spark, layerDir, bbox, mip, fillMissing),
       DecodeVoxels(chunkCols, scale.encoding, meta.dtypeBytes, bbox,
         valueType = DoubleType))
   }
@@ -240,7 +239,7 @@ object PrecomputedIO {
       s"jpeg multi-channel requires 3 channels, got $nc")
     require(channels.nonEmpty && channels.forall(c => c >= 0 && c < nc),
       s"channel slice $channels out of range for $nc channels")
-    decodeStage(chunksIn(spark, layerDir, bbox, mip, fillMissing),
+    stage(chunksIn(spark, layerDir, bbox, mip, fillMissing),
       DecodeVoxels(chunkCols, scale.encoding, meta.dtypeBytes, bbox,
         channels = channels.toList, planes = nc))
   }
@@ -258,14 +257,6 @@ object PrecomputedIO {
     */
   def decodeToVoxels(chunks: DataFrame, bbox: Bbox, scale: ScaleMeta,
       dtb: Int, background: Long = 0L): DataFrame =
-    decodeStage(chunks, DecodeVoxels(chunkCols, scale.encoding, dtb, bbox,
+    stage(chunks, DecodeVoxels(chunkCols, scale.encoding, dtb, bbox,
       scale.csegBlockSize.getOrElse(Vec3(8, 8, 8)), background))
-
-  /** The chunk-row columns the decode stage reads, in its child order. */
-  private def chunkCols: Seq[Expression] =
-    Seq("x0", "y0", "z0", "x1", "y1", "z1", "payload")
-      .map(c => ColumnShim.expression(col(c)))
-
-  private def decodeStage(chunks: DataFrame, d: DecodeVoxels): DataFrame =
-    chunks.select(ColumnShim.column(d))
 }

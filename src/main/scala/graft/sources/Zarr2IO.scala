@@ -535,22 +535,21 @@ object Zarr2IO {
       bbox: Bbox, isF: Boolean, key: Vec3 => String): DataFrame = {
     val cs = m.chunkShape
     val dtb = m.dtypeBytes
-    val fill = m.fillValue
     // ByteOrder is not Serializable — ship a flag, rehydrate per task
     val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
     ScanSizing.cutoutGrid(spark, bbox, Bbox(Vec3(0, 0, 0), m.shape), cs,
-      cs.x * cs.y * cs.z * dtb, { g =>
-        val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN
-        val p = Paths.get(dir, key(g))
-        val vox =
-          if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
-          else {
-            val raw = unpack(m, Files.readAllBytes(p))
-            if (isF) Codec.decodeRawToLongs(raw, dtb, bo)
-            else Zarr3IO.decodeChunkToF(raw, cs, dtb, bo)
-          }
-        (cs, vox)
-      })
+        cs.x * cs.y * cs.z * dtb, m.fillValue) { g =>
+      val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
+        else java.nio.ByteOrder.LITTLE_ENDIAN
+      val p = Paths.get(dir, key(g))
+      val vox =
+        if (!Files.exists(p)) null
+        else {
+          val raw = unpack(m, Files.readAllBytes(p))
+          if (isF) Codec.decodeRawToLongs(raw, dtb, bo)
+          else Zarr3IO.decodeChunkToF(raw, cs, dtb, bo)
+        }
+      (cs, vox)
+    }
   }
 }

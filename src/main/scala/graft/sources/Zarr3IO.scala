@@ -675,31 +675,30 @@ object Zarr3IO {
     val frameBytes = (cs.x * cs.y * cs.z).toInt * dtb
     val fOff = (frameSlot * frameBytes).toInt
     val dirStr = dir
-    val fill = m.fillValue
     val keyParts = prefix.map(_.toString)
     ScanSizing.cutoutGrid(spark, bbox, Bbox(Vec3(0, 0, 0), m.shape), cs,
-      cs.x * cs.y * cs.z * dtb, { g =>
-        var p = Paths.get(dirStr, "c")
-        (keyParts ++ spatialKey(m, g.x, g.y, g.z)).foreach(k => p = p.resolve(k))
-        // zarr defines an absent chunk key as a fill_value-filled chunk
-        // (the reference raises EmptyVolumeException unless
-        // fill_missing; zarr3/image.py:49-139)
-        val vox =
-          if (!Files.exists(p)) Array.fill((cs.x * cs.y * cs.z).toInt)(fill)
-          else {
-            val raw = unpack(m, Files.readAllBytes(p))
-            // a short object would silently zero-pad via copyOfRange —
-            // fail loudly instead: zarr chunks are always full-size
-            require(raw.length >= fOff + frameBytes,
-              s"truncated zarr chunk $p: ${raw.length} bytes, " +
-                s"frame needs [$fOff, ${fOff + frameBytes})")
-            val frame =
-              if (fOff == 0 && raw.length == frameBytes) raw
-              else java.util.Arrays.copyOfRange(raw, fOff, fOff + frameBytes)
-            decodeFrameToF(m, frame, cs, dtb)
-          }
-        (cs, vox)
-      })
+        cs.x * cs.y * cs.z * dtb, m.fillValue) { g =>
+      var p = Paths.get(dirStr, "c")
+      (keyParts ++ spatialKey(m, g.x, g.y, g.z)).foreach(k => p = p.resolve(k))
+      // zarr defines an absent chunk key as a fill_value-filled chunk
+      // (the reference raises EmptyVolumeException unless
+      // fill_missing; zarr3/image.py:49-139)
+      val vox =
+        if (!Files.exists(p)) null
+        else {
+          val raw = unpack(m, Files.readAllBytes(p))
+          // a short object would silently zero-pad via copyOfRange —
+          // fail loudly instead: zarr chunks are always full-size
+          require(raw.length >= fOff + frameBytes,
+            s"truncated zarr chunk $p: ${raw.length} bytes, " +
+              s"frame needs [$fOff, ${fOff + frameBytes})")
+          val frame =
+            if (fOff == 0 && raw.length == frameBytes) raw
+            else java.util.Arrays.copyOfRange(raw, fOff, fOff + frameBytes)
+          decodeFrameToF(m, frame, cs, dtb)
+        }
+      (cs, vox)
+    }
   }
 
   /** Cutout one xyz bbox at a single (t, c) point of the lead axes
@@ -755,9 +754,10 @@ object Zarr3IO {
   /** Sharded cutout: one task per NEEDED shard (planning-time grid
     * pruning), each reading the trailing index once (crc-checked) and
     * then range-reading only the inner chunks that intersect the
-    * request — never the whole shard object. Absent shard files and
-    * Missing index slots read as fill_value (the sharded analog of the
-    * unsharded absent-chunk-key rule).
+    * request — never the whole shard object. Each such inner chunk is
+    * one chunk row for the shared decode stage; absent shard files and
+    * Missing index slots ride as null payloads that read as fill_value
+    * (the sharded analog of the unsharded absent-chunk-key rule).
     */
   private def cutoutVoxelsSharded(spark: SparkSession, dir: String,
       m: Zarr3Meta, bbox: Bbox): DataFrame = {
@@ -765,53 +765,31 @@ object Zarr3IO {
     val ig = m.innerGrid
     val cs = m.chunkShape
     val dtb = m.dtypeBytes
-    val fill = m.fillValue
     val bounds = Bbox(Vec3(0, 0, 0), m.shape)
     val clip = bbox.intersection(bounds)
     val dirStr = dir
-    import spark.implicits._
     // the full-shard volume OVERestimates the ranged read, which only
     // costs parallelism
-    ScanSizing.scanGrid(spark, Geom.gridpoints(bbox, bounds, cs),
-      cs.x * cs.y * cs.z * dtb) { sg =>
+    ScanSizing.decodeGrid(spark, Geom.gridpoints(bbox, bounds, cs),
+        cs.x * cs.y * cs.z * dtb, clip, m.fillValue) { sg =>
       val file = Paths.get(dirStr, "c", sg.x.toString, sg.y.toString,
         sg.z.toString)
       val shardLo = sg * cs
       val index: Option[Array[(Long, Long)]] =
         if (Files.exists(file)) Some(readShardIndex(file, m)) else None
-      // absent shard / Missing slot -> fill_value chunk (allocated
-      // once per shard task, shared across its elided inner chunks)
-      lazy val fillChunk = Array.fill((inner.x * inner.y * inner.z).toInt)(fill)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Long)]
-      var cx = 0L
-      while (cx < ig.x) {
-        var cy = 0L
-        while (cy < ig.y) {
-          var cz = 0L
-          while (cz < ig.z) {
-            val lo = Vec3(shardLo.x + cx * inner.x,
-              shardLo.y + cy * inner.y, shardLo.z + cz * inner.z)
-            val hit = Bbox(lo, lo + inner).intersection(clip)
-            if (hit.volume > 0) {
-              val vox = index match {
-                case None => fillChunk // whole shard absent
-                case Some(idx) =>
-                  val (off, len) = idx(innerSlot(Vec3(cx, cy, cz), ig))
-                  if (off == Missing) fillChunk
-                  else decodeChunkToF(unpack(m, readRange(file, off, len)),
-                    inner, dtb)
-              }
-              out ++= Geom.clipRows(vox, lo, inner, clip)
-            }
-            cz += 1
-          }
-          cy += 1
+      for {
+        cx <- 0L until ig.x; cy <- 0L until ig.y; cz <- 0L until ig.z
+        lo = shardLo + Vec3(cx, cy, cz) * inner
+        if Bbox(lo, lo + inner).intersection(clip).volume > 0
+      } yield {
+        val vox = index.map(_(innerSlot(Vec3(cx, cy, cz), ig))) match {
+          case Some((off, len)) if off != Missing =>
+            decodeChunkToF(unpack(m, readRange(file, off, len)), inner, dtb)
+          case _ => null // whole shard absent, or a Missing slot
         }
-        cx += 1
+        ScanSizing.chunkRow(lo, inner, vox)
       }
-      out
-    }.toDF("x", "y", "z", "label")
+    }
   }
 
   // ---- OME-NGFF 0.5 multiscale GROUP (zarr v3 group node) ----

@@ -1,20 +1,24 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Explode, ScalaUDF}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
-import graft.sources.PrecomputedIO
+import graft.functions.DecodeVoxels
+import graft.ops.{ChunkEngine, Derived}
+import graft.sources.{N5IO, PrecomputedIO}
 
 /** Differential spec for the cutout decode stage: `decodeToVoxels`
   * over seeded chunk rows, in every encoding it dispatches, must give
   * exactly `Geom.clipRows` over the decoded block of each chunk, in
   * chunk order and then z-major, x-fastest order, for unaligned,
-  * edge-crossing, empty and single-voxel boxes.
+  * edge-crossing, empty and single-voxel boxes. Every grid cutout
+  * (precomputed, N5, zarr2, OME-zarr2, zarr3 unsharded and sharded, the
+  * chunk table) must plan that one generator.
   */
 class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -149,6 +153,25 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     case _ => p +: p.children.flatMap(nodes)
   }
 
+  /** `df`'s rows are exactly `want`, and its executed plan emits them
+    * from a `DecodeVoxels` generator with no ScalaUDF and no Explode. */
+  private def assertOneEmitter(name: String, df: DataFrame,
+      want: Set[(Long, Long, Long, Long)]): Unit = {
+    val got = GridFixtures.rows(df)
+    assert(got.length == want.size && got.toSet == want, s"$name: rows")
+    val plan = df.queryExecution.executedPlan
+    val all = nodes(plan)
+    assert(all.exists {
+      case g: GenerateExec => g.generator.isInstanceOf[DecodeVoxels]
+      case _ => false
+    }, s"$name: no decode_voxels Generate in plan:\n$plan")
+    val exprs = all.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(!exprs.exists(_.isInstanceOf[ScalaUDF]),
+      s"$name: ScalaUDF in plan:\n$plan")
+    assert(!exprs.exists(_.isInstanceOf[Explode]),
+      s"$name: Explode in plan:\n$plan")
+  }
+
   test("a cutout's executed plan has no ScalaUDF and no Explode between " +
       "the chunk decode and the row buffer") {
     val dir = Files.createTempDirectory("decode_voxels_spec").toString
@@ -166,16 +189,39 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     PrecomputedIO.writeChunks(rows.toDF("gx", "gy", "gz", "payload"), dir,
       meta, 0)
     val box = boxes.head._2
-    val df = PrecomputedIO.cutoutVoxels(spark, dir, box)
-    val got = df.collect().map(r => (r.getLong(0), r.getLong(1),
-      r.getLong(2), r.getLong(3))).toSet
-    assert(got == blocks.flatMap { case (b, v) =>
-      Geom.clipRows(v, b.minpt, b.size, box) }.toSet)
-    val exprs = nodes(df.queryExecution.executedPlan)
-      .flatMap(_.expressions).flatMap(_.collect { case e => e })
-    assert(!exprs.exists(_.isInstanceOf[ScalaUDF]),
-      s"ScalaUDF in plan:\n${df.queryExecution.executedPlan}")
-    assert(!exprs.exists(_.isInstanceOf[Explode]),
-      s"Explode in plan:\n${df.queryExecution.executedPlan}")
+    assertOneEmitter("precomputed", PrecomputedIO.cutoutVoxels(spark, dir, box),
+      blocks.flatMap { case (b, v) => Geom.clipRows(v, b.minpt, b.size, box) }.toSet)
+
+    // the grid readers, one absent block (1, 1, 1) in every format
+    val r = new java.util.Random(5)
+    val palette = Array.fill(9)(r.nextLong() & 0xffffffffL)
+    val fx = new GridFixtures(spark, s"$dir/grid", Vec3(13, 9, 7),
+      Vec3(4, 4, 3), 4, 3L, Set(Vec3(1, 1, 1)),
+      p => palette(((p.x * 7 + p.y * 3 + p.z) % palette.length).toInt))
+    val gbox = Bbox(Vec3(1, 2, 1), Vec3(12, 9, 6))
+    for ((name, cut) <- fx.cutouts)
+      assertOneEmitter(name, cut(gbox), fx.expect(gbox))
+    fx.dropAbsentN5Blocks()
+    assertOneEmitter("n5 fillMissing",
+      N5IO.cutoutVoxels(spark, fx.n5, gbox, fillMissing = true),
+      fx.expect(gbox, absentAs = 0L))
+
+    // the chunk table, chunk (1, 0, 0) missing
+    val table = for (gz <- 0L to 1L; gy <- 0L to 1L; gx <- 0L to 1L
+        if (gx, gy, gz) != ((1L, 0L, 0L))) yield {
+      val lo = Vec3(gx, gy, gz) * Derived.chunkSize
+      (gx, gy, gz, Codec.encodeRawFromLongs(Array.tabulate(
+        (Derived.CsX * Derived.CsY * Derived.CsZ).toInt)(i => lo.x + lo.y + i), 8))
+    }
+    val cbox = Bbox(Vec3(5, 3, 2), Vec3(27, 20, 13))
+    val want = for (z <- 2L until 13L; y <- 3L until 20L; x <- 5L until 27L)
+      yield {
+        val g = Vec3(x / Derived.CsX, y / Derived.CsY, z / Derived.CsZ)
+        val lo = g * Derived.chunkSize
+        val i = (x - lo.x) + Derived.CsX * ((y - lo.y) + Derived.CsY * (z - lo.z))
+        (x, y, z, if (g == Vec3(1, 0, 0)) 0L else lo.x + lo.y + i)
+      }
+    assertOneEmitter("chunk table", ChunkEngine.cutoutVoxels(
+      table.toDF("gx", "gy", "gz", "payload"), cbox), want.toSet)
   }
 }

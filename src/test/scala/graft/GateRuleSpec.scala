@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -34,6 +34,16 @@ class GateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = { if (spark != null) spark.stop() }
 
+  /** The gate sits below the decode Generate in `df`'s optimized plan. */
+  private def assertGateBelowGenerate(name: String, df: DataFrame): Unit = {
+    val plan = df.queryExecution.optimizedPlan.toString
+    val gateLine = plan.linesIterator.indexWhere(
+      _.contains(ContainsGateRule.GateName))
+    val genLine = plan.linesIterator.indexWhere(_.contains("Generate"))
+    assert(genLine >= 0 && gateLine > genLine,
+      s"$name: gate not below Generate (gen=$genLine gate=$gateLine):\n$plan")
+  }
+
   private def cutoutFiltered(label: Long) =
     PrecomputedIO.cutoutVoxels(spark, RealLayerQueries.LayerCsegDir,
         Bbox(Vec3(0, 0, 0),
@@ -48,16 +58,9 @@ class GateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     ContainsGateRule.install(spark)
     val df = cutoutFiltered(7L)
-    val plan = df.queryExecution.optimizedPlan.toString
-    assert(plan.contains(ContainsGateRule.GateName),
-      s"gate missing from optimized plan:\n$plan")
     // the gate must sit BELOW the generate (gating chunk rows, not
-    // voxel rows): it appears after the explode line in the plan tree
-    val gateLine = plan.linesIterator.indexWhere(
-      _.contains(ContainsGateRule.GateName))
-    val genLine = plan.linesIterator.indexWhere(_.contains("Generate"))
-    assert(genLine >= 0 && gateLine > genLine,
-      s"gate not below Generate (gen=$genLine gate=$gateLine):\n$plan")
+    // voxel rows)
+    assertGateBelowGenerate("cseg", df)
 
     val withRule = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -129,12 +132,72 @@ class GateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     ContainsGateRule.install(spark)
     val df = filtered
-    val plan = df.queryExecution.optimizedPlan.toString
-    val gateLine = plan.linesIterator.indexWhere(
-      _.contains(ContainsGateRule.GateName))
-    val genLine = plan.linesIterator.indexWhere(_.contains("Generate"))
-    assert(genLine >= 0 && gateLine > genLine,
-      s"gate not below Generate (gen=$genLine gate=$gateLine):\n$plan")
+    assertGateBelowGenerate("fill_missing", df)
     assert(voxels(df) == want)
+  }
+
+  test("grid cutouts gate like precomputed: zarr2, sharded zarr3, N5 " +
+      "fill_missing and the chunk table") {
+    import graft.ops.{ChunkEngine, Derived}
+    import graft.sources.{N5IO, Zarr2IO, Zarr3IO}
+    val s = spark
+    import s.implicits._
+    val big = java.lang.Long.parseUnsignedLong("9223372036854775813") // 2^63+5
+    val fill = 5L
+    // uint64 words, a top-bit label among the stored ones; shard
+    // (1, 1, 0) is absent whole and block (0, 0, 1) is a Missing slot
+    val palette = Array(1L, 2L, 3L, fill, big)
+    val absent = Set(Vec3(2, 2, 0), Vec3(3, 2, 0), Vec3(2, 2, 1),
+      Vec3(3, 2, 1), Vec3(0, 0, 1))
+    val fx = new GridFixtures(spark,
+      java.nio.file.Files.createTempDirectory("gate_grid").toString,
+      Vec3(13, 9, 7), Vec3(4, 4, 4), 8, fill, absent,
+      p => palette(((p.x * 5 + p.y * 3 + p.z * 2) % palette.length).toInt))
+    fx.dropAbsentN5Blocks()
+    val table = (for (gz <- 0L to 1L; gy <- 0L to 1L; gx <- 0L to 1L
+        if (gx, gy, gz) != ((0L, 1L, 0L))) yield (gx, gy, gz,
+      Codec.encodeRawFromLongs(Array.tabulate(
+        (Derived.CsX * Derived.CsY * Derived.CsZ).toInt)(i =>
+          palette((i + gx + gy + gz).toInt % palette.length)), 8)))
+      .toDF("gx", "gy", "gz", "payload")
+    val box = Bbox(Vec3(1, 2, 1), Vec3(12, 9, 7))
+    // (name, cutout, the value its absent blocks read as, its rows if
+    // known)
+    type Rows = Set[(Long, Long, Long, Long)]
+    val cutouts: Seq[(String, () => DataFrame, Long, Option[Rows])] = Seq(
+      ("zarr2", () => Zarr2IO.cutoutVoxels(spark, fx.zarr2C, box), fill,
+        Some(fx.expect(box))),
+      ("zarr3 sharded", () => Zarr3IO.cutoutVoxels(spark, fx.zarr3Sharded, box),
+        fill, Some(fx.expect(box))),
+      ("n5 fill_missing", () => N5IO.cutoutVoxels(spark, fx.n5, box,
+        fillMissing = true), 0L, Some(fx.expect(box, absentAs = 0L))),
+      ("chunk table", () => ChunkEngine.cutoutVoxels(table,
+        Bbox(Vec3(3, 5, 2), Vec3(29, 27, 13))), 0L, None))
+    def tuples(df: DataFrame) = GridFixtures.rows(df).toSet
+    for ((name, cut, bg, want) <- cutouts) {
+      val filters = Seq(col("label") === 2L, col("label") === big,
+        col("label") === bg, col("label") === 999L,
+        col("label").isin(1L, big, 999L))
+      val rules = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = rules.filterNot(_ == ContainsGateRule)
+      val without =
+        try filters.map(f => tuples(cut().filter(f)))
+        finally spark.experimental.extraOptimizations = rules
+      // the absent blocks read as bg, so `label = bg` must return them
+      val all = tuples(cut())
+      want.foreach(w => assert(all == w, name))
+      assert(without(2) == all.filter(_._4 == bg) && without(2).nonEmpty,
+        s"$name: label = background")
+      assert(without(1).nonEmpty, s"$name: the top-bit label")
+
+      ContainsGateRule.install(spark)
+      for ((f, off) <- filters.zip(without)) {
+        val df = cut().filter(f)
+        assertGateBelowGenerate(s"$name $f", df)
+        assert(tuples(df) == off, s"$name $f: rows differ with the rule on")
+      }
+    }
+    // the word width the grid readers emit
+    assert(Codec.rawContains(Codec.encodeRawFromLongs(Array(1L, big), 8), 8, big))
   }
 }

@@ -432,101 +432,38 @@ class SourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cross-format cutouts agree voxel-for-voxel on an unaligned volume") {
-    import graft.sources.{N5IO, Zarr2IO, Zarr3IO}
-    val s = spark
-    import s.implicits._
-    // one seeded uint32 volume (values span the full unsigned range)
-    // whose extent is a multiple of no block shape below; every format
-    // stores it, every format's cutout must reproduce it exactly
+    // seeded volumes whose extent is a multiple of no block shape; every
+    // format stores each, every format's cutout must reproduce it
+    // exactly: uint32 values spanning the full unsigned range, and
+    // uint64 ones half of which are top-bit (>= 2^63) with a non-zero
+    // fill read back from absent blocks (a whole absent zarr3 shard
+    // (1, 1, 0) and a Missing inner slot (0, 1, 0))
     val dims = Vec3(13, 11, 7)
-    val bs = Vec3(4, 4, 4)
-    val bounds = Bbox(Vec3(0, 0, 0), dims)
     val rnd = new scala.util.Random(20261017)
-    val src = Array.fill((dims.x * dims.y * dims.z).toInt)(
+    val u32 = Array.fill((dims.x * dims.y * dims.z).toInt)(
       rnd.nextLong() & 0xffffffffL)
-    // F-order block at `lo` of shape `size`; voxels past the volume
-    // edge are fill (0), the padding zarr stores in edge chunks
-    def block(lo: Vec3, size: Vec3): Seq[Long] =
-      for (z <- 0L until size.z; y <- 0L until size.y; x <- 0L until size.x)
-        yield {
-          val p = lo + Vec3(x, y, z)
-          if (bounds.contains(p)) src((p.x + dims.x * (p.y + dims.y * p.z)).toInt)
-          else 0L
-        }
-    def grid(cs: Vec3): Seq[(Long, Long, Long, Vec3)] =
-      Geom.gridpoints(bounds, bounds, cs).map(g => (g.x, g.y, g.z, g))
-
-    val pre = s"$dir/xf_precomputed"
-    val pm = VolumeMeta(layerType = "segmentation", dataType = "uint32",
-      numChannels = 1, scales = Seq(ScaleMeta(key = "1_1_1",
-        encoding = "raw", resolution = Seq(1, 1, 1), chunkSize = bs,
-        size = dims, voxelOffset = Vec3(0, 0, 0))))
-    PrecomputedIO.writeInfo(pre, pm)
-    PrecomputedIO.writeChunks(grid(bs).map { case (gx, gy, gz, g) =>
-      val cb = Geom.chunkBbox(g, bounds, bs)
-      (gx, gy, gz, Codec.encodeRawFromLongs(block(cb.minpt, cb.size).toArray, 4))
-    }.toDF("gx", "gy", "gz", "payload"), pre, pm, 0)
-
-    val n5 = s"$dir/xf_n5"
-    val nm = N5IO.N5Meta(dims, bs, "uint32", "gzip")
-    N5IO.writeMeta(n5, nm)
-    N5IO.writeBlocks(grid(bs).map { case (gx, gy, gz, g) =>
-      val cb = Geom.chunkBbox(g, bounds, bs) // edge-clamped blocks
-      (gx, gy, gz, block(cb.minpt, cb.size))
-    }.toDF("gx", "gy", "gz", "vox"), n5, nm)
-
-    def z2(order: String): String = {
-      val d = s"$dir/xf_zarr2_$order"
-      val m = Zarr2IO.Zarr2Meta(shape = dims, chunkShape = bs, dtype = "<u4",
-        fillValue = 0L, compressor = "zlib", order = order)
-      Zarr2IO.writeMeta(d, m)
-      Zarr2IO.writeChunks(grid(bs).map { case (gx, gy, gz, g) =>
-        (gx, gy, gz, block(g * bs, bs))
-      }.toDF("gx", "gy", "gz", "vox"), d, m)
-      d
-    }
-    val (z2c, z2f) = (z2("C"), z2("F"))
-
-    val z3 = s"$dir/xf_zarr3"
-    val m3 = Zarr3IO.Zarr3Meta(shape = dims, chunkShape = bs,
-      dataType = "uint32", fillValue = 0L, compressor = "gzip")
-    Zarr3IO.writeMeta(z3, m3)
-    Zarr3IO.writeChunks(grid(bs).map { case (gx, gy, gz, g) =>
-      (gx, gy, gz, block(g * bs, bs))
-    }.toDF("gx", "gy", "gz", "vox"), z3, m3)
-
-    val z3s = s"$dir/xf_zarr3_sharded"
-    val shard = Vec3(8, 8, 8)
-    val m3s = m3.copy(chunkShape = shard, innerChunkShape = Some(bs))
-    Zarr3IO.writeMeta(z3s, m3s)
-    Zarr3IO.writeShards(grid(shard).map { case (sx, sy, sz, g) =>
-      (sx, sy, sz, block(g * shard, shard))
-    }.toDF("sx", "sy", "sz", "vox"), z3s, m3s)
-
-    val cutouts: Seq[(String, Bbox => org.apache.spark.sql.DataFrame)] = Seq(
-      "precomputed" -> (b => PrecomputedIO.cutoutVoxels(spark, pre, b)),
-      "n5" -> (b => N5IO.cutoutVoxels(spark, n5, b)),
-      "zarr2 C" -> (b => Zarr2IO.cutoutVoxels(spark, z2c, b)),
-      "zarr2 F" -> (b => Zarr2IO.cutoutVoxels(spark, z2f, b)),
-      "zarr3" -> (b => Zarr3IO.cutoutVoxels(spark, z3, b)),
-      "zarr3 sharded" -> (b => Zarr3IO.cutoutVoxels(spark, z3s, b)))
+    val u64 = Array.fill(u32.length)(rnd.nextLong())
+    assert(u64.count(_ < 0) > u64.length / 3)
+    def at(vals: Array[Long])(p: Vec3): Long =
+      vals((p.x + dims.x * (p.y + dims.y * p.z)).toInt)
+    val inputs = Seq(
+      "uint32" -> new GridFixtures(spark, s"$dir/xf_u32", dims, Vec3(4, 4, 4),
+        4, 0L, Set.empty, at(u32)),
+      "uint64 top-bit, fill 5" -> new GridFixtures(spark, s"$dir/xf_u64", dims,
+        Vec3(4, 4, 4), 8, 5L, Set(Vec3(2, 2, 0), Vec3(3, 2, 0), Vec3(2, 2, 1),
+          Vec3(3, 2, 1), Vec3(0, 1, 0)), at(u64)))
     val boxes = Seq(
       Bbox(Vec3(1, 2, 3), Vec3(10, 9, 6)), // unaligned, interior
       Bbox(Vec3(5, 3, 1), Vec3(6, 4, 2)), // one voxel
       Bbox(Vec3(7, 6, 2), Vec3(20, 30, 9)), // crosses the far edges
       Bbox(Vec3(-3, -2, -1), Vec3(3, 5, 4)), // crosses the origin
       Bbox(Vec3(0, 0, 0), dims)) // whole volume
-    for (b <- boxes) {
-      val c = b.intersection(bounds)
-      val expect = (for (z <- c.minpt.z until c.maxpt.z;
-          y <- c.minpt.y until c.maxpt.y; x <- c.minpt.x until c.maxpt.x)
-        yield (x, y, z, src((x + dims.x * (y + dims.y * z)).toInt))).toSet
-      for ((name, cut) <- cutouts) {
-        val rows = cut(b).select("x", "y", "z", "label").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        assert(rows.length == expect.size, s"$name $b: duplicate or missing rows")
-        assert(rows.toSet == expect, s"$name $b")
-      }
+    for ((input, fx) <- inputs; b <- boxes; (name, cut) <- fx.cutouts) {
+      val expect = fx.expect(b)
+      val rows = GridFixtures.rows(cut(b))
+      assert(rows.length == expect.size,
+        s"$input $name $b: duplicate or missing rows")
+      assert(rows.toSet == expect, s"$input $name $b")
     }
   }
 
