@@ -138,17 +138,20 @@ trait VoxelSink { def apply(x: Long, y: Long, z: Long, i: Int): Unit }
   * `planes` block volumes, so a short, oversized or mis-shaped chunk
   * fails here as an IllegalArgumentException, never as an index error
   * or as voxels pasted into a neighbour's cell.
+  *
+  * `lox until hix` (and likewise y, z) is the clipped window the walk
+  * covers; it is meaningful only when [[size]] > 0.
   */
 final class ClipCursor(n: Int, lo: Vec3, bs: Vec3, clip: Bbox, planes: Int = 1) {
   private val vol = bs.x * bs.y * bs.z
   require(n == vol * planes,
     s"decoded block has $n voxels; shape $bs at $lo needs ${vol * planes}")
-  private val lox = math.max(lo.x, clip.minpt.x)
-  private val hix = math.min(lo.x + bs.x, clip.maxpt.x)
-  private val loy = math.max(lo.y, clip.minpt.y)
-  private val hiy = math.min(lo.y + bs.y, clip.maxpt.y)
-  private val loz = math.max(lo.z, clip.minpt.z)
-  private val hiz = math.min(lo.z + bs.z, clip.maxpt.z)
+  val lox: Long = math.max(lo.x, clip.minpt.x)
+  val hix: Long = math.min(lo.x + bs.x, clip.maxpt.x)
+  val loy: Long = math.max(lo.y, clip.minpt.y)
+  val hiy: Long = math.min(lo.y + bs.y, clip.maxpt.y)
+  val loz: Long = math.max(lo.z, clip.minpt.z)
+  val hiz: Long = math.min(lo.z + bs.z, clip.maxpt.z)
   private val empty = lox >= hix || loy >= hiy || loz >= hiz
 
   /** Clipped voxel count (0 when the block misses `clip`). */

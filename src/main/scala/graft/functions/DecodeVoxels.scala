@@ -1,11 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.graftshim.{ColumnShim, DecodeVoxelsExec}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import graft.core.{Bbox, ClipCursor, Codec, Compresso, Cseg, Vec3}
 
@@ -17,6 +19,12 @@ import graft.core.{Bbox, ClipCursor, Codec, Compresso, Cseg, Vec3}
   * order, written into one reused row (GenerateExec copies each row
   * into its own buffer before asking for the next), so no per-voxel
   * object is made between the decode and Spark's row buffer.
+  *
+  * With [[DecodeVoxelsStrategy]] installed the stage plans as
+  * [[DecodeVoxelsExec]]: a collect of a label cutout then ships each
+  * chunk's [[decode]] as one block (its clipped window and values at
+  * [[valueWidth]], or the background of a null payload) and the driver
+  * builds the same rows in the same order.
   *
   * The fields carry what the decode needs and what
   * [[ContainsGateRule]] reads to gate payloads below it: the scale's
@@ -67,29 +75,51 @@ case class DecodeVoxels(children: Seq[Expression], encoding: String,
     }
   }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+  /** Decode one chunk row (x0, y0, z0, x1, y1, z1, payload): the walk
+    * over its voxels inside `clip` and the values it reads. */
+  def decode(input: InternalRow): DecodeVoxels.Chunk = {
     def long(k: Int): Long = children(k).eval(input).asInstanceOf[Long]
     val at = Vec3(long(0), long(1), long(2))
     val bs = Vec3(long(3), long(4), long(5)) - at
     val p = children(6).eval(input).asInstanceOf[Array[Byte]]
-    val row = new SpecificInternalRow(elementSchema.map(_.dataType))
-    val vi = row.numFields - 1
-    // a null payload reads back as `background` everywhere: the value
-    // field is written once and only the coordinates move
     val longs = if (p == null || valueType != LongType) null else decodeLongs(p, bs, at)
     val doubles =
       if (p == null || valueType == LongType) null
       else Codec.decodeRawFloatsToDoubles(p, dtypeBytes)
+    val plane = (bs.x * bs.y * bs.z).toInt
     val n =
       if (longs != null) longs.length
       else if (doubles != null) doubles.length
-      else (bs.x * bs.y * bs.z * planes).toInt
-    if (p == null) {
+      else plane * planes
+    DecodeVoxels.Chunk(new ClipCursor(n, at, bs, clip, planes), plane, longs, doubles)
+  }
+
+  /** Bytes per value that carry every value of a chunk's `longs`
+    * without loss: the dtype width when it is 1, 2 or 4 bytes and
+    * either the codec cannot yield wider values (raw and cseg decode
+    * dtype-width words) or no value of `longs` is wider; otherwise 8
+    * (the grid readers' 8-byte words, npz or compresso values past the
+    * dtype). */
+  def valueWidth(longs: Array[Long]): Int =
+    if (dtypeBytes != 1 && dtypeBytes != 2 && dtypeBytes != 4) 8
+    else if (encoding == "raw" || encoding == "compressed_segmentation") dtypeBytes
+    else {
+      var bits = 0L
+      var i = 0
+      while (i < longs.length) { bits |= longs(i); i += 1 }
+      if ((bits >>> (8 * dtypeBytes)) == 0L) dtypeBytes else 8
+    }
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val DecodeVoxels.Chunk(c, plane, longs, doubles) = decode(input)
+    val row = new SpecificInternalRow(elementSchema.map(_.dataType))
+    val vi = row.numFields - 1
+    // a null payload reads back as `background` everywhere: the value
+    // field is written once and only the coordinates move
+    if (longs == null && doubles == null) {
       if (valueType == LongType) row.setLong(vi, background)
       else row.setDouble(vi, background.toDouble)
     }
-    val c = new ClipCursor(n, at, bs, clip, planes)
-    val plane = (bs.x * bs.y * bs.z).toInt
     val chans = if (channels.isEmpty) Array(0) else channels.toArray
     val withC = channels.nonEmpty
     new Iterator[InternalRow] {
@@ -121,6 +151,12 @@ case class DecodeVoxels(children: Seq[Expression], encoding: String,
 }
 
 object DecodeVoxels {
+  /** One decoded chunk: `cursor` walks its voxels inside the clip,
+    * `plane` voxels per channel plane; the values are `longs` or
+    * `doubles`, both null for a null payload. */
+  final case class Chunk(cursor: ClipCursor, plane: Int, longs: Array[Long],
+      doubles: Array[Double])
+
   /** The chunk-row columns the stage reads, in its child order. */
   def chunkCols: Seq[Expression] = Seq("x0", "y0", "z0", "x1", "y1", "z1",
     "payload").map(c => ColumnShim.expression(col(c)))
@@ -128,4 +164,23 @@ object DecodeVoxels {
   /** Chunk rows (x0..z1, payload) -> the voxel rows of `d`. */
   def stage(chunks: DataFrame, d: DecodeVoxels): DataFrame =
     chunks.select(ColumnShim.column(d))
+}
+
+/** Plans a [[DecodeVoxels]] generate that keeps no child column and is
+  * not outer (every [[DecodeVoxels.stage]]) as a [[DecodeVoxelsExec]],
+  * whose collect ships clipped chunk blocks instead of voxel rows. A
+  * session without it plans `GenerateExec`. */
+object DecodeVoxelsStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case g @ Generate(d: DecodeVoxels, _, false, _, _, child)
+        if g.requiredChildOutput.isEmpty =>
+      DecodeVoxelsExec(d, g.qualifiedGeneratorOutput, planLater(child)) :: Nil
+    case _ => Nil
+  }
+
+  /** Idempotently add this strategy to a session's planner. */
+  def install(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(DecodeVoxelsStrategy))
+      spark.experimental.extraStrategies =
+        DecodeVoxelsStrategy +: spark.experimental.extraStrategies
 }

@@ -263,11 +263,15 @@ object GraftFunctions {
     ("graft_parse_u64", info("graft_parse_u64", classOf[ParseU64Expr]),
       (args: Seq[Expression]) => ParseU64Expr(args)))
 
-  def register(spark: SparkSession): Unit =
+  /** Register the functions and plan cutout decodes as
+    * [[DecodeVoxelsStrategy]] does (idempotent). */
+  def register(spark: SparkSession): Unit = {
     all.foreach { case (name, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(
         FunctionIdentifier(name), inf, builder)
     }
+    DecodeVoxelsStrategy.install(spark)
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -281,5 +285,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // is idempotent (alreadyGated guard), so sessions that ALSO call
     // ContainsGateRule.install see it applied once per shape
     ext.injectOptimizerRule(_ => ContainsGateRule)
+    ext.injectPlannerStrategy(_ => DecodeVoxelsStrategy)
   }
 }

@@ -254,6 +254,10 @@ object PrecomputedIO {
     * buffers; test_cloudvolume.py:85-140), default 0. A label-equality
     * filter above this stage gets a payload-level contains() gate
     * below it when [[graft.functions.ContainsGateRule]] is installed.
+    * In a session with [[graft.functions.DecodeVoxelsStrategy]]
+    * (`GraftFunctions.register`, `GraftExtensions`) a collect of the
+    * result ships one dtype-width block per chunk to the driver, which
+    * builds the rows there; the rows do not change.
     */
   def decodeToVoxels(chunks: DataFrame, bbox: Bbox, scale: ScaleMeta,
       dtb: Int, background: Long = 0L): DataFrame =

@@ -32,16 +32,15 @@ object ScanSizing {
   }
 
   /** The one grid-read pipeline: grid points enumerated at planning
-    * time become a dataset sized by [[partitions]] (`estBytes` per
-    * point), and `read` runs once per point in the executor tasks.
+    * time are sliced, in order, into [[partitions]] tasks (`estBytes`
+    * per point), and `read` runs once per point in those tasks; no
+    * shuffle stands between the points and the reads.
     */
   def scanGrid[T: Encoder](spark: SparkSession, pts: Seq[Vec3],
-      estBytes: Long)(read: Vec3 => IterableOnce[T]): Dataset[T] = {
-    import spark.implicits._
-    spark.createDataset(pts.map(g => (g.x, g.y, g.z)))
-      .repartition(partitions(spark, pts.size, estBytes))
-      .flatMap { case (gx, gy, gz) => read(Vec3(gx, gy, gz)) }
-  }
+      estBytes: Long)(read: Vec3 => IterableOnce[T]): Dataset[T] =
+    spark.createDataset(spark.sparkContext
+      .parallelize(pts, partitions(spark, pts.size, estBytes))
+      .flatMap(read)(implicitly[Encoder[T]].clsTag))
 
   /** The chunk row of a grid reader's F-order block at `lo` of shape
     * `dims`. Raw 8-byte words carry every value a reader holds (top-bit

@@ -5,10 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Explode, ScalaUDF}
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.graftshim.{CollectBridge, DecodeVoxelsExec}
+import org.apache.spark.sql.types.DoubleType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
-import graft.functions.DecodeVoxels
+import graft.functions.{DecodeVoxels, GraftFunctions}
 import graft.ops.{ChunkEngine, Derived}
 import graft.sources.{N5IO, PrecomputedIO}
 
@@ -19,6 +21,11 @@ import graft.sources.{N5IO, PrecomputedIO}
   * edge-crossing, empty and single-voxel boxes. Every grid cutout
   * (precomputed, N5, zarr2, OME-zarr2, zarr3 unsharded and sharded, the
   * chunk table) must plan that one generator.
+  *
+  * With [[GraftFunctions.register]]'s planner strategy the generator
+  * runs as a [[DecodeVoxelsExec]], whose collect ships clipped chunk
+  * blocks: every collect path through it must give the generic path's
+  * rows, in order.
   */
 class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -52,13 +59,13 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "zero width" -> Bbox(Vec3(5, 0, 2), Vec3(5, 3, 4)))
 
   /** Seeded voxels for one chunk: a few repeated labels (what cseg and
-    * compresso palettes see) under the bit `mask`, plus 0 and the mask
-    * itself, the extremes of the dtype. */
-  private def voxels(seed: Long, n: Int, mask: Long): Array[Long] = {
+    * compresso palettes see) under the bit `mask` with the bits `force`
+    * set, plus the extremes `force` and `mask`. */
+  private def voxels(seed: Long, n: Int, mask: Long, force: Long = 0L): Array[Long] = {
     val r = new java.util.Random(seed)
-    val palette = Array.fill(6)(r.nextLong() & mask)
+    val palette = Array.fill(6)(r.nextLong() & mask | force)
     Array.tabulate(n) { i =>
-      if (i == 0) 0L else if (i == 1) mask
+      if (i == 0) force else if (i == 1) mask
       else palette(r.nextInt(palette.length))
     }
   }
@@ -66,7 +73,7 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private case class Enc(name: String, encoding: String, dtb: Int,
       encode: (Array[Long], Vec3) => Array[Byte],
       csegBlock: Option[Vec3] = None, chunk: Vec3 = chunkSize,
-      volume: Bbox = bounds, labelMask: Long = 0L) {
+      volume: Bbox = bounds, labelMask: Long = 0L, force: Long = 0L) {
     def mask: Long =
       if (labelMask != 0L) labelMask else if (dtb == 8) -1L else (1L << 8 * dtb) - 1
   }
@@ -87,7 +94,14 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Enc("png8", "png", 1,
       (v, bs) => Codec.encodePng(v.map(_.toByte), bs.x.toInt)),
     Enc("png16", "png", 2, (v, bs) => Codec.encodePng16(v, bs.x.toInt)),
-    Enc("npz", "npz", 4, (v, bs) => Codec.encodeNpz(v, bs, 4)))
+    Enc("npz", "npz", 4, (v, bs) => Codec.encodeNpz(v, bs, 4)),
+    // values that need more than their dtype's width, and labels >= 2^63
+    Enc("npz u64 words under a u32 dtype", "npz", 4,
+      (v, bs) => Codec.encodeNpz(v, bs, 8), labelMask = -1L),
+    Enc("raw u64 top-bit", "raw", 8, (v, _) => Codec.encodeRawFromLongs(v, 8),
+      force = Long.MinValue),
+    Enc("cseg u64 top-bit", "compressed_segmentation", 8,
+      (v, bs) => Cseg.encode(v, bs, Vec3(8, 8, 8), 8), force = Long.MinValue))
 
   private val rawU32 = encodings.find(_.name == "raw u32").get
 
@@ -97,8 +111,7 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     csegBlockSize = e.csegBlock)
 
   /** Chunk rows as the scan gives them, and each chunk's block. */
-  private def chunkRows(blocks: Seq[(Bbox, Array[Byte])]) = {
-    val s = spark
+  private def chunkRows(blocks: Seq[(Bbox, Array[Byte])], s: SparkSession = spark) = {
     import s.implicits._
     blocks.map { case (b, p) =>
       (b.minpt.x, b.minpt.y, b.minpt.z, b.maxpt.x, b.maxpt.y, b.maxpt.z, p)
@@ -125,14 +138,18 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("decodeToVoxels equals clipRows over the decoded blocks in every " +
       "encoding, in order") {
     for ((e, k) <- encodings.zipWithIndex) {
-      val blocks = grid(e).zipWithIndex.map { case (b, j) =>
-        val bs = b.size
-        (b, voxels(k * 1000L + j, (bs.x * bs.y * bs.z).toInt, e.mask))
-      }
+      val blocks = blocksOf(e, k)
       val chunks = chunkRows(blocks.map { case (b, v) => (b, e.encode(v, b.size)) })
       check(e.name, chunks, blocks, scaleOf(e), e.dtb, 0L)
     }
   }
+
+  /** Seeded decoded blocks of every chunk of `e`'s volume. */
+  private def blocksOf(e: Enc, k: Int): Seq[(Bbox, Array[Long])] =
+    grid(e).zipWithIndex.map { case (b, j) =>
+      val bs = b.size
+      (b, voxels(k * 1000L + j, (bs.x * bs.y * bs.z).toInt, e.mask, e.force))
+    }
 
   test("a null payload decodes to the background value") {
     val e = rawU32
@@ -163,6 +180,7 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = nodes(plan)
     assert(all.exists {
       case g: GenerateExec => g.generator.isInstanceOf[DecodeVoxels]
+      case _: DecodeVoxelsExec => true
       case _ => false
     }, s"$name: no decode_voxels Generate in plan:\n$plan")
     val exprs = all.flatMap(_.expressions).flatMap(_.collect { case e => e })
@@ -223,5 +241,146 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     assertOneEmitter("chunk table", ChunkEngine.cutoutVoxels(
       table.toDF("gx", "gy", "gz", "payload"), cbox), want.toSet)
+  }
+
+  /** A session on `spark`'s context with the decode strategy that
+    * [[GraftFunctions.register]] installs. */
+  private lazy val registered: SparkSession = {
+    val r = spark.newSession()
+    GraftFunctions.register(r)
+    r
+  }
+
+  /** `df` plans a [[DecodeVoxelsExec]] root, and its `executeCollect`,
+    * `executeCollectIterator` (rows and count) and `Dataset.collect()`
+    * each give the generic path's (`queryExecution.toRdd`) rows, in
+    * order. Returns those rows and whether `Dataset.collect()` shipped
+    * blocks. */
+  private def assertBlockCollect(name: String, df: DataFrame): (Seq[Seq[Any]], Boolean) = {
+    val exec = df.queryExecution.executedPlan match {
+      case d: DecodeVoxelsExec => d
+      case p => fail(s"$name: plan root is not DecodeVoxelsExec:\n$p")
+    }
+    val schema = df.schema
+    val generic = df.queryExecution.toRdd.map(_.toSeq(schema)).collect().toSeq
+    val collected = exec.executeCollect().toSeq.map(_.toSeq(schema))
+    val (n, it) = CollectBridge.collectIterator(exec)
+    val streamed = it.map(_.toSeq(schema)).toSeq
+    val viaDataset = df.collect().toSeq.map(_.toSeq)
+    assert(collected == generic, s"$name: executeCollect")
+    assert(n == generic.length && streamed == generic, s"$name: executeCollectIterator")
+    assert(viaDataset == generic, s"$name: Dataset.collect")
+    // Dataset.collect resets the plan's metrics first: they count it alone
+    assert(exec.metrics("numOutputRows").value == generic.length,
+      s"$name: numOutputRows")
+    (generic, exec.metrics("blockBytes").value > 0)
+  }
+
+  private def tuples(rows: Seq[Seq[Any]]): Seq[(Long, Long, Long, Long)] =
+    rows.map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long],
+      r(2).asInstanceOf[Long], r(3).asInstanceOf[Long]))
+
+  test("the block collect gives the generic path's rows in order: every " +
+      "encoding, null payloads, top-bit labels and wide backgrounds") {
+    val nullChunks = Seq(
+      // (input, the background its null payloads read as)
+      rawU32 -> 7L,
+      encodings.find(_.name == "raw u8").get -> ((1L << 32) + 7L),
+      encodings.find(_.name == "cseg u64 top-bit").get -> (Long.MinValue + 3L))
+    val inputs = encodings.zipWithIndex.map { case (e, k) => (e, k, None) } ++
+      nullChunks.map { case (e, bg) => (e, 99, Some(bg)) }
+    for ((e, k, bg) <- inputs) {
+      val blocks = blocksOf(e, k)
+      // with a background, every other chunk is missing
+      val chunks = chunkRows(blocks.zipWithIndex.map { case ((b, v), j) =>
+        (b, if (bg.isDefined && j % 2 == 1) null else e.encode(v, b.size))
+      }, registered)
+      for ((boxName, box) <- boxes) {
+        val name = s"${e.name}${bg.fold("")(b => s" nulls as $b")} / $boxName"
+        val (rows, shipped) = assertBlockCollect(name, PrecomputedIO.decodeToVoxels(
+          chunks, box, scaleOf(e), e.dtb, bg.getOrElse(0L)))
+        assert(shipped, s"$name: no blocks shipped")
+        val want = blocks.zipWithIndex.flatMap { case ((b, v), j) =>
+          val vox = if (bg.isDefined && j % 2 == 1) Array.fill(v.length)(bg.get) else v
+          Geom.clipRows(vox, b.minpt, b.size, box)
+        }
+        assert(tuples(rows) == want, s"$name: rows")
+      }
+    }
+  }
+
+  test("the block collect builds blocks of more rows than one row slice") {
+    // two 80x64x16 chunks (81920 voxels each, past the 65536 rows the
+    // driver builds in one array, and 640 KiB of uint64 values, past
+    // the 512 KiB the writer buffers): raw uint64, and one missing as 7
+    val cs = Vec3(80, 64, 16)
+    val vol = Bbox(Vec3(0, 0, 0), Vec3(160, 64, 16))
+    val r = new java.util.Random(5)
+    val blocks = Seq(Vec3(0, 0, 0), Vec3(1, 0, 0)).map { g =>
+      (Geom.chunkBbox(g, vol, cs), Array.fill(81920)(r.nextLong()))
+    }
+    val chunks = chunkRows(Seq(blocks(0)._1 -> Codec.encodeRawFromLongs(blocks(0)._2, 8),
+      blocks(1)._1 -> null), registered)
+    val scale = ScaleMeta(key = "1_1_1", encoding = "raw", resolution = Seq(1, 1, 1),
+      chunkSize = cs, size = vol.size, voxelOffset = vol.minpt)
+    for (box <- Seq(vol, Bbox(Vec3(3, 1, 2), Vec3(150, 63, 15)))) {
+      val (rows, shipped) = assertBlockCollect(s"$box",
+        PrecomputedIO.decodeToVoxels(chunks, box, scale, 8, 7L))
+      assert(shipped, s"$box: no blocks shipped")
+      val want = Geom.clipRows(blocks(0)._2, blocks(0)._1.minpt, cs, box) ++
+        Geom.clipRows(Array.fill(81920)(7L), blocks(1)._1.minpt, cs, box)
+      assert(tuples(rows) == want, s"$box: rows")
+    }
+  }
+
+  test("float and channel stages plan the node but collect the generic way") {
+    val e = rawU32
+    val r = new java.util.Random(3)
+    val box = boxes.head._2
+    val floats = grid(e).map { b =>
+      (b, Array.fill((b.size.x * b.size.y * b.size.z).toInt)(r.nextGaussian()))
+    }
+    val fchunks = chunkRows(floats.map { case (b, v) =>
+      (b, Codec.encodeRawFloatsFromDoubles(v, 4)) }, registered)
+    val (frows, fshipped) = assertBlockCollect("float", DecodeVoxels.stage(fchunks,
+      DecodeVoxels(DecodeVoxels.chunkCols, "raw", 4, box, valueType = DoubleType)))
+    assert(!fshipped, "float: blocks shipped")
+    val fwant = floats.flatMap { case (b, v) =>
+      Geom.clipRows(v.indices.map(_.toLong).toArray, b.minpt, b.size, box)
+        .map { case (x, y, z, i) => Seq(x, y, z, v(i.toInt).toFloat.toDouble) }
+    }
+    assert(frows == fwant, "float: rows")
+
+    // three uint8 planes per chunk, channels 0 and 2 requested
+    val planes = grid(e).map { b =>
+      (b, Array.fill(3 * (b.size.x * b.size.y * b.size.z).toInt)(r.nextInt(256).toLong))
+    }
+    val cchunks = chunkRows(planes.map { case (b, v) =>
+      (b, Codec.encodeRawFromLongs(v, 1)) }, registered)
+    val (crows, cshipped) = assertBlockCollect("channels", DecodeVoxels.stage(cchunks,
+      DecodeVoxels(DecodeVoxels.chunkCols, "raw", 1, box, channels = Seq(0, 2),
+        planes = 3)))
+    assert(!cshipped, "channels: blocks shipped")
+    val cwant = planes.flatMap { case (b, v) =>
+      val n = v.length / 3
+      Geom.clipRows(Array.tabulate(n)(_.toLong), b.minpt, b.size, box).flatMap {
+        case (x, y, z, i) => Seq(0, 2).map(c => Seq(x, y, z, c.toLong, v(c * n + i.toInt)))
+      }
+    }
+    assert(crows == cwant, "channels: rows")
+  }
+
+  test("GraftFunctions.register plans the three cutouts as DecodeVoxelsExec; " +
+      "a session without it keeps GenerateExec and the same rows") {
+    val dir = Files.createTempDirectory("decode_voxels_exec").toString
+    for ((name, cut, want) <- GridFixtures.threeCutouts(spark, dir)) {
+      val plain = cut(spark)
+      val got = GridFixtures.rows(plain)
+      assert(plain.queryExecution.executedPlan.isInstanceOf[GenerateExec],
+        s"$name: ${plain.queryExecution.executedPlan}")
+      val (rows, shipped) = assertBlockCollect(name, cut(registered))
+      assert(shipped && tuples(rows) == got, s"$name: rows")
+      assert(got.length == want.size && got.toSet == want, s"$name: expected rows")
+    }
   }
 }

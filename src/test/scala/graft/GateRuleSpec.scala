@@ -200,4 +200,41 @@ class GateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the word width the grid readers emit
     assert(Codec.rawContains(Codec.encodeRawFromLongs(Array(1L, big), 8), 8, big))
   }
+
+  test("with the decode strategy installed, label === K still gates below " +
+      "the decode and returns the same rows") {
+    import graft.sources.Zarr2IO
+    import org.apache.spark.sql.graftshim.DecodeVoxelsExec
+    val big = java.lang.Long.parseUnsignedLong("9223372036854775813") // 2^63+5
+    val palette = Array(1L, 2L, 5L, big)
+    val fx = new GridFixtures(spark,
+      java.nio.file.Files.createTempDirectory("gate_strategy").toString,
+      Vec3(13, 9, 7), Vec3(4, 4, 4), 8, 5L, Set(Vec3(1, 1, 0)),
+      p => palette(((p.x * 5 + p.y * 3 + p.z * 2) % palette.length).toInt))
+    val box = Bbox(Vec3(1, 2, 1), Vec3(12, 9, 7))
+    val full = Bbox(Vec3(0, 0, 0),
+      Vec3(RealLayerQueries.SX, RealLayerQueries.SY, RealLayerQueries.SZ))
+    val cases: Seq[(String, SparkSession => DataFrame)] = Seq(
+      "cseg label 7" -> (s => PrecomputedIO.cutoutVoxels(s,
+        RealLayerQueries.LayerCsegDir, full).filter(col("label") === 7L)),
+      "cseg no-match" -> (s => PrecomputedIO.cutoutVoxels(s,
+        RealLayerQueries.LayerCsegDir, full).filter(col("label") === 999999L)),
+      "zarr2 top-bit" -> (s => Zarr2IO.cutoutVoxels(s, fx.zarr2C, box)
+        .filter(col("label") === big)),
+      "zarr2 fill" -> (s => Zarr2IO.cutoutVoxels(s, fx.zarr2C, box)
+        .filter(col("label") === 5L)))
+    val plain = spark.newSession()
+    ContainsGateRule.install(plain)
+    val withStrategy = spark.newSession()
+    ContainsGateRule.install(withStrategy)
+    graft.functions.GraftFunctions.register(withStrategy)
+    for ((name, cut) <- cases) {
+      val want = GridFixtures.rows(cut(plain))
+      val df = cut(withStrategy)
+      assertGateBelowGenerate(name, df)
+      assert(df.queryExecution.executedPlan.collectFirst {
+        case d: DecodeVoxelsExec => d }.isDefined, s"$name: no DecodeVoxelsExec")
+      assert(GridFixtures.rows(df) == want, s"$name: rows differ")
+    }
+  }
 }

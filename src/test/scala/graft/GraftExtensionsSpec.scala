@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.core.{Morton, MurmurHash3_128, Vec3}
 import graft.functions.ContainsGateRule
+import org.apache.spark.sql.graftshim.DecodeVoxelsExec
 
 /** The production one-liner: a session built with
   * `spark.sql.extensions=graft.functions.GraftExtensions` must carry
@@ -80,5 +81,16 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .flatMap(_.rules).contains(ContainsGateRule)
     assert(injected, "ContainsGateRule missing from the optimizer " +
       "batches of an extension-built session")
+  }
+
+  test("the extension plans cutout decodes as DecodeVoxelsExec") {
+    val dir = java.nio.file.Files.createTempDirectory("ext_decode").toString
+    for ((name, cut, want) <- GridFixtures.threeCutouts(spark, dir)) {
+      val df = cut(spark)
+      val plan = df.queryExecution.executedPlan
+      assert(plan.isInstanceOf[DecodeVoxelsExec], s"$name: plan root:\n$plan")
+      val got = GridFixtures.rows(df)
+      assert(got.length == want.size && got.toSet == want, s"$name: rows")
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
-import graft.sources.{N5IO, PrecomputedIO, Zarr2IO, Zarr3IO}
+import graft.sources.{N5IO, PrecomputedIO, ShardedIO, Zarr2IO, Zarr3IO}
 
 /** One seeded volume stored in every grid format a cutout reads:
   * precomputed raw, N5, zarr2 (C and F order), OME-zarr2, zarr3 and
@@ -145,4 +145,33 @@ object GridFixtures {
   def rows(df: DataFrame): Seq[(Long, Long, Long, Long)] =
     df.select("x", "y", "z", "label").collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+
+  /** Three cutouts of one uint64 volume (top-bit labels among its
+    * values), written under `root` through `spark`: precomputed,
+    * sharded precomputed (`ShardedIO.cutoutVoxelsSharded`) and zarr2,
+    * each as a frame in a given session with the rows it must return. */
+  def threeCutouts(spark: SparkSession, root: String)
+      : Seq[(String, SparkSession => DataFrame, Set[(Long, Long, Long, Long)])] = {
+    val palette = Array(1L, 3L, Long.MinValue + 9L, -2L, 1L << 40)
+    val fx = new GridFixtures(spark, root, Vec3(13, 9, 7), Vec3(4, 4, 3), 8,
+      0L, Set.empty, p => palette(((p.x * 7 + p.y * 3 + p.z) % palette.length).toInt))
+    val s = spark
+    import s.implicits._
+    val pm = PrecomputedIO.readInfo(fx.precomputed)
+    val sm = pm.copy(scales = Seq(pm.scale(0).copy(sharding = Some(ShardingSpec(
+      preshiftBits = 0, minishardBits = 1, shardBits = 2,
+      minishardIndexEncoding = "gzip", dataEncoding = "gzip")))))
+    val sharded = s"$root/precomputed_sharded"
+    PrecomputedIO.writeInfo(sharded, sm)
+    ShardedIO.writeSharded(Geom.gridpoints(fx.bounds, fx.bounds, fx.block).map { g =>
+      val b = Geom.chunkBbox(g, fx.bounds, fx.block)
+      (g.x, g.y, g.z, Codec.encodeRawFromLongs(fx.vox(b.minpt, b.size).toArray, 8))
+    }.toDF("gx", "gy", "gz", "payload"), sharded, sm, 0)
+    val box = Bbox(Vec3(1, 2, 1), Vec3(12, 9, 6))
+    Seq[(String, SparkSession => DataFrame)](
+      ("precomputed", PrecomputedIO.cutoutVoxels(_, fx.precomputed, box)),
+      ("sharded precomputed", ShardedIO.cutoutVoxelsSharded(_, sharded, box)),
+      ("zarr2", Zarr2IO.cutoutVoxels(_, fx.zarr2C, box)))
+      .map { case (name, cut) => (name, cut, fx.expect(box)) }
+  }
 }
