@@ -25,9 +25,6 @@ object ExplainDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // plan every entry as a session set up by GraftExtensions (the
-    // README's production setup) does, whatever entry ran first
-    graft.functions.GraftFunctions.register(spark)
     val sb = new StringBuilder
     sb.append("# EXPLAIN — formatted physical plans of headline queries\n\n")
     sb.append("Generated by `graft.ExplainDump` at sf=" + sfDir + ".\n")

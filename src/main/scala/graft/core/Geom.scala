@@ -122,19 +122,12 @@ object Bbox {
   }
 }
 
-/** One clipped voxel of [[Geom.clipWalk]]: its coordinates and its
-  * index into the decoded block (primitive arguments, so the per-voxel
-  * call boxes nothing).
-  */
-trait VoxelSink { def apply(x: Long, y: Long, z: Long, i: Int): Unit }
-
 /** The voxels of the F-order block at `lo` of shape `bs` that lie
   * inside `clip`, as a pull cursor: each [[next]] moves to the next
   * one, z-major with x fastest, and exposes its coordinates and its
   * index `i` into the block. This is the one definition of a cutout's
-  * clip bounds and voxel order; [[Geom.clipWalk]] drives it for
-  * push-style callers. `n` is the decoded voxel count; with `planes`
-  * stacked planes (channel-slowest layouts) it must be exactly
+  * clip bounds and voxel order. `n` is the decoded voxel count; with
+  * `planes` stacked planes (channel-slowest layouts) it must be exactly
   * `planes` block volumes, so a short, oversized or mis-shaped chunk
   * fails here as an IllegalArgumentException, never as an index error
   * or as voxels pasted into a neighbour's cell.
@@ -206,20 +199,8 @@ object Geom {
     Bbox(lo, hi.min(volumeBounds.maxpt))
   }
 
-  /** The decode-and-clip walk every cutout shares (rx.py:239-379's
-    * paste of each decoded chunk into the request buffer, as a
-    * generator): visit each voxel of the F-order block at `lo` of
-    * shape `bs` that lies inside `clip`, in [[ClipCursor]] order,
-    * handing `sink` its coordinates and its index into the block.
-    */
-  def clipWalk(n: Int, lo: Vec3, bs: Vec3, clip: Bbox, planes: Int = 1)(
-      sink: VoxelSink): Unit = {
-    val c = new ClipCursor(n, lo, bs, clip, planes)
-    while (c.next()) sink(c.x, c.y, c.z, c.i)
-  }
-
-  /** [[clipWalk]] collected as (x, y, z, value) rows, into one array
-    * sized up front from the clipped extent: the reference the
+  /** The [[ClipCursor]] walk collected as (x, y, z, value) rows, into
+    * one array sized up front from the clipped extent: the reference the
     * `DecodeVoxels` generator is tested against (no cutout calls it).
     */
   def clipRows(vox: Array[Long], lo: Vec3, bs: Vec3, clip: Bbox)

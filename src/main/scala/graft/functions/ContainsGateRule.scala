@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{FILTER, GENERATE}
 import org.apache.spark.sql.types.{BooleanType, LongType}
 import graft.core.{Codec, Compresso, Cseg, Vec3}
 
@@ -14,9 +14,12 @@ import graft.core.{Codec, Compresso, Cseg, Vec3}
   * 459-484 gates rx.decode_binary_image:756-806): chunks whose encoded
   * payload provably lacks the label are never fully decoded. Here the
   * same optimization is expressed where a Spark engine should express
-  * it — as a `Rule[LogicalPlan]` (the builder-preference (c) shape) so
-  * ANY query that filters a cutout on label equality benefits without
-  * opting in at the call site.
+  * it — as a `Rule[LogicalPlan]` so ANY query that filters a cutout on
+  * label equality benefits without opting in at the call site:
+  * [[DecodeVoxels.stage]] adds it to the session's experimental
+  * optimizations, which run after the built-in batches, i.e. after
+  * predicate pushdown has produced the matched shape. Excluding it by
+  * name (`spark.sql.optimizer.excludedRules`) turns it off.
   *
   * Matched shape (what the built-in optimizer leaves after pushing the
   * user's filter through the x/y/z/label projection):
@@ -48,7 +51,10 @@ object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
 
   val GateName = "graft_contains_gate"
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+  // it runs on every plan of a session that has built a cutout: skip
+  // the walk unless the plan holds both a Filter and a Generate
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUpWithPruning(
+      _.containsAllPatterns(FILTER, GENERATE)) {
     case f @ Filter(cond,
         gen @ Generate(d: DecodeVoxels, _, _, _, genOut, gchild))
         if d.labelOrdinal.isDefined && !alreadyGated(gchild) =>
@@ -111,13 +117,4 @@ object ContainsGateRule extends Rule[LogicalPlan] with PredicateHelper {
     Some(ScalaUDF(fn, BooleanType, d.children, Nil, None, Some(GateName),
       false, true))
   }
-
-  /** Idempotently install this rule on a session's experimental
-    * optimizations (runs after the built-in optimizer batches, i.e.
-    * after predicate pushdown has produced the matched shape).
-    */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(ContainsGateRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ContainsGateRule
 }

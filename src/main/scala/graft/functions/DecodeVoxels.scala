@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, ReturnAnswer}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.{ColumnShim, DecodeVoxelsExec}
@@ -20,11 +20,12 @@ import graft.core.{Bbox, ClipCursor, Codec, Compresso, Cseg, Vec3}
   * into its own buffer before asking for the next), so no per-voxel
   * object is made between the decode and Spark's row buffer.
   *
-  * With [[DecodeVoxelsStrategy]] installed the stage plans as
-  * [[DecodeVoxelsExec]]: a collect of a label cutout then ships each
-  * chunk's [[decode]] as one block (its clipped window and values at
-  * [[valueWidth]], or the background of a null payload) and the driver
-  * builds the same rows in the same order.
+  * A stage at the root of a query plans as [[DecodeVoxelsExec]]
+  * ([[DecodeVoxels.stage]] installs [[DecodeVoxelsStrategy]] on its
+  * session): a collect of a label cutout ships each chunk's [[decode]]
+  * as one block (its clipped window and values at [[valueWidth]], or
+  * the background of a null payload) and the driver builds the same
+  * rows in the same order.
   *
   * The fields carry what the decode needs and what
   * [[ContainsGateRule]] reads to gate payloads below it: the scale's
@@ -161,26 +162,40 @@ object DecodeVoxels {
   def chunkCols: Seq[Expression] = Seq("x0", "y0", "z0", "x1", "y1", "z1",
     "payload").map(c => ColumnShim.expression(col(c)))
 
-  /** Chunk rows (x0..z1, payload) -> the voxel rows of `d`. */
-  def stage(chunks: DataFrame, d: DecodeVoxels): DataFrame =
+  /** Chunk rows (x0..z1, payload) -> the voxel rows of `d`. In every
+    * session a collect of them plans [[DecodeVoxelsExec]], and a
+    * `label = K` filter over them gets a payload gate below the decode. */
+  def stage(chunks: DataFrame, d: DecodeVoxels): DataFrame = {
+    install(chunks.sparkSession)
     chunks.select(ColumnShim.column(d))
+  }
+
+  /** Add [[DecodeVoxelsStrategy]] and [[ContainsGateRule]] to the
+    * session once each. The lock on its `ExperimentalMethods` makes
+    * the read-check-write atomic, so concurrent first cutouts cannot
+    * add either twice or drop another's entry. */
+  private def install(spark: SparkSession): Unit = {
+    val x = spark.experimental
+    x.synchronized {
+      if (!x.extraStrategies.contains(DecodeVoxelsStrategy))
+        x.extraStrategies = DecodeVoxelsStrategy +: x.extraStrategies
+      if (!x.extraOptimizations.contains(ContainsGateRule))
+        x.extraOptimizations = x.extraOptimizations :+ ContainsGateRule
+    }
+  }
 }
 
-/** Plans a [[DecodeVoxels]] generate that keeps no child column and is
-  * not outer (every [[DecodeVoxels.stage]]) as a [[DecodeVoxelsExec]],
-  * whose collect ships clipped chunk blocks instead of voxel rows. A
-  * session without it plans `GenerateExec`. */
+/** Plans a [[DecodeVoxels]] generate that keeps no child column, is
+  * not outer (every [[DecodeVoxels.stage]], which installs it) and is
+  * the root of the query as a [[DecodeVoxelsExec]], whose collect ships
+  * clipped chunk blocks instead of voxel rows. Under any other operator
+  * nothing collects it, so Spark plans its `GenerateExec`, which
+  * whole-stage codegen fuses with the operators around it. */
 object DecodeVoxelsStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case g @ Generate(d: DecodeVoxels, _, false, _, _, child)
+    case ReturnAnswer(g @ Generate(d: DecodeVoxels, _, false, _, _, child))
         if g.requiredChildOutput.isEmpty =>
       DecodeVoxelsExec(d, g.qualifiedGeneratorOutput, planLater(child)) :: Nil
     case _ => Nil
   }
-
-  /** Idempotently add this strategy to a session's planner. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(DecodeVoxelsStrategy))
-      spark.experimental.extraStrategies =
-        DecodeVoxelsStrategy +: spark.experimental.extraStrategies
 }

@@ -263,28 +263,20 @@ object GraftFunctions {
     ("graft_parse_u64", info("graft_parse_u64", classOf[ParseU64Expr]),
       (args: Seq[Expression]) => ParseU64Expr(args)))
 
-  /** Register the functions and plan cutout decodes as
-    * [[DecodeVoxelsStrategy]] does (idempotent). */
-  def register(spark: SparkSession): Unit = {
+  /** Register the `graft_*` SQL functions on `spark` (idempotent). */
+  def register(spark: SparkSession): Unit =
     all.foreach { case (name, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(
         FunctionIdentifier(name), inf, builder)
     }
-    DecodeVoxelsStrategy.install(spark)
-  }
 }
 
+/** `spark.sql.extensions=graft.functions.GraftExtensions`: the `graft_*`
+  * SQL functions in every session built with that setting. Cutout
+  * planning needs no setup: [[DecodeVoxels.stage]] installs it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftFunctions.all.foreach { case (name, inf, builder) =>
       ext.injectFunction((FunctionIdentifier(name), inf, builder))
     }
-    // the P6 codec-membership pushdown rides the same config knob, so
-    // `spark.sql.extensions=graft.functions.GraftExtensions` is the
-    // one-line production setup (functions + optimizer rule); the rule
-    // is idempotent (alreadyGated guard), so sessions that ALSO call
-    // ContainsGateRule.install see it applied once per shape
-    ext.injectOptimizerRule(_ => ContainsGateRule)
-    ext.injectPlannerStrategy(_ => DecodeVoxelsStrategy)
-  }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Bbox, Codec, Compresso, Geom, Vec3}
+import graft.core.{Bbox, ClipCursor, Codec, Compresso, Vec3}
 import graft.sources.{PrecomputedIO, ShardedIO}
 
 /** Golden-fixture parity over the reference's OWN committed compresso
@@ -104,11 +104,10 @@ object CompressoQueries {
             it.foreach { case (cx0, cy0, cz0, path) =>
               val (cd, vox) = Compresso.decode(
                 Codec.gunzip(Files.readAllBytes(Paths.get(path))))
-              Geom.clipWalk(vox.length, Vec3(cx0, cy0, cz0), cd, slab) {
-                (x, y, z, i) =>
-                  sub(((x - bx0) + nx * ((y - by0) + ny * (z - zlo))).toInt) =
-                    vox(i)
-              }
+              val c = new ClipCursor(vox.length, Vec3(cx0, cy0, cz0), cd, slab)
+              while (c.next())
+                sub(((c.x - bx0) + nx * ((c.y - by0) + ny * (c.z - zlo))).toInt) =
+                  vox(c.i)
             }
             // renumber: slab-local dense alphabet, first-seen in F-order
             val fwd = new java.util.LinkedHashMap[Long, Long]()

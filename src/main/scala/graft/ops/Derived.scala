@@ -163,35 +163,4 @@ object Derived {
     val b = Bbox.fromFilename(name)
     (b.minpt.x, b.minpt.y, b.minpt.z, b.maxpt.x, b.maxpt.y, b.maxpt.z)
   })
-
-  /** SQL-registrable decode-and-clip: one uint32 raw chunk payload ->
-    * voxel rows clipped to the request bbox (rx.py:239-379's
-    * shared-memory paste, re-expressed as a generator). Array param
-    * for the payload (UdfSeqAuditSpec contract); the chunk bbox and
-    * request bbox ride as plain longs so the whole thing is callable
-    * from pure `spark.sql` (s4f_cutout_sql_pushdown).
-    */
-  val clipVoxelsFn: (Long, Long, Long, Long, Long, Long, Array[Byte],
-      Long, Long, Long, Long, Long, Long) => Seq[ClipVox] =
-    (x0, y0, z0, x1, y1, z1, payload, bx0, by0, bz0, bx1, by1, bz1) => {
-      // corrupt-input contract (HostileDecodeSpec): a null payload
-      // (fill_missing view) or a short/truncated chunk must fail as a
-      // typed IllegalArgumentException at the decode boundary, not as
-      // an NPE/AIOOBE from the voxel indexing (clipWalk checks the size)
-      require(payload != null,
-        "graft_clip_voxels: null payload (fill_missing view rows " +
-          "must be filtered or coalesced before the clip)")
-      val vox = Codec.decodeRawToLongs(payload, 4)
-      val out = scala.collection.mutable.ArrayBuffer.empty[ClipVox]
-      Geom.clipWalk(vox.length, Vec3(x0, y0, z0),
-        Vec3(x1 - x0, y1 - y0, z1 - z0),
-        Bbox(Vec3(bx0, by0, bz0), Vec3(bx1, by1, bz1)))(
-        (x, y, z, i) => out += ClipVox(x, y, z, vox(i)))
-      out.toSeq
-    }
 }
-
-/** Row shape for clipVoxelsFn (top-level so UDF return-type reflection
-  * resolves the encoder).
-  */
-final case class ClipVox(x: Long, y: Long, z: Long, label: Long)

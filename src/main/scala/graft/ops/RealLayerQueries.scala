@@ -700,8 +700,8 @@ object RealLayerQueries {
         |WHERE x BETWEEN 5 AND 36 AND y BETWEEN 7 AND 40
         |  AND z BETWEEN 3 AND 18""".stripMargin)),
 
-    // S4/J1 as PURE SQL against the DSv2 table ITSELF (r17 verdict
-    // item 1): the layer is registered `USING neuroglancer`, the bbox
+    // S4/J1 chunk selection as PURE SQL against the DSv2 table
+    // ITSELF: the layer is registered `USING neuroglancer`, the bbox
     // arrives as WHERE chunk-key predicates (x1 > lo AND x0 < hi per
     // axis — the overlap form NgScanBuilder.tryPush understands), and
     // Catalyst's V2ScanRelationPushDown hands them to the source so
@@ -709,24 +709,26 @@ object RealLayerQueries {
     // plan's NgScan carries a NON-EMPTY PushedFilters list (also
     // visible in EXPLAIN.md) — a3d_spatial_sql proved the expression
     // family over a text view; this proves pushdown fires from SQL
-    // against the real source. Same box + oracle as s4_cutout_real,
-    // so the SQL lane and the DataFrame lane cross-check. Reference:
-    // partition pruning is the reference's load-bearing optimization
-    // (image/common.py:137-155, rx.py:252-260).
+    // against the real source. The selected chunk rows then decode
+    // through the stage every cutout shares, with the same box +
+    // oracle as s4_cutout_real, so the SQL lane and the DataFrame lane
+    // cross-check. Reference: partition pruning is the reference's
+    // load-bearing optimization (image/common.py:137-155,
+    // rx.py:252-260).
     "s4f_cutout_sql_pushdown" -> Q(
       (s, dir) => {
         ensure(s, dir)
         s.sql(s"""CREATE OR REPLACE TEMPORARY VIEW graft_ng_layer
           |USING neuroglancer OPTIONS (path '$LayerDir', mip '0')""".stripMargin)
-        s.udf.register("graft_clip_voxels", Derived.clipVoxelsFn)
-        val df = s.sql("""
-          |SELECT v.x, v.y, v.z, v.label
+        val chunks = s.sql("""
+          |SELECT x0, y0, z0, x1, y1, z1, payload
           |FROM graft_ng_layer
-          |LATERAL VIEW explode(graft_clip_voxels(x0, y0, z0, x1, y1, z1,
-          |  payload, 5, 7, 3, 37, 41, 19)) t AS v
           |WHERE x1 > 5 AND x0 < 37 AND y1 > 7 AND y0 < 41
           |  AND z1 > 3 AND z0 < 19""".stripMargin)
-        graft.sources.Neuroglancer.requirePushedFilters(df)
+        val meta = PrecomputedIO.readInfo(LayerDir)
+        PrecomputedIO.decodeToVoxels(
+          graft.sources.Neuroglancer.requirePushedFilters(chunks),
+          Bbox(Vec3(5, 7, 3), Vec3(37, 41, 19)), meta.scale(0), meta.dtypeBytes)
       },
       Some(s"""SELECT x, y, z, label FROM $Sidecar
         |WHERE x BETWEEN 5 AND 36 AND y BETWEEN 7 AND 40
@@ -1138,15 +1140,15 @@ object RealLayerQueries {
 
     // P6 via the OPTIMIZER: the same codec contains() gate, but
     // injected automatically by graft.functions.ContainsGateRule — a
-    // Rule[LogicalPlan] on the session that rewrites any
-    // `cutout.filter(label === K)` to probe each cseg payload's
-    // palette blocks before decode. The query itself is the naive
-    // user formulation; GateRuleSpec asserts the gate lands in the
-    // optimized plan and that results are identical with the rule off.
+    // Rule[LogicalPlan] that every cutout's decode stage adds to its
+    // session, rewriting any `cutout.filter(label === K)` to probe
+    // each cseg payload's palette blocks before decode. The query
+    // itself is the naive user formulation; GateRuleSpec asserts the
+    // gate lands in the optimized plan and that results are identical
+    // with the rule excluded.
     "p6b_label_mask_rule" -> Q(
       (s, dir) => {
         ensure(s, dir)
-        graft.functions.ContainsGateRule.install(s)
         PrecomputedIO.cutoutVoxels(s, LayerCsegDir,
             Bbox(Vec3(0, 0, 0), Vec3(SX, SY, SZ)))
           .filter(col("label") === 7L)

@@ -251,13 +251,14 @@ object PrecomputedIO {
     * row buffer, z-major and x fastest within a chunk. `background` is
     * the fill value for missing (null-payload) chunks — the
     * reference's background_color option (image/rx.py background
-    * buffers; test_cloudvolume.py:85-140), default 0. A label-equality
-    * filter above this stage gets a payload-level contains() gate
-    * below it when [[graft.functions.ContainsGateRule]] is installed.
-    * In a session with [[graft.functions.DecodeVoxelsStrategy]]
-    * (`GraftFunctions.register`, `GraftExtensions`) a collect of the
+    * buffers; test_cloudvolume.py:85-140), default 0. In every
+    * session a label-equality filter above this stage gets a
+    * payload-level contains() gate below it
+    * ([[graft.functions.ContainsGateRule]]), and a collect of the
     * result ships one dtype-width block per chunk to the driver, which
-    * builds the rows there; the rows do not change.
+    * builds the rows there
+    * ([[org.apache.spark.sql.graftshim.DecodeVoxelsExec]]); the rows
+    * do not change.
     */
   def decodeToVoxels(chunks: DataFrame, bbox: Bbox, scale: ScaleMeta,
       dtb: Int, background: Long = 0L): DataFrame =

@@ -16,11 +16,12 @@ import org.apache.spark.util.io.{ChunkedByteBuffer, ChunkedByteBufferOutputStrea
 import graft.functions.DecodeVoxels
 
 /** The physical node of a `DecodeVoxels` generate that keeps no child
-  * column (every cutout's decode stage), planned by
-  * [[graft.functions.DecodeVoxelsStrategy]].
+  * column (every cutout's decode stage) and is the root of its query,
+  * planned in every session by [[graft.functions.DecodeVoxelsStrategy]],
+  * which the stage installs.
   *
-  * Every consumer but a collect reads the rows of the `GenerateExec` it
-  * holds. A collect of a label cutout (x, y, z, label) instead ships one
+  * Anything but a collect (`toRdd`, `foreach`) reads the rows of the
+  * `GenerateExec` it holds. A collect of a label cutout (x, y, z, label) instead ships one
   * block per chunk to the driver, the way cloud-volume pastes each
   * decoded chunk into one buffer (rx.py): the chunk's clipped window
   * and its clipped values at the narrowest lossless width (1 byte for
@@ -29,8 +30,7 @@ import graft.functions.DecodeVoxels
   * builds the rows from them, in the order the generic path gives. A
   * float or channel cutout collects the generic way, and so does a
   * label cutout whose rows would pass `spark.driver.maxResultSize`:
-  * the row path's own result-size check then decides, as it does
-  * without this node.
+  * the row path's own result-size check then decides.
   *
   * It lives in this package because `executeCollectIterator`, which it
   * overrides beside `executeCollect`, is `private[spark]`.

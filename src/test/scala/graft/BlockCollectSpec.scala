@@ -8,10 +8,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
-import graft.functions.{DecodeVoxels, GraftFunctions}
+import graft.functions.DecodeVoxels
 
 /** The block collect of [[DecodeVoxelsExec]] where it can go wrong:
-  * hostile chunks fail as they do on the generic path, a collect past
+  * hostile chunks fail as they do on the generic path (the node's
+  * `queryExecution.toRdd` rows), a collect past
   * `spark.driver.maxResultSize` fails with Spark's result-size error,
   * and its metrics count what it did. The session caps results at
   * 1 MiB, so it is this spec's own.
@@ -19,7 +20,6 @@ import graft.functions.{DecodeVoxels, GraftFunctions}
 class BlockCollectSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
-  private var registered: SparkSession = _
 
   override def beforeAll(): Unit = {
     SparkSession.getActiveSession.foreach(_.stop())
@@ -31,8 +31,6 @@ class BlockCollectSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    registered = spark.newSession()
-    GraftFunctions.register(registered)
   }
 
   override def afterAll(): Unit = {
@@ -61,13 +59,13 @@ class BlockCollectSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rootCause(t: Throwable): Throwable =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last
 
-  /** `rows` fail the registered session's block collect (both of its
-    * entry points) as they fail the generic path: same exception class,
-    * same root cause class. */
+  /** `rows` fail the block collect (both of its entry points) as they
+    * fail the generic path: same exception class, same root cause
+    * class. */
   private def assertSameFailure(name: String, rows: Seq[(Bbox, Array[Byte])],
       encoding: String, dtb: Int, clip: Bbox): Unit = {
-    val generic = failure(stage(spark, rows, encoding, dtb, clip))
-    val df = stage(registered, rows, encoding, dtb, clip)
+    val df = stage(spark, rows, encoding, dtb, clip)
+    val generic = intercept[Throwable](df.queryExecution.toRdd.count())
     val exec = df.queryExecution.executedPlan
     assert(exec.isInstanceOf[DecodeVoxelsExec], s"$name: $exec")
     for (got <- Seq(failure(df),
@@ -109,16 +107,14 @@ class BlockCollectSpec extends AnyFunSuite with BeforeAndAfterAll {
           Codec.encodeRawFromLongs(Array.fill(32 * 32 * 32)(r.nextLong()), 8)
       }
     assertResultSizeError("random uint64",
-      stage(registered, rows, "raw", 8, Bbox(Vec3(0, 0, 0), cs * 2L)))
+      stage(spark, rows, "raw", 8, Bbox(Vec3(0, 0, 0), cs * 2L)))
 
     // 64 missing chunks of 32^3 read as background 7: a few hundred
     // bytes of blocks, but 2 Mi rows (80 MiB) on the driver
     val vol = Bbox(Vec3(0, 0, 0), cs * 4L)
     val missing = Geom.gridpoints(vol, vol, cs).map(g => Bbox(g * cs, g * cs + cs) -> null)
-    def sparse(s: SparkSession) = DecodeVoxels.stage(chunkRows(s, missing),
-      DecodeVoxels(DecodeVoxels.chunkCols, "raw", 8, vol, background = 7L))
-    assertResultSizeError("missing chunks", sparse(registered))
-    assertResultSizeError("missing chunks, generic path", sparse(spark))
+    assertResultSizeError("missing chunks", DecodeVoxels.stage(chunkRows(spark, missing),
+      DecodeVoxels(DecodeVoxels.chunkCols, "raw", 8, vol, background = 7L)))
   }
 
   /** `df` fails both collects with Spark's result-size error. */
@@ -134,13 +130,12 @@ class BlockCollectSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one missing 32^3 chunk: 32768 rows, 1.25 MiB as 40-byte rows,
     // far less once the row path compresses them
     val b = Bbox(Vec3(0, 0, 0), Vec3(32, 32, 32))
-    def one(s: SparkSession) = DecodeVoxels.stage(chunkRows(s, Seq(b -> null)),
+    val df = DecodeVoxels.stage(chunkRows(spark, Seq(b -> null)),
       DecodeVoxels(DecodeVoxels.chunkCols, "raw", 1, b, background = 7L))
-    val want = one(spark).collect().toSeq
-    assert(want.length == 32768)
-    val df = one(registered)
+    val want = Geom.clipRows(Array.fill(32768)(7L), b.minpt, b.size, b)
     val exec = df.queryExecution.executedPlan.asInstanceOf[DecodeVoxelsExec]
-    assert(df.collect().toSeq == want)
+    assert(df.collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))) == want)
     assert(exec.metrics("numOutputRows").value == 32768L)
     val (n, it) = CollectBridge.collectIterator(exec)
     assert(n == 32768L && it.map(_.getLong(3)).forall(_ == 7L))
@@ -164,9 +159,9 @@ class BlockCollectSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    registered.listenerManager.register(listener)
+    spark.listenerManager.register(listener)
     try {
-      val df = stage(registered, rows, "raw", 1, box)
+      val df = stage(spark, rows, "raw", 1, box)
       assert(df.collect().length == 240)
       CollectBridge.drain(spark.sparkContext)
       val qe = seen.poll(10, java.util.concurrent.TimeUnit.SECONDS)
@@ -186,22 +181,22 @@ class BlockCollectSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(shown("numOutputRows").contains("240"), values)
       assert(shown("blockBytes").exists(_.contains(" B")), values)
 
-      // a consumer above the node reads its generic rows: no blocks
-      val filtered = stage(registered, rows, "raw", 1, box)
+      // under a consumer nothing collects the stage: Spark's own
+      // GenerateExec, no node
+      val filtered = stage(spark, rows, "raw", 1, box)
         .filter(org.apache.spark.sql.functions.col("x") >= 0L)
       assert(filtered.collect().length == 240)
       CollectBridge.drain(spark.sparkContext)
-      val cexec = seen.poll(10, java.util.concurrent.TimeUnit.SECONDS).executedPlan
-        .collectFirst { case d: DecodeVoxelsExec => d }
-      assert(cexec.isDefined)
-      assert(cexec.get.metrics("blockBytes").value == 0L)
-      assert(cexec.get.metrics("numOutputRows").value == 240L)
+      val fplan = seen.poll(10, java.util.concurrent.TimeUnit.SECONDS).executedPlan
+      assert(fplan.collectFirst { case d: DecodeVoxelsExec => d }.isEmpty, fplan)
+      assert(fplan.collectFirst { case g: org.apache.spark.sql.execution.GenerateExec =>
+        g.metrics("numOutputRows").value }.contains(240L), fplan)
 
       // the node and its generator show in explain
       val explained = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       assert(explained.contains("DecodeVoxels") && explained.contains("decode_voxels"),
         explained)
-    } finally registered.listenerManager.unregister(listener)
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -4,13 +4,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Explode, ScalaUDF}
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.graftshim.{CollectBridge, DecodeVoxelsExec}
 import org.apache.spark.sql.types.DoubleType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
-import graft.functions.{DecodeVoxels, GraftFunctions}
+import graft.functions.{ContainsGateRule, DecodeVoxels}
 import graft.ops.{ChunkEngine, Derived}
 import graft.sources.{N5IO, PrecomputedIO}
 
@@ -22,10 +23,10 @@ import graft.sources.{N5IO, PrecomputedIO}
   * (precomputed, N5, zarr2, OME-zarr2, zarr3 unsharded and sharded, the
   * chunk table) must plan that one generator.
   *
-  * With [[GraftFunctions.register]]'s planner strategy the generator
-  * runs as a [[DecodeVoxelsExec]], whose collect ships clipped chunk
-  * blocks: every collect path through it must give the generic path's
-  * rows, in order.
+  * In every session a directly collected generator runs as a
+  * [[DecodeVoxelsExec]], whose collect ships clipped chunk blocks:
+  * every collect path through it must give the generic path's
+  * (`queryExecution.toRdd`) rows, in order.
   */
 class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -164,9 +165,10 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     check("null payload", chunks, blocks, scaleOf(e), 4, 7L)
   }
 
-  /** Every plan node, AQE's final plan included. */
+  /** Every plan node, AQE's final plan and its query stages included. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
     case _ => p +: p.children.flatMap(nodes)
   }
 
@@ -243,14 +245,6 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       table.toDF("gx", "gy", "gz", "payload"), cbox), want.toSet)
   }
 
-  /** A session on `spark`'s context with the decode strategy that
-    * [[GraftFunctions.register]] installs. */
-  private lazy val registered: SparkSession = {
-    val r = spark.newSession()
-    GraftFunctions.register(r)
-    r
-  }
-
   /** `df` plans a [[DecodeVoxelsExec]] root, and its `executeCollect`,
     * `executeCollectIterator` (rows and count) and `Dataset.collect()`
     * each give the generic path's (`queryExecution.toRdd`) rows, in
@@ -294,7 +288,7 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // with a background, every other chunk is missing
       val chunks = chunkRows(blocks.zipWithIndex.map { case ((b, v), j) =>
         (b, if (bg.isDefined && j % 2 == 1) null else e.encode(v, b.size))
-      }, registered)
+      })
       for ((boxName, box) <- boxes) {
         val name = s"${e.name}${bg.fold("")(b => s" nulls as $b")} / $boxName"
         val (rows, shipped) = assertBlockCollect(name, PrecomputedIO.decodeToVoxels(
@@ -320,7 +314,7 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (Geom.chunkBbox(g, vol, cs), Array.fill(81920)(r.nextLong()))
     }
     val chunks = chunkRows(Seq(blocks(0)._1 -> Codec.encodeRawFromLongs(blocks(0)._2, 8),
-      blocks(1)._1 -> null), registered)
+      blocks(1)._1 -> null))
     val scale = ScaleMeta(key = "1_1_1", encoding = "raw", resolution = Seq(1, 1, 1),
       chunkSize = cs, size = vol.size, voxelOffset = vol.minpt)
     for (box <- Seq(vol, Bbox(Vec3(3, 1, 2), Vec3(150, 63, 15)))) {
@@ -341,7 +335,7 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (b, Array.fill((b.size.x * b.size.y * b.size.z).toInt)(r.nextGaussian()))
     }
     val fchunks = chunkRows(floats.map { case (b, v) =>
-      (b, Codec.encodeRawFloatsFromDoubles(v, 4)) }, registered)
+      (b, Codec.encodeRawFloatsFromDoubles(v, 4)) })
     val (frows, fshipped) = assertBlockCollect("float", DecodeVoxels.stage(fchunks,
       DecodeVoxels(DecodeVoxels.chunkCols, "raw", 4, box, valueType = DoubleType)))
     assert(!fshipped, "float: blocks shipped")
@@ -356,7 +350,7 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (b, Array.fill(3 * (b.size.x * b.size.y * b.size.z).toInt)(r.nextInt(256).toLong))
     }
     val cchunks = chunkRows(planes.map { case (b, v) =>
-      (b, Codec.encodeRawFromLongs(v, 1)) }, registered)
+      (b, Codec.encodeRawFromLongs(v, 1)) })
     val (crows, cshipped) = assertBlockCollect("channels", DecodeVoxels.stage(cchunks,
       DecodeVoxels(DecodeVoxels.chunkCols, "raw", 1, box, channels = Seq(0, 2),
         planes = 3)))
@@ -370,17 +364,49 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(crows == cwant, "channels: rows")
   }
 
-  test("GraftFunctions.register plans the three cutouts as DecodeVoxelsExec; " +
-      "a session without it keeps GenerateExec and the same rows") {
+  test("a fresh session plans the three cutouts as DecodeVoxelsExec, and " +
+      "a label filter over each gates below the decode with the same rows") {
     val dir = Files.createTempDirectory("decode_voxels_exec").toString
+    // neither GraftFunctions.register nor the extension
+    val fresh = spark.newSession()
+    val k = Long.MinValue + 9L // a top-bit label of the fixture's palette
     for ((name, cut, want) <- GridFixtures.threeCutouts(spark, dir)) {
-      val plain = cut(spark)
-      val got = GridFixtures.rows(plain)
-      assert(plain.queryExecution.executedPlan.isInstanceOf[GenerateExec],
-        s"$name: ${plain.queryExecution.executedPlan}")
-      val (rows, shipped) = assertBlockCollect(name, cut(registered))
-      assert(shipped && tuples(rows) == got, s"$name: rows")
-      assert(got.length == want.size && got.toSet == want, s"$name: expected rows")
+      val (rows, shipped) = assertBlockCollect(name, cut(fresh))
+      assert(shipped, s"$name: no blocks shipped")
+      assert(rows.length == want.size && tuples(rows).toSet == want, s"$name: rows")
+
+      val filtered = cut(fresh).filter(col("label") === k)
+      val plan = filtered.queryExecution.optimizedPlan.toString
+      val gen = plan.linesIterator.indexWhere(_.contains("Generate"))
+      val gate = plan.linesIterator.indexWhere(_.contains(ContainsGateRule.GateName))
+      assert(gen >= 0 && gate > gen, s"$name: gate not below Generate:\n$plan")
+      val keep = want.filter(_._4 == k)
+      assert(keep.nonEmpty, s"$name: label $k absent from the cutout")
+      assert(GridFixtures.rows(filtered).toSet == keep, s"$name: filtered rows")
     }
+  }
+
+  test("an AQE-wrapped cutout (the chunk table's join) ships blocks on " +
+      "Dataset.collect, and both collects give the generic rows") {
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val table = (for (gz <- 0L to 1L; gy <- 0L to 1L; gx <- 0L to 1L
+        if (gx, gy, gz) != ((1L, 0L, 0L))) yield (gx, gy, gz,
+      Codec.encodeRawFromLongs(Array.tabulate(
+        (Derived.CsX * Derived.CsY * Derived.CsZ).toInt)(i => gx + 3 * gz + i), 8)))
+      .toDF("gx", "gy", "gz", "payload")
+    val df = ChunkEngine.cutoutVoxels(table, Bbox(Vec3(5, 3, 2), Vec3(27, 20, 13)))
+    val plan = df.queryExecution.executedPlan
+    assert(plan.isInstanceOf[AdaptiveSparkPlanExec], s"plan root:\n$plan")
+    val schema = df.schema
+    val generic = df.queryExecution.toRdd.map(_.toSeq(schema)).collect().toSeq
+    assert(generic.length == 22 * 17 * 11)
+    assert(df.collect().toSeq.map(_.toSeq) == generic, "Dataset.collect")
+    val exec = nodes(plan).collectFirst { case d: DecodeVoxelsExec => d }
+    assert(exec.isDefined, s"no DecodeVoxelsExec in the final plan:\n$plan")
+    assert(exec.get.metrics("blockBytes").value > 0, "Dataset.collect shipped no blocks")
+    val (n, it) = CollectBridge.collectIterator(plan)
+    assert(n == generic.length && it.map(_.toSeq(schema)).toSeq == generic,
+      "executeCollectIterator")
   }
 }

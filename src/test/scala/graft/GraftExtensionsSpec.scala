@@ -9,11 +9,11 @@ import org.apache.spark.sql.graftshim.DecodeVoxelsExec
 
 /** The production one-liner: a session built with
   * `spark.sql.extensions=graft.functions.GraftExtensions` must carry
-  * the full graft SQL surface (codegen'd Catalyst functions) AND the
-  * P6 contains-gate optimizer rule — with zero imperative
-  * register()/install() calls. Guards the config path the library
-  * README advertises; the imperative path is covered by
-  * MortonExprSpec/GateRuleSpec.
+  * the full graft SQL surface (codegen'd Catalyst functions) with no
+  * imperative register() call, and plan its cutouts as every session
+  * does: the decode node, and the P6 contains-gate below a label
+  * filter. Guards the config path the library README advertises; the
+  * imperative path is covered by MortonExprSpec/GateRuleSpec.
   */
 class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -76,11 +76,18 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("the contains-gate rule rides the same extension") {
-    val injected = spark.sessionState.optimizer.batches
-      .flatMap(_.rules).contains(ContainsGateRule)
-    assert(injected, "ContainsGateRule missing from the optimizer " +
-      "batches of an extension-built session")
+  test("an extension-built session's filtered cutout is gated") {
+    val dir = java.nio.file.Files.createTempDirectory("ext_gate").toString
+    val k = Long.MinValue + 9L // a top-bit label of the fixture's palette
+    for ((name, cut, want) <- GridFixtures.threeCutouts(spark, dir)) {
+      val df = cut(spark).filter(org.apache.spark.sql.functions.col("label") === k)
+      val plan = df.queryExecution.optimizedPlan.toString
+      val gen = plan.linesIterator.indexWhere(_.contains("Generate"))
+      val gate = plan.linesIterator.indexWhere(_.contains(ContainsGateRule.GateName))
+      assert(gen >= 0 && gate > gen, s"$name: gate not below Generate:\n$plan")
+      val keep = want.filter(_._4 == k)
+      assert(keep.nonEmpty && GridFixtures.rows(df).toSet == keep, s"$name: rows")
+    }
   }
 
   test("the extension plans cutout decodes as DecodeVoxelsExec") {

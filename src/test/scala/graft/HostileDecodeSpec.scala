@@ -392,19 +392,6 @@ class HostileDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dims.x == nx && vox.length == nx && vox.forall(_ == 0L))
   }
 
-  test("graft_clip_voxels: null and truncated payloads fail typed at " +
-      "the decode boundary") {
-    // the SQL-registered clip generator indexes vox((x-x0)+sx*(...));
-    // without the rails a fill_missing view's null payload NPEs and a
-    // 4-byte-aligned truncated chunk escapes as a raw AIOOBE — the
-    // undeclared-exception classes this contract exists to close
-    val fn = graft.ops.Derived.clipVoxelsFn
-    intercept[IllegalArgumentException](
-      fn(0, 0, 0, 4, 4, 4, null, 0, 0, 0, 4, 4, 4))
-    intercept[IllegalArgumentException]( // 3 voxels for a 64-voxel box
-      fn(0, 0, 0, 4, 4, 4, new Array[Byte](12), 0, 0, 0, 4, 4, 4))
-  }
-
   test("zarr3 shard: index offset near 2^63 cannot wrap the range rail") {
     import graft.sources.Zarr3IO
     val m = Zarr3IO.Zarr3Meta(
@@ -450,7 +437,7 @@ class HostileDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.stop()
   }
 
-  // ---- the shared decode-and-clip boundary (Geom.clipWalk) ----------
+  // ---- the shared decode-and-clip boundary (ClipCursor) -------------
 
   private def withSpark(body: SparkSession => Unit): Unit = {
     val spark = SparkSession.builder().master("local[2]")
