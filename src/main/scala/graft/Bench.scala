@@ -82,11 +82,7 @@ object Bench {
     chunks.count()
     val scaleDir = Paths.get(dir, meta.scale(0).key)
     def once(): Double = {
-      if (Files.exists(scaleDir)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(scaleDir).iterator.asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
-      }
+      graft.ops.Fixtures.rmTree(scaleDir.toString)
       PrecomputedIO.writeInfo(dir, meta)
       val t0 = System.nanoTime()
       PrecomputedIO.writeChunks(chunks, dir, meta, 0, codec = Some(method))

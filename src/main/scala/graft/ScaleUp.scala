@@ -92,9 +92,7 @@ object ScaleUp {
       java.nio.file.Files.move(part,
         java.nio.file.Paths.get(dst, s"$t.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-        .iterator.asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      graft.ops.Fixtures.rmTree(tmp)
       println(s"[scaleup] $t: ${in.count()} -> ${out.count()} rows")
     }
     spark.stop()

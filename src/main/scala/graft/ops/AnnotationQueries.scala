@@ -155,92 +155,84 @@ object AnnotationQueries {
   val SpatialLimit0 = 150L
 
   def ensure(s: SparkSession, sfDir: String): Unit = synchronized {
-    val marker = Paths.get(Root, ".built_from")
-    val markerVal = s"${Fixtures.srcStamp(sfDir)}|v4" // v4: spatial levels
-    if (Files.exists(marker) && Files.readString(marker) == markerVal) return
-    FixtureLog.rebuild(marker)
-    val rootP = Paths.get(Root)
-    if (Files.exists(rootP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(rootP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    Files.createDirectories(rootP)
-    AnnotationCodec.writeInfo(s"$Root/points", PointSpec,
-      spatial = Seq(
-        AnnotationCodec.SpatialLevel("spatial0", Seq(1L, 1L, 1L),
-          Seq(64L, 64L, 32L), SpatialLimit0),
-        AnnotationCodec.SpatialLevel("spatial1", Seq(2L, 2L, 1L),
-          Seq(32L, 32L, 32L), Long.MaxValue)))
-    // two-level spatial partition: rank per (single) coarse cell by a
-    // salted md5 priority — top-150 land in spatial0/0_0_0, the rest
-    // in spatial1/<gx_gy_gz> fine cells (one level per annotation)
-    locally {
-      val prio = conv(substring(md5(concat(lit("sp:"),
-        col("aid").cast("string")).cast("binary")), 1, 12), 16, 10)
-        .cast("long")
-      // rank WITHIN each coarse cell (grid 1x1x1 here, so one cell —
-      // but the window stays cell-partitioned so the same build holds
-      // at any grid_shape: per-cell state, never a global sort)
-      val ranked = pointsDf(s, sfDir).withColumn("prio", prio)
-        .withColumn("c0x", idiv(col("ax"), 64))
-        .withColumn("c0y", idiv(col("ay"), 64))
-        .withColumn("c0z", idiv(col("az"), 32))
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("c0x", "c0y", "c0z")
-            .orderBy(col("prio"), col("aid"))).cast("long"))
-      writeLayer(ranked.filter(col("rk") <= SpatialLimit0),
-        s"$Root/points/spatial0", PointSpec, lit("0_0_0"),
-        Seq("ax", "ay", "az"),
-        Seq("score", "weight", "conf", "r", "g", "b", "kind"))
-      writeLayer(ranked.filter(col("rk") > SpatialLimit0),
-        s"$Root/points/spatial1", PointSpec,
-        concat_ws("_", idiv(col("ax"), 32), idiv(col("ay"), 32),
-          idiv(col("az"), 32)),
-        Seq("ax", "ay", "az"),
-        Seq("score", "weight", "conf", "r", "g", "b", "kind"))
-    }
-    writeLayer(pointsDf(s, sfDir), s"$Root/points", PointSpec,
-      concat_ws("_", idiv(col("ax"), 32), idiv(col("ay"), 32)),
-      Seq("ax", "ay", "az"),
-      Seq("score", "weight", "conf", "r", "g", "b", "kind"))
-    writeLayer(aabbDf(s, sfDir), s"$Root/aabbs", AabbSpec,
-      lit("0_0"), Seq("ax", "ay", "az", "bx", "by", "bz"), Seq.empty)
-    writeLayer(ellipsoidDf(s, sfDir), s"$Root/ellipsoids", EllipsoidSpec,
-      lit("0_0"), Seq("cx", "cy", "cz", "rx", "ry", "rz"), Seq("w"))
-    // by-relationship files: per relation, one multi-annotation file
-    // per related segid (reader.py:308-354 — the rel "key" dir holds
-    // <segid> objects decoded with the multi format)
-    Relations.zipWithIndex.foreach { case (rel, ri) =>
-      writeLayer(
-        pointsDf(s, sfDir).withColumn("segid",
-          if (ri == 0) (col("aid") * 3) % 40 else (col("aid") * 5 + 1) % 40),
-        s"$Root/rel_$rel", PointSpec, col("segid").cast("string"),
-        Seq("ax", "ay", "az"),
-        Seq("score", "weight", "conf", "r", "g", "b", "kind"))
-    }
-    // by-id files: single-annotation format incl. relationship
-    // sections, one object per annotation id (reader.py:103-137). The
-    // fixture materializes the aid % 35 == 0 subset — enough for the
-    // point-lookup entry without 10k tiny files per sf.
-    val byIdDir = Paths.get(s"$Root/by_id")
-    Files.createDirectories(byIdDir)
-    val byIdStr = byIdDir.toString
-    pointsDf(s, sfDir).filter(col("aid") % 35 === 0)
-      .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach { r =>
-          val aid = r.getLong(0)
-          val ann = Annotation(aid,
-            Array(r.getLong(1).toFloat, r.getLong(2).toFloat,
-              r.getLong(3).toFloat),
-            (4 until 11).map(i => r.getLong(i).toDouble).toArray)
-          val rels = Seq(Seq(relSegid(0, aid)), Seq(relSegid(1, aid)))
-          Files.write(Paths.get(byIdStr, aid.toString),
-            AnnotationCodec.encodeSingle(PointSpec, ann, rels))
-        }
+    // v4: spatial levels
+    Fixtures.guard(s"$Root/.built_from", s"${Fixtures.srcStamp(sfDir)}|v4",
+        wipe = Seq(Root)) {
+      AnnotationCodec.writeInfo(s"$Root/points", PointSpec,
+        spatial = Seq(
+          AnnotationCodec.SpatialLevel("spatial0", Seq(1L, 1L, 1L),
+            Seq(64L, 64L, 32L), SpatialLimit0),
+          AnnotationCodec.SpatialLevel("spatial1", Seq(2L, 2L, 1L),
+            Seq(32L, 32L, 32L), Long.MaxValue)))
+      // two-level spatial partition: rank per (single) coarse cell by a
+      // salted md5 priority — top-150 land in spatial0/0_0_0, the rest
+      // in spatial1/<gx_gy_gz> fine cells (one level per annotation)
+      locally {
+        val prio = conv(substring(md5(concat(lit("sp:"),
+          col("aid").cast("string")).cast("binary")), 1, 12), 16, 10)
+          .cast("long")
+        // rank WITHIN each coarse cell (grid 1x1x1 here, so one cell —
+        // but the window stays cell-partitioned so the same build holds
+        // at any grid_shape: per-cell state, never a global sort)
+        val ranked = pointsDf(s, sfDir).withColumn("prio", prio)
+          .withColumn("c0x", idiv(col("ax"), 64))
+          .withColumn("c0y", idiv(col("ay"), 64))
+          .withColumn("c0z", idiv(col("az"), 32))
+          .withColumn("rk", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy("c0x", "c0y", "c0z")
+              .orderBy(col("prio"), col("aid"))).cast("long"))
+        writeLayer(ranked.filter(col("rk") <= SpatialLimit0),
+          s"$Root/points/spatial0", PointSpec, lit("0_0_0"),
+          Seq("ax", "ay", "az"),
+          Seq("score", "weight", "conf", "r", "g", "b", "kind"))
+        writeLayer(ranked.filter(col("rk") > SpatialLimit0),
+          s"$Root/points/spatial1", PointSpec,
+          concat_ws("_", idiv(col("ax"), 32), idiv(col("ay"), 32),
+            idiv(col("az"), 32)),
+          Seq("ax", "ay", "az"),
+          Seq("score", "weight", "conf", "r", "g", "b", "kind"))
       }
-    Files.writeString(marker, markerVal)
+      writeLayer(pointsDf(s, sfDir), s"$Root/points", PointSpec,
+        concat_ws("_", idiv(col("ax"), 32), idiv(col("ay"), 32)),
+        Seq("ax", "ay", "az"),
+        Seq("score", "weight", "conf", "r", "g", "b", "kind"))
+      writeLayer(aabbDf(s, sfDir), s"$Root/aabbs", AabbSpec,
+        lit("0_0"), Seq("ax", "ay", "az", "bx", "by", "bz"), Seq.empty)
+      writeLayer(ellipsoidDf(s, sfDir), s"$Root/ellipsoids", EllipsoidSpec,
+        lit("0_0"), Seq("cx", "cy", "cz", "rx", "ry", "rz"), Seq("w"))
+      // by-relationship files: per relation, one multi-annotation file
+      // per related segid (reader.py:308-354 — the rel "key" dir holds
+      // <segid> objects decoded with the multi format)
+      Relations.zipWithIndex.foreach { case (rel, ri) =>
+        writeLayer(
+          pointsDf(s, sfDir).withColumn("segid",
+            if (ri == 0) (col("aid") * 3) % 40 else (col("aid") * 5 + 1) % 40),
+          s"$Root/rel_$rel", PointSpec, col("segid").cast("string"),
+          Seq("ax", "ay", "az"),
+          Seq("score", "weight", "conf", "r", "g", "b", "kind"))
+      }
+      // by-id files: single-annotation format incl. relationship
+      // sections, one object per annotation id (reader.py:103-137). The
+      // fixture materializes the aid % 35 == 0 subset — enough for the
+      // point-lookup entry without 10k tiny files per sf.
+      val byIdDir = Paths.get(s"$Root/by_id")
+      Files.createDirectories(byIdDir)
+      val byIdStr = byIdDir.toString
+      pointsDf(s, sfDir).filter(col("aid") % 35 === 0)
+        .foreachPartition { rows: Iterator[Row] =>
+          rows.foreach { r =>
+            val aid = r.getLong(0)
+            val ann = Annotation(aid,
+              Array(r.getLong(1).toFloat, r.getLong(2).toFloat,
+                r.getLong(3).toFloat),
+              (4 until 11).map(i => r.getLong(i).toDouble).toArray)
+            val rels = Seq(Seq(relSegid(0, aid)), Seq(relSegid(1, aid)))
+            Files.write(Paths.get(byIdStr, aid.toString),
+              AnnotationCodec.encodeSingle(PointSpec, ann, rels))
+          }
+        }
+    }
   }
 
   /** Deterministic polyline vertices for annotation `aid`: 2-5 points,
@@ -261,35 +253,27 @@ object AnnotationQueries {
 
   def ensurePolyline(s: SparkSession, sfDir: String): Unit = synchronized {
     ensure(s, sfDir)
-    val marker = Paths.get(Root, ".built_polyline_from")
-    val markerVal = s"${Fixtures.srcStamp(sfDir)}|v1"
-    if (Files.exists(marker) && Files.readString(marker) == markerVal) return
-    FixtureLog.rebuild(marker)
     val layerDir = s"$Root/polylines"
-    val layerP = Paths.get(layerDir)
-    if (Files.exists(layerP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(layerP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    Files.createDirectories(layerP)
-    AnnotationCodec.writeInfo(layerDir, PolylineSpec)
-    val spec = PolylineSpec
-    table(s, sfDir, "customer").filter(col("c_custkey") % 3 === 0)
-      .select(col("c_custkey").cast("long").as("aid"))
-      .withColumn("tile", (col("aid") % 4).cast("string"))
-      .groupBy("tile")
-      .agg(sort_array(collect_list(col("aid"))).as("aids"))
-      .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach { r =>
-          val anns = r.getSeq[Long](1).map(aid =>
-            Annotation(aid, polyVertices(aid),
-              Array((aid % 100).toDouble)))
-          Files.write(Paths.get(layerDir, r.getString(0)),
-            AnnotationCodec.encode(spec, anns))
+    Fixtures.guard(s"$Root/.built_polyline_from",
+        s"${Fixtures.srcStamp(sfDir)}|v1", wipe = Seq(layerDir)) {
+      Files.createDirectories(Paths.get(layerDir))
+      AnnotationCodec.writeInfo(layerDir, PolylineSpec)
+      val spec = PolylineSpec
+      table(s, sfDir, "customer").filter(col("c_custkey") % 3 === 0)
+        .select(col("c_custkey").cast("long").as("aid"))
+        .withColumn("tile", (col("aid") % 4).cast("string"))
+        .groupBy("tile")
+        .agg(sort_array(collect_list(col("aid"))).as("aids"))
+        .foreachPartition { rows: Iterator[Row] =>
+          rows.foreach { r =>
+            val anns = r.getSeq[Long](1).map(aid =>
+              Annotation(aid, polyVertices(aid),
+                Array((aid % 100).toDouble)))
+            Files.write(Paths.get(layerDir, r.getString(0)),
+              AnnotationCodec.encode(spec, anns))
+          }
         }
-      }
-    Files.writeString(marker, markerVal)
+    }
   }
 
   // ---- sharded id index twin (annotation/reader.py:183-205): a
@@ -306,80 +290,72 @@ object AnnotationQueries {
 
   def ensureSharded(s: SparkSession, sfDir: String): Unit = synchronized {
     ensure(s, sfDir)
-    val marker = Paths.get(Root, ".built_byid_sharded_from")
-    val markerVal =
-      s"${Fixtures.srcStamp(sfDir)}|v3|annsh-v3" // v3: +rel/spatial shards
-    if (Files.exists(marker) && Files.readString(marker) == markerVal) return
-    FixtureLog.rebuild(marker)
-    val layerP = Paths.get(ShardedLayerDir)
-    if (Files.exists(layerP)) {
+    // v3: +rel/spatial shards
+    Fixtures.guard(s"$Root/.built_byid_sharded_from",
+        s"${Fixtures.srcStamp(sfDir)}|v3|annsh-v3", wipe = Seq(ShardedLayerDir)) {
+      import s.implicits._
       import scala.jdk.CollectionConverters._
-      Files.walk(layerP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+      val spec = annShardSpec
+      AnnotationCodec.writeInfo(ShardedLayerDir, PointSpec,
+        byId = Some(("by_id", Some(spec))),
+        relationships = Seq(("presynaptic_to", "rel_presynaptic_to")),
+        relSharding = Map("presynaptic_to" -> spec),
+        spatial = Seq(AnnotationCodec.SpatialLevel("spatial1",
+          Seq(2L, 2L, 1L), Seq(32L, 32L, 32L), Long.MaxValue,
+          sharding = Some(spec))))
+      // group label-keyed binaries by shard number; each task
+      // synthesizes one full shard file (S12 shuffle shape). Runs once
+      // for the by-id single-annotation objects and once for the
+      // relationship index's multi-annotation lists (reader.py:321-339).
+      def synthesize(srcDir: String, outKey: String): Unit = {
+        val outDir = s"$ShardedLayerDir/$outKey"
+        Files.createDirectories(Paths.get(outDir))
+        val names = Files.list(Paths.get(srcDir)).iterator.asScala
+          .map(_.getFileName.toString).filter(_.matches("\\d+")).toSeq.sorted
+        names.toDS()
+          .map { n =>
+            (spec.shardLocation(n.toLong)._1, n.toLong,
+              Files.readAllBytes(Paths.get(srcDir, n)))
+          }
+          .groupByKey(_._1)
+          .mapGroups { (shard, it) =>
+            val items = it.map(t => (t._2, t._3)).toSeq
+            (shard, ShardCodec.synthesizeShard(spec, items))
+          }
+          .foreach { t: (Long, Array[Byte]) =>
+            Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
+            ()
+          }
+      }
+      synthesize(s"$Root/by_id", "by_id")
+      synthesize(s"$Root/rel_presynaptic_to", "rel_presynaptic_to")
+      // sharded spatial level: cell files keyed by the cell's
+      // compressed morton code (annotation/reader.py:253-257)
+      locally {
+        val srcDir = s"$Root/points/spatial1"
+        val outDir = s"$ShardedLayerDir/spatial1"
+        Files.createDirectories(Paths.get(outDir))
+        val grid = Vec3(2, 2, 1)
+        val items = Files.list(Paths.get(srcDir)).iterator.asScala
+          .map(_.getFileName.toString).toSeq.sorted
+        items.toDS()
+          .map { n =>
+            val Array(gx, gy, gz) = n.split("_").map(_.toLong)
+            (spec.shardLocation(Morton.encode(Vec3(gx, gy, gz), grid))._1,
+              Morton.encode(Vec3(gx, gy, gz), grid),
+              Files.readAllBytes(Paths.get(srcDir, n)))
+          }
+          .groupByKey(_._1)
+          .mapGroups { (shard, it) =>
+            val cells = it.map(t => (t._2, t._3)).toSeq
+            (shard, ShardCodec.synthesizeShard(spec, cells))
+          }
+          .foreach { t: (Long, Array[Byte]) =>
+            Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
+            ()
+          }
+      }
     }
-    import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val spec = annShardSpec
-    AnnotationCodec.writeInfo(ShardedLayerDir, PointSpec,
-      byId = Some(("by_id", Some(spec))),
-      relationships = Seq(("presynaptic_to", "rel_presynaptic_to")),
-      relSharding = Map("presynaptic_to" -> spec),
-      spatial = Seq(AnnotationCodec.SpatialLevel("spatial1",
-        Seq(2L, 2L, 1L), Seq(32L, 32L, 32L), Long.MaxValue,
-        sharding = Some(spec))))
-    // group label-keyed binaries by shard number; each task
-    // synthesizes one full shard file (S12 shuffle shape). Runs once
-    // for the by-id single-annotation objects and once for the
-    // relationship index's multi-annotation lists (reader.py:321-339).
-    def synthesize(srcDir: String, outKey: String): Unit = {
-      val outDir = s"$ShardedLayerDir/$outKey"
-      Files.createDirectories(Paths.get(outDir))
-      val names = Files.list(Paths.get(srcDir)).iterator.asScala
-        .map(_.getFileName.toString).filter(_.matches("\\d+")).toSeq.sorted
-      names.toDS()
-        .map { n =>
-          (spec.shardLocation(n.toLong)._1, n.toLong,
-            Files.readAllBytes(Paths.get(srcDir, n)))
-        }
-        .groupByKey(_._1)
-        .mapGroups { (shard, it) =>
-          val items = it.map(t => (t._2, t._3)).toSeq
-          (shard, ShardCodec.synthesizeShard(spec, items))
-        }
-        .foreach { t: (Long, Array[Byte]) =>
-          Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
-          ()
-        }
-    }
-    synthesize(s"$Root/by_id", "by_id")
-    synthesize(s"$Root/rel_presynaptic_to", "rel_presynaptic_to")
-    // sharded spatial level: cell files keyed by the cell's
-    // compressed morton code (annotation/reader.py:253-257)
-    locally {
-      val srcDir = s"$Root/points/spatial1"
-      val outDir = s"$ShardedLayerDir/spatial1"
-      Files.createDirectories(Paths.get(outDir))
-      val grid = Vec3(2, 2, 1)
-      val items = Files.list(Paths.get(srcDir)).iterator.asScala
-        .map(_.getFileName.toString).toSeq.sorted
-      items.toDS()
-        .map { n =>
-          val Array(gx, gy, gz) = n.split("_").map(_.toLong)
-          (spec.shardLocation(Morton.encode(Vec3(gx, gy, gz), grid))._1,
-            Morton.encode(Vec3(gx, gy, gz), grid),
-            Files.readAllBytes(Paths.get(srcDir, n)))
-        }
-        .groupByKey(_._1)
-        .mapGroups { (shard, it) =>
-          val cells = it.map(t => (t._2, t._3)).toSeq
-          (shard, ShardCodec.synthesizeShard(spec, cells))
-        }
-        .foreach { t: (Long, Array[Byte]) =>
-          Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
-          ()
-        }
-    }
-    Files.writeString(marker, markerVal)
   }
 
   /** Decode a layer directory into annotation rows: aid, geometry
@@ -513,12 +489,7 @@ object AnnotationQueries {
     "p8i_annotation_write_roundtrip" -> Q(
       (s, dir) => AnnotationQueries.synchronized {
         val target = s"$Root/rt_points"
-        val tp = Paths.get(target)
-        if (Files.exists(tp)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(tp).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         AnnotationCodec.writeInfo(target, PointSpec)
         writeLayer(pointsDf(s, dir), target, PointSpec,
           concat_ws("_", idiv(col("ax"), 32), idiv(col("ay"), 32)),
@@ -923,11 +894,7 @@ object AnnotationQueries {
         import s.implicits._
         import scala.jdk.CollectionConverters._
         val target = s"$Root/rt_rel_rgba"
-        val tp = Paths.get(target)
-        if (Files.exists(tp)) {
-          Files.walk(tp).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         val spec = AnnotationSpec("POINT", 3, Seq(
           PropSpec("weight", "uint16"), PropSpec("color", "rgba")))
         AnnotationCodec.writeInfo(target, spec,

@@ -173,12 +173,7 @@ object CompressoQueries {
       (s, dir) => CompressoQueries.synchronized {
         import s.implicits._
         val target = "/tmp/graft_fixture/sharded_golden_xfer"
-        val tp = Paths.get(target)
-        if (Files.exists(tp)) {
-          // JIter (file-local) wraps the java iterator
-          Files.walk(tp).iterator().asScala.toVector.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         // the spec-bearing info committed with the python-built layer
         val meta = PrecomputedIO.readInfo(s"$Golden/sharded_seg")
         PrecomputedIO.writeInfo(target, meta)

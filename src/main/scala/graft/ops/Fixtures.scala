@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, collect_list, struct}
+import graft.core.{Bbox, Geom, Vec3}
 
-/** Pre-build every fixture family (bench setup): fixture construction
-  * is test scaffolding, not operator work, so the bench hoists it out
-  * of the per-query timings for ALL families, not just the real layer.
-  */
 /** Stderr breadcrumb on every fixture rebuild. Fixtures are built once
   * in bench setup (Fixtures.ensureAll); a rebuild INSIDE a timed bench
   * pass means some entry invalidated a sibling's fixture (marker
@@ -25,12 +25,19 @@ object FixtureLog {
     * the bench reports any that land inside the timed loop, where a
     * rebuild means fixture cross-talk distorting a query's number.
     */
-  def rebuildsSince(sinceNanos: Long): Seq[String] = {
-    import scala.jdk.CollectionConverters._
+  def rebuildsSince(sinceNanos: Long): Seq[String] =
     events.iterator.asScala.filter(_._1 > sinceNanos).map(_._2).toSeq
-  }
 }
 
+/** The fixture builders' shared protocol: every `ensure*` runs its
+  * build under [[guard]], deletes trees with [[rmTree]], and the grid
+  * fixtures encode their chunks from [[gather]]'s blocks.
+  *
+  * [[ensureAll]] pre-builds every fixture family (bench setup):
+  * fixture construction is test scaffolding, not operator work, so the
+  * bench hoists it out of the per-query timings for ALL families, not
+  * just the real layer.
+  */
 object Fixtures {
   /** Identity of the testdata drop at `sfDir`: the path plus the max
     * mtime across its parquet files. Fixture markers embed this so a
@@ -39,19 +46,98 @@ object Fixtures {
     * fixture instead of serving encodes of the previous drop.
     */
   def srcStamp(sfDir: String): String = {
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Paths.get(sfDir)
+    val dir = Paths.get(sfDir)
     val maxM =
-      if (!java.nio.file.Files.isDirectory(dir)) 0L
+      if (!Files.isDirectory(dir)) 0L
       else {
-        val st = java.nio.file.Files.list(dir)
+        val st = Files.list(dir)
         try st.iterator.asScala
           .filter(_.toString.endsWith(".parquet"))
-          .map(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
+          .map(p => Files.getLastModifiedTime(p).toMillis)
           .foldLeft(0L)(math.max)
         finally st.close()
       }
     s"$sfDir@$maxM"
+  }
+
+  /** The marker's content, or "" when there is none. A source
+    * fixture's marker (`srcStamp|version|nonce`) is what the fixtures
+    * derived from it put in their own stamps, so they rebuild after it.
+    */
+  def stampOf(marker: String): String = {
+    val p = Paths.get(marker)
+    if (Files.exists(p)) Files.readString(p) else ""
+  }
+
+  /** The one rebuild guard. The fixture is current when `marker` holds
+    * `stamp` (with `nonce`: starts with it) and every `requires` path
+    * exists; then `build` does not run. Otherwise it logs the rebuild
+    * ([[FixtureLog]]), deletes the marker and every `wipe` tree, runs
+    * `build` and writes the marker last, so a build that throws leaves
+    * no marker and the next call rebuilds. With `nonce` the marker is
+    * `stamp` plus a per-build nonce, which derived fixtures read back
+    * through [[stampOf]]. Callers hold their builder's lock; markers
+    * guard one JVM only.
+    */
+  def guard(marker: String, stamp: String, wipe: Seq[String] = Nil,
+      requires: Seq[String] = Nil, nonce: Boolean = false)(build: => Unit)
+      : Unit = {
+    val m = Paths.get(marker)
+    val current = Files.exists(m) && {
+      val have = Files.readString(m)
+      if (nonce) have.startsWith(stamp) else have == stamp
+    } && requires.forall(r => Files.exists(Paths.get(r)))
+    if (!current) {
+      FixtureLog.rebuild(m)
+      Files.deleteIfExists(m)
+      wipe.foreach(rmTree)
+      Files.createDirectories(m.getParent)
+      build
+      Files.writeString(m, if (nonce) stamp + System.nanoTime() else stamp)
+    }
+  }
+
+  /** Delete the tree at `dir`, children before parents, if present. */
+  def rmTree(dir: String): Unit = {
+    val p = Paths.get(dir)
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.iterator.asScala.toVector.reverse.foreach(Files.deleteIfExists)
+      finally walk.close()
+    }
+  }
+
+  /** Voxel rows `vox` (x, y, z, label) gathered into F-order blocks on
+    * a `block`-sized grid: one row (gx, gy, gz, vox) per cell that has
+    * a voxel. With `clampTo` = the volume size, edge blocks are clamped
+    * to the volume (precomputed chunks, N5 blocks); with None every
+    * block is full-size and padded with 0, the fill value (zarr
+    * chunks, zarr3 shards). Positions with no row hold 0.
+    */
+  def gather(vox: DataFrame, block: Vec3, clampTo: Option[Vec3])
+      : DataFrame = {
+    import vox.sparkSession.implicits._
+    vox.select(Derived.idiv(col("x"), block.x).as("gx"),
+        Derived.idiv(col("y"), block.y).as("gy"),
+        Derived.idiv(col("z"), block.z).as("gz"),
+        col("x"), col("y"), col("z"), col("label"))
+      .groupBy("gx", "gy", "gz")
+      .agg(collect_list(struct(col("x"), col("y"), col("z"), col("label")))
+        .as("vox"))
+      .as[(Long, Long, Long, Seq[(Long, Long, Long, Long)])]
+      .map { case (gx, gy, gz, vs) =>
+        val g = Vec3(gx, gy, gz)
+        val cb = clampTo match {
+          case Some(size) => Geom.chunkBbox(g, Bbox(Vec3(0, 0, 0), size), block)
+          case None => Bbox(g * block, g * block + block)
+        }
+        val arr = new Array[Long](cb.volume.toInt)
+        vs.foreach { case (x, y, z, l) =>
+          arr(((x - cb.minpt.x) + cb.size.x * ((y - cb.minpt.y) +
+            cb.size.y * (z - cb.minpt.z))).toInt) = l
+        }
+        (gx, gy, gz, arr)
+      }.toDF("gx", "gy", "gz", "vox")
   }
 
   def ensureAll(s: SparkSession, sfDir: String): Unit = {

@@ -21,42 +21,33 @@ object FormatQueries {
   private def ensureBr(s: org.apache.spark.sql.SparkSession, dir: String): Unit = synchronized {
     import java.nio.file.{Files, Paths}
     RealLayerQueries.ensure(s, dir)
-    val marker = Paths.get(BrRoot, ".built_from")
     // br3: entropy encoder (r16) — the layer now carries compressed-mode
     // streams (self-verified, C-decoder-checked via tools); br2 was
     // stored-mode, br1 carried 6-nibble MLEN fields
-    val markerVal = RealLayerQueries.stamp + "|br3"
-    if (Files.exists(marker) && Files.readString(marker) == markerVal &&
-      Files.exists(Paths.get(BrLayer, "info"))) return
-    FixtureLog.rebuild(marker)
-    val rootP = Paths.get(BrRoot)
-    if (Files.exists(rootP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(rootP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    Fixtures.guard(s"$BrRoot/.built_from", RealLayerQueries.stamp + "|br3",
+        wipe = Seq(BrRoot), requires = Seq(s"$BrLayer/info")) {
+      val meta = PrecomputedIO.readInfo(RealLayerQueries.LayerDir)
+      val key = meta.scale(0).key
+      Files.createDirectories(Paths.get(BrLayer, key))
+      Files.copy(Paths.get(RealLayerQueries.LayerDir, "info"),
+        Paths.get(BrLayer, "info"))
+      import s.implicits._
+      val srcDir = Paths.get(RealLayerQueries.LayerDir, key)
+      val names = {
+        import scala.jdk.CollectionConverters._
+        val st = Files.list(srcDir)
+        try st.iterator.asScala.map(_.getFileName.toString).toVector.sorted
+        finally st.close()
+      }
+      // transcode executor-side, one task per few chunks
+      s.createDataset(names).repartition(4).foreach { name =>
+        val raw = Files.readAllBytes(Paths.get(RealLayerQueries.LayerDir, key, name))
+        val plain = if (name.endsWith(".gz")) Codec.gunzip(raw) else raw
+        val out = name.stripSuffix(".gz") + ".br"
+        Files.write(Paths.get(BrLayer, key, out), Brotli.compress(plain))
+        ()
+      }
     }
-    val meta = PrecomputedIO.readInfo(RealLayerQueries.LayerDir)
-    val key = meta.scale(0).key
-    Files.createDirectories(Paths.get(BrLayer, key))
-    Files.copy(Paths.get(RealLayerQueries.LayerDir, "info"),
-      Paths.get(BrLayer, "info"))
-    import s.implicits._
-    val srcDir = Paths.get(RealLayerQueries.LayerDir, key)
-    val names = {
-      import scala.jdk.CollectionConverters._
-      val st = Files.list(srcDir)
-      try st.iterator.asScala.map(_.getFileName.toString).toVector.sorted
-      finally st.close()
-    }
-    // transcode executor-side, one task per few chunks
-    s.createDataset(names).repartition(4).foreach { name =>
-      val raw = Files.readAllBytes(Paths.get(RealLayerQueries.LayerDir, key, name))
-      val plain = if (name.endsWith(".gz")) Codec.gunzip(raw) else raw
-      val out = name.stripSuffix(".gz") + ".br"
-      Files.write(Paths.get(BrLayer, key, out), Brotli.compress(plain))
-      ()
-    }
-    Files.writeString(marker, markerVal)
   }
 
   val queries: Map[String, Q] = Map(

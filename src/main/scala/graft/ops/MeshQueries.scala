@@ -54,40 +54,33 @@ object MeshQueries {
   def ensureMultiresSharded(s: SparkSession, sfDir: String): Unit =
     synchronized {
       ensure(s, sfDir)
-      val marker = Paths.get(Root, ".built_multires_sharded_from")
-      val markerVal = s"${Fixtures.srcStamp(sfDir)}|v3|meshsh-v1"
-      if (Files.exists(marker) && Files.readString(marker) == markerVal) return
-      FixtureLog.rebuild(marker)
-      val outP = Paths.get(MultiresShardedDir)
-      if (Files.exists(outP)) {
+      Fixtures.guard(s"$Root/.built_multires_sharded_from",
+          s"${Fixtures.srcStamp(sfDir)}|v3|meshsh-v1",
+          wipe = Seq(MultiresShardedDir)) {
+        Files.createDirectories(Paths.get(MultiresShardedDir))
+        import s.implicits._
         import scala.jdk.CollectionConverters._
-        Files.walk(outP).iterator.asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        val spec = meshShardSpec
+        val mrDir = MultiresDir
+        val outDir = MultiresShardedDir
+        val segids = Files.list(Paths.get(mrDir)).iterator.asScala
+          .map(_.getFileName.toString).filter(_.endsWith(".index"))
+          .map(_.stripSuffix(".index").toLong).toSeq.sorted
+        segids.toDS()
+          .groupByKey(segid => spec.shardLocation(segid)._1)
+          .mapGroups { (shard, it) =>
+            val items = it.map { segid =>
+              (segid,
+                Files.readAllBytes(Paths.get(mrDir, s"$segid.blob")),
+                Files.readAllBytes(Paths.get(mrDir, s"$segid.index")))
+            }.toSeq
+            (shard, ShardCodec.synthesizeShardWithPreambles(spec, items))
+          }
+          .foreach { t: (Long, Array[Byte]) =>
+            Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
+            ()
+          }
       }
-      Files.createDirectories(outP)
-      import s.implicits._
-      import scala.jdk.CollectionConverters._
-      val spec = meshShardSpec
-      val mrDir = MultiresDir
-      val outDir = MultiresShardedDir
-      val segids = Files.list(Paths.get(mrDir)).iterator.asScala
-        .map(_.getFileName.toString).filter(_.endsWith(".index"))
-        .map(_.stripSuffix(".index").toLong).toSeq.sorted
-      segids.toDS()
-        .groupByKey(segid => spec.shardLocation(segid)._1)
-        .mapGroups { (shard, it) =>
-          val items = it.map { segid =>
-            (segid,
-              Files.readAllBytes(Paths.get(mrDir, s"$segid.blob")),
-              Files.readAllBytes(Paths.get(mrDir, s"$segid.index")))
-          }.toSeq
-          (shard, ShardCodec.synthesizeShardWithPreambles(spec, items))
-        }
-        .foreach { t: (Long, Array[Byte]) =>
-          Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
-          ()
-        }
-      Files.writeString(marker, markerVal)
     }
 
   /** Vertex derivation (mirrored verbatim in the oracle CTEs): one
@@ -136,98 +129,91 @@ object MeshQueries {
     * this sf (marker-keyed, same pattern as RealLayerQueries.ensure).
     */
   def ensure(s: SparkSession, sfDir: String): Unit = synchronized {
-    val marker = Paths.get(Root, ".built_from")
-    val markerVal = s"${Fixtures.srcStamp(sfDir)}|v3" // v3: executor-side manifest/blob assembly
-    if (Files.exists(marker) && Files.readString(marker) == markerVal) return
-    FixtureLog.rebuild(marker)
-    val rootP = Paths.get(Root)
-    if (Files.exists(rootP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(rootP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    Files.createDirectories(Paths.get(MeshDir))
-    Files.createDirectories(Paths.get(MultiresDir))
-    import s.implicits._
-    val meshDirStr = MeshDir
-    val frags = baseVertices(s, sfDir)
-      .groupBy("segid", "frag")
-      .agg(sort_array(collect_list(struct(col("pk"), col("x"), col("y"),
-        col("z")))).as("vs"))
-      .as[(Long, Long, Seq[(Long, Long, Long, Long)])]
-      .map { case (segid, frag, vs) =>
-        val verts = new Array[Float](3 * vs.length)
-        vs.zipWithIndex.foreach { case ((_, x, y, z), i) =>
-          verts(3 * i) = x.toFloat
-          verts(3 * i + 1) = y.toFloat
-          verts(3 * i + 2) = z.toFloat
-        }
-        val nf = math.max(vs.length - 2, 0)
-        val faces = new Array[Int](3 * nf)
-        (0 until nf).foreach { i =>
-          faces(3 * i) = i; faces(3 * i + 1) = i + 1; faces(3 * i + 2) = i + 2
-        }
-        (segid, frag, MeshCodec.encode(MeshFragment(verts, faces)), vs.length.toLong)
-      }.toDF("segid", "frag", "binary", "nv").cache()
-    // fragment files written executor-side (tasks replace the
-    // reference's upload thread pool, tx-style)
-    frags.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.foreach { r =>
-        val name = s"${r.getLong(0)}:0:${r.getLong(1)}"
-        Files.write(Paths.get(meshDirStr, name), r.getAs[Array[Byte]](2))
-      }
-    }
-    // manifests + multires blobs are per-segid manifest-sized payloads
-    // assembled executor-side from the in-hand fragment bytes (one
-    // groupBy(segid) shuffle, then foreachPartition) — no per-segid
-    // driver loop and no fragment-file re-reads, so at scale the
-    // driver only coordinates tasks.
-    val multiresDirStr = MultiresDir
-    frags
-      .groupBy("segid")
-      .agg(collect_list(struct(col("frag"), col("binary"), col("nv")))
-        .as("fs"))
-      .as[(Long, Seq[(Long, Array[Byte], Long)])]
-      .foreachPartition {
-        it: Iterator[(Long, Seq[(Long, Array[Byte], Long)])] =>
-        it.foreach { case (segid, fs) =>
-          val sorted = fs.sortBy(_._1)
-          // manifest JSON {"fragments": [...]} (mesh/unsharded.py:66-85)
-          val names = sorted.map(f => s""""$segid:0:${f._1}"""").mkString(",")
-          Files.writeString(Paths.get(meshDirStr, s"$segid:0"),
-            s"""{"fragments":[$names]}""")
-          // multires manifest: lod0 = the real fragments, lod1 = one
-          // synthetic coarse fragment whose size is the vertex section
-          // of a merged mesh (deterministic in SQL)
-          val lod1Bytes = 4 + 12 * sorted.map(_._3).sum
-          val m = MeshCodec.MultiresManifest(
-            chunkShape = Array(7f, 6f, 5f),
-            gridOrigin = Array(0f, 0f, 0f),
-            lodScales = Array(1f, 2f),
-            vertexOffsets = Array.fill(6)(0f),
-            fragmentPositions = Seq(
-              sorted.flatMap(f =>
-                Array(f._1.toInt, (segid % 3).toInt, 0)).toArray,
-              Array(0, (segid % 3).toInt, 1)),
-            fragmentOffsets = Seq(
-              sorted.map(_._2.length).toArray,
-              Array(lod1Bytes.toInt)))
-          Files.write(Paths.get(multiresDirStr, s"$segid.index"),
-            MeshCodec.encodeManifest(m))
-          // the concatenated fragment blob the manifest's running
-          // offsets index into (multilod.py:276-289): lod0 fragments in
-          // order, then the lod1 coarse fragment (vertices, no faces)
-          val lod0 = sorted.flatMap(_._2)
-          val allVerts = sorted.flatMap(f => MeshCodec.decode(f._2).vertices)
-          val lod1 = MeshCodec.encode(MeshFragment(allVerts.toArray, Array.empty))
-          require(lod1.length == lod1Bytes,
-            s"lod1 fragment ${lod1.length}B != manifest $lod1Bytes")
-          Files.write(Paths.get(multiresDirStr, s"$segid.blob"),
-            (lod0 ++ lod1).toArray)
+    // v3: executor-side manifest/blob assembly
+    Fixtures.guard(s"$Root/.built_from", s"${Fixtures.srcStamp(sfDir)}|v3",
+        wipe = Seq(Root)) {
+      Files.createDirectories(Paths.get(MeshDir))
+      Files.createDirectories(Paths.get(MultiresDir))
+      import s.implicits._
+      val meshDirStr = MeshDir
+      val frags = baseVertices(s, sfDir)
+        .groupBy("segid", "frag")
+        .agg(sort_array(collect_list(struct(col("pk"), col("x"), col("y"),
+          col("z")))).as("vs"))
+        .as[(Long, Long, Seq[(Long, Long, Long, Long)])]
+        .map { case (segid, frag, vs) =>
+          val verts = new Array[Float](3 * vs.length)
+          vs.zipWithIndex.foreach { case ((_, x, y, z), i) =>
+            verts(3 * i) = x.toFloat
+            verts(3 * i + 1) = y.toFloat
+            verts(3 * i + 2) = z.toFloat
+          }
+          val nf = math.max(vs.length - 2, 0)
+          val faces = new Array[Int](3 * nf)
+          (0 until nf).foreach { i =>
+            faces(3 * i) = i; faces(3 * i + 1) = i + 1; faces(3 * i + 2) = i + 2
+          }
+          (segid, frag, MeshCodec.encode(MeshFragment(verts, faces)), vs.length.toLong)
+        }.toDF("segid", "frag", "binary", "nv").cache()
+      // fragment files written executor-side (tasks replace the
+      // reference's upload thread pool, tx-style)
+      frags.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+        rows.foreach { r =>
+          val name = s"${r.getLong(0)}:0:${r.getLong(1)}"
+          Files.write(Paths.get(meshDirStr, name), r.getAs[Array[Byte]](2))
         }
       }
-    frags.unpersist()
-    Files.writeString(marker, markerVal)
+      // manifests + multires blobs are per-segid manifest-sized payloads
+      // assembled executor-side from the in-hand fragment bytes (one
+      // groupBy(segid) shuffle, then foreachPartition) — no per-segid
+      // driver loop and no fragment-file re-reads, so at scale the
+      // driver only coordinates tasks.
+      val multiresDirStr = MultiresDir
+      frags
+        .groupBy("segid")
+        .agg(collect_list(struct(col("frag"), col("binary"), col("nv")))
+          .as("fs"))
+        .as[(Long, Seq[(Long, Array[Byte], Long)])]
+        .foreachPartition {
+          it: Iterator[(Long, Seq[(Long, Array[Byte], Long)])] =>
+          it.foreach { case (segid, fs) =>
+            val sorted = fs.sortBy(_._1)
+            // manifest JSON {"fragments": [...]} (mesh/unsharded.py:66-85)
+            val names = sorted.map(f => s""""$segid:0:${f._1}"""").mkString(",")
+            Files.writeString(Paths.get(meshDirStr, s"$segid:0"),
+              s"""{"fragments":[$names]}""")
+            // multires manifest: lod0 = the real fragments, lod1 = one
+            // synthetic coarse fragment whose size is the vertex section
+            // of a merged mesh (deterministic in SQL)
+            val lod1Bytes = 4 + 12 * sorted.map(_._3).sum
+            val m = MeshCodec.MultiresManifest(
+              chunkShape = Array(7f, 6f, 5f),
+              gridOrigin = Array(0f, 0f, 0f),
+              lodScales = Array(1f, 2f),
+              vertexOffsets = Array.fill(6)(0f),
+              fragmentPositions = Seq(
+                sorted.flatMap(f =>
+                  Array(f._1.toInt, (segid % 3).toInt, 0)).toArray,
+                Array(0, (segid % 3).toInt, 1)),
+              fragmentOffsets = Seq(
+                sorted.map(_._2.length).toArray,
+                Array(lod1Bytes.toInt)))
+            Files.write(Paths.get(multiresDirStr, s"$segid.index"),
+              MeshCodec.encodeManifest(m))
+            // the concatenated fragment blob the manifest's running
+            // offsets index into (multilod.py:276-289): lod0 fragments in
+            // order, then the lod1 coarse fragment (vertices, no faces)
+            val lod0 = sorted.flatMap(_._2)
+            val allVerts = sorted.flatMap(f => MeshCodec.decode(f._2).vertices)
+            val lod1 = MeshCodec.encode(MeshFragment(allVerts.toArray, Array.empty))
+            require(lod1.length == lod1Bytes,
+              s"lod1 fragment ${lod1.length}B != manifest $lod1Bytes")
+            Files.write(Paths.get(multiresDirStr, s"$segid.blob"),
+              (lod0 ++ lod1).toArray)
+          }
+        }
+      frags.unpersist()
+    }
   }
 
   // ---- decode helpers (shared by all queries) ----

@@ -20,7 +20,7 @@ import graft.sources.PrecomputedIO
   * gunzip → decode round-trip, not just relational algebra.
   */
 object RealLayerQueries {
-  import Derived.{table, idiv}
+  import Derived.table
 
   val Root = "/tmp/graft_fixture/seg_small"
   val LayerDir = s"$Root/layer"
@@ -166,38 +166,58 @@ object RealLayerQueries {
         coalesce(col("label"), lit(0L)).as("label"))
   }
 
+  /** The stride-2 pick of voxel rows (x, y, z, label): voxel (x,y,z) of
+    * the result is voxel (2x,2y,2z) of `vox` — the mip-1 level of this
+    * layer and of the zarr/N5 group fixtures, replayed by their oracles
+    * with modulo filters.
+    */
+  private[ops] def strideTwo(vox: DataFrame): DataFrame =
+    vox.filter(col("x") % 2 === 0 && col("y") % 2 === 0 && col("z") % 2 === 0)
+      .select((col("x") / 2).cast("long").as("x"),
+        (col("y") / 2).cast("long").as("y"),
+        (col("z") / 2).cast("long").as("z"), col("label"))
+
+  /** Current build stamp of this fixture (sf + format version + build
+    * nonce). Derived fixtures (zarr/n5/...) record it so they rebuild
+    * whenever THIS fixture (their source sidecar) was rebuilt.
+    */
+  def stamp: String = Fixtures.stampOf(s"$Root/.built_from")
+
   /** Build the fixture layer + parquet sidecar for `sfDir` if not
     * already present for that sf (marker-file keyed). Regeneration is
     * idempotent and happens inside the query fns so the layer always
     * matches whatever sf the harness is running.
     */
-  /** Current build stamp of this fixture (sf + format version + build
-    * nonce). Derived fixtures (zarr/n5/...) record it so they rebuild
-    * whenever THIS fixture (their source sidecar) was rebuilt.
-    */
-  def stamp: String = {
-    val marker = Paths.get(Root, ".built_from")
-    if (Files.exists(marker)) Files.readString(marker) else ""
-  }
-
   def ensure(s: SparkSession, sfDir: String): Unit = synchronized {
-    val marker = Paths.get(Root, ".built_from")
     // marker carries a fixture-format version (bump when the layout
     // changes) plus a per-build nonce for downstream staleness checks
-    val markerPrefix = s"${Fixtures.srcStamp(sfDir)}|v11|" // v11: adds the float32 + png16 layers
-    val markerVal = markerPrefix + System.nanoTime()
-    if (Files.exists(marker) &&
-      Files.readString(marker).startsWith(markerPrefix) &&
-      Files.exists(Paths.get(LayerDir, "info"))) return
-    FixtureLog.rebuild(marker)
-    // rebuild from scratch
-    val rootP = Paths.get(Root)
-    if (Files.exists(rootP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(rootP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    Fixtures.guard(s"$Root/.built_from",
+      s"${Fixtures.srcStamp(sfDir)}|v11|", // v11: adds the float32 + png16 layers
+      wipe = Seq(Root), requires = Seq(s"$LayerDir/info"), nonce = true) {
+      build(s, sfDir)
     }
-    Files.createDirectories(rootP)
+  }
+
+  /** 4-channel uint8 payload of a chunk's labels, F-order channel
+    * SLOWEST: channel c occupies the c-th contiguous x-fastest plane,
+    * value (label + 11c) % 251.
+    */
+  private def rgbaOf(arr: Array[Long]): Array[Byte] = {
+    val nvox = arr.length
+    val rgba = new Array[Byte](nvox * 4)
+    var vi = 0
+    while (vi < nvox) {
+      var c = 0
+      while (c < 4) {
+        rgba(vi + nvox * c) = (((arr(vi) + 11 * c) % 251) & 0xff).toByte
+        c += 1
+      }
+      vi += 1
+    }
+    rgba
+  }
+
+  private def build(s: SparkSession, sfDir: String): Unit = {
     val dense = denseVoxels(s, sfDir).cache()
     dense.write.mode("overwrite").parquet(VoxelsDir)
     // assemble clamped chunk payloads (S9 aligned write shape:
@@ -205,33 +225,12 @@ object RealLayerQueries {
     val bounds = meta.scale(0).bounds
     val cs = meta.scale(0).chunkSize
     import s.implicits._
-    val chunks = dense
-      .select(idiv(col("x"), CX).as("gx"), idiv(col("y"), CY).as("gy"),
-        idiv(col("z"), CZ).as("gz"), col("x"), col("y"), col("z"), col("label"))
-      .groupBy("gx", "gy", "gz")
-      .agg(collect_list(struct(col("x"), col("y"), col("z"), col("label"))).as("vox"))
-      .as[(Long, Long, Long, Seq[(Long, Long, Long, Long)])]
-      .map { case (gx, gy, gz, vs) =>
+    val chunks = Fixtures.gather(dense, cs, Some(meta.scale(0).size))
+      .as[(Long, Long, Long, Array[Long])]
+      .map { case (gx, gy, gz, arr) =>
         val cb = Geom.chunkBbox(Vec3(gx, gy, gz), bounds, cs)
-        val w = cb.size.x; val h = cb.size.y; val d = cb.size.z
-        val arr = new Array[Long]((w * h * d).toInt)
-        vs.foreach { case (x, y, z, l) =>
-          arr(((x - cb.minpt.x) + w * ((y - cb.minpt.y) + h * (z - cb.minpt.z))).toInt) = l
-        }
         val u8 = arr.map(l => ((l % 251) & 0xff).toByte)
-        // 4-channel uint8 payload, F-order channel SLOWEST: channel c
-        // occupies the c-th contiguous x-fastest plane
-        val nvox = (w * h * d).toInt
-        val rgba = new Array[Byte](nvox * 4)
-        var vi = 0
-        while (vi < nvox) {
-          var c = 0
-          while (c < 4) {
-            rgba(vi + nvox * c) = (((arr(vi) + 11 * c) % 251) & 0xff).toByte
-            c += 1
-          }
-          vi += 1
-        }
+        val rgba = rgbaOf(arr)
         (gx, gy, gz, Codec.encodeRawFromLongs(arr, 4),
           Cseg.encode(arr, cb.size, CsegBlock, 4),
           Codec.encodePng(u8, cb.size.x.toInt), rgba,
@@ -245,37 +244,10 @@ object RealLayerQueries {
     PrecomputedIO.writeChunks(chunks, LayerDir, meta, mip = 0)
     // mip 1: [::2,::2,::2] strided downsample, clamped chunks
     val sc1 = meta.scale(1)
-    val b1 = sc1.bounds
-    val cs1 = sc1.chunkSize
-    val chunks1 = dense
-      .filter(col("x") % 2 === 0 && col("y") % 2 === 0 && col("z") % 2 === 0)
-      .select((col("x") / 2).cast("long").as("x"),
-        (col("y") / 2).cast("long").as("y"),
-        (col("z") / 2).cast("long").as("z"), col("label"))
-      .select(idiv(col("x"), CX).as("gx"), idiv(col("y"), CY).as("gy"),
-        idiv(col("z"), CZ).as("gz"), col("x"), col("y"), col("z"), col("label"))
-      .groupBy("gx", "gy", "gz")
-      .agg(collect_list(struct(col("x"), col("y"), col("z"), col("label"))).as("vox"))
-      .as[(Long, Long, Long, Seq[(Long, Long, Long, Long)])]
-      .map { case (gx, gy, gz, vs) =>
-        val cb = Geom.chunkBbox(Vec3(gx, gy, gz), b1, cs1)
-        val w = cb.size.x; val h = cb.size.y
-        val arr = new Array[Long](cb.volume.toInt)
-        vs.foreach { case (x, y, z, l) =>
-          arr(((x - cb.minpt.x) + w * ((y - cb.minpt.y) + h * (z - cb.minpt.z))).toInt) = l
-        }
-        val nvox = cb.volume.toInt
-        val rgba = new Array[Byte](nvox * 4)
-        var vi = 0
-        while (vi < nvox) {
-          var c = 0
-          while (c < 4) {
-            rgba(vi + nvox * c) = (((arr(vi) + 11 * c) % 251) & 0xff).toByte
-            c += 1
-          }
-          vi += 1
-        }
-        (gx, gy, gz, Codec.encodeRawFromLongs(arr, 4), rgba)
+    val chunks1 = Fixtures.gather(strideTwo(dense), sc1.chunkSize, Some(sc1.size))
+      .as[(Long, Long, Long, Array[Long])]
+      .map { case (gx, gy, gz, arr) =>
+        (gx, gy, gz, Codec.encodeRawFromLongs(arr, 4), rgbaOf(arr))
       }.toDF("gx", "gy", "gz", "payload", "rgba").cache()
     PrecomputedIO.writeChunks(chunks1, LayerDir, meta, mip = 1)
     PrecomputedIO.writeInfo(LayerRgbaDir, metaRgba)
@@ -319,7 +291,6 @@ object RealLayerQueries {
       LayerShardedDir, metaSharded, mip = 0)
     chunks.unpersist()
     dense.unpersist()
-    Files.writeString(marker, markerVal)
   }
 
   private val Sidecar = s"read_parquet('$VoxelsDir/*.parquet')"
@@ -637,12 +608,7 @@ object RealLayerQueries {
     "s4d_cutout_negative_offset" -> Q(
       (s, dir) => RealLayerQueries.synchronized {
         val target = s"$Root/layer_negoff"
-        val root = Paths.get(target)
-        if (Files.exists(root)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(root).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         val scaleNeg = ScaleMeta(
           key = "1_1_1", encoding = "raw", resolution = Seq(1, 1, 1),
           chunkSize = Vec3(16, 16, 8), size = Vec3(32, 32, 16),

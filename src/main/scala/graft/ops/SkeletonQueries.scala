@@ -46,10 +46,7 @@ object SkeletonQueries {
       |        PARTITION BY segid ORDER BY ck) - 1 AS vid FROM v)""".stripMargin
 
   /** Build stamp for downstream (sharded) fixture staleness checks. */
-  def stamp: String = {
-    val marker = Paths.get(Root, ".built_from")
-    if (Files.exists(marker)) Files.readString(marker) else ""
-  }
+  def stamp: String = Fixtures.stampOf(s"$Root/.built_from")
 
   /** Encode + write one skeleton file per segid into `outDir` — the
     * write path shared by the fixture build and the write-roundtrip
@@ -89,20 +86,12 @@ object SkeletonQueries {
   }
 
   def ensure(s: SparkSession, sfDir: String): Unit = synchronized {
-    val marker = Paths.get(Root, ".built_from")
-    val markerPrefix = s"${Fixtures.srcStamp(sfDir)}|v2|" // v2: vertex_types attribute
-    if (Files.exists(marker) &&
-      Files.readString(marker).startsWith(markerPrefix)) return
-      FixtureLog.rebuild(marker)
-    val rootP = Paths.get(Root)
-    if (Files.exists(rootP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(rootP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    // v2: vertex_types attribute; the nonce lets ensureSharded see rebuilds
+    Fixtures.guard(s"$Root/.built_from", s"${Fixtures.srcStamp(sfDir)}|v2|",
+        wipe = Seq(Root), nonce = true) {
+      Files.createDirectories(Paths.get(SkelDir))
+      writeSkeletons(s, sfDir, SkelDir)
     }
-    Files.createDirectories(Paths.get(SkelDir))
-    writeSkeletons(s, sfDir, SkelDir)
-    Files.writeString(marker, markerPrefix + System.nanoTime())
   }
 
   /** Scan + decode all skeleton files (listing driver-side, reads in
@@ -134,41 +123,34 @@ object SkeletonQueries {
 
   def ensureSharded(s: SparkSession, sfDir: String): Unit = synchronized {
     ensure(s, sfDir)
-    val want = stamp // rebuild when the unsharded source rebuilt
-    val marker = Paths.get(Root, ".built_sharded_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val shP = Paths.get(ShardedDir)
-    if (Files.exists(shP)) {
+    // rebuild when the unsharded source rebuilt
+    Fixtures.guard(s"$Root/.built_sharded_from", stamp,
+        wipe = Seq(ShardedDir)) {
+      Files.createDirectories(Paths.get(ShardedDir))
+      import s.implicits._
       import scala.jdk.CollectionConverters._
-      Files.walk(shP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+      val skelDirStr = SkelDir
+      val shardedStr = ShardedDir
+      val spec = skelShardSpec
+      val names = Files.list(Paths.get(SkelDir)).iterator.asScala
+        .map(_.getFileName.toString).filter(_.matches("\\d+")).toSeq.sorted
+      // group skeleton binaries by shard, synthesize each shard file in
+      // its own task (S12 shuffle shape, non-image payloads)
+      names.toDS()
+        .map { n =>
+          (spec.shardLocation(n.toLong)._1, n.toLong,
+            Files.readAllBytes(Paths.get(skelDirStr, n)))
+        }
+        .groupByKey(_._1)
+        .mapGroups { (shard, it) =>
+          val items = it.map(t => (t._2, t._3)).toSeq
+          (shard, ShardCodec.synthesizeShard(spec, items))
+        }
+        .foreach { t: (Long, Array[Byte]) =>
+          Files.write(Paths.get(shardedStr, spec.shardFilename(t._1)), t._2)
+          ()
+        }
     }
-    Files.createDirectories(shP)
-    import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val skelDirStr = SkelDir
-    val shardedStr = ShardedDir
-    val spec = skelShardSpec
-    val names = Files.list(Paths.get(SkelDir)).iterator.asScala
-      .map(_.getFileName.toString).filter(_.matches("\\d+")).toSeq.sorted
-    // group skeleton binaries by shard, synthesize each shard file in
-    // its own task (S12 shuffle shape, non-image payloads)
-    names.toDS()
-      .map { n =>
-        (spec.shardLocation(n.toLong)._1, n.toLong,
-          Files.readAllBytes(Paths.get(skelDirStr, n)))
-      }
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val items = it.map(t => (t._2, t._3)).toSeq
-        (shard, ShardCodec.synthesizeShard(spec, items))
-      }
-      .foreach { t: (Long, Array[Byte]) =>
-        Files.write(Paths.get(shardedStr, spec.shardFilename(t._1)), t._2)
-        ()
-      }
-    Files.writeString(marker, want)
   }
 
   val queries: Map[String, Q] = Map(
@@ -240,13 +222,8 @@ object SkeletonQueries {
     "skel_write_roundtrip" -> Q(
       (s, dir) => SkeletonQueries.synchronized {
         val target = s"$Root/rt_skels"
-        val tp = Paths.get(target)
-        if (Files.exists(tp)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(tp).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
-        Files.createDirectories(tp)
+        Fixtures.rmTree(target)
+        Files.createDirectories(Paths.get(target))
         writeSkeletons(s, dir, target)
         // Array params, NOT Seq: Spark 4 / Scala 2.13 deserializes a
         // Seq[Float] UDF argument as a List, so every vs(3*i) below

@@ -79,36 +79,28 @@ object SpatialIndexQueries {
       |    AND l.z0 < (c.tz + 1) * 16 AND l.z1 > c.tz * 16)""".stripMargin
 
   def ensure(s: SparkSession, sfDir: String): Unit = synchronized {
-    val marker = Paths.get(Root, ".built_from")
-    val want = Fixtures.srcStamp(sfDir)
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val rootP = Paths.get(Root)
-    if (Files.exists(rootP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(rootP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    Files.createDirectories(Paths.get(TileDir))
-    val dirStr = TileDir
-    withTiles(labelBoxes(s, sfDir))
-      .groupBy("filename")
-      .agg(sort_array(collect_list(struct(col("label"), col("x0"), col("y0"),
-        col("z0"), col("x1"), col("y1"), col("z1")))).as("entries"))
-      .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach { r =>
-          val sb = new StringBuilder("{")
-          val entries = r.getSeq[Row](1)
-          entries.zipWithIndex.foreach { case (e, i) =>
-            if (i > 0) sb.append(',')
-            sb.append('"').append(e.getLong(0)).append("\":[")
-              .append((1 to 6).map(e.getLong).mkString(",")).append(']')
+    Fixtures.guard(s"$Root/.built_from", Fixtures.srcStamp(sfDir),
+        wipe = Seq(Root)) {
+      Files.createDirectories(Paths.get(TileDir))
+      val dirStr = TileDir
+      withTiles(labelBoxes(s, sfDir))
+        .groupBy("filename")
+        .agg(sort_array(collect_list(struct(col("label"), col("x0"), col("y0"),
+          col("z0"), col("x1"), col("y1"), col("z1")))).as("entries"))
+        .foreachPartition { rows: Iterator[Row] =>
+          rows.foreach { r =>
+            val sb = new StringBuilder("{")
+            val entries = r.getSeq[Row](1)
+            entries.zipWithIndex.foreach { case (e, i) =>
+              if (i > 0) sb.append(',')
+              sb.append('"').append(e.getLong(0)).append("\":[")
+                .append((1 to 6).map(e.getLong).mkString(",")).append(']')
+            }
+            sb.append('}')
+            Files.writeString(Paths.get(dirStr, r.getString(0)), sb.toString)
           }
-          sb.append('}')
-          Files.writeString(Paths.get(dirStr, r.getString(0)), sb.toString)
         }
-      }
-    Files.writeString(marker, want)
+    }
   }
 
   /** Tiles with segid keys in uint64 territory: odd labels get the
@@ -122,41 +114,32 @@ object SpatialIndexQueries {
   val TileDirU64 = s"$Root/spatial0_u64"
 
   def ensureU64(s: SparkSession, sfDir: String): Unit = synchronized {
-    val marker = Paths.get(TileDirU64, ".built_from")
-    val want = Fixtures.srcStamp(sfDir)
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val dirP = Paths.get(TileDirU64)
-    if (Files.exists(dirP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(dirP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    Files.createDirectories(dirP)
-    val dirStr = TileDirU64
-    val u64Boxes = labelBoxes(s, sfDir).withColumn("label",
-      when(col("label") % 2 === 1,
-        col("label").bitwiseOR(lit(Long.MinValue))).otherwise(col("label")))
-    withTiles(u64Boxes)
-      .groupBy("filename")
-      .agg(sort_array(collect_list(struct(col("label"), col("x0"), col("y0"),
-        col("z0"), col("x1"), col("y1"), col("z1")))).as("entries"))
-      .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach { r =>
-          val sb = new StringBuilder("{")
-          val entries = r.getSeq[Row](1)
-          entries.zipWithIndex.foreach { case (e, i) =>
-            if (i > 0) sb.append(',')
-            sb.append('"')
-              .append(java.lang.Long.toUnsignedString(e.getLong(0)))
-              .append("\":[")
-              .append((1 to 6).map(e.getLong).mkString(",")).append(']')
+    Fixtures.guard(s"$TileDirU64/.built_from", Fixtures.srcStamp(sfDir),
+        wipe = Seq(TileDirU64)) {
+      val dirStr = TileDirU64
+      val u64Boxes = labelBoxes(s, sfDir).withColumn("label",
+        when(col("label") % 2 === 1,
+          col("label").bitwiseOR(lit(Long.MinValue))).otherwise(col("label")))
+      withTiles(u64Boxes)
+        .groupBy("filename")
+        .agg(sort_array(collect_list(struct(col("label"), col("x0"), col("y0"),
+          col("z0"), col("x1"), col("y1"), col("z1")))).as("entries"))
+        .foreachPartition { rows: Iterator[Row] =>
+          rows.foreach { r =>
+            val sb = new StringBuilder("{")
+            val entries = r.getSeq[Row](1)
+            entries.zipWithIndex.foreach { case (e, i) =>
+              if (i > 0) sb.append(',')
+              sb.append('"')
+                .append(java.lang.Long.toUnsignedString(e.getLong(0)))
+                .append("\":[")
+                .append((1 to 6).map(e.getLong).mkString(",")).append(']')
+            }
+            sb.append('}')
+            Files.writeString(Paths.get(dirStr, r.getString(0)), sb.toString)
           }
-          sb.append('}')
-          Files.writeString(Paths.get(dirStr, r.getString(0)), sb.toString)
         }
-      }
-    Files.writeString(marker, want)
+    }
   }
 
   /** Scan + parse the tile files: (filename, label, x0..z1). */
@@ -297,13 +280,8 @@ object SpatialIndexQueries {
       (s, dir) => {
         RealLayerQueries.ensure(s, dir)
         val outDir = s"${RealLayerQueries.Root}/spatial_built0"
-        val outP = Paths.get(outDir)
-        if (Files.exists(outP)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(outP).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
-        Files.createDirectories(outP)
+        Fixtures.rmTree(outDir)
+        Files.createDirectories(Paths.get(outDir))
         import RealLayerQueries.{SX, SY, SZ}
         val entries = graft.sources.PrecomputedIO
           .cutoutVoxels(s, RealLayerQueries.LayerDir,

@@ -86,15 +86,11 @@ object StreamQueries {
   private def stageEvents(s: SparkSession, sfDir: String): String =
     synchronized {
       val dir = Paths.get(Root, "events")
-      val marker = Paths.get(Root, ".built_from")
-      val srcId = Fixtures.srcStamp(sfDir)
-      if (!Files.exists(marker) || Files.readString(marker) != srcId) {
-        FixtureLog.rebuild(marker)
-        deleteTree(dir)
+      Fixtures.guard(s"$Root/.built_from", Fixtures.srcStamp(sfDir),
+          wipe = Seq(dir.toString)) {
         Files.createDirectories(dir)
         Files.copy(Paths.get(sfDir, "events.parquet"),
           dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-        Files.writeString(marker, srcId)
       }
       dir.toString
     }
@@ -106,17 +102,14 @@ object StreamQueries {
   private def stageDocs(s: SparkSession, sfDir: String): String =
     synchronized {
       val dir = Paths.get(Root, "docs")
-      val marker = Paths.get(Root, ".docs_from")
-      val srcId = s"${Fixtures.srcStamp(sfDir)}|v2" // v2: +lang column
-      if (!Files.exists(marker) || Files.readString(marker) != srcId) {
-        FixtureLog.rebuild(marker)
+      // v2: +lang column
+      Fixtures.guard(s"$Root/.docs_from", s"${Fixtures.srcStamp(sfDir)}|v2") {
         val docs = s.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("lang"), col("text"))
         docs.unionAll(docs.filter(col("doc_id") % 2 === 0)
             .select((col("doc_id") + 10000).as("doc_id"), col("lang"),
               col("text")))
           .write.mode("overwrite").parquet(dir.toString)
-        Files.writeString(marker, srcId)
       }
       dir.toString
     }
@@ -130,17 +123,13 @@ object StreamQueries {
   private[graft] def stageNearDocs(s: SparkSession, sfDir: String): String =
     synchronized {
       val dir = Paths.get(Root, "docs_near")
-      val marker = Paths.get(Root, ".docs_near_from")
-      val srcId = Fixtures.srcStamp(sfDir)
-      if (!Files.exists(marker) || Files.readString(marker) != srcId) {
-        FixtureLog.rebuild(marker)
+      Fixtures.guard(s"$Root/.docs_near_from", Fixtures.srcStamp(sfDir)) {
         val docs = s.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         docs.unionAll(docs.filter(col("doc_id") % 2 === 0)
             .select((col("doc_id") + 10000).as("doc_id"),
               expr("substr(text, instr(text, ' ') + 1)").as("text")))
           .write.mode("overwrite").parquet(dir.toString)
-        Files.writeString(marker, srcId)
       }
       dir.toString
     }
@@ -186,15 +175,6 @@ object StreamQueries {
     }
   }
 
-  private def deleteTree(root: java.nio.file.Path): Unit =
-    if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(root)
-      try walk.iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
-
   // Shared by st15 (sink face) and st16 (source face): one 64×64×32
   // uint32 layer of 32 disjoint 16³ chunks whose voxels follow a
   // closed form BOTH oracles restate — value = base(gx,gy,gz) + i in
@@ -230,7 +210,7 @@ object StreamQueries {
     // (st7/st8 apply the same scoping around their runToTable calls —
     // re-setting 8 there is a no-op.)
     val ckpt = ckptDir(s, name)
-    deleteTree(ckpt)
+    Fixtures.rmTree(ckpt.toString)
     scopedStream(s) {
       try {
         val q = df.writeStream
@@ -241,7 +221,7 @@ object StreamQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally deleteTree(ckpt) // one-shot: never recovered
+      } finally Fixtures.rmTree(ckpt.toString) // one-shot: never recovered
     }
     s.table(name)
   }
@@ -359,7 +339,7 @@ object StreamQueries {
       (s, dir) => {
         val src = stageEvents(s, dir)
         val frameDir = Paths.get(Root, "tchunks")
-        deleteTree(frameDir)
+        Fixtures.rmTree(frameDir.toString)
         Files.createDirectories(frameDir)
         val frameDirStr = frameDir.toString
         val schema = s.read.parquet(src).schema
@@ -374,7 +354,7 @@ object StreamQueries {
         // agg's state stores (and the inner per-batch regroup) are
         // ~40k tiny rows — 8 partitions, scoped + restored
         val ckpt = ckptDir(s, "graft_st3")
-        deleteTree(ckpt)
+        Fixtures.rmTree(ckpt.toString)
         scopedStream(s) {
         try {
         val q = frames.writeStream
@@ -401,7 +381,7 @@ object StreamQueries {
           }
           .start()
         q.awaitTermination()
-        } finally deleteTree(ckpt)
+        } finally Fixtures.rmTree(ckpt.toString)
         }
         // batch read-back: decode every frame, emit nonzero cells
         import s.implicits._
@@ -925,10 +905,10 @@ object StreamQueries {
         val root = Paths.get(Root, "st15")
         // fresh run per invocation: the sink is idempotent, but a
         // leftover checkpoint would make the restart a no-op replay
-        deleteTree(root)
+        Fixtures.rmTree(root.toString)
         val srcDir = root.resolve("specs")
         val ckpt = ckptDir(s, "graft_st15")
-        deleteTree(ckpt)
+        Fixtures.rmTree(ckpt.toString)
         val target = root.resolve("layer").toString
         Files.createDirectories(srcDir)
         chunkSpecs(s)
@@ -948,7 +928,7 @@ object StreamQueries {
             .start()
           q.awaitTermination()
         }
-        deleteTree(ckpt)
+        Fixtures.rmTree(ckpt.toString)
         val cut = PrecomputedIO.cutoutVoxels(s, target,
           Bbox(Vec3(0, 0, 0), Vec3(64, 64, 32)))
         val gxc = shiftrightunsigned(col("x"), 4)
@@ -991,10 +971,10 @@ object StreamQueries {
     "st16_stream_source_dsv2" -> Q(
       (s, dir) => {
         val root = Paths.get(Root, "st16")
-        deleteTree(root)
+        Fixtures.rmTree(root.toString)
         val target = root.resolve("layer").toString
         val ckpt = ckptDir(s, "graft_st16")
-        deleteTree(ckpt)
+        Fixtures.rmTree(ckpt.toString)
         PrecomputedIO.writeInfo(target, ChunkLayerMeta)
         // batch writes resolve against the full table schema; the bbox
         // columns are derived (the writer ignores them, bounds come
@@ -1032,7 +1012,7 @@ object StreamQueries {
             .start()
           q.awaitTermination()
         }
-        deleteTree(ckpt)
+        Fixtures.rmTree(ckpt.toString)
         s.table("graft_st16")
       },
       Some("""WITH g AS (
@@ -1060,11 +1040,11 @@ object StreamQueries {
     "st17_stream_layer_etl" -> Q(
       (s, dir) => {
         val root = Paths.get(Root, "st17")
-        deleteTree(root)
+        Fixtures.rmTree(root.toString)
         val src = root.resolve("src").toString
         val dst = root.resolve("dst").toString
         val ckpt = ckptDir(s, "graft_st17")
-        deleteTree(ckpt)
+        Fixtures.rmTree(ckpt.toString)
         PrecomputedIO.writeInfo(src, ChunkLayerMeta)
         PrecomputedIO.writeInfo(dst, ChunkLayerMeta)
         chunkSpecs(s)
@@ -1100,7 +1080,7 @@ object StreamQueries {
             .start()
           q.awaitTermination()
         }
-        deleteTree(ckpt)
+        Fixtures.rmTree(ckpt.toString)
         val cut = PrecomputedIO.cutoutVoxels(s, dst,
           Bbox(Vec3(0, 0, 0), Vec3(64, 64, 32)))
         val gxc = shiftrightunsigned(col("x"), 4)

@@ -79,12 +79,7 @@ object WriteQueries {
 
   /** Copy the fixture layer's chunk objects into a fresh target. */
   private[ops] def cloneLayer(s: SparkSession, target: String): Unit = {
-    val root = Paths.get(target)
-    if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
+    Fixtures.rmTree(target)
     PrecomputedIO.writeInfo(target, meta)
     // byte-level object copy: the chunk objects are already encoded,
     // so the clone moves bytes as-is — no decode/re-encode round-trip

@@ -134,12 +134,7 @@ object XferQueries {
       (s, dir) => {
         ensure(s, dir)
         val target = s"${RealLayerQueries.Root}/layer_s16_zarr3"
-        val tp = Paths.get(target)
-        if (Files.exists(tp)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(tp).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         val zm = graft.sources.Zarr3IO.Zarr3Meta(
           shape = Vec3(SX, SY, SZ), chunkShape = Vec3(CX, CY, CZ),
           dataType = "uint32", fillValue = 0L, compressor = "zstd")
@@ -251,12 +246,7 @@ object XferQueries {
       (s, dir) => {
         ensure(s, dir)
         val target = s"${RealLayerQueries.Root}/layer_s16_sharded"
-        val root = Paths.get(target)
-        if (Files.exists(root)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(root).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         PrecomputedIO.writeInfo(target, metaSharded)
         ShardedIO.writeSharded(
           PrecomputedIO.readChunks(s, LayerDir)
@@ -282,12 +272,7 @@ object XferQueries {
     "s14b_sharded_black_elision" -> Q(
       (s, dir) => XferQueries.synchronized {
         val target = s"${RealLayerQueries.Root}/layer_s14b"
-        val root = Paths.get(target)
-        if (Files.exists(root)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(root).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         // 64x64x32 vol, 16x16x8 chunks -> 4x4x4 grid, 6-bit morton:
         // one chunk per shard
         val spec = ShardingSpec(
@@ -361,12 +346,7 @@ object XferQueries {
       (s, dir) => XferQueries.synchronized {
         ensure(s, dir)
         val target = s"${RealLayerQueries.Root}/layer_s16_unsharded"
-        val root = Paths.get(target)
-        if (Files.exists(root)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(root).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         val metaUnsharded = metaSharded.copy(scales =
           Seq(metaSharded.scale(0).copy(sharding = None)))
         PrecomputedIO.writeInfo(target, metaUnsharded)
@@ -395,12 +375,7 @@ object XferQueries {
       (s, dir) => XferQueries.synchronized {
         ensure(s, dir)
         val target = s"${RealLayerQueries.Root}/layer_s16_reshard"
-        val root = Paths.get(target)
-        if (Files.exists(root)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(root).iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        }
+        Fixtures.rmTree(target)
         // new parameters: 2 shards x 8 minishards (source: 4 x 4)
         val newSpec = ShardingSpec(
           preshiftBits = 0, minishardBits = 3, shardBits = 1,

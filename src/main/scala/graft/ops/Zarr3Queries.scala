@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.sources.Zarr3IO
@@ -24,50 +24,67 @@ object Zarr3Queries {
     shape = Vec3(SX, SY, SZ), chunkShape = Vec3(CX, CY, CZ),
     dataType = "uint32", fillValue = 0L, compressor = "gzip")
 
+  /** Every fixture here is derived from the precomputed layer's dense
+    * sidecar: its marker (`Root/<marker>`) holds that layer's build
+    * stamp plus a format `version`, so it rebuilds, wiping `dir`,
+    * whenever the source layer rebuilt. Callers ensure their source
+    * first.
+    */
+  private def derived(marker: String, version: String, dir: String)(
+      build: => Unit): Unit =
+    Fixtures.guard(s"$Root/$marker", RealLayerQueries.stamp + version,
+      Seq(dir))(build)
+
+  private def sidecar(s: SparkSession): DataFrame =
+    s.read.parquet(RealLayerQueries.VoxelsDir)
+
   /** FULL-size (fill_value-padded) chunk rows from the shared dense
     * sidecar — the zarr chunk shape, reused by zarr2 and zarr3.
     */
-  private def fullChunks(s: SparkSession): DataFrame = {
-    val dense = s.read.parquet(RealLayerQueries.VoxelsDir)
+  private def fullChunks(s: SparkSession): DataFrame =
+    Fixtures.gather(sidecar(s), zmeta.chunkShape, None)
+
+  private def fullChunksTyped(s: SparkSession)
+      : Dataset[(Long, Long, Long, Array[Long])] = {
     import s.implicits._
-    val cs = zmeta.chunkShape
-    dense
-      .select(Derived.idiv(col("x"), CX).as("gx"),
-        Derived.idiv(col("y"), CY).as("gy"),
-        Derived.idiv(col("z"), CZ).as("gz"),
-        col("x"), col("y"), col("z"), col("label"))
-      .groupBy("gx", "gy", "gz")
-      .agg(collect_list(struct(col("x"), col("y"), col("z"), col("label")))
-        .as("vox"))
-      .as[(Long, Long, Long, Seq[(Long, Long, Long, Long)])]
-      .map { case (gx, gy, gz, vs) =>
-        // FULL-size chunk, fill_value padding beyond the array bounds
-        val arr = new Array[Long]((cs.x * cs.y * cs.z).toInt)
-        vs.foreach { case (x, y, z, l) =>
-          arr(((x - gx * cs.x) + cs.x * ((y - gy * cs.y) + cs.y *
-            (z - gz * cs.z))).toInt) = l
-        }
-        (gx, gy, gz, arr.toSeq)
-      }.toDF("gx", "gy", "gz", "vox")
+    fullChunks(s).as[(Long, Long, Long, Array[Long])]
+  }
+
+  /** `vox`, the padded block at grid `g` of a `block` grid, with `d`
+    * added to every voxel inside the volume [0, `size`) and the pad
+    * cells kept at fill_value 0 — a frame transform must not disturb
+    * the zarr pad convention (another reader sampling the pad region
+    * expects fill).
+    */
+  private def shiftInBounds(g: Vec3, vox: Array[Long], block: Vec3,
+      size: Vec3, d: Long): Array[Long] =
+    Array.tabulate(vox.length) { i =>
+      val x = g.x * block.x + i % block.x
+      val y = g.y * block.y + (i / block.x) % block.y
+      val z = g.z * block.z + i / (block.x * block.y)
+      if (x < size.x && y < size.y && z < size.z) vox(i) + d else 0L
+    }
+
+  /** One row per (t, c, chunk) of the mip-0 frames, frame value =
+    * label + t + 7c (`channels` = 1: label + t) — the transform the
+    * zarr3/zarr2 OME and zarr2 group oracles replay over the sidecar.
+    */
+  private def omeFrames(s: SparkSession, channels: Long): DataFrame = {
+    import s.implicits._
+    val (cs, size) = (zmeta.chunkShape, zmeta.shape)
+    fullChunksTyped(s).flatMap { case (gx, gy, gz, vox) =>
+      for (f <- 0L until TFrames; ch <- 0L until channels)
+        yield (f, ch, gx, gy, gz,
+          shiftInBounds(Vec3(gx, gy, gz), vox, cs, size, f + 7 * ch))
+    }.toDF("tc", "cc", "gx", "gy", "gz", "vox")
   }
 
   def ensure(s: SparkSession, sfDir: String): Unit = synchronized {
-    // rebuild whenever the SOURCE sidecar was rebuilt (stamp check)
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val arrP = Paths.get(ArrayDir)
-    if (Files.exists(arrP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(arrP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_from", "", ArrayDir) {
+      Zarr3IO.writeMeta(ArrayDir, zmeta)
+      Zarr3IO.writeChunks(fullChunks(s), ArrayDir, zmeta)
     }
-    Files.createDirectories(Paths.get(Root))
-    Zarr3IO.writeMeta(ArrayDir, zmeta)
-    Zarr3IO.writeChunks(fullChunks(s), ArrayDir, zmeta)
-    Files.writeString(marker, want)
   }
 
   // ---- zstd sibling (zarr-python's v3 DEFAULT compressor) ----
@@ -80,20 +97,10 @@ object Zarr3Queries {
 
   def ensureZstd(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_zstd_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val arrP = Paths.get(ZstdDir)
-    if (Files.exists(arrP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(arrP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_zstd_from", "", ZstdDir) {
+      Zarr3IO.writeMeta(ZstdDir, zZstdMeta)
+      Zarr3IO.writeChunks(fullChunks(s), ZstdDir, zZstdMeta)
     }
-    Files.createDirectories(Paths.get(Root))
-    Zarr3IO.writeMeta(ZstdDir, zZstdMeta)
-    Zarr3IO.writeChunks(fullChunks(s), ZstdDir, zZstdMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- time-axis sibling (4-D t,x,y,z; zarr3/image.py:141-149) ----
@@ -110,47 +117,20 @@ object Zarr3Queries {
     dataType = "uint32", fillValue = 0L, compressor = "gzip",
     timeFrames = Some(TFrames), timeChunk = TFrames)
 
-  /** Add `d` to every IN-BOUNDS voxel of a full-size padded chunk at
-    * grid (gx, gy, gz), keeping out-of-bounds pad cells at fill_value
-    * 0 — a frame transform must not disturb the zarr pad convention
-    * (another reader sampling the pad region expects fill).
-    */
-  private def shiftInBounds(gx: Long, gy: Long, gz: Long, vox: Seq[Long],
-      d: Long): Seq[Long] = {
-    val cs = zmeta.chunkShape
-    vox.zipWithIndex.map { case (v, i) =>
-      val x = gx * cs.x + i % cs.x
-      val y = gy * cs.y + (i / cs.x) % cs.y
-      val z = gz * cs.z + i / (cs.x * cs.y)
-      if (x < SX && y < SY && z < SZ) v + d else 0L
-    }
-  }
-
   def ensureT(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_t_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val arrP = Paths.get(TDir)
-    if (Files.exists(arrP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(arrP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    Files.createDirectories(Paths.get(Root))
-    import s.implicits._
-    // frame f = base label + f: a per-frame transform the DuckDB
-    // oracle replays as `label + t` over the shared sidecar
-    val tchunks = fullChunks(s)
-      .as[(Long, Long, Long, Seq[Long])]
-      .map { case (gx, gy, gz, vox) =>
-        (0L, gx, gy, gz,
-          (0L until TFrames).flatMap(f => shiftInBounds(gx, gy, gz, vox, f)))
+    derived(".built_t_from", "", TDir) {
+      import s.implicits._
+      // frame f = base label + f: a per-frame transform the DuckDB
+      // oracle replays as `label + t` over the shared sidecar
+      val (cs, size) = (zmeta.chunkShape, zmeta.shape)
+      val tchunks = fullChunksTyped(s).map { case (gx, gy, gz, vox) =>
+        (0L, gx, gy, gz, (0L until TFrames).toArray.flatMap(f =>
+          shiftInBounds(Vec3(gx, gy, gz), vox, cs, size, f)))
       }.toDF("tc", "gx", "gy", "gz", "vox")
-    Zarr3IO.writeMeta(TDir, zTMeta)
-    Zarr3IO.writeChunksT(tchunks, TDir, zTMeta)
-    Files.writeString(marker, want)
+      Zarr3IO.writeMeta(TDir, zTMeta)
+      Zarr3IO.writeChunksT(tchunks, TDir, zTMeta)
+    }
   }
 
   // ---- time x channel sibling (5-D t,c,x,y,z; the reference's OME
@@ -172,33 +152,22 @@ object Zarr3Queries {
 
   def ensureTC(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_tc_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val arrP = Paths.get(TCDir)
-    if (Files.exists(arrP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(arrP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    Files.createDirectories(Paths.get(Root))
-    import s.implicits._
-    // frame (t, c) = base label + t + 7c: SQL-replayable per-frame and
-    // per-channel transforms over the shared sidecar
-    val tchunks = fullChunks(s)
-      .as[(Long, Long, Long, Seq[Long])]
-      .map { case (gx, gy, gz, vox) =>
+    derived(".built_tc_from", "", TCDir) {
+      import s.implicits._
+      // frame (t, c) = base label + t + 7c: SQL-replayable per-frame and
+      // per-channel transforms over the shared sidecar
+      val (cs, size) = (zmeta.chunkShape, zmeta.shape)
+      val tchunks = fullChunksTyped(s).map { case (gx, gy, gz, vox) =>
         val frames = for {
-          f <- 0L until TFrames
+          f <- (0L until TFrames).toArray
           ch <- 0L until TCChannels
-          v <- shiftInBounds(gx, gy, gz, vox, f + 7 * ch)
+          v <- shiftInBounds(Vec3(gx, gy, gz), vox, cs, size, f + 7 * ch)
         } yield v
         (0L, 0L, gx, gy, gz, frames)
       }.toDF("tc", "cc", "gx", "gy", "gz", "vox")
-    Zarr3IO.writeMeta(TCDir, zTCMeta)
-    Zarr3IO.writeChunksTC(tchunks, TCDir, zTCMeta)
-    Files.writeString(marker, want)
+      Zarr3IO.writeMeta(TCDir, zTCMeta)
+      Zarr3IO.writeChunksTC(tchunks, TCDir, zTCMeta)
+    }
   }
 
   // ---- OME-NGFF sibling: 5-D (t, c, z, y, x) — the microscopy
@@ -218,29 +187,10 @@ object Zarr3Queries {
 
   def ensureOme(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_ome_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val arrP = Paths.get(OmeDir)
-    if (Files.exists(arrP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(arrP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_ome_from", "", OmeDir) {
+      Zarr3IO.writeMeta(OmeDir, zOmeMeta)
+      Zarr3IO.writeChunksTC(omeFrames(s, TCChannels), OmeDir, zOmeMeta)
     }
-    Files.createDirectories(Paths.get(Root))
-    import s.implicits._
-    // one row per (t, c, chunk): frame value = label + t + 7c like the
-    // tc fixture, so the oracle transform is shared
-    val frames = fullChunks(s)
-      .as[(Long, Long, Long, Seq[Long])]
-      .flatMap { case (gx, gy, gz, vox) =>
-        for (f <- 0L until TFrames; ch <- 0L until TCChannels)
-          yield (f, ch, gx, gy, gz, shiftInBounds(gx, gy, gz, vox, f + 7 * ch))
-      }.toDF("tc", "cc", "gx", "gy", "gz", "vox")
-    Zarr3IO.writeMeta(OmeDir, zOmeMeta)
-    Zarr3IO.writeChunksTC(frames, OmeDir, zOmeMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- sharded sibling (zarr v3 sharding_indexed codec) ----
@@ -263,45 +213,15 @@ object Zarr3Queries {
     * — shared by the sharded fixture and the sharded write-roundtrip
     * entry.
     */
-  private def shardRows(s: SparkSession): DataFrame = {
-    val dense = s.read.parquet(RealLayerQueries.VoxelsDir)
-    import s.implicits._
-    val cs = zShardedMeta.chunkShape
-    dense
-      .select(Derived.idiv(col("x"), cs.x).as("sx"),
-        Derived.idiv(col("y"), cs.y).as("sy"),
-        Derived.idiv(col("z"), cs.z).as("sz"),
-        col("x"), col("y"), col("z"), col("label"))
-      .groupBy("sx", "sy", "sz")
-      .agg(collect_list(struct(col("x"), col("y"), col("z"), col("label")))
-        .as("vox"))
-      .as[(Long, Long, Long, Seq[(Long, Long, Long, Long)])]
-      .map { case (sx, sy, sz, vs) =>
-        // FULL-size outer shard, fill-padded beyond the array bounds
-        val arr = new Array[Long]((cs.x * cs.y * cs.z).toInt)
-        vs.foreach { case (x, y, z, l) =>
-          arr(((x - sx * cs.x) + cs.x * ((y - sy * cs.y) + cs.y *
-            (z - sz * cs.z))).toInt) = l
-        }
-        (sx, sy, sz, arr.toSeq)
-      }.toDF("sx", "sy", "sz", "vox")
-  }
+  private def shardRows(s: SparkSession): DataFrame =
+    Fixtures.gather(sidecar(s), zShardedMeta.chunkShape, None)
 
   def ensureSharded(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_sharded_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val shRoot = Paths.get(ShardedDir)
-    if (Files.exists(shRoot)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(shRoot).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_sharded_from", "", ShardedDir) {
+      Zarr3IO.writeMeta(ShardedDir, zShardedMeta)
+      Zarr3IO.writeShards(shardRows(s), ShardedDir, zShardedMeta)
     }
-    Zarr3IO.writeMeta(ShardedDir, zShardedMeta)
-    Zarr3IO.writeShards(shardRows(s), ShardedDir, zShardedMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- n5 sibling (clamped edge blocks, big-endian headers) ----
@@ -315,46 +235,15 @@ object Zarr3Queries {
   /** CLAMPED edge blocks from the shared sidecar (n5 blocks may be
     * smaller at the edge; the clamped dims go in the block header).
     */
-  private def n5Blocks(s: SparkSession): DataFrame = {
-    val dense = s.read.parquet(RealLayerQueries.VoxelsDir)
-    import s.implicits._
-    val bounds = Bbox(Vec3(0, 0, 0), n5meta.dimensions)
-    val bs = n5meta.blockSize
-    dense
-      .select(Derived.idiv(col("x"), CX).as("gx"),
-        Derived.idiv(col("y"), CY).as("gy"),
-        Derived.idiv(col("z"), CZ).as("gz"),
-        col("x"), col("y"), col("z"), col("label"))
-      .groupBy("gx", "gy", "gz")
-      .agg(collect_list(struct(col("x"), col("y"), col("z"), col("label")))
-        .as("vox"))
-      .as[(Long, Long, Long, Seq[(Long, Long, Long, Long)])]
-      .map { case (gx, gy, gz, vs) =>
-        val cb = Geom.chunkBbox(Vec3(gx, gy, gz), bounds, bs)
-        val arr = new Array[Long](cb.volume.toInt)
-        vs.foreach { case (x, y, z, l) =>
-          arr(((x - cb.minpt.x) + cb.size.x * ((y - cb.minpt.y) +
-            cb.size.y * (z - cb.minpt.z))).toInt) = l
-        }
-        (gx, gy, gz, arr.toSeq)
-      }.toDF("gx", "gy", "gz", "vox")
-  }
+  private def n5Blocks(s: SparkSession): DataFrame =
+    Fixtures.gather(sidecar(s), n5meta.blockSize, Some(n5meta.dimensions))
 
   def ensureN5(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_n5_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val n5root = Paths.get(N5Dir)
-    if (Files.exists(n5root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(n5root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_n5_from", "", N5Dir) {
+      graft.sources.N5IO.writeMeta(N5Dir, n5meta)
+      graft.sources.N5IO.writeBlocks(n5Blocks(s), N5Dir, n5meta)
     }
-    graft.sources.N5IO.writeMeta(N5Dir, n5meta)
-    graft.sources.N5IO.writeBlocks(n5Blocks(s), N5Dir, n5meta)
-    Files.writeString(marker, want)
   }
 
   // ---- n5 lz4 sibling (the jpountz block framing the standard Java
@@ -368,19 +257,10 @@ object Zarr3Queries {
 
   def ensureN5Lz4(s: SparkSession, sfDir: String): Unit = synchronized {
     ensureN5(s, sfDir) // builds the shared clamped-block derivation
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_n5lz4_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val n5root = Paths.get(N5Lz4Dir)
-    if (Files.exists(n5root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(n5root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_n5lz4_from", "", N5Lz4Dir) {
+      graft.sources.N5IO.writeMeta(N5Lz4Dir, n5Lz4Meta)
+      graft.sources.N5IO.writeBlocks(n5Blocks(s), N5Lz4Dir, n5Lz4Meta)
     }
-    graft.sources.N5IO.writeMeta(N5Lz4Dir, n5Lz4Meta)
-    graft.sources.N5IO.writeBlocks(n5Blocks(s), N5Lz4Dir, n5Lz4Meta)
-    Files.writeString(marker, want)
   }
 
   // ---- zarr2 sibling (zlib compressor, dot-separated chunk names) ----
@@ -408,19 +288,10 @@ object Zarr3Queries {
 
   def ensureZarr2F(s: SparkSession, sfDir: String): Unit = synchronized {
     ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|v2" // v2: "/" separator
-    val marker = Paths.get(Root, ".built_z2f_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val z2root = Paths.get(Zarr2FDir)
-    if (Files.exists(z2root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(z2root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_z2f_from", "|v2", Zarr2FDir) { // v2: "/" separator
+      graft.sources.Zarr2IO.writeMeta(Zarr2FDir, z2fMeta)
+      graft.sources.Zarr2IO.writeChunks(fullChunks(s), Zarr2FDir, z2fMeta)
     }
-    graft.sources.Zarr2IO.writeMeta(Zarr2FDir, z2fMeta)
-    graft.sources.Zarr2IO.writeChunks(fullChunks(s), Zarr2FDir, z2fMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- zarr2 OME sibling (.zattrs multiscales axes — what the
@@ -440,28 +311,12 @@ object Zarr3Queries {
 
   def ensureZarr2Ome(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|z2ome-v1"
-    val marker = Paths.get(Root, ".built_z2ome_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val z2root = Paths.get(Zarr2OmeDir)
-    if (Files.exists(z2root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(z2root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_z2ome_from", "|z2ome-v1", Zarr2OmeDir) {
+      // the same frames as the zarr3 OME fixture so oracles are shared
+      graft.sources.Zarr2IO.writeMetaOme(Zarr2OmeDir, z2OmeMeta)
+      graft.sources.Zarr2IO.writeChunksOme(omeFrames(s, TCChannels),
+        Zarr2OmeDir, z2OmeMeta)
     }
-    import s.implicits._
-    // one row per (t, c, chunk), frame value = label + t + 7c — the
-    // same transform as the zarr3 OME fixture so oracles are shared
-    val frames = fullChunks(s)
-      .as[(Long, Long, Long, Seq[Long])]
-      .flatMap { case (gx, gy, gz, vox) =>
-        for (f <- 0L until TFrames; ch <- 0L until TCChannels)
-          yield (f, ch, gx, gy, gz, shiftInBounds(gx, gy, gz, vox, f + 7 * ch))
-      }.toDF("tc", "cc", "gx", "gy", "gz", "vox")
-    graft.sources.Zarr2IO.writeMetaOme(Zarr2OmeDir, z2OmeMeta)
-    graft.sources.Zarr2IO.writeChunksOme(frames, Zarr2OmeDir, z2OmeMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- zarr2 OME multiscale GROUP sibling: 2 mips, per-mip .zarray
@@ -494,59 +349,20 @@ object Zarr3Queries {
     * half grid — the multiscale level shared by the zarr2 and zarr3
     * group fixtures, replayed by their oracles with modulo filters.
     */
-  private def halfGridChunks(s: SparkSession, cs1: Vec3)
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Seq[Long])] = {
-    import s.implicits._
-    s.read.parquet(RealLayerQueries.VoxelsDir)
-      .filter(col("x") % 2 === 0 && col("y") % 2 === 0 && col("z") % 2 === 0)
-      .select((col("x") / 2).cast("long").as("x"),
-        (col("y") / 2).cast("long").as("y"),
-        (col("z") / 2).cast("long").as("z"), col("label"))
-      .select(Derived.idiv(col("x"), cs1.x).as("gx"),
-        Derived.idiv(col("y"), cs1.y).as("gy"),
-        Derived.idiv(col("z"), cs1.z).as("gz"),
-        col("x"), col("y"), col("z"), col("label"))
-      .groupBy("gx", "gy", "gz")
-      .agg(collect_list(struct(col("x"), col("y"), col("z"), col("label")))
-        .as("vox"))
-      .as[(Long, Long, Long, Seq[(Long, Long, Long, Long)])]
-      .map { case (gx, gy, gz, vs) =>
-        val arr = new Array[Long]((cs1.x * cs1.y * cs1.z).toInt)
-        vs.foreach { case (x, y, z, l) =>
-          arr(((x - gx * cs1.x) + cs1.x * ((y - gy * cs1.y) + cs1.y *
-            (z - gz * cs1.z))).toInt) = l
-        }
-        (gx, gy, gz, arr.toSeq)
-      }
-  }
+  private def halfGridChunks(s: SparkSession, cs1: Vec3): DataFrame =
+    Fixtures.gather(RealLayerQueries.strideTwo(sidecar(s)), cs1, None)
 
   def ensureZarr2Group(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|z2grp-v1"
-    val marker = Paths.get(Root, ".built_z2grp_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val gRoot = Paths.get(Zarr2GroupDir)
-    if (Files.exists(gRoot)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(gRoot).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_z2grp_from", "|z2grp-v1", Zarr2GroupDir) {
+      graft.sources.Zarr2IO.writeMetaOmeGroup(Zarr2GroupDir, z2GroupMips)
+      // mip 0: per-t frames of the dense sidecar (value = label + t)
+      graft.sources.Zarr2IO.writeChunksOme(omeFrames(s, 1L),
+        s"$Zarr2GroupDir/0", z2GroupMips(0))
+      // mip 1: stride-2 pick, full-size padded chunks over the half grid
+      graft.sources.Zarr2IO.writeChunksOme(halfGridFrames(s),
+        s"$Zarr2GroupDir/1", z2GroupMips(1))
     }
-    import s.implicits._
-    graft.sources.Zarr2IO.writeMetaOmeGroup(Zarr2GroupDir, z2GroupMips)
-    // mip 0: per-t frames of the dense sidecar (value = label + t)
-    val m0 = fullChunks(s)
-      .as[(Long, Long, Long, Seq[Long])]
-      .flatMap { case (gx, gy, gz, vox) =>
-        (0L until TFrames).map(f =>
-          (f, 0L, gx, gy, gz, shiftInBounds(gx, gy, gz, vox, f)))
-      }.toDF("tc", "cc", "gx", "gy", "gz", "vox")
-    graft.sources.Zarr2IO.writeChunksOme(m0, s"$Zarr2GroupDir/0",
-      z2GroupMips(0))
-    // mip 1: stride-2 pick, full-size padded chunks over the half grid
-    graft.sources.Zarr2IO.writeChunksOme(halfGridFrames(s),
-      s"$Zarr2GroupDir/1", z2GroupMips(1))
-    Files.writeString(marker, want)
   }
 
   /** Per-t OME frame rows of the stride-2 mip-1 level (value = label
@@ -556,17 +372,12 @@ object Zarr3Queries {
   private def halfGridFrames(s: SparkSession): DataFrame = {
     import s.implicits._
     val cs1 = z2GroupMips(1).meta.chunkShape
-    halfGridChunks(s, cs1).flatMap { case (gx, gy, gz, vox) =>
-      (0L until TFrames).map { f =>
-        val shifted = vox.zipWithIndex.map { case (v, i) =>
-          val x = gx * cs1.x + i % cs1.x
-          val y = gy * cs1.y + (i / cs1.x) % cs1.y
-          val z = gz * cs1.z + i / (cs1.x * cs1.y)
-          if (x < GSX && y < GSY && z < GSZ) v + f else 0L
-        }
-        (f, 0L, gx, gy, gz, shifted)
-      }
-    }.toDF("tc", "cc", "gx", "gy", "gz", "vox")
+    val size1 = Vec3(GSX, GSY, GSZ)
+    halfGridChunks(s, cs1).as[(Long, Long, Long, Array[Long])]
+      .flatMap { case (gx, gy, gz, vox) =>
+        (0L until TFrames).map(f => (f, 0L, gx, gy, gz,
+          shiftInBounds(Vec3(gx, gy, gz), vox, cs1, size1, f)))
+      }.toDF("tc", "cc", "gx", "gy", "gz", "vox")
   }
 
   // ---- zarr2 consolidated-metadata sibling (.zmetadata): the same
@@ -581,23 +392,14 @@ object Zarr3Queries {
 
   def ensureZarr2Cons(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|z2cons-v1"
-    val marker = Paths.get(Root, ".built_z2cons_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val gRoot = Paths.get(Zarr2ConsDir)
-    if (Files.exists(gRoot)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(gRoot).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_z2cons_from", "|z2cons-v1", Zarr2ConsDir) {
+      graft.sources.Zarr2IO.writeMetaOmeGroup(Zarr2ConsDir, z2GroupMips)
+      graft.sources.Zarr2IO.writeChunksOme(halfGridFrames(s),
+        s"$Zarr2ConsDir/1", z2GroupMips(1))
+      graft.sources.Zarr2IO.writeConsolidated(Zarr2ConsDir)
+      Seq(".zattrs", "0/.zarray", "1/.zarray").foreach(f =>
+        Files.deleteIfExists(Paths.get(Zarr2ConsDir, f)))
     }
-    graft.sources.Zarr2IO.writeMetaOmeGroup(Zarr2ConsDir, z2GroupMips)
-    graft.sources.Zarr2IO.writeChunksOme(halfGridFrames(s),
-      s"$Zarr2ConsDir/1", z2GroupMips(1))
-    graft.sources.Zarr2IO.writeConsolidated(Zarr2ConsDir)
-    Seq(".zattrs", "0/.zarray", "1/.zarray").foreach(f =>
-      Files.deleteIfExists(Paths.get(Zarr2ConsDir, f)))
-    Files.writeString(marker, want)
   }
 
   // ---- zarr3 OME-NGFF 0.5 multiscale GROUP sibling: v3 group node
@@ -618,32 +420,20 @@ object Zarr3Queries {
 
   def ensureZarr3Group(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|z3grp-v1"
-    val marker = Paths.get(Root, ".built_z3grp_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val gRoot = Paths.get(Zarr3GroupDir)
-    if (Files.exists(gRoot)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(gRoot).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_z3grp_from", "|z3grp-v1", Zarr3GroupDir) {
+      Zarr3IO.writeMetaGroup(Zarr3GroupDir, z3GroupMips)
+      Zarr3IO.writeChunks(fullChunks(s), s"$Zarr3GroupDir/0", z3GroupMips(0))
+      Zarr3IO.writeChunks(halfGridChunks(s, z3GroupMips(1).chunkShape),
+        s"$Zarr3GroupDir/1", z3GroupMips(1))
     }
-    import s.implicits._
-    Zarr3IO.writeMetaGroup(Zarr3GroupDir, z3GroupMips)
-    Zarr3IO.writeChunks(fullChunks(s), s"$Zarr3GroupDir/0", z3GroupMips(0))
-    Zarr3IO.writeChunks(
-      halfGridChunks(s, z3GroupMips(1).chunkShape)
-        .toDF("gx", "gy", "gz", "vox"),
-      s"$Zarr3GroupDir/1", z3GroupMips(1))
-    Files.writeString(marker, want)
   }
 
   // ---- n5 scale-pyramid sibling (the n5-viewer/bigdataviewer
   // multiScale convention): root attributes.json multiScale=true,
   // levels s0/s1 with downsamplingFactors; mip 1 is the same
   // stride-2 pick as the zarr group fixtures, but n5 blocks are
-  // CLAMPED at the edges (not fill-padded), so the level gets its
-  // own clamped block builder. Only s1 blocks are materialized. ----
+  // CLAMPED at the edges (not fill-padded). Only s1 blocks are
+  // materialized. ----
 
   val N5GroupDir = s"$Root/n5group"
 
@@ -655,52 +445,16 @@ object Zarr3Queries {
       dimensions = Vec3(GSX, GSY, GSZ), blockSize = Vec3(CX, CY, CZ),
       dataType = "uint32", compression = "gzip"))
 
-  /** CLAMPED half-grid n5 blocks of the stride-2 mip-1 pick. */
-  private def halfGridN5Blocks(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val m1 = n5GroupMips(1)
-    val bounds = Bbox(Vec3(0, 0, 0), m1.dimensions)
-    val bs = m1.blockSize
-    s.read.parquet(RealLayerQueries.VoxelsDir)
-      .filter(col("x") % 2 === 0 && col("y") % 2 === 0 && col("z") % 2 === 0)
-      .select((col("x") / 2).cast("long").as("x"),
-        (col("y") / 2).cast("long").as("y"),
-        (col("z") / 2).cast("long").as("z"), col("label"))
-      .select(Derived.idiv(col("x"), bs.x).as("gx"),
-        Derived.idiv(col("y"), bs.y).as("gy"),
-        Derived.idiv(col("z"), bs.z).as("gz"),
-        col("x"), col("y"), col("z"), col("label"))
-      .groupBy("gx", "gy", "gz")
-      .agg(collect_list(struct(col("x"), col("y"), col("z"), col("label")))
-        .as("vox"))
-      .as[(Long, Long, Long, Seq[(Long, Long, Long, Long)])]
-      .map { case (gx, gy, gz, vs) =>
-        val cb = Geom.chunkBbox(Vec3(gx, gy, gz), bounds, bs)
-        val arr = new Array[Long](cb.volume.toInt)
-        vs.foreach { case (x, y, z, l) =>
-          arr(((x - cb.minpt.x) + cb.size.x * ((y - cb.minpt.y) +
-            cb.size.y * (z - cb.minpt.z))).toInt) = l
-        }
-        (gx, gy, gz, arr.toSeq)
-      }.toDF("gx", "gy", "gz", "vox")
-  }
-
   def ensureN5Group(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|n5grp-v1"
-    val marker = Paths.get(Root, ".built_n5grp_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val gRoot = Paths.get(N5GroupDir)
-    if (Files.exists(gRoot)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(gRoot).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_n5grp_from", "|n5grp-v1", N5GroupDir) {
+      val m1 = n5GroupMips(1)
+      graft.sources.N5IO.writeMetaPyramid(N5GroupDir, n5GroupMips)
+      graft.sources.N5IO.writeBlocks(
+        Fixtures.gather(RealLayerQueries.strideTwo(sidecar(s)), m1.blockSize,
+          Some(m1.dimensions)),
+        N5GroupDir, m1, ds = "s1")
     }
-    graft.sources.N5IO.writeMetaPyramid(N5GroupDir, n5GroupMips)
-    graft.sources.N5IO.writeBlocks(halfGridN5Blocks(s), N5GroupDir,
-      n5GroupMips(1), ds = "s1")
-    Files.writeString(marker, want)
   }
 
   // ---- zarr3 consolidated-metadata sibling: the same OME-NGFF 0.5
@@ -713,26 +467,14 @@ object Zarr3Queries {
 
   def ensureZarr3Cons(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|z3cons-v1"
-    val marker = Paths.get(Root, ".built_z3cons_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val gRoot = Paths.get(Zarr3ConsDir)
-    if (Files.exists(gRoot)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(gRoot).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_z3cons_from", "|z3cons-v1", Zarr3ConsDir) {
+      Zarr3IO.writeMetaGroup(Zarr3ConsDir, z3GroupMips)
+      Zarr3IO.writeChunks(halfGridChunks(s, z3GroupMips(1).chunkShape),
+        s"$Zarr3ConsDir/1", z3GroupMips(1))
+      Zarr3IO.writeConsolidatedGroup(Zarr3ConsDir)
+      Seq("0", "1").foreach(p =>
+        Files.deleteIfExists(Paths.get(Zarr3ConsDir, p, "zarr.json")))
     }
-    import s.implicits._
-    Zarr3IO.writeMetaGroup(Zarr3ConsDir, z3GroupMips)
-    Zarr3IO.writeChunks(
-      halfGridChunks(s, z3GroupMips(1).chunkShape)
-        .toDF("gx", "gy", "gz", "vox"),
-      s"$Zarr3ConsDir/1", z3GroupMips(1))
-    Zarr3IO.writeConsolidatedGroup(Zarr3ConsDir)
-    Seq("0", "1").foreach(p =>
-      Files.deleteIfExists(Paths.get(Zarr3ConsDir, p, "zarr.json")))
-    Files.writeString(marker, want)
   }
 
   // ---- n5 xz sibling (org.tukaani LZMA2 stream — completes the
@@ -746,19 +488,10 @@ object Zarr3Queries {
 
   def ensureN5Xz(s: SparkSession, sfDir: String): Unit = synchronized {
     ensureN5(s, sfDir)
-    val want = RealLayerQueries.stamp + "|xz-v1"
-    val marker = Paths.get(Root, ".built_n5xz_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val n5root = Paths.get(N5XzDir)
-    if (Files.exists(n5root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(n5root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_n5xz_from", "|xz-v1", N5XzDir) {
+      graft.sources.N5IO.writeMeta(N5XzDir, n5XzMeta)
+      graft.sources.N5IO.writeBlocks(n5Blocks(s), N5XzDir, n5XzMeta)
     }
-    graft.sources.N5IO.writeMeta(N5XzDir, n5XzMeta)
-    graft.sources.N5IO.writeBlocks(n5Blocks(s), N5XzDir, n5XzMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- zarr2 blosc sibling (zarr-python v2's DEFAULT compressor:
@@ -774,19 +507,11 @@ object Zarr3Queries {
 
   def ensureZarr2Blosc(s: SparkSession, sfDir: String): Unit = synchronized {
     ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|blosc-v2" // v2: DONT_SPLIT flag stamped in frames
-    val marker = Paths.get(Root, ".built_z2blosc_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val z2root = Paths.get(Zarr2BloscDir)
-    if (Files.exists(z2root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(z2root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    // v2: DONT_SPLIT flag stamped in frames
+    derived(".built_z2blosc_from", "|blosc-v2", Zarr2BloscDir) {
+      graft.sources.Zarr2IO.writeMeta(Zarr2BloscDir, z2BloscMeta)
+      graft.sources.Zarr2IO.writeChunks(fullChunks(s), Zarr2BloscDir, z2BloscMeta)
     }
-    graft.sources.Zarr2IO.writeMeta(Zarr2BloscDir, z2BloscMeta)
-    graft.sources.Zarr2IO.writeChunks(fullChunks(s), Zarr2BloscDir, z2BloscMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- zarr2 zstd sibling (numcodecs Zstd id — the common
@@ -802,19 +527,10 @@ object Zarr3Queries {
 
   def ensureZarr2Zstd(s: SparkSession, sfDir: String): Unit = synchronized {
     ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|z2zstd-v1"
-    val marker = Paths.get(Root, ".built_z2zstd_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val z2root = Paths.get(Zarr2ZstdDir)
-    if (Files.exists(z2root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(z2root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    derived(".built_z2zstd_from", "|z2zstd-v1", Zarr2ZstdDir) {
+      graft.sources.Zarr2IO.writeMeta(Zarr2ZstdDir, z2ZstdMeta)
+      graft.sources.Zarr2IO.writeChunks(fullChunks(s), Zarr2ZstdDir, z2ZstdMeta)
     }
-    graft.sources.Zarr2IO.writeMeta(Zarr2ZstdDir, z2ZstdMeta)
-    graft.sources.Zarr2IO.writeChunks(fullChunks(s), Zarr2ZstdDir, z2ZstdMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- zarr3 blosc sibling (v3 blosc codec, string shuffle enum) ----
@@ -827,20 +543,11 @@ object Zarr3Queries {
 
   def ensureZarr3Blosc(s: SparkSession, sfDir: String): Unit = synchronized {
     RealLayerQueries.ensure(s, sfDir)
-    val want = RealLayerQueries.stamp + "|blosc-v2" // v2: DONT_SPLIT flag stamped in frames
-    val marker = Paths.get(Root, ".built_z3blosc_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val arrP = Paths.get(Zarr3BloscDir)
-    if (Files.exists(arrP)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(arrP).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    // v2: DONT_SPLIT flag stamped in frames
+    derived(".built_z3blosc_from", "|blosc-v2", Zarr3BloscDir) {
+      Zarr3IO.writeMeta(Zarr3BloscDir, zBloscMeta)
+      Zarr3IO.writeChunks(fullChunks(s), Zarr3BloscDir, zBloscMeta)
     }
-    Files.createDirectories(Paths.get(Root))
-    Zarr3IO.writeMeta(Zarr3BloscDir, zBloscMeta)
-    Zarr3IO.writeChunks(fullChunks(s), Zarr3BloscDir, zBloscMeta)
-    Files.writeString(marker, want)
   }
 
   // ---- n5 blosc sibling (n5-blosc extension compression type) ----
@@ -853,45 +560,18 @@ object Zarr3Queries {
 
   def ensureN5Blosc(s: SparkSession, sfDir: String): Unit = synchronized {
     ensureN5(s, sfDir)
-    val want = RealLayerQueries.stamp + "|blosc-v2" // v2: DONT_SPLIT flag stamped in frames
-    val marker = Paths.get(Root, ".built_n5blosc_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val n5root = Paths.get(N5BloscDir)
-    if (Files.exists(n5root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(n5root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    // v2: DONT_SPLIT flag stamped in frames
+    derived(".built_n5blosc_from", "|blosc-v2", N5BloscDir) {
+      graft.sources.N5IO.writeMeta(N5BloscDir, n5BloscMeta)
+      graft.sources.N5IO.writeBlocks(n5Blocks(s), N5BloscDir, n5BloscMeta)
     }
-    graft.sources.N5IO.writeMeta(N5BloscDir, n5BloscMeta)
-    graft.sources.N5IO.writeBlocks(n5Blocks(s), N5BloscDir, n5BloscMeta)
-    Files.writeString(marker, want)
   }
 
   def ensureZarr2(s: SparkSession, sfDir: String): Unit = synchronized {
-    ensure(s, sfDir) // reuses the zarr3 full-chunk assembly below
-    val want = RealLayerQueries.stamp
-    val marker = Paths.get(Root, ".built_z2_from")
-    if (Files.exists(marker) && Files.readString(marker) == want) return
-    FixtureLog.rebuild(marker)
-    val z2root = Paths.get(Zarr2Dir)
-    if (Files.exists(z2root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(z2root).iterator.asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
-    graft.sources.Zarr2IO.writeMeta(Zarr2Dir, z2meta)
-    graft.sources.Zarr2IO.writeChunks(fullChunks(s), Zarr2Dir, z2meta)
-    Files.writeString(marker, want)
-  }
-
-  /** Delete a directory tree if present (fresh round-trip targets). */
-  private def rmTree(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator.asScala.toSeq.reverse
-        .foreach(q => Files.deleteIfExists(q))
+    ensure(s, sfDir) // reuses the zarr3 full-chunk assembly
+    derived(".built_z2_from", "", Zarr2Dir) {
+      graft.sources.Zarr2IO.writeMeta(Zarr2Dir, z2meta)
+      graft.sources.Zarr2IO.writeChunks(fullChunks(s), Zarr2Dir, z2meta)
     }
   }
 
@@ -908,7 +588,7 @@ object Zarr3Queries {
       (s, dir) => Zarr3Queries.synchronized {
         ensure(s, dir) // shared sidecar
         val target = s"$Root/rt_zarr2"
-        rmTree(target)
+        Fixtures.rmTree(target)
         val m = graft.sources.Zarr2IO.Zarr2Meta(
           shape = Vec3(SX, SY, SZ), chunkShape = Vec3(CX, CY, CZ),
           dtype = "<u4", fillValue = 0L, compressor = "zlib",
@@ -926,7 +606,7 @@ object Zarr3Queries {
       (s, dir) => Zarr3Queries.synchronized {
         ensure(s, dir)
         val target = s"$Root/rt_zarr3"
-        rmTree(target)
+        Fixtures.rmTree(target)
         val m = Zarr3Meta(
           shape = Vec3(SX, SY, SZ), chunkShape = Vec3(CX, CY, CZ),
           dataType = "uint32", fillValue = 0L, compressor = "zstd")
@@ -948,7 +628,7 @@ object Zarr3Queries {
       (s, dir) => Zarr3Queries.synchronized {
         ensure(s, dir)
         val target = s"$Root/rt_zarr3_del"
-        rmTree(target)
+        Fixtures.rmTree(target)
         val m = Zarr3Meta(
           shape = Vec3(SX, SY, SZ), chunkShape = Vec3(CX, CY, CZ),
           dataType = "uint32", fillValue = 0L, compressor = "zstd")
@@ -984,7 +664,7 @@ object Zarr3Queries {
       (s, dir) => Zarr3Queries.synchronized {
         ensure(s, dir)
         val target = s"$Root/rt_zarr3_ex"
-        rmTree(target)
+        Fixtures.rmTree(target)
         val m = Zarr3Meta(
           shape = Vec3(SX, SY, SZ), chunkShape = Vec3(CX, CY, CZ),
           dataType = "uint32", fillValue = 0L, compressor = "zstd")
@@ -1031,7 +711,7 @@ object Zarr3Queries {
       (s, dir) => Zarr3Queries.synchronized {
         ensureZstd(s, dir)
         val target = s"$Root/rt_zarr3_transcode"
-        rmTree(target)
+        Fixtures.rmTree(target)
         val m2 = Zarr3IO.readMeta(ZstdDir).copy(compressor = "gzip")
         Zarr3IO.writeMeta(target, m2)
         Zarr3IO.writeChunks(Zarr3IO.readChunksF(s, ZstdDir), target, m2)
@@ -1046,7 +726,7 @@ object Zarr3Queries {
       (s, dir) => Zarr3Queries.synchronized {
         ensure(s, dir) // shared sidecar
         val target = s"$Root/rt_zarr3_sharded"
-        rmTree(target)
+        Fixtures.rmTree(target)
         // shard synthesis (offsets, crc32c'd trailing index, inner
         // codec chain) re-runs fresh every invocation; the cutout
         // reads back through the index-driven range-read path
@@ -1062,7 +742,7 @@ object Zarr3Queries {
       (s, dir) => Zarr3Queries.synchronized {
         ensure(s, dir)
         val target = s"$Root/rt_n5"
-        rmTree(target)
+        Fixtures.rmTree(target)
         val m = graft.sources.N5IO.N5Meta(
           dimensions = Vec3(SX, SY, SZ), blockSize = Vec3(CX, CY, CZ),
           dataType = "uint32", compression = "gzip")
