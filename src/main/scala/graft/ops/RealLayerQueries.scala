@@ -669,7 +669,7 @@ object RealLayerQueries {
     // S4/J1 chunk selection as PURE SQL against the DSv2 table
     // ITSELF: the layer is registered `USING neuroglancer`, the bbox
     // arrives as WHERE chunk-key predicates (x1 > lo AND x0 < hi per
-    // axis — the overlap form NgScanBuilder.tryPush understands), and
+    // axis — an overlap form NgScanBuilder applies exactly), and
     // Catalyst's V2ScanRelationPushDown hands them to the source so
     // only intersecting grid cells are planned. The entry asserts the
     // plan's NgScan carries a NON-EMPTY PushedFilters list (also

@@ -2316,6 +2316,9 @@ object TextQueries {
           s"jsonl_export_${appId}_${java.util.UUID.randomUUID().toString.take(8)}")
         root.mkdirs()
         val rootPath = root.getAbsolutePath
+        // the returned frame reads the tree lazily, after this call; the
+        // tree goes when the JVM exits, so no session leaves one behind
+        sys.addShutdownHook(Fixtures.rmTree(rootPath))
         table(s, dir, "documents").select(col("doc_id"), col("text"),
             (col("doc_id") % 8).as("shard"))
           .repartition(8, col("shard"))

@@ -141,9 +141,11 @@ object PrecomputedIO {
       .option("fill_missing", fillMissing)
       .load(layerDir)
 
-  /** Chunk rows overlapping `bbox`; the overlap filter is pushed into
-    * the scan as planning-time grid pruning. Sharded and unsharded
-    * scales both read through this one scan. */
+  /** Chunk rows overlapping `bbox`; the scan applies the overlap
+    * filter exactly at planning time, so no post-scan `Filter` holds
+    * the bbox and the plan's generated code is the same for every
+    * request. Sharded and unsharded scales both read through this one
+    * scan. */
   private[sources] def chunksIn(spark: SparkSession, layerDir: String, bbox: Bbox,
       mip: Int, fillMissing: Boolean): DataFrame =
     readChunks(spark, layerDir, mip, fillMissing)

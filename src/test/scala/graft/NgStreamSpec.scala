@@ -235,6 +235,31 @@ class NgStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.readAllLines(journal).size() == 2)
   }
 
+  test("a micro-batch scan drops no predicate it did not evaluate") {
+    // Spark pushes no predicate into a micro-batch scan: it applies
+    // only its gx_lo..gz_hi window, so a filter narrower than the
+    // window (gx >= 1, x0 < 8) must still hold on every streamed row
+    val q = spark.readStream.format("neuroglancer")
+      .option("path", layer)
+      .option("gx_hi", "2")
+      .load().filter(col("gx") >= 1 && col("x0") < 8)
+      .select("gx", "gy", "gz")
+      .writeStream.format("memory").queryName("ng_stream_pred")
+      .outputMode("append")
+      .option("checkpointLocation", s"$dir/ckpt_pred")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val want = PrecomputedIO.readChunks(spark, layer)
+      .select("gx", "gy", "gz", "x0").collect()
+      .filter(r => r.getLong(0) <= 2 && r.getLong(0) >= 1 && r.getLong(3) < 8)
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(want.toSet == Set((1L, 0L, 0L), (1L, 1L, 0L)))
+    val got = spark.table("ng_stream_pred").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got.length == want.length && got.toSet == want.toSet)
+  }
+
   test("a stream over a sharded scale is refused, not silently empty") {
     // the stream discovers per-chunk objects; a sharded scale only has
     // shard files, which no chunk name parse accepts

@@ -72,7 +72,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"grid columns not pruned from the SQL scan: $read")
     }
     // and the rail rejects a genuinely unpushable query (payload-only
-    // predicate -> nothing for tryPush to translate)
+    // predicate -> nothing for the scan to apply)
     spark.sql(s"""CREATE OR REPLACE TEMPORARY VIEW graft_ng_unpushed
       |USING neuroglancer OPTIONS (
       |  path '${graft.ops.RealLayerQueries.LayerDir}', mip '0')""".stripMargin)
