@@ -106,10 +106,6 @@ object Bench {
       gcMs: Long, load: Double, ioMs: Long)
   private val mbpsPassRecs = scala.collection.mutable.ArrayBuffer.empty[MbpsRec]
 
-  private def loadAvg(): Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .getSystemLoadAverage
-
   /** Sum of device-busy milliseconds across real block devices
     * (/proc/diskstats field 10 after the name). The per-rep DELTA
     * separates "the disk was hammered by another tenant" from a real
@@ -246,11 +242,6 @@ object Bench {
       ("c128", "c128", Vec3(128, 128, 128), "gzip"),
       ("br_c128", "c128", Vec3(128, 128, 128), "br"))
     val mbpsReps = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val gcBeansMbps = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-    }
-    def gcNowMs(): Long = gcBeansMbps.map(_.getCollectionTime.max(0L)).sum
     readFamilies.foreach { case (key, cs, gz) =>
       val dir = ensureLayer(spark, s"black_u8_$key", cs, gz)
       cutoutMBps(spark, dir) // warm-up (JIT + page cache)
@@ -262,19 +253,19 @@ object Bench {
       // the same heap state, which is what "warm rep" should mean).
       mbpsReps(s"read_$key") = (1 to 9).map { rep =>
         System.gc()
-        val gc0 = gcNowMs(); val ld = loadAvg(); val io0 = diskBusyMs()
+        val gc0 = obs.gcMs(); val ld = obs.loadAvg(); val io0 = diskBusyMs()
         val v = cutoutMBps(spark, dir)
-        mbpsPassRecs += MbpsRec(s"read_$key", rep, v, gcNowMs() - gc0, ld,
+        mbpsPassRecs += MbpsRec(s"read_$key", rep, v, obs.gcMs() - gc0, ld,
           diskBusyMs() - io0)
         v
       }
       writeFamilies.filter(_._2 == key).foreach { case (wk, _, wcs, method) =>
-        val gc0 = gcNowMs(); val ld = loadAvg(); val io0 = diskBusyMs()
+        val gc0 = obs.gcMs(); val ld = obs.loadAvg(); val io0 = diskBusyMs()
         val reps = writeMBps(spark, wk, wcs, method)
         val ioAll = diskBusyMs() - io0 // one delta covers the 5-rep block
         reps.zipWithIndex.foreach { case (v, i) =>
           mbpsPassRecs += MbpsRec(s"write_$wk", i + 1, v,
-            if (i == 0) gcNowMs() - gc0 else -1L, ld,
+            if (i == 0) obs.gcMs() - gc0 else -1L, ld,
             if (i == 0) ioAll else -1L)
         }
         mbpsReps(s"write_$wk") = reps
@@ -342,80 +333,33 @@ object Bench {
     // runs showed medians inflated 3-4x over min on entries whose code
     // hadn't changed, with the fixture-rebuild breadcrumb empty. Record
     // for every timed invocation its pass, position, predecessor, wall,
-    // JVM-GC-time delta, and any fixture rebuild inside the window, so
-    // a distorted number carries its own attribution instead of needing
-    // a forensic session.
+    // JVM-GC-time delta, any fixture rebuild inside the window and its
+    // Spark work (r16 verdict item 1: jobs, task_ms and the job_ms union
+    // from obs.measure, so "the wall is a job-submission floor" is
+    // checkable in-suite), so a distorted number carries its own
+    // attribution instead of needing a forensic session.
     case class PassRec(name: String, pass: Int, pos: Int, prev: String,
       wall: Double, gcMs: Long, rebuilds: Int, storageBytes: Long,
-      load: Double, jobs: Long, taskMs: Long, jobMs: Long)
+      load: Double, work: obs.Counts)
     val passRecs = scala.collection.mutable.ArrayBuffer.empty[PassRec]
-    // Per-entry Spark job count + executor task time (r16 verdict item
-    // 1): "the wall is a job-submission floor" claims must be checkable
-    // IN-SUITE, not only via isolated Scratch --floor reps. Events ride
-    // the async listener bus, so each entry drains the bus (BusDrain)
-    // before snapshotting — the drain happens after the wall clock
-    // stops, so it never inflates the published number.
-    @volatile var jobsSeen = 0L
-    @volatile var taskMsSeen = 0L
-    // in-job wall time: wall - job_ms = driver-side BETWEEN-job time
-    // (AQE re-planning of the remaining plan at each stage boundary) —
-    // the term that makes an iterative entry's wall exceed jobs x
-    // trivial-job floor, now measured per entry instead of inferred.
-    // job_ms is the UNION of in-job intervals, not the per-job sum:
-    // AQE materializes independent shuffle inputs (and broadcast
-    // stages) as CONCURRENT jobs, and a plain sum then exceeds the
-    // entry wall (63/1026 passes in the first r18 artifact), making
-    // the between-job term negative. The listener bus delivers events
-    // FIFO on one thread, so a depth counter over event times measures
-    // the union exactly.
-    @volatile var jobMsSeen = 0L
-    var activeJobs = 0
-    var unionStartMs = 0L
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobsSeen += 1
-          if (activeJobs == 0) unionStartMs = j.time
-          activeJobs += 1
-        }
-        override def onJobEnd(
-            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          activeJobs = math.max(0, activeJobs - 1)
-          if (activeJobs == 0)
-            jobMsSeen += math.max(0L, j.time - unionStartMs)
-        }
-        override def onStageCompleted(
-            st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          taskMsSeen += st.stageInfo.taskMetrics.executorRunTime
-      })
-    val gcBeans = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-    }
-    def gcTimeMs(): Long = gcBeans.map(_.getCollectionTime.max(0L)).sum
     // In-run per-job floor probe (r17 verdict item 3): multi-exchange
     // entries' walls at bench scale are jobs x per-job overhead, but the
-    // overhead itself moves with ambient box load — an isolated Scratch
-    // --floor on a quiet box under-explains a loaded driver run. Measure
-    // the floor INSIDE the same session, once per pass: N trivial
+    // overhead itself moves with ambient box load — an isolated
+    // graft.obs.Probe on a quiet box under-explains a loaded bench run.
+    // Measure the floor INSIDE the same session, once per pass: N trivial
     // shuffle actions (32-partition exchange + count, the same
     // AQE-stage shape that dominates these entries' job streams),
-    // seconds / jobs-submitted from the same listener. Published as
-    // job_floor_s per pass so "wall ~= jobs x same-run floor" is
-    // checkable from BENCH_DETAIL alone.
+    // seconds / jobs-submitted. Published as job_floor_s per pass so
+    // "wall ~= jobs x same-run floor" is checkable from BENCH_DETAIL alone.
     def measureJobFloor(): Double = {
-      org.apache.spark.graftbridge.BusDrain.drain(spark.sparkContext)
-      val j0 = jobsSeen
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 6) {
-        spark.range(0, 32, 1, 32).repartition(32).count()
-        i += 1
+      val m = obs.measure(spark) {
+        var i = 0
+        while (i < 6) {
+          spark.range(0, 32, 1, 32).repartition(32).count()
+          i += 1
+        }
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graftbridge.BusDrain.drain(spark.sparkContext)
-      dt / math.max(1L, jobsSeen - j0)
+      m.wallS / math.max(1L, m.counts.jobs)
     }
     if (passes > 0) measureJobFloor() // JIT-warm the probe shape, untimed
     val passFloors = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -433,30 +377,23 @@ object Bench {
       var prev = "<pass-start>"
       order.zipWithIndex.foreach { case ((name, fn), pos) =>
         val rb0 = graft.ops.FixtureLog.rebuildsSince(0L).size
-        val gc0 = gcTimeMs()
-        org.apache.spark.graftbridge.BusDrain.drain(spark.sparkContext)
-        val j0 = jobsSeen; val tm0 = taskMsSeen; val jm0 = jobMsSeen
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case e: Throwable =>
-          if (!errs.contains(name))
-            errs(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        val gc0 = obs.gcMs()
+        val m = obs.measure(spark) {
+          try { fn(spark, sfDir).count() }
+          catch { case e: Throwable =>
+            if (!errs.contains(name))
+              errs(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+          }
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        timings(name) = timings.getOrElse(name, Vector.empty) :+ dt
-        // drain AFTER the clock stops: attribution cost, not entry cost
-        org.apache.spark.graftbridge.BusDrain.drain(spark.sparkContext)
-        val dJobs = jobsSeen - j0; val dTaskMs = taskMsSeen - tm0
-        val dJobMs = jobMsSeen - jm0
+        timings(name) = timings.getOrElse(name, Vector.empty) :+ m.wallS
         // release this invocation's leaked checkpoint/cache blocks
         // (memo-pinned and fixture-era blocks survive), THEN record the
         // resident storage footprint — the breadcrumb that proves (or
         // refutes) block accumulation on any future in-run degradation
         graft.ops.BlockPins.sweep(spark, baselineIds)
-        passRecs += PassRec(name, pass, pos, prev, dt, gcTimeMs() - gc0,
+        passRecs += PassRec(name, pass, pos, prev, m.wallS, obs.gcMs() - gc0,
           graft.ops.FixtureLog.rebuildsSince(0L).size - rb0,
-          graft.ops.BlockPins.storageBytes(spark), loadAvg(),
-          dJobs, dTaskMs, dJobMs)
+          graft.ops.BlockPins.storageBytes(spark), obs.loadAvg(), m.counts)
         prev = name
       }
       System.gc()
@@ -495,29 +432,29 @@ object Bench {
         while (attempt < 3 && budget > 0 &&
             spreadOf(timings(name)) > SpreadTarget) {
           attempt += 1; budget -= 1
-          val gc0 = gcTimeMs(); val ld = loadAvg()
-          val t0 = System.nanoTime()
-          try { byName(name)(spark, sfDir).count() }
-          catch { case _: Throwable => () } // already recorded in the pass loop
-          val dt = (System.nanoTime() - t0) / 1e9
+          val gc0 = obs.gcMs(); val ld = obs.loadAvg()
+          val dt = obs.measure(spark) {
+            try { byName(name)(spark, sfDir).count() }
+            catch { case _: Throwable => () } // already recorded in the pass loop
+          }.wallS
           graft.ops.BlockPins.sweep(spark, baselineIds)
           val oldMax = timings(name).max
           val (folded, replaced) = foldRetry(timings(name), dt)
           timings(name) = folded
           retryRecs += RetryRec(name, attempt, oldMax, dt,
-            gcTimeMs() - gc0, ld, replaced)
+            obs.gcMs() - gc0, ld, replaced)
         }
       }
     }
     val results: Seq[(String, Double)] =
       timings.toSeq.map { case (k, v) => k -> median(v) }
     // per-entry job-count/task-time medians across passes: the in-suite
-    // counterpart of Scratch --floor (jobs x per-job overhead explains a
+    // counterpart of graft.obs.Probe (jobs x per-job overhead explains a
     // multi-exchange entry's wall at bench scale)
     val jobsByName = passRecs.groupBy(_.name).map { case (k, rs) =>
-      k -> (median(rs.map(_.jobs.toDouble).toSeq).toLong,
-            median(rs.map(_.taskMs.toDouble).toSeq).toLong,
-            median(rs.map(_.jobMs.toDouble).toSeq).toLong)
+      k -> (median(rs.map(_.work.jobs.toDouble).toSeq).toLong,
+            median(rs.map(_.work.taskMs.toDouble).toSeq).toLong,
+            median(rs.map(_.work.jobMs.toDouble).toSeq).toLong)
     }
     val statsJson = timings.map { case (k, v) =>
       val pre = preRetryTimings.get(k).map(median)
@@ -549,7 +486,7 @@ object Bench {
       s""""prev":"${jstr(r.prev)}","wall":${num(r.wall, 3)},""" +
       s""""gc_ms":${r.gcMs},"rebuilds":${r.rebuilds},""" +
       s""""storage_bytes":${r.storageBytes},"load_avg":${num(r.load, 2)},""" +
-      s""""jobs":${r.jobs},"task_ms":${r.taskMs},"job_ms":${r.jobMs}}"""
+      s""""jobs":${r.work.jobs},"task_ms":${r.work.taskMs},"job_ms":${r.work.jobMs}}"""
     }.mkString("[", ",", "]")
     // outlier-retry audit trail: raw pass walls stay in query_passes;
     // query_stats reflect post-retry values, and this list is the proof
@@ -612,8 +549,8 @@ object Bench {
       s""""lanes":{"batch":${batchLane.size},"stream":${streamLane.size},""" +
       s""""note":"per pass: batch lane shuffled first, st* lane shuffled last — """ +
       s"""micro-batch state-store teardown residue stays off batch timings",""" +
-      // Local fixed-cost floors, measured r15 via `Scratch --floor`
-      // (SparkListener job/stage/task attribution, local[32], sf0.1) —
+      // Local fixed-cost floors, measured r15 by isolated job/stage/task
+      // attribution reps (what graft.obs.Probe prints; local[32], sf0.1) —
       // recorded so cross-round regression calls on these entries stop
       // re-investigating wall times that are job-count x submission
       // overhead, not data terms.
@@ -623,7 +560,7 @@ object Bench {
       s"""j6b_leaves_stop_layer = 13 frontier-checkpoint jobs x ~0.07 s """ +
       s"""(task_time 0.15 s); j5f_lineage_window = 23 jobs x ~0.04 s; """ +
       s"""graph_pagerank3 = 15 jobs, wall 1.19-1.30 s isolated (r18 """ +
-      s"""Scratch --floor; job-structure variants measured worse: """ +
+      s"""isolated reps; job-structure variants measured worse: """ +
       s"""fewer checkpoints 14 jobs/1.4 s, split deg 17 jobs/1.3 s, """ +
       s"""shuffle_hash rounds 1.6 s — 15 is this plan's optimum); """ +
       s"""per-entry jobs/task_ms/job_ms ride query_stats and """ +

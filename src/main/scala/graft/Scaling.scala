@@ -60,30 +60,14 @@ object Scaling {
     val medians = scala.collection.mutable.Map[(String, String), Double]()
     val rows = scala.collection.mutable.Map[(String, String), Long]()
     // jobs/task_ms attribution per entry per sf (r17 verdict item 2):
-    // the Bench listener ported here so composed-run outliers carry
-    // their own evidence IN the artifact — task_ms flat while wall
-    // inflates proves session contention (block-manager/CPU residue
-    // from hundreds of neighbors), task_ms growing with wall proves a
-    // real data term. Same BusDrain discipline as Bench: drain before
-    // the snapshot, after the clock stops.
+    // composed-run outliers carry their own evidence IN the artifact —
+    // task_ms flat while wall inflates proves session contention
+    // (block-manager/CPU residue from hundreds of neighbors), task_ms
+    // growing with wall proves a real data term. Each rep is an
+    // obs.measure, as in Bench.
     val jobsMed = scala.collection.mutable.Map[(String, String), Long]()
     val taskMsMed = scala.collection.mutable.Map[(String, String), Long]()
     val loadMed = scala.collection.mutable.Map[(String, String), Double]()
-    @volatile var jobsSeen = 0L
-    @volatile var taskMsSeen = 0L
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobsSeen += 1
-        override def onStageCompleted(
-            st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          taskMsSeen += st.stageInfo.taskMetrics.executorRunTime
-      })
-    def loadAvg(): Double =
-      try java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-      catch { case _: Throwable => -1.0 }
     for (sfDir <- sfs) {
       graft.ops.Fixtures.ensureAll(spark, sfDir)
       // warm pass: fixture (re)builds at this sf + JIT, untimed
@@ -97,14 +81,10 @@ object Scaling {
         // broken entry must not void the other ratios
         try {
           val recs = (1 to 3).map { _ =>
-            org.apache.spark.graftbridge.BusDrain.drain(spark.sparkContext)
-            val j0 = jobsSeen; val tm0 = taskMsSeen; val ld = loadAvg()
-            val t0 = System.nanoTime()
-            val c = SparkEntry.queries(n)(spark, sfDir).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            rows((n, sfDir)) = c
-            org.apache.spark.graftbridge.BusDrain.drain(spark.sparkContext)
-            (dt, jobsSeen - j0, taskMsSeen - tm0, ld)
+            val ld = obs.loadAvg()
+            val m = obs.measure(spark)(SparkEntry.queries(n)(spark, sfDir).count())
+            rows((n, sfDir)) = m.value
+            (m.wallS, m.counts.jobs, m.counts.taskMs, ld)
           }
           val reps = recs.map(_._1).sorted
           def medL(v: Seq[Long]): Long = v.sorted.apply(v.size / 2)

@@ -111,43 +111,12 @@ object ConnectedComponents {
     val rootComp =
       if (localN == 0L)
         localMap.select(col("vid"), col("vid").as("comp"))
-      else iterateSized(s, stitch, rootNodes, localN)
+      else iterateMin(stitch, rootNodes)
     val mapped = localMap
       .join(rootComp.withColumnRenamed("vid", "lroot"), Seq("lroot"))
       .groupBy("vid").agg(min("comp").as("comp"))
     nodes.select(col("vid")).join(mapped, Seq("vid"), "left")
       .select(col("vid"), coalesce(col("comp"), col("vid")).as("comp"))
-  }
-
-  /** Size the iterative loop's execution to the OBSERVED state
-    * (localN (vid, lroot) rows × ~24 B, already measured by the
-    * checkpoint job's accumulator): the stitch/root graph is the
-    * contracted remainder of the partition-local union-find, and at
-    * bench scale every AQE exchange materialization inside a round is
-    * a whole job submission (~6 jobs/round of 1-task stages measured
-    * on a6c). When the sized width collapses below the core count the
-    * loop is pinned — AQE off + state-sized static shuffle width — so
-    * each round runs as ONE checkpoint job. At real scale the sizing
-    * rule returns the parallelism cap, the pin never engages, and AQE
-    * keeps its skew-split/coalesce protections for the big-graph
-    * rounds (the conf knobs are ScanSizing's, already parameterised).
-    */
-  private def iterateSized(s: SparkSession, edges0: DataFrame,
-      nodes: DataFrame, localN: Long): DataFrame = {
-    val width = graft.sources.ScanSizing.rowWidth(s, localN, 24L)
-    val pin = width < math.max(1, s.sparkContext.defaultParallelism)
-    if (!pin) iterateMin(edges0, nodes)
-    else {
-      val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions", width.toString)
-      try iterateMin(edges0, nodes)
-      finally {
-        s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-    }
   }
 
   /** The iterative core: min propagation + pointer jumping via the

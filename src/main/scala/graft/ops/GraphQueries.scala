@@ -88,13 +88,7 @@ object GraphQueries {
         // otherwise re-derive it from the corpus scan per step (10 scans
         // in the plan — at 100 TB that's 10 reads of the fact table).
         // Same localCheckpoint pattern as ConnectedComponents' rounds.
-        // The edge count rides the checkpoint job (observe — the
-        // fixpointObserved convention) and sizes the loop below.
-        val ePre = edges(s, dir)
-          .observe("graft_pr_edges", count(lit(1)).as("n"))
-        val e = ePre.localCheckpoint()
-        val nEdges = ePre.queryExecution
-          .observedMetrics("graft_pr_edges").getLong(0)
+        val e = edges(s, dir).localCheckpoint()
         val bidir = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
         // DEGREE-ANNOTATED adjacency, materialized once: degrees join
         // the edge list a single time here instead of once per round
@@ -104,45 +98,19 @@ object GraphQueries {
         // derives from the distinct u's, and no per-round rebase join
         // is needed — the contribution agg already covers every node,
         // so the oracle's LEFT JOIN + coalesce(inw, 0) never fires.
-        def plan(adj: org.apache.spark.sql.DataFrame,
-            materialize: Boolean) =
-          Frontier.unrolled(
-            adj.select(col("u").as("node")).distinct()
-              .withColumn("pr", lit(1000000L)),
-            rounds = 3, materializeFinal = materialize) {
-            (pr, _) =>
-              adj
-                .join(pr.select(col("node").as("u"), col("pr")), Seq("u"))
-                .select(col("v").as("node"), expr("pr div deg").as("w"))
-                .groupBy("node").agg(
-                  (lit(150000L) + expr("85 * sum(w) div 100")).as("pr"))
-          }
-        def adj() = bidir
+        val adj = bidir
           .join(bidir.groupBy("u").agg(count(lit(1)).as("deg")), Seq("u"))
           .localCheckpoint()
-        // fixed-shape 3-round loop: at bench scale AQE re-plans (and
-        // submits a whole job) at every exchange of the unrolled plan —
-        // 15 jobs measured for a loop whose shape never changes
-        // (VERDICT r18 item 6). When the OBSERVED edge count sizes the
-        // graph below the core count, pin the loop: AQE off +
-        // graph-sized static shuffle width, materialized INSIDE the
-        // scope so the pinned conf governs execution (one job instead
-        // of a replan per exchange). At real scale the sizing rule
-        // returns the parallelism cap, the pin never engages, and the
-        // plan (incl. AQE skew protection) is exactly the r18 one.
-        val width = graft.sources.ScanSizing.rowWidth(s, nEdges, 16L)
-        val pin = width < math.max(1, s.sparkContext.defaultParallelism)
-        if (!pin) plan(adj(), materialize = false)
-        else {
-          val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-          val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          s.conf.set("spark.sql.shuffle.partitions", width.toString)
-          try plan(adj(), materialize = true)
-          finally {
-            s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-            s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          }
+        Frontier.unrolled(
+          adj.select(col("u").as("node")).distinct()
+            .withColumn("pr", lit(1000000L)),
+          rounds = 3, materializeFinal = false) {
+          (pr, _) =>
+            adj
+              .join(pr.select(col("node").as("u"), col("pr")), Seq("u"))
+              .select(col("v").as("node"), expr("pr div deg").as("w"))
+              .groupBy("node").agg(
+                (lit(150000L) + expr("85 * sum(w) div 100")).as("pr"))
         }
       },
       Some(s"""WITH $EdgeCte,

@@ -91,10 +91,10 @@ object SimilarityQueries {
   }
 
   /** rag_hybrid_rrf dense arm: integer-quantized cosine from the
-    * memoized corpus table, top-20 rank per query. Split out (with
-    * [[rrfLexicalArm]]) so the harness can time each arm in isolation.
+    * memoized corpus table, top-20 rank per query; fused with
+    * [[rrfLexicalArm]] by the entry.
     */
-  private[graft] def rrfDenseArm(s: org.apache.spark.sql.SparkSession,
+  private def rrfDenseArm(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val e = quantNorm(s, dir)
     val qs = e.filter(col("vec_id").isin(7L, 42L, 128L))
@@ -118,7 +118,7 @@ object SimilarityQueries {
     * TextQueries.bm25Stats memo, materialized once per corpus snapshot
     * instead of re-tokenized per consumer.
     */
-  private[graft] def rrfLexicalArm(s: org.apache.spark.sql.SparkSession,
+  private def rrfLexicalArm(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val docs = table(s, dir, "documents").select("doc_id", "text")
     val (tf, dl, dfT, stats) = TextQueries.bm25Stats(s, dir)

@@ -2,16 +2,16 @@ package org.apache.spark.graftbridge
 
 import org.apache.spark.SparkContext
 
-/** Bench-only bridge to the `private[spark]` listener-bus drain.
+/** Bridge to the `private[spark]` listener-bus drain; its one caller is
+  * `graft.obs.measure`.
   *
-  * The bench harness attributes each timed entry's wall time to its
-  * Spark job count (scheduler-floor attribution, r16 verdict item 1).
-  * Job/stage events ride an ASYNC bus, so a per-entry counter snapshot
-  * taken right after `count()` returns can misattribute the tail of an
-  * entry's jobs to its successor. `LiveListenerBus.waitUntilEmpty` is
-  * exactly the drain Spark's own test harness uses; it is
-  * `private[spark]`, hence this one-object bridge package. Not used on
-  * any query execution path — harness instrumentation only.
+  * `graft.obs` attributes a timed body's wall time to the Spark jobs it
+  * submitted. Job/stage events ride an ASYNC bus, so a counter snapshot
+  * taken right after the body returns can misattribute the tail of its
+  * jobs to the next body. `LiveListenerBus.waitUntilEmpty` is exactly
+  * the drain Spark's own test harness uses; it is `private[spark]`,
+  * hence this one-object bridge package. Not used on any query
+  * execution path — harness instrumentation only.
   */
 object BusDrain {
   /** Wait until the listener bus has dispatched all posted events.

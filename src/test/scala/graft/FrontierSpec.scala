@@ -101,36 +101,26 @@ class FrontierSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fixpointObserved: metric rides the checkpoint job — no probe job") {
     val s = spark; import s.implicits._
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
+    // same halving loop as the fixpoint test: converges to all-zero
+    var prev = -1L
+    var rounds = 0
+    val out = Frontier.fixpointObserved(Seq(8L, 4L).toDF("v"),
+      sum(col("v")).as("vsum")) {
+      (st, _) => { rounds += 1; st.select((col("v") / 2).cast("long").as("v")) }
+    } { (row, _) =>
+      val sm = row.getLong(0)
+      val done = sm == prev; prev = sm; done
     }
-    s.sparkContext.addSparkListener(listener)
-    try {
-      // same halving loop as the fixpoint test: converges to all-zero
-      var prev = -1L
-      var rounds = 0
-      val out = Frontier.fixpointObserved(Seq(8L, 4L).toDF("v"),
-        sum(col("v")).as("vsum")) {
-        (st, _) => { rounds += 1; st.select((col("v") / 2).cast("long").as("v")) }
-      } { (row, _) =>
-        val sm = row.getLong(0)
-        val done = sm == prev; prev = sm; done
-      }
-      assert(out.as[Long].collect().toSet == Set(0L))
-      // 8,4 -> 4,2 -> 2,1 -> 1,0 -> 0,0 -> 0,0 (sum repeats) = 5 rounds
-      assert(rounds == 5, s"expected 5 rounds, ran $rounds")
-      val plan = out.queryExecution.optimizedPlan.toString()
-      assert(plan.contains("LogicalRDD") || plan.contains("ExistingRDD"), plan)
-      // job accounting: drain the listener bus, then re-run and count —
-      // each round must cost exactly ONE job (the checkpoint), with no
-      // separate convergence-probe job
-      org.apache.spark.graftbridge.BusDrain.drain(s.sparkContext)
-      jobs = 0
-      prev = -1L
-      var rounds2 = 0
+    assert(out.as[Long].collect().toSet == Set(0L))
+    // 8,4 -> 4,2 -> 2,1 -> 1,0 -> 0,0 -> 0,0 (sum repeats) = 5 rounds
+    assert(rounds == 5, s"expected 5 rounds, ran $rounds")
+    val plan = out.queryExecution.optimizedPlan.toString()
+    assert(plan.contains("LogicalRDD") || plan.contains("ExistingRDD"), plan)
+    // job accounting: re-run and count — each round must cost exactly
+    // ONE job (the checkpoint), with no separate convergence-probe job
+    prev = -1L
+    var rounds2 = 0
+    val jobs = graft.obs.measure(s) {
       Frontier.fixpointObserved(Seq(8L, 4L).toDF("v"),
         sum(col("v")).as("vsum")) {
         (st, _) => { rounds2 += 1; st.select((col("v") / 2).cast("long").as("v")) }
@@ -138,12 +128,11 @@ class FrontierSpec extends AnyFunSuite with BeforeAndAfterAll {
         val sm = row.getLong(0)
         val done = sm == prev; prev = sm; done
       }
-      org.apache.spark.graftbridge.BusDrain.drain(s.sparkContext)
-      // rounds + 1 (the start checkpoint); a narrow no-shuffle step is
-      // one job per checkpoint
-      assert(jobs == rounds2 + 1,
-        s"expected ${rounds2 + 1} jobs (1/round + start), saw $jobs")
-    } finally s.sparkContext.removeSparkListener(listener)
+    }.counts.jobs
+    // rounds + 1 (the start checkpoint); a narrow no-shuffle step is
+    // one job per checkpoint
+    assert(jobs == rounds2 + 1,
+      s"expected ${rounds2 + 1} jobs (1/round + start), saw $jobs")
   }
 
   test("fixpoint: maxRounds caps a non-converging loop") {

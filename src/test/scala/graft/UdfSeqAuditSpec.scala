@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * `List`, so indexed access inside a per-row kernel is O(n) per
   * element and the kernel O(n²) per row. The full-suite sf1 slope run
   * caught the skeleton family at 15–31× on 10× data from exactly this
-  * (`Scratch --udfseq` proves the runtime type). The rule: UDF
+  * (a `udf((vs: Seq[Float]) => vs.getClass.getName)` probe returns a
+  * `List` class). The rule: UDF
   * parameters over array columns take `Array[T]` (arrives as a
   * primitive array — O(1), unboxed). Sequential-only iteration over a
   * List is linear but still pays boxing; there is no good reason to
@@ -21,8 +22,6 @@ class UdfSeqAuditSpec extends AnyFunSuite {
   // scan a window after each "udf" token for a Seq[ parameter type
   // before the "=>".
   private val Allow = Map(
-    // the diagnostic probe that demonstrates the trap
-    "src/main/scala/graft/Scratch.scala" -> 1,
     // skel_components' compRows takes Seq[Row] (a struct array): it
     // iterates SEQUENTIALLY (foreach over fragments), so the List is
     // linear here, and Array[Row] has no ScalaReflection deserializer
