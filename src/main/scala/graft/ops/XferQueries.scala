@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.sources.{PrecomputedIO, ShardedIO}
+import graft.sources.{ChunkLayout, PrecomputedIO, ShardedIO}
 
 /** Layer lifecycle operators over the real fixture layer:
   *
@@ -146,26 +146,8 @@ object XferQueries {
           .as[(Long, Long, Long, Long, Long, Long, Long, Long, Long,
             Array[Byte])]
           .map { case (gx, gy, gz, x0, y0, z0, x1, y1, z1, p) =>
-            val block = Codec.decodeRawToLongs(p, 4)
-            val bx = (x1 - x0).toInt
-            val by = (y1 - y0).toInt
-            val bz = (z1 - z0).toInt
-            val arr = new Array[Long]((cs.x * cs.y * cs.z).toInt)
-            var iz = 0
-            while (iz < bz) {
-              var iy = 0
-              while (iy < by) {
-                var ix = 0
-                while (ix < bx) {
-                  arr(ix + cs.x.toInt * (iy + cs.y.toInt * iz)) =
-                    block(ix + bx * (iy + by * iz))
-                  ix += 1
-                }
-                iy += 1
-              }
-              iz += 1
-            }
-            (gx, gy, gz, arr.toSeq)
+            (gx, gy, gz, Codec.decodeRawToLongs(ChunkLayout.fit(p,
+              Vec3(x1 - x0, y1 - y0, z1 - z0), cs, 4), 4).toSeq)
           }.toDF("gx", "gy", "gz", "vox")
         graft.sources.Zarr3IO.writeMeta(target, zm)
         graft.sources.Zarr3IO.writeChunks(full, target, zm)

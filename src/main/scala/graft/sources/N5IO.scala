@@ -119,27 +119,10 @@ object N5IO {
     * (little) endianness (n5/image.py:85) and so would misread
     * canonical uint16/32/64 N5 volumes.
     */
-  private def pack(c: String, b: Array[Byte], dtb: Int): Array[Byte] = c match {
-    case "gzip" => Codec.gzip(b)
-    case "lz4" => Codec.lz4Block(b)
-    case "bzip2" => Codec.bzip2(b)
-    case "xz" => Codec.xz(b)
-    case "blosc" => Blosc.compress(b, dtb)
-    case _ => b
-  }
-  private def unpack(c: String, b: Array[Byte]): Array[Byte] = c match {
-    case "gzip" => Codec.gunzip(b)
-    case "lz4" => Codec.unlz4Block(b)
-    case "bzip2" => Codec.unbzip2(b)
-    case "xz" => Codec.unxz(b)
-    case "blosc" => Blosc.decompress(b)
-    case _ => b
-  }
-
   def encodeBlock(vox: Array[Long], dims: Vec3, dtb: Int,
       compression: String): Array[Byte] = {
     val data = Codec.encodeRawFromLongs(vox, dtb, ByteOrder.BIG_ENDIAN)
-    val body = pack(compression, data, dtb)
+    val body = Compressors.compress(compression, data, dtb)
     val buf = ByteBuffer.allocate(16 + body.length).order(ByteOrder.BIG_ENDIAN)
     buf.putShort(0) // mode
     buf.putShort(3) // ndim
@@ -151,6 +134,17 @@ object N5IO {
   /** Decode one block -> (clamped dims, F-order voxels). */
   def decodeBlock(binary: Array[Byte], dtb: Int, compression: String)
       : (Vec3, Array[Long]) = {
+    val (dims, body) = header(binary, dtb)
+    val vox = Codec.decodeRawToLongs(
+      Compressors.decompress(compression, body, dims), dtb, ByteOrder.BIG_ENDIAN)
+    require(vox.length == dims.x * dims.y * dims.z,
+      s"block ${vox.length} voxels != ${dims}")
+    (dims, vox)
+  }
+
+  /** A block's header dims and its (compressed) body. */
+  private[sources] def header(binary: Array[Byte], dtb: Int)
+      : (Vec3, Array[Byte]) = {
     require(binary.length >= 16,
       s"n5 block ${binary.length}B shorter than the 16-byte header")
     val buf = ByteBuffer.wrap(binary).order(ByteOrder.BIG_ENDIAN)
@@ -173,69 +167,52 @@ object N5IO {
     require(nvox <= Codec.MaxDecodedChunkBytes / dtb,
       s"corrupt n5 block header: dims $dims (x$dtb B/voxel) outside " +
         s"the ${Codec.MaxDecodedChunkBytes}-byte decode ceiling")
-    val body = java.util.Arrays.copyOfRange(binary, 16, binary.length)
-    val data = unpack(compression, body)
-    val vox = Codec.decodeRawToLongs(data, dtb, ByteOrder.BIG_ENDIAN)
-    require(vox.length == nvox,
-      s"block ${vox.length} voxels != ${dims}")
-    (dims, vox)
+    (dims, java.util.Arrays.copyOfRange(binary, 16, binary.length))
   }
 
   /** Write chunk rows (gx, gy, gz, vox clamped-F-order) as blocks. */
   def writeBlocks(chunks: DataFrame, dir: String, m: N5Meta,
-      ds: String = "s0"): Unit = {
-    val bs = m.blockSize
-    val dims = m.dimensions
-    val dtb = m.dtypeBytes
-    val comp = m.compression
-    val dirStr = dir
-    val dsName = ds
+      ds: String = "s0"): Unit =
     chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       rows.foreach { r =>
         val g = Vec3(r.getLong(0), r.getLong(1), r.getLong(2))
-        val cb = Geom.chunkBbox(g, Bbox(Vec3(0, 0, 0), dims), bs)
-        val p = Paths.get(dirStr, dsName, g.x.toString, g.y.toString)
-        Files.createDirectories(p)
-        Files.write(p.resolve(g.z.toString),
-          encodeBlock(r.getSeq[Long](3).toArray, cb.size, dtb, comp))
+        val p = Paths.get(dir, ds, g.x.toString, g.y.toString, g.z.toString)
+        Files.createDirectories(p.getParent)
+        Files.write(p, encodeBlock(r.getSeq[Long](3).toArray, Geom.chunkBbox(g,
+          Bbox(Vec3(0, 0, 0), m.dimensions), m.blockSize).size, m.dtypeBytes,
+          m.compression))
       }
     }
+
+  /** The scan layout of dataset `ds` of the container at `dir`: clamped
+    * blocks keyed `<ds>/x/y/z`, each a big-endian header, the body under
+    * the dataset's compression, and big-endian values. A header's dims
+    * may not exceed the block size; a block whose dims differ from its
+    * clamped grid cell is cropped, or padded with 0, to it. A missing
+    * block is an ERROR, mirroring the reference's EmptyVolumeException
+    * (n5/image.py:44-52) and the precomputed fill_missing option, or
+    * reads as 0 under `fillMissing`.
+    */
+  private[sources] def layout(dir: String, ds: String,
+      fillMissing: Boolean): ChunkLayout = {
+    import ChunkLayout.{Keys, Missing, Shards, Step}
+    val m = readMeta(dir, ds)
+    ChunkLayout(dir, s"n5 $ds", dir, Bbox(Vec3(0, 0, 0), m.dimensions),
+      m.blockSize, clamp = true, Keys.Grid(Seq(ds), "/", zyx = false),
+      Shards.Unsharded, if (fillMissing) Missing.Fill else Missing.Raise,
+      Seq(Step.N5Header, Step.Decompress(m.compression), Step.SwapBytes),
+      "raw", m.dtypeBytes)
   }
 
-  /** S18 n5 cutout: pruned grid at planning time, block reads +
-    * decode in tasks, clipped voxel rows.
+  /** S18 n5 cutout: the dataset's chunk scan, block decode and clip in
+    * the one decode stage.
     *
     * @param fillMissing absent block keys read as background (0) when
-    *        true; by default a missing block is an ERROR, mirroring
-    *        the reference's EmptyVolumeException unless
-    *        fill_missing=True (n5/image.py:44-52) and the precomputed
-    *        path's fill_missing option on NgScanBuilder.
+    *        true; by default a missing block is an ERROR
     */
   def cutoutVoxels(spark: SparkSession, dir: String, bbox: Bbox,
-      fillMissing: Boolean = false, ds: String = "s0"): DataFrame = {
-    val m = readMeta(dir, ds)
-    val bs = m.blockSize
-    val dtb = m.dtypeBytes
-    val comp = m.compression
-    val bounds = Bbox(Vec3(0, 0, 0), m.dimensions)
-    ScanSizing.cutoutGrid(spark, bbox, bounds, bs, bs.x * bs.y * bs.z * dtb,
-        fill = 0L) { g =>
-      val p = Paths.get(dir, ds, g.x.toString, g.y.toString, g.z.toString)
-      if (!Files.exists(p)) {
-        if (!fillMissing) throw new java.util.NoSuchElementException(
-          s"missing N5 block (${g.x},${g.y},${g.z}) in $dir — pass " +
-            "fillMissing=true to read absent blocks as background")
-        (Geom.chunkBbox(g, bounds, bs).size, null)
-      } else {
-        val (dims, vox) = decodeBlock(Files.readAllBytes(p), dtb, comp)
-        // edge blocks carry clamped dims; a header claiming MORE than
-        // the block size would paste voxels into the neighbour's cell
-        require(dims.x <= bs.x && dims.y <= bs.y && dims.z <= bs.z,
-          s"corrupt n5 block $p: header dims $dims exceed blockSize $bs")
-        (dims, vox)
-      }
-    }
-  }
+      fillMissing: Boolean = false, ds: String = "s0"): DataFrame =
+    ChunkLayout.cutout(spark, layout(dir, ds, fillMissing), bbox)
 
   /** Cutout one level of a multiScale pyramid: requires the root
     * `"multiScale": true` attribute and the `s<mip>` dataset to

@@ -16,8 +16,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.core._
 
 /** DataSource V2 `neuroglancer` format (S1 plugin-dispatch open,
-  * cloudvolume.py:78-302 + registry `:25-35`): one chunk object per
-  * row over a precomputed layer directory.
+  * cloudvolume.py:78-302 + registry `:25-35`): one chunk per row over
+  * a chunked grid directory — a precomputed layer, or a zarr2/OME-zarr2,
+  * zarr3 or N5 array. The directory's own metadata picks its
+  * [[ChunkLayout]] ([[ChunkLayout.open]]; a precomputed `info` is read
+  * first), and every format reads through this one scan. A row's
+  * payload is the chunk after its object-level codecs, in the encoding
+  * the layout names: the scale's encoding for precomputed, little-endian
+  * F-order raw at the dtype width for the others.
   *
   * Spark-first design choices:
   *  - Chunk-key **filter pushdown** (SupportsPushDownFilters):
@@ -33,13 +39,18 @@ import graft.core._
   *    chunk object is opened at all — pure metadata execution.
   *  - Grid coordinates are evenly range-split across input partitions
   *    so a 1000-executor scan load-balances without a shuffle.
-  *  - A **sharded** scale is read by the same scan, with each shard's
-  *    pruned chunks planned into one task (rx.py:39-155).
+  *  - A **sharded** grid (a precomputed sharded scale, a zarr3
+  *    `sharding_indexed` array) is read by the same scan, with each
+  *    shard's pruned chunks planned into one task (rx.py:39-155).
   *
-  * Options: `mip` (default 0), `fill_missing` (default false — missing
-  * chunk objects raise, per EmptyVolumeException rx.py:864-870; true
-  * yields a null payload the consumer background-fills, S15). A chunk
-  * absent from its shard yields no row, whatever `fill_missing` says.
+  * Options: `mip` (default 0; the OME-zarr2 level or N5 dataset
+  * `s<mip>` elsewhere), `fill_missing` (default false — missing
+  * precomputed chunks and N5 blocks raise, per EmptyVolumeException
+  * rx.py:864-870; true yields a null payload the consumer
+  * background-fills, S15). A chunk absent from its precomputed shard
+  * yields no row, whatever `fill_missing` says; an absent zarr chunk
+  * is a null payload read as its fill_value. The stream and the sink
+  * read and write precomputed unsharded layers only.
   */
 class NeuroglancerSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "neuroglancer"
@@ -88,7 +99,11 @@ object Neuroglancer {
     StructField("payload", BinaryType, nullable = true)))
 }
 
-final class NgTable(props: Map[String, String]) extends Table
+/** The table over the grid at `path`; `layout` fixes its read
+  * descriptor (the grid cutouts), else the scan opens it from the
+  * directory per the `mip`/`fill_missing` options. */
+final class NgTable(props: Map[String, String],
+    layout: Option[ChunkLayout] = None) extends Table
     with SupportsRead with SupportsWrite {
   private val path: String = props.getOrElse("path",
     throw new IllegalArgumentException("neuroglancer source requires a path"))
@@ -100,10 +115,10 @@ final class NgTable(props: Map[String, String]) extends Table
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.STREAMING_WRITE, TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NgScanBuilder(path,
-      options.getInt("mip", props.get("mip").map(_.toInt).getOrElse(0)),
-      options.getBoolean("fill_missing",
-        props.get("fill_missing").exists(_.toBoolean)),
+    new NgScanBuilder(layout.getOrElse(ChunkLayout.open(path,
+        options.getInt("mip", props.get("mip").map(_.toInt).getOrElse(0)),
+        options.getBoolean("fill_missing",
+          props.get("fill_missing").exists(_.toBoolean)))),
       options.getInt("max_chunks_per_trigger",
         props.get("max_chunks_per_trigger").map(_.toInt).getOrElse(0)),
       // explicit grid-window options (gx_lo..gz_hi, inclusive): the
@@ -118,6 +133,9 @@ final class NgTable(props: Map[String, String]) extends Table
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val mip = info.options.getInt("mip", props.get("mip").map(_.toInt).getOrElse(0))
+    require(java.nio.file.Files.exists(java.nio.file.Paths.get(path, "info")),
+      s"$path has no precomputed info: the neuroglancer sink writes " +
+        "precomputed chunk objects only")
     val meta = VolumeMeta.readInfo(path)
     // P10 write-lock guard, enforced at plan time (metadata.py:840-885)
     if (meta.lockedMips.contains(mip))
@@ -161,23 +179,17 @@ final class NgTable(props: Map[String, String]) extends Table
 final class NgWriteBuilder(layerDir: String, scale: ScaleMeta,
     gzipped: Boolean, idx: Array[Int]) extends WriteBuilder {
   override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new NgBatchWrite(
-      layerDir, scale.key, scale.bounds.minpt.toArray,
-      scale.bounds.maxpt.toArray, scale.chunkSize.toArray, gzipped, idx)
-    override def toStreaming: StreamingWrite = new NgStreamingWrite(
-      layerDir, scale.key, scale.bounds.minpt.toArray,
-      scale.bounds.maxpt.toArray, scale.chunkSize.toArray, gzipped, idx)
+    private val factory = new NgWriterFactory(layerDir, scale, gzipped, idx)
+    override def toBatch: BatchWrite = new NgBatchWrite(factory)
+    override def toStreaming: StreamingWrite = new NgStreamingWrite(factory)
   }
 }
 
 final case class NgCommitMessage(chunks: Long) extends WriterCommitMessage
 
-final class NgBatchWrite(layerDir: String, key: String,
-    boundsMin: Array[Long], boundsMax: Array[Long], chunkSize: Array[Long],
-    gzipped: Boolean, idx: Array[Int]) extends BatchWrite {
+final class NgBatchWrite(factory: NgWriterFactory) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new NgWriterFactory(layerDir, key, boundsMin, boundsMax, chunkSize,
-      gzipped, idx)
+    factory
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
@@ -193,13 +205,9 @@ final class NgBatchWrite(layerDir: String, key: String,
   * checkpoint. Last-write-wins across epochs matches the reference's
   * overwrite semantics for repeated uploads of one chunk.
   */
-final class NgStreamingWrite(layerDir: String, key: String,
-    boundsMin: Array[Long], boundsMax: Array[Long], chunkSize: Array[Long],
-    gzipped: Boolean, idx: Array[Int]) extends StreamingWrite {
+final class NgStreamingWrite(factory: NgWriterFactory) extends StreamingWrite {
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new NgWriterFactory(layerDir, key, boundsMin, boundsMax,
-      chunkSize, gzipped, idx)
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = factory
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long,
@@ -210,24 +218,19 @@ final class NgStreamingWrite(layerDir: String, key: String,
   * (puts are idempotent and named by grid key), so the streaming
   * 3-arg overload delegates to the batch one.
   */
-final class NgWriterFactory(layerDir: String, key: String,
-    boundsMin: Array[Long], boundsMax: Array[Long], chunkSize: Array[Long],
+final class NgWriterFactory(layerDir: String, scale: ScaleMeta,
     gzipped: Boolean, idx: Array[Int])
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new NgDataWriter(layerDir, key,
-      Bbox(Vec3(boundsMin(0), boundsMin(1), boundsMin(2)),
-        Vec3(boundsMax(0), boundsMax(1), boundsMax(2))),
-      Vec3(chunkSize(0), chunkSize(1), chunkSize(2)), gzipped, idx)
+    new NgDataWriter(layerDir, scale, gzipped, idx)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     createWriter(partitionId, taskId)
 }
 
-final class NgDataWriter(layerDir: String, key: String, bounds: Bbox,
-    cs: Vec3, gzipped: Boolean, idx: Array[Int])
-    extends DataWriter[InternalRow] {
-  private val dir = java.nio.file.Paths.get(layerDir, key)
+final class NgDataWriter(layerDir: String, scale: ScaleMeta,
+    gzipped: Boolean, idx: Array[Int]) extends DataWriter[InternalRow] {
+  private val dir = java.nio.file.Paths.get(layerDir, scale.key)
   java.nio.file.Files.createDirectories(dir)
   private var n = 0L
 
@@ -235,7 +238,7 @@ final class NgDataWriter(layerDir: String, key: String, bounds: Bbox,
     val g = Vec3(r.getLong(idx(0)), r.getLong(idx(1)), r.getLong(idx(2)))
     val payload = r.getBinary(idx(3))
     PrecomputedIO.writeChunkObject(dir.toString,
-      Geom.chunkBbox(g, bounds, cs).toFilename, payload,
+      Geom.chunkBbox(g, scale.bounds, scale.chunkSize).toFilename, payload,
       if (gzipped) "gzip" else "none")
     n += 1
   }
@@ -244,7 +247,7 @@ final class NgDataWriter(layerDir: String, key: String, bounds: Bbox,
   override def close(): Unit = ()
 }
 
-/** Batch (and stream) scan planning of one scale. Each chunk-key
+/** Batch (and stream) scan planning of one grid. Each chunk-key
   * comparison it accepts is applied EXACTLY and is not handed back to
   * Spark, so no `Filter` carrying the request's literals sits above the
   * scan: whole-stage codegen is the same for every bbox and compiles
@@ -252,13 +255,13 @@ final class NgDataWriter(layerDir: String, key: String, bounds: Bbox,
   * `>=` on gx/gy/gz, and the bbox-overlap forms `x1 > lo`, `x1 >= lo`,
   * `x0 < hi`, `x0 <= hi` (each axis alike), all with an integral
   * literal. The scan plans a grid point only if every accepted filter
-  * holds on its real gx..gz/x0..z1 ([[Geom.chunkBbox]]: voxel offset
-  * added, last chunk clamped to the bounds). Every other filter (a
+  * holds on its real gx..gz/x0..z1 ([[ChunkLayout.chunkBbox]]: voxel
+  * offset added, last chunk clamped to the bounds unless the format
+  * stores full-size edge chunks). Every other filter (a
   * fractional literal, `x0 > v`, an `Or`, a payload predicate) is
   * returned to Spark and evaluated after the scan.
   */
-final class NgScanBuilder(layerDir: String, mip: Int, fillMissing: Boolean,
-    maxChunksPerTrigger: Int = 0,
+final class NgScanBuilder(layout: ChunkLayout, maxChunksPerTrigger: Int = 0,
     winLo: Array[Long] = Array.fill(3)(Long.MinValue),
     winHi: Array[Long] = Array.fill(3)(Long.MaxValue))
     extends ScanBuilder
@@ -266,9 +269,6 @@ final class NgScanBuilder(layerDir: String, mip: Int, fillMissing: Boolean,
 
   private var required: StructType = Neuroglancer.Schema
   private var accepted: Array[Filter] = Array.empty
-
-  private val meta = VolumeMeta.readInfo(layerDir)
-  private val scale = meta.scale(mip)
 
   private def axisOf(attr: String): Int = attr match {
     case "gx" | "x0" | "x1" => 0
@@ -280,7 +280,7 @@ final class NgScanBuilder(layerDir: String, mip: Int, fillMissing: Boolean,
   /** The value column `attr` takes on the chunks at grid index `g` of
     * its axis. */
   private def valueAt(attr: String, g: Long): Long = {
-    val b = Geom.chunkBbox(Vec3(g, g, g), scale.bounds, scale.chunkSize)
+    val b = layout.chunkBbox(Vec3(g, g, g))
     attr.last match {
       case '0' => b.minpt.toArray(axisOf(attr))
       case '1' => b.maxpt.toArray(axisOf(attr))
@@ -344,7 +344,7 @@ final class NgScanBuilder(layerDir: String, mip: Int, fillMissing: Boolean,
     * the first index of each rising test and the last of each falling
     * one (binary search over the chunks' real values). */
   override def build(): Scan = {
-    val n = scale.gridSize.toArray
+    val n = layout.gridSize.toArray
     val tests = accepted.toSeq.flatMap(keyTests)
     def on(ax: Int, rising: Boolean) =
       tests.filter(t => t.axis == ax && t.rising == rising)
@@ -352,24 +352,21 @@ final class NgScanBuilder(layerDir: String, mip: Int, fillMissing: Boolean,
       on(ax, rising = true).map(_.first(n(ax), holds = true))).max)
     val hi = Array.tabulate(3)(ax => (math.min(n(ax) - 1, winHi(ax)) +:
       on(ax, rising = false).map(_.first(n(ax), holds = false) - 1)).min)
-    new NgScan(layerDir, scale, meta.dtypeBytes, Vec3(lo(0), lo(1), lo(2)),
-      Vec3(hi(0), hi(1), hi(2)), required, fillMissing, maxChunksPerTrigger,
-      pushed = accepted)
+    new NgScan(layout, Vec3(lo(0), lo(1), lo(2)), Vec3(hi(0), hi(1), hi(2)),
+      required, maxChunksPerTrigger, pushed = accepted)
   }
 }
 
-/** Grid points of one task; on a sharded scale they are whole shard
+/** Grid points of one task; on a sharded grid they are whole shard
   * groups (see [[NgScan.partitionsOf]]). */
-final case class NgInputPartition(
-    layerDir: String, scale: ScaleMeta, chunks: Array[Array[Long]])
-  extends InputPartition
+final case class NgInputPartition(layout: ChunkLayout,
+    chunks: Array[Array[Long]]) extends InputPartition
 
 /** The chunks of the grid box `lo..hi`, which already holds every
   * accepted filter exactly ([[NgScanBuilder]]): `pushed` lists what the
   * scan applied, and Spark evaluates none of it again. */
-final class NgScan(layerDir: String, scale: ScaleMeta, dtypeBytes: Int,
-    lo: Vec3, hi: Vec3, required: StructType, fillMissing: Boolean,
-    maxChunksPerTrigger: Int = 0,
+final class NgScan(layout: ChunkLayout, lo: Vec3, hi: Vec3,
+    required: StructType, maxChunksPerTrigger: Int = 0,
     val pushed: Array[Filter] = Array.empty)
   extends Scan with Batch {
 
@@ -377,53 +374,54 @@ final class NgScan(layerDir: String, scale: ScaleMeta, dtypeBytes: Int,
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(!scale.isSharded, s"scale ${scale.key} is sharded; the stream " +
-      "discovers per-chunk objects, which a sharded scale never has")
-    new NgMicroBatchStream(layerDir, scale, dtypeBytes, lo, hi, required,
-      fillMissing, checkpointLocation, maxChunksPerTrigger)
+    require(layout.keys == ChunkLayout.Keys.BboxName, s"${layout.dir} is " +
+      s"${layout.label}, not a precomputed layer; the stream discovers " +
+      "precomputed chunk objects")
+    require(layout.shards == ChunkLayout.Shards.Unsharded, s"${layout.dir} " +
+      s"${layout.label} is sharded; the stream discovers per-chunk objects, " +
+      "which a sharded scale never has")
+    new NgMicroBatchStream(layout, lo, hi, required, checkpointLocation,
+      maxChunksPerTrigger)
   }
   // PushedFilters is named to match the V1 EXPLAIN convention so a
   // plan read (EXPLAIN.md) can confirm pruning fired from pure SQL
   override def description(): String =
-    s"neuroglancer $layerDir key=${scale.key} grid=[$lo..$hi] " +
+    s"neuroglancer ${layout.dir} ${layout.label} grid=[$lo..$hi] " +
       s"cols=${required.fieldNames.mkString(",")} " +
       s"PushedFilters: [${pushed.mkString(", ")}]"
 
   override def planInputPartitions(): Array[InputPartition] =
-    NgScan.partitionsOf(layerDir, scale, dtypeBytes, for {
+    NgScan.partitionsOf(layout, for {
       gz <- lo.z to hi.z
       gy <- lo.y to hi.y
       gx <- lo.x to hi.x
     } yield Vec3(gx, gy, gz))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new NgReaderFactory(required, fillMissing)
+    new NgReaderFactory(required)
 }
 
 object NgScan {
   /** The one grid-to-partition split, shared by the batch scan and the
-    * stream, sized by [[ScanSizing.partitions]]. On a sharded scale the
+    * stream, sized by [[ScanSizing.partitions]]. On a sharded grid the
     * points are grouped by shard file and whole groups are packed into
     * the partitions, so each task reads a shard's index once.
     */
-  private[sources] def partitionsOf(layerDir: String, scale: ScaleMeta,
-      dtypeBytes: Int, pts: Seq[Vec3]): Array[InputPartition] = {
+  private[sources] def partitionsOf(layout: ChunkLayout,
+      pts: Seq[Vec3]): Array[InputPartition] = {
     if (pts.isEmpty) return Array.empty
-    val cs = scale.chunkSize
-    val per = Geom.ceilDiv(pts.size, ScanSizing.partitions(
-      SparkSession.active, pts.size, cs.x * cs.y * cs.z * dtypeBytes)).toInt
-    val groups = scale.sharding match {
-      case None => pts.grouped(per).toSeq
-      case Some(spec) => pts.groupBy(g =>
-          spec.shardLocation(Morton.encode(g, scale.gridSize))._1)
-        .toSeq.sortBy(_._1).map(_._2)
-    }
+    val cs = layout.chunkSize
+    val per = Geom.ceilDiv(pts.size, ScanSizing.partitions(SparkSession.active,
+      pts.size, cs.x * cs.y * cs.z * layout.dtypeBytes)).toInt
+    val groups =
+      if (layout.shards == ChunkLayout.Shards.Unsharded) pts.grouped(per).toSeq
+      else pts.groupBy(layout.shardOf).toSeq.sortBy(_._1).map(_._2)
     val parts = ArrayBuffer(ArrayBuffer.empty[Vec3])
     for (grp <- groups) {
       if (parts.last.size >= per) parts += ArrayBuffer.empty
       parts.last ++= grp
     }
-    parts.map(p => NgInputPartition(layerDir, scale,
+    parts.map(p => NgInputPartition(layout,
       p.map(_.toArray).toArray): InputPartition).toArray
   }
 }
@@ -464,9 +462,8 @@ final case class NgStreamOffset(n: Long)
   *    streams state the window via the gx_lo..gz_hi options (batch
   *    scans get the same window from real filter pushdown).
   */
-final class NgMicroBatchStream(layerDir: String, scale: ScaleMeta,
-    dtypeBytes: Int, lo: Vec3, hi: Vec3, required: StructType,
-    fillMissing: Boolean, checkpointLocation: String, maxChunksPerTrigger: Int)
+final class NgMicroBatchStream(layout: ChunkLayout, lo: Vec3, hi: Vec3,
+    required: StructType, checkpointLocation: String, maxChunksPerTrigger: Int)
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
   with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -527,13 +524,9 @@ final class NgMicroBatchStream(layerDir: String, scale: ScaleMeta,
     * of this scale or outside the pushed-down grid window.
     */
   private def gridOf(name: String): Option[Vec3] = {
-    val base = name.stripSuffix(".gz").stripSuffix(".br")
     scala.util.Try {
-      val b = Bbox.fromFilename(base)
-      Vec3(
-        Math.floorDiv(b.minpt.x - scale.bounds.minpt.x, scale.chunkSize.x),
-        Math.floorDiv(b.minpt.y - scale.bounds.minpt.y, scale.chunkSize.y),
-        Math.floorDiv(b.minpt.z - scale.bounds.minpt.z, scale.chunkSize.z))
+      val b = Bbox.fromFilename(baseName(name))
+      (b.minpt - layout.bounds.minpt).floorDiv(layout.chunkSize)
     }.toOption.filter(g => g.x >= lo.x && g.x <= hi.x &&
       g.y >= lo.y && g.y <= hi.y && g.z >= lo.z && g.z <= hi.z)
   }
@@ -542,7 +535,7 @@ final class NgMicroBatchStream(layerDir: String, scale: ScaleMeta,
     * sorted by name for a deterministic append order.
     */
   private def discover(limit: Int): Unit = synchronized {
-    val dir = Paths.get(layerDir, scale.key)
+    val dir = Paths.get(layout.root)
     if (!Files.exists(dir)) return
     import scala.jdk.CollectionConverters._
     val listing = Files.list(dir)
@@ -604,28 +597,28 @@ final class NgMicroBatchStream(layerDir: String, scale: ScaleMeta,
       end: Offset): Array[InputPartition] = {
     val a = start.asInstanceOf[NgStreamOffset].n.toInt
     val b = end.asInstanceOf[NgStreamOffset].n.toInt
-    NgScan.partitionsOf(layerDir, scale, dtypeBytes,
-      entries.slice(a, b).flatMap(gridOf).toSeq)
+    NgScan.partitionsOf(layout, entries.slice(a, b).flatMap(gridOf).toSeq)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new NgReaderFactory(required, fillMissing)
+    new NgReaderFactory(required)
 }
 
-final class NgReaderFactory(required: StructType, fillMissing: Boolean)
+final class NgReaderFactory(required: StructType)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new NgPartitionReader(p.asInstanceOf[NgInputPartition], required, fillMissing)
+    new NgPartitionReader(p.asInstanceOf[NgInputPartition], required)
 }
 
-/** Executor-side reader: one file open per chunk, gunzip, emit row.
-  * Skips IO entirely when `payload` was pruned away. On a sharded
-  * scale each shard group is one ranged read through the shard's index
-  * (also when `payload` was pruned: only the index knows which chunks
-  * exist), and an absent chunk yields no row.
+/** Executor-side reader: the partition's chunks through its layout
+  * ([[ChunkLayout.read]]: one object get per chunk, or one index read
+  * per shard and ranged reads inside it, then the object-to-payload
+  * steps), one row each. Skips IO entirely when `payload` was pruned
+  * away, except on a precomputed sharded grid, whose index alone knows
+  * which chunks exist.
   */
-final class NgPartitionReader(part: NgInputPartition, required: StructType,
-    fillMissing: Boolean) extends PartitionReader[InternalRow] {
+final class NgPartitionReader(part: NgInputPartition, required: StructType)
+    extends PartitionReader[InternalRow] {
 
   private val needPayload = required.fieldNames.contains("payload")
   private val fieldIdx: Array[Int] = required.fieldNames.map {
@@ -634,40 +627,16 @@ final class NgPartitionReader(part: NgInputPartition, required: StructType,
     case "x1" => 6; case "y1" => 7; case "z1" => 8
     case "payload" => 9
   }
-  private val scale = part.scale
-  private val bounds = scale.bounds
-  private val cs = scale.chunkSize
-
-  private def chunkObject(g: Vec3): Array[Byte] =
-    PrecomputedIO.readChunkBytes(part.layerDir, scale, g) match {
-      case Some(b) => b
-      case None if fillMissing => null
-      case None => throw new java.io.FileNotFoundException(
-        s"missing chunk ${Geom.chunkBbox(g, bounds, cs).toFilename} " +
-          "(set fill_missing=true to background-fill)")
-    }
-
   // (grid point, payload) of every chunk that yields a row
-  private val chunks: Iterator[(Vec3, Array[Byte])] = {
-    val pts = part.chunks.iterator.map(c => Vec3(c(0), c(1), c(2)))
-    scale.sharding match {
-      case None => pts.map(g => (g, if (needPayload) chunkObject(g) else null))
-      case Some(spec) =>
-        val byLabel = pts.map(g => Morton.encode(g, scale.gridSize) -> g).toMap
-        byLabel.keys.toSeq.groupBy(spec.shardLocation(_)._1).iterator
-          .flatMap { case (shard, labels) => ShardedIO.readLabelsRanged(
-            s"${part.layerDir}/${scale.key}/${spec.shardFilename(shard)}",
-            spec, labels) }
-          .map { case (l, payload) => (byLabel(l), payload) }
-    }
-  }
+  private val chunks: Iterator[(Vec3, Array[Byte])] = part.layout.read(
+    part.chunks.toSeq.map(c => Vec3(c(0), c(1), c(2))), needPayload)
 
   private var row: InternalRow = _
 
   override def next(): Boolean = {
     if (!chunks.hasNext) return false
     val (g, payload) = chunks.next()
-    val cb = Geom.chunkBbox(g, bounds, cs)
+    val cb = part.layout.chunkBbox(g)
     val all: Array[Any] = Array(g.x, g.y, g.z,
       cb.minpt.x, cb.minpt.y, cb.minpt.z, cb.maxpt.x, cb.maxpt.y, cb.maxpt.z,
       payload)

@@ -50,36 +50,32 @@ object PrecomputedIO {
   def readChunkBytes(layerDir: String, scale: ScaleMeta, g: Vec3): Option[Array[Byte]] =
     readChunkObject(chunkPath(layerDir, scale, g), scale.chunkSize)
 
+  /** Object-name suffix -> second-stage codec ([[Compressors]] name):
+    * the suffix names the codec (datasource/precomputed/common.py:18-29). */
+  private val Suffixes = Seq("" -> "none", ".gz" -> "gzip", ".br" -> "br")
+
   /** The one object get for precomputed chunks: the stored object is
-    * `p` itself, or `p.gz` / `p.br` when second-stage compressed (the
-    * suffix names the codec, datasource/precomputed/common.py:18-29).
+    * `p` itself, or `p.gz` / `p.br` when second-stage compressed.
     */
-  def readChunkObject(p: Path, chunkSize: Vec3): Option[Array[Byte]] = {
-    val gz = Paths.get(p.toString + ".gz")
-    val br = Paths.get(p.toString + ".br")
-    if (Files.exists(p)) Some(Files.readAllBytes(p))
-    else if (Files.exists(gz)) Some(Codec.gunzip(Files.readAllBytes(gz)))
-    else if (Files.exists(br))
-      // ceiling = chunk voxels x widest dtype (uint64) + slack: a corrupt
-      // object must error, not OOM the executor (see Brotli.decompress)
-      Some(Brotli.decompress(Files.readAllBytes(br),
-        maxOutput = chunkDecodeCeiling(chunkSize)))
-    else None
-  }
+  def readChunkObject(p: Path, chunkSize: Vec3): Option[Array[Byte]] =
+    Suffixes.iterator.map { case (sfx, codec) => (Paths.get(p.toString + sfx), codec) }
+      .collectFirst { case (f, codec) if Files.exists(f) =>
+        Compressors.decompress(codec, Files.readAllBytes(f), chunkSize) }
 
   /** The one object put for precomputed chunks: `payload` under
     * `dir/name`, second-stage compressed per `method` ("gzip" -> `.gz`,
     * "br" -> `.br`, "none" -> bare name; the dual of [[readChunkObject]]).
     */
   def writeChunkObject(dir: String, name: String, payload: Array[Byte],
-      method: String): Unit = method match {
-    case "gzip" => Files.write(Paths.get(dir, name + ".gz"), Codec.gzip(payload))
-    case "br" => Files.write(Paths.get(dir, name + ".br"), Brotli.compress(payload))
-    case _ => Files.write(Paths.get(dir, name), payload)
+      method: String): Unit = {
+    val (sfx, codec) = Suffixes.find(_._2 == method).getOrElse(Suffixes.head)
+    Files.write(Paths.get(dir, name + sfx), Compressors.compress(codec, payload))
   }
 
-  /** Decoded-payload ceiling for one chunk (second-stage decompression
-    * bound; the image codec then enforces exact size). */
+  /** Decoded-payload ceiling for one chunk (brotli's second-stage bound:
+    * chunk voxels x widest dtype (uint64) + slack, so a corrupt object
+    * errors instead of OOMing the executor; the image codec then
+    * enforces exact size). */
   def chunkDecodeCeiling(chunkSize: Vec3): Int = {
     val voxels = chunkSize.x * chunkSize.y * chunkSize.z
     (math.min(voxels * 8L + (1L << 20), Int.MaxValue.toLong)).toInt
@@ -141,17 +137,13 @@ object PrecomputedIO {
       .option("fill_missing", fillMissing)
       .load(layerDir)
 
-  /** Chunk rows overlapping `bbox`; the scan applies the overlap
-    * filter exactly at planning time, so no post-scan `Filter` holds
-    * the bbox and the plan's generated code is the same for every
-    * request. Sharded and unsharded scales both read through this one
-    * scan. */
-  private[sources] def chunksIn(spark: SparkSession, layerDir: String, bbox: Bbox,
-      mip: Int, fillMissing: Boolean): DataFrame =
-    readChunks(spark, layerDir, mip, fillMissing)
-      .filter(col("x1") > bbox.minpt.x && col("x0") < bbox.maxpt.x &&
-        col("y1") > bbox.minpt.y && col("y0") < bbox.maxpt.y &&
-        col("z1") > bbox.minpt.z && col("z0") < bbox.maxpt.z)
+  /** Chunk rows of scale `mip` overlapping `bbox` ([[ChunkLayout.chunksIn]]
+    * over the layer's layout). Sharded and unsharded scales both read
+    * through this one scan. */
+  private[sources] def chunksIn(spark: SparkSession, layerDir: String,
+      meta: VolumeMeta, bbox: Bbox, mip: Int, fillMissing: Boolean): DataFrame =
+    ChunkLayout.chunksIn(spark,
+      ChunkLayout.precomputed(layerDir, meta, mip, fillMissing), bbox)
 
   /** S4 cutout read: decode chunks intersecting `bbox` into clipped
     * voxel rows (x, y, z, label). Decode happens once per chunk in the
@@ -186,8 +178,8 @@ object PrecomputedIO {
         ((col("id") / (sz.x * sz.y)).cast("long") + clip.minpt.z).as("z"),
         lit(background).as("label"))
     }
-    decodeToVoxels(chunksIn(spark, layerDir, bbox, mip, fillMissing), bbox,
-      scale, meta.dtypeBytes, background)
+    ChunkLayout.cutout(spark,
+      ChunkLayout.precomputed(layerDir, meta, mip, fillMissing, background), bbox)
   }
 
   /** S4 float-image cutout (float32/float64 raw layers — the
@@ -206,7 +198,7 @@ object PrecomputedIO {
       s"${meta.dataType} layer — use cutoutVoxels")
     require(scale.encoding == "raw",
       s"float cutout reads raw encoding, not ${scale.encoding}")
-    stage(chunksIn(spark, layerDir, bbox, mip, fillMissing),
+    stage(chunksIn(spark, layerDir, meta, bbox, mip, fillMissing),
       DecodeVoxels(chunkCols, scale.encoding, meta.dtypeBytes, bbox,
         valueType = DoubleType))
   }
@@ -241,7 +233,7 @@ object PrecomputedIO {
       s"jpeg multi-channel requires 3 channels, got $nc")
     require(channels.nonEmpty && channels.forall(c => c >= 0 && c < nc),
       s"channel slice $channels out of range for $nc channels")
-    stage(chunksIn(spark, layerDir, bbox, mip, fillMissing),
+    stage(chunksIn(spark, layerDir, meta, bbox, mip, fillMissing),
       DecodeVoxels(chunkCols, scale.encoding, meta.dtypeBytes, bbox,
         channels = channels.toList, planes = nc))
   }

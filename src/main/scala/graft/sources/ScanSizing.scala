@@ -1,12 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import graft.core.{Bbox, Codec, Geom, Vec3}
-import graft.functions.DecodeVoxels
+import org.apache.spark.sql.SparkSession
+import graft.core.Geom
 
 /** Session-conf wrapper around [[Geom.scanPartitions]] — the shared
-  * scan-task sizing rule for every chunk/block/object reader (DSv2
-  * neuroglancer, zarr2/zarr3/n5 cutouts, by-id annotation objects).
+  * scan-task sizing rule for every chunk/block/object reader: the one
+  * `neuroglancer` chunk scan, which every grid format (precomputed,
+  * zarr2/OME-zarr2, zarr3, N5) reads through ([[NgScan.partitionsOf]]),
+  * and by-id annotation objects.
   *
   * Both knobs are scale-dependent and therefore parameterised
   * (builder rules: local defaults must keep the driver's bench
@@ -29,63 +30,6 @@ object ScanSizing {
     val openC = spark.conf.get(OpenCostBytesKey, (64L << 10).toString).toLong
     Geom.scanPartitions(nChunks, estBytes,
       math.max(spark.sparkContext.defaultParallelism, 1), minB, openC)
-  }
-
-  /** The one grid-read pipeline: grid points enumerated at planning
-    * time are sliced, in order, into [[partitions]] tasks (`estBytes`
-    * per point), and `read` runs once per point in those tasks; no
-    * shuffle stands between the points and the reads.
-    */
-  def scanGrid[T: Encoder](spark: SparkSession, pts: Seq[Vec3],
-      estBytes: Long)(read: Vec3 => IterableOnce[T]): Dataset[T] =
-    spark.createDataset(spark.sparkContext
-      .parallelize(pts, partitions(spark, pts.size, estBytes))
-      .flatMap(read)(implicitly[Encoder[T]].clsTag))
-
-  /** The chunk row of a grid reader's F-order block at `lo` of shape
-    * `dims`. Raw 8-byte words carry every value a reader holds (top-bit
-    * uint64 ones too); an absent block (`vox == null`) rides as a null
-    * payload, which the stage reads as its background. */
-  private[sources] def chunkRow(lo: Vec3, dims: Vec3, vox: Array[Long]): ChunkRow = {
-    val hi = lo + dims
-    ChunkRow(lo.x, lo.y, lo.z, hi.x, hi.y, hi.z,
-      if (vox == null) null else Codec.encodeRawFromLongs(vox, 8))
-  }
-
-  /** Derived once: a product encoder costs milliseconds of reflection
-    * per derivation, paid on every cutout otherwise. */
-  private implicit lazy val chunkRowEncoder: Encoder[ChunkRow] =
-    Encoders.product[ChunkRow]
-
-  /** [[scanGrid]] of [[chunkRow]]s -> voxel rows (x, y, z, label) inside
-    * `clip` through the one [[DecodeVoxels]] stage, null payloads read
-    * as `fill`. */
-  private[sources] def decodeGrid(spark: SparkSession, pts: Seq[Vec3],
-      estBytes: Long, clip: Bbox, fill: Long)(
-      read: Vec3 => IterableOnce[ChunkRow]): DataFrame =
-    DecodeVoxels.stage(scanGrid(spark, pts, estBytes)(read).toDF(),
-      DecodeVoxels(DecodeVoxels.chunkCols, "raw", 8, clip, background = fill))
-
-  /** Cutout over a volume stored one object per block (N5, zarr2,
-    * unsharded zarr3): only the blocks `bbox` touches are read, each
-    * through `readBlock` (grid point -> (block dims, F-order voxels or
-    * null for an absent block read as `fill`)) into one [[chunkRow]]
-    * for [[decodeGrid]]. The block at grid point g starts at
-    * `volume.minpt + g * block`. Each format keeps only its own
-    * differences inside `readBlock`: key naming, fill value, byte
-    * order, C/F order, frame slot, missing-block policy.
-    *
-    * @return voxel rows (x, y, z, label)
-    */
-  private[sources] def cutoutGrid(spark: SparkSession, bbox: Bbox,
-      volume: Bbox, block: Vec3, estBytes: Long, fill: Long)(
-      readBlock: Vec3 => (Vec3, Array[Long])): DataFrame = {
-    val origin = volume.minpt
-    decodeGrid(spark, Geom.gridpoints(bbox, volume, block), estBytes,
-        bbox.intersection(volume), fill) { g =>
-      val (dims, vox) = readBlock(g)
-      Iterator.single(chunkRow(origin + g * block, dims, vox))
-    }
   }
 
   /** By-id object listing WITHOUT an O(objects) driver allocation
@@ -143,7 +87,3 @@ object ScanSizing {
     else ds
   }
 }
-
-/** A chunk row, in the column names and order [[DecodeVoxels]] reads. */
-private[sources] final case class ChunkRow(x0: Long, y0: Long, z0: Long,
-    x1: Long, y1: Long, z1: Long, payload: Array[Byte])

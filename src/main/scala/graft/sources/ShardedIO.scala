@@ -26,29 +26,40 @@ import graft.core._
   */
 object ShardedIO {
 
-  /** Byte-range read validated against the file itself: index offsets
-    * and sizes are UNTRUSTED file bytes, and allocating
-    * `(e0 - s0).toInt` straight off a corrupt index is a decode bomb
-    * (a 2^40 range truncates to a negative or multi-GB allocation
+  /** The one bounded byte-range read of every shard index kind
+    * (precomputed minishards, zarr3 `sharding_indexed`), validated
+    * against the file itself: index offsets and sizes are UNTRUSTED file
+    * bytes (a crc32c catches corruption, not a crafted index), and
+    * allocating `len.toInt` straight off a corrupt index is a decode
+    * bomb (a 2^40 range truncates to a negative or multi-GB allocation
     * before readFully ever hits EOF) — the same hostile-input rail as
-    * Brotli/Draco/Compresso's output ceilings.
+    * Brotli/Draco/Compresso's output ceilings. The range must lie in the
+    * file (overflow-safe: `off + len` can wrap negative for an offset
+    * near 2^63), fit `maxLen` (a JVM array at most), and be there to
+    * read.
     */
-  private def rangedRead(raf: RandomAccessFile, s0: Long, e0: Long,
-      what: String): Array[Byte] = {
+  private[sources] def rangedRead(raf: RandomAccessFile, off: Long, len: Long,
+      what: String, maxLen: Int = Int.MaxValue): Array[Byte] = {
     val flen = raf.length()
-    require(s0 >= 0 && e0 >= s0 && e0 <= flen,
-      s"corrupt shard index: $what range [$s0, $e0) outside the " +
+    require(off >= 0 && len >= 0 && off <= flen - len,
+      s"corrupt shard index: $what range [$off, +$len) outside the " +
         s"$flen-byte shard file")
-    // for shard files over 2 GiB an in-bounds corrupt range can still
-    // exceed a JVM array: (e0-s0).toInt would wrap negative and throw
-    // a raw NegativeArraySizeException instead of this rail
-    require(e0 - s0 <= Int.MaxValue,
-      s"corrupt shard index: $what range [$s0, $e0) spans " +
-        s"${e0 - s0} bytes, beyond the 2 GiB single-read ceiling")
-    val buf = new Array[Byte]((e0 - s0).toInt)
-    raf.seek(s0); raf.readFully(buf)
+    require(len <= maxLen, s"corrupt shard index: $what range [$off, " +
+      s"+$len) exceeds the $maxLen-byte single-read ceiling")
+    val buf = new Array[Byte](len.toInt)
+    raf.seek(off)
+    try raf.readFully(buf)
+    catch {
+      case _: java.io.EOFException => throw new IllegalArgumentException(
+        s"corrupt shard: EOF inside $what range [$off, +$len)")
+    }
     buf
   }
+
+  /** A shard file's fixed index: (start, end) of each minishard index. */
+  private def fixedIndex(raf: RandomAccessFile, spec: ShardingSpec): Array[(Long, Long)] =
+    ShardCodec.decodeFixedIndex(
+      rangedRead(raf, 0L, ShardCodec.indexLength(spec), "fixed index"), spec)
 
   private def mortonUdf(grid: Vec3) =
     udf((gx: Long, gy: Long, gz: Long) =>
@@ -83,23 +94,20 @@ object ShardedIO {
     if (!Files.exists(Paths.get(shardPath))) return Seq.empty
     val raf = new RandomAccessFile(shardPath, "r")
     try {
-      val idxLen = ShardCodec.indexLength(spec).toInt
-      val fixedBytes = new Array[Byte](idxLen)
-      raf.readFully(fixedBytes)
-      val fixed = ShardCodec.decodeFixedIndex(fixedBytes, spec)
+      val fixed = fixedIndex(raf, spec)
       // one index read per needed minishard
       val neededMsn = labels.map(l => spec.shardLocation(l)._2).distinct
       val entries = neededMsn.flatMap { msn =>
         val (s0, e0) = fixed(msn.toInt)
         if (e0 <= s0) Seq.empty
         else ShardCodec.decodeMinishardIndex(
-          rangedRead(raf, s0, e0, "minishard index"), spec)
+          rangedRead(raf, s0, e0 - s0, "minishard index"), spec)
       }.filter(e => want.contains(e.label))
       // coalesce adjacent data ranges into bundled reads (S7/W3)
       val ranges = entries.map(e => (e.offset, e.offset + e.size))
       val bundles = ShardIndex.coalesceRanges(ranges)
       val data = bundles.map { case (s0, e0) =>
-        (s0, rangedRead(raf, s0, e0, "data bundle"))
+        (s0, rangedRead(raf, s0, e0 - s0, "data bundle"))
       }
       def slice(off: Long, len: Long): Array[Byte] = {
         val (bs, bbuf) = data.find { case (s0, b) =>
@@ -162,15 +170,12 @@ object ShardedIO {
     spark.createDataset(shardFiles).flatMap { path =>
       val raf = new RandomAccessFile(path, "r")
       try {
-        val idxLen = ShardCodec.indexLength(spec).toInt
-        val fixedBytes = new Array[Byte](idxLen)
-        raf.readFully(fixedBytes)
-        val fixed = ShardCodec.decodeFixedIndex(fixedBytes, spec)
+        val fixed = fixedIndex(raf, spec)
         val name = Paths.get(path).getFileName.toString
         fixed.zipWithIndex.flatMap { case ((s0, e0), msn) =>
           if (e0 <= s0) Seq.empty
           else ShardCodec.decodeMinishardIndex(
-              rangedRead(raf, s0, e0, "minishard index"), spec)
+              rangedRead(raf, s0, e0 - s0, "minishard index"), spec)
             .map(e => (name, msn.toLong, e.label, e.offset, e.size))
         }.toSeq
       } finally raf.close()
@@ -185,7 +190,8 @@ object ShardedIO {
     */
   def readChunksSharded(spark: SparkSession, layerDir: String, bbox: Bbox,
       mip: Int = 0): DataFrame =
-    PrecomputedIO.chunksIn(spark, layerDir, bbox, mip, fillMissing = false)
+    PrecomputedIO.chunksIn(spark, layerDir, PrecomputedIO.readInfo(layerDir),
+      bbox, mip, fillMissing = false)
 
   /** S5 sharded cutout: [[PrecomputedIO.cutoutVoxels]], which reads a
     * sharded scale through the same scan.

@@ -109,25 +109,29 @@ object Zarr2IO {
     // shape would misread
     require(sh.size == 3 && ch.size == 3,
       s"expected 3-D zarr2 array, got ${sh.size}-D (use the OME reader)")
+    metaOf(z, Vec3(sh.get(0).asLong, sh.get(1).asLong, sh.get(2).asLong),
+      Vec3(ch.get(0).asLong, ch.get(1).asLong, ch.get(2).asLong))
+  }
+
+  /** The [[Zarr2Meta]] of a `.zarray` node whose spatial (x, y, z) shape
+    * and chunks are given. */
+  private def metaOf(z: com.fasterxml.jackson.databind.JsonNode, shape: Vec3,
+      chunks: Vec3): Zarr2Meta = {
     requireNoFilters(z)
     val comp = Option(z.get("compressor")).filter(!_.isNull)
     val compId = comp.map(_.get("id").asText).getOrElse("none")
     require(Compressors.contains(compId),
       s"zarr2 compressor '$compId' unsupported")
+    def conf(k: String) = comp.flatMap(c => Option(c.get(k)))
     // shuffle -1 is numcodecs AUTOSHUFFLE: byte-shuffle iff typesize>1
     // (decode ignores it anyway — the frame header carries the truth)
-    Zarr2Meta(
-      shape = Vec3(sh.get(0).asLong, sh.get(1).asLong, sh.get(2).asLong),
-      chunkShape = Vec3(ch.get(0).asLong, ch.get(1).asLong, ch.get(2).asLong),
+    Zarr2Meta(shape, chunks,
       dtype = z.get("dtype").asText,
       fillValue = Option(z.get("fill_value")).map(_.asLong).getOrElse(0L),
       compressor = compId,
-      bloscCname = comp.flatMap(c => Option(c.get("cname")))
-        .map(_.asText).getOrElse("lz4"),
-      bloscClevel = comp.flatMap(c => Option(c.get("clevel")))
-        .map(_.asInt).getOrElse(5),
-      bloscShuffle = comp.flatMap(c => Option(c.get("shuffle")))
-        .map(_.asInt).filter(_ >= 0).getOrElse(1),
+      bloscCname = conf("cname").map(_.asText).getOrElse("lz4"),
+      bloscClevel = conf("clevel").map(_.asInt).getOrElse(5),
+      bloscShuffle = conf("shuffle").map(_.asInt).filter(_ >= 0).getOrElse(1),
       order = z.get("order").asText,
       separator = Option(z.get("dimension_separator")).map(_.asText)
         .getOrElse(".")) // "." is the zarr2 spec default when absent
@@ -156,51 +160,44 @@ object Zarr2IO {
     Set("none", "zlib", "blosc", "zstd", "gzip", "bz2", "lzma")
 
   private def pack(m: Zarr2Meta, b: Array[Byte]): Array[Byte] =
-    m.compressor match {
-      case "zlib" => Codec.zlibCompress(b)
-      case "blosc" => Blosc.compress(b, m.dtypeBytes, m.bloscCname,
-        m.bloscClevel, m.bloscShuffle)
-      case "zstd" => Codec.zstd(b)
-      case "gzip" => Codec.gzip(b)
-      case "bz2" => Codec.bzip2(b)
-      case "lzma" => Codec.xz(b)
-      case _ => b
-    }
-
-  private def unpack(m: Zarr2Meta, b: Array[Byte]): Array[Byte] =
-    m.compressor match {
-      case "zlib" => Codec.zlibDecompress(b)
-      case "blosc" => Blosc.decompress(b)
-      case "zstd" => Codec.unzstd(b)
-      case "gzip" => Codec.gunzip(b)
-      case "bz2" => Codec.unbzip2(b)
-      case "lzma" => Codec.unxz(b)
-      case _ => b
-    }
+    graft.sources.Compressors.compress(m.compressor, b, m.dtypeBytes,
+      graft.sources.Compressors.BloscConf(m.bloscCname, m.bloscClevel,
+        m.bloscShuffle))
 
   /** Write chunk rows (gx, gy, gz, vox F-order full-chunk array). */
-  def writeChunks(chunks: DataFrame, dir: String, m: Zarr2Meta): Unit = {
+  def writeChunks(chunks: DataFrame, dir: String, m: Zarr2Meta): Unit =
+    writeBlocks(chunks, dir, m, None)
+
+  /** Write rows of the lead-axis grid indices (tc, cc; OME only), then
+    * (gx, gy, gz, vox F-order full-chunk array), as the chunk objects
+    * [[layout]] reads: named by its keys, in the .zarray byte order,
+    * and C-order unless F (a plain array's declared order) or OME —
+    * whose C order of (t=1, c=1, z, y, x) is x-fastest, F order of the
+    * spatial block.
+    */
+  private def writeBlocks(chunks: DataFrame, dir: String, m: Zarr2Meta,
+      ome: Option[Zarr2Ome]): Unit = {
     val cs = m.chunkShape
     val dtb = m.dtypeBytes
-    val meta = m
-    val sep = m.separator
     // ByteOrder is not Serializable — ship a flag, rehydrate per task
     val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
-    val isF = m.order == "F"
-    val dirStr = dir
+    val cOrder = ome.isEmpty && m.order == "C"
+    val lead = ome.toSeq.flatMap(o => o.timeFrames.map(_ => 0).toSeq ++
+      o.channels.map(_ => 1).toSeq)
+    val g0 = if (ome.isDefined) 2 else 0
     chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
         else java.nio.ByteOrder.LITTLE_ENDIAN
       rows.foreach { r =>
-        val vox = r.getSeq[Long](3).toArray
+        val vox = r.getSeq[Long](g0 + 3).toArray
         val bytes =
-          if (isF) Codec.encodeRawFromLongs(vox, dtb, bo)
-          else Zarr3IO.encodeChunkFromF(vox, cs, dtb, bo)
-        val payload = pack(meta, bytes)
-        val p = Paths.get(dirStr,
-          s"${r.getLong(0)}$sep${r.getLong(1)}$sep${r.getLong(2)}")
+          if (cOrder) Zarr3IO.encodeChunkFromF(vox, cs, dtb, bo)
+          else Codec.encodeRawFromLongs(vox, dtb, bo)
+        val p = Paths.get(dir, ChunkLayout.Keys.Grid(lead.map(r.getLong(_).toString),
+          m.separator, zyx = ome.isDefined)
+          .name(Vec3(r.getLong(g0), r.getLong(g0 + 1), r.getLong(g0 + 2))))
         Files.createDirectories(p.getParent)
-        Files.write(p, payload)
+        Files.write(p, pack(m, bytes))
       }
     }
   }
@@ -338,7 +335,6 @@ object Zarr2IO {
   private def parseOme(z: com.fasterxml.jackson.databind.JsonNode,
       at: com.fasterxml.jackson.databind.JsonNode): Zarr2Ome = {
     require(z.get("zarr_format").asInt == 2, "not a zarr v2 array")
-    requireNoFilters(z)
     val axes = at.get("multiscales").get(0).get("axes")
     val names = (0 until axes.size).map(axes.get(_).get("name").asText)
     require(names.size >= 3 && names.takeRight(3) == Seq("z", "y", "x") &&
@@ -354,30 +350,11 @@ object Zarr2IO {
       require(ch.get(i).asLong == 1L,
         s"OME lead-axis chunk extent ${ch.get(i).asLong} != 1 unsupported")
     }
-    val comp = Option(z.get("compressor")).filter(!_.isNull)
-    val compId = comp.map(_.get("id").asText).getOrElse("none")
-    require(Compressors.contains(compId),
-      s"zarr2 compressor '$compId' unsupported")
     val tPos = names.indexOf("t")
     val cPos = names.indexOf("c")
-    val meta = Zarr2Meta(
-      shape = Vec3(sh.get(nLead + 2).asLong, sh.get(nLead + 1).asLong,
-        sh.get(nLead).asLong),
-      chunkShape = Vec3(ch.get(nLead + 2).asLong, ch.get(nLead + 1).asLong,
-        ch.get(nLead).asLong),
-      dtype = z.get("dtype").asText,
-      fillValue = Option(z.get("fill_value")).map(_.asLong).getOrElse(0L),
-      compressor = compId,
-      bloscCname = comp.flatMap(c => Option(c.get("cname")))
-        .map(_.asText).getOrElse("lz4"),
-      bloscClevel = comp.flatMap(c => Option(c.get("clevel")))
-        .map(_.asInt).getOrElse(5),
-      bloscShuffle = comp.flatMap(c => Option(c.get("shuffle")))
-        .map(_.asInt).filter(_ >= 0).getOrElse(1),
-      order = z.get("order").asText,
-      separator = Option(z.get("dimension_separator")).map(_.asText)
-        .getOrElse("."))
-    Zarr2Ome(meta,
+    def zyx(n: com.fasterxml.jackson.databind.JsonNode) =
+      Vec3(n.get(nLead + 2).asLong, n.get(nLead + 1).asLong, n.get(nLead).asLong)
+    Zarr2Ome(metaOf(z, zyx(sh), zyx(ch)),
       timeFrames = if (tPos >= 0) Some(sh.get(tPos).asLong) else None,
       channels = if (cPos >= 0) Some(sh.get(cPos).asLong) else None)
   }
@@ -451,44 +428,36 @@ object Zarr2IO {
     * zarr axis order: [t.][c.]gz.gy.gx (zarr2/metadata.py:211-223
     * chunk_name).
     */
-  def writeChunksOme(chunks: DataFrame, dir: String, o: Zarr2Ome): Unit = {
-    val m = o.meta
-    val dtb = m.dtypeBytes
-    val sep = m.separator
-    val hasT = o.timeFrames.isDefined
-    val hasC = o.channels.isDefined
-    val meta = m
-    val dirStr = dir
-    // ByteOrder is not Serializable — ship a flag, rehydrate per task
-    val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
-    chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN
-      rows.foreach { r =>
-        val vox = r.getSeq[Long](5).toArray
-        // C order of (t=1, c=1, z, y, x) is x-fastest = F order of the
-        // spatial block: encode verbatim
-        val payload = pack(meta, Codec.encodeRawFromLongs(vox, dtb, bo))
-        val parts =
-          (if (hasT) Seq(r.getLong(0).toString) else Seq.empty) ++
-            (if (hasC) Seq(r.getLong(1).toString) else Seq.empty) ++
-            Seq(r.getLong(4).toString, r.getLong(3).toString,
-              r.getLong(2).toString)
-        val p = Paths.get(dirStr, parts.mkString(sep))
-        Files.createDirectories(p.getParent)
-        Files.write(p, payload)
-      }
-    }
+  def writeChunksOme(chunks: DataFrame, dir: String, o: Zarr2Ome): Unit =
+    writeBlocks(chunks, dir, o.meta, Some(o))
+
+  /** The scan layout of the zarr2 array at `dir`: full-size chunks,
+    * an absent key reads as fill_value (zarr v2 semantics; the
+    * reference's fill_missing path, zarr2/image.py:55-75), values in
+    * the .zarray byte order. A plain array keys chunks `x.y.z` and
+    * C->F transposes unless its order is F; an OME array keys them
+    * `[t.][c.]z.y.x`, and the C order of (t=1, c=1, z, y, x) is
+    * x-fastest, already F order.
+    */
+  private[sources] def layout(dir: String, m: Zarr2Meta,
+      lead: Seq[Long] = Nil, ome: Boolean = false): ChunkLayout = {
+    import ChunkLayout._
+    ChunkLayout(dir, if (ome) "ome-zarr2" else "zarr2", dir,
+      Bbox(Vec3(0, 0, 0), m.shape), m.chunkShape, clamp = false,
+      Keys.Grid(lead.map(_.toString), m.separator, zyx = ome),
+      Shards.Unsharded, Missing.Fill,
+      Step.Decompress(m.compressor) +:
+        ((if (m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN) Seq(Step.SwapBytes)
+          else Nil) ++ (if (ome || m.order == "F") Nil else Seq(Step.CToF))),
+      "raw", m.dtypeBytes, m.fillValue)
   }
 
-  /** OME cutout at one (t, c) point of the lead axes (the reference's
-    * download(..., t=...) + channel slice; zarr2/image.py:76-149).
+  /** The layout of an OME store at one (t, c) point of the lead axes.
     * `mip` selects the multiscale-group dataset (zarr2/metadata.py
     * key(mip)); single-array layouts (path ".") take mip 0 only.
     */
-  def cutoutVoxelsOmeAt(spark: SparkSession, dir: String, bbox: Bbox,
-      t: Long = 0L, c: Long = 0L, mip: Int = 0,
-      consolidated: Boolean = false): DataFrame = {
+  private[sources] def omeLayout(dir: String, t: Long, c: Long, mip: Int,
+      consolidated: Boolean): ChunkLayout = {
     val paths =
       if (consolidated) omeDatasetPathsConsolidated(dir)
       else omeDatasetPaths(dir)
@@ -498,7 +467,6 @@ object Zarr2IO {
     val o =
       if (consolidated) readMetaOmeConsolidated(dir, sub)
       else readMetaOme(dir, sub)
-    val chunkBase = sub.map(p => s"$dir/$p").getOrElse(dir)
     o.timeFrames match {
       case Some(tf) => require(t >= 0 && t < tf, s"t=$t out of [0, $tf)")
       case None => require(t == 0, s"$dir has no time axis (t=$t)")
@@ -507,49 +475,19 @@ object Zarr2IO {
       case Some(nc) => require(c >= 0 && c < nc, s"c=$c out of [0, $nc)")
       case None => require(c == 0, s"$dir has no channel axis (c=$c)")
     }
-    val m = o.meta
-    val sep = m.separator
-    val lead =
-      (if (o.timeFrames.isDefined) Seq(t.toString) else Seq.empty) ++
-        (if (o.channels.isDefined) Seq(c.toString) else Seq.empty)
-    // C order of (t=1, c=1, z, y, x) is x-fastest = F order of the
-    // spatial block, so the OME chunk decodes like an F-order chunk
-    cutoutChunks(spark, chunkBase, m, bbox, isF = true,
-      g => (lead ++ Seq(g.z.toString, g.y.toString, g.x.toString)).mkString(sep))
+    layout(sub.map(p => s"$dir/$p").getOrElse(dir), o.meta,
+      o.timeFrames.map(_ => t).toSeq ++ o.channels.map(_ => c).toSeq, ome = true)
   }
+
+  /** OME cutout at one (t, c) point of the lead axes (the reference's
+    * download(..., t=...) + channel slice; zarr2/image.py:76-149).
+    */
+  def cutoutVoxelsOmeAt(spark: SparkSession, dir: String, bbox: Bbox,
+      t: Long = 0L, c: Long = 0L, mip: Int = 0,
+      consolidated: Boolean = false): DataFrame =
+    ChunkLayout.cutout(spark, omeLayout(dir, t, c, mip, consolidated), bbox)
 
   /** S18 zarr2 cutout (same plan shape as zarr3). */
-  def cutoutVoxels(spark: SparkSession, dir: String, bbox: Bbox): DataFrame = {
-    val m = readMeta(dir)
-    val sep = m.separator
-    cutoutChunks(spark, dir, m, bbox, isF = m.order == "F",
-      g => s"${g.x}$sep${g.y}$sep${g.z}")
-  }
-
-  /** Shared zarr2 block read: chunk object `dir/<key(g)>`, absent key =
-    * fill_value chunk (zarr v2 semantics; the reference's fill_missing
-    * path, zarr2/image.py:55-75), decoded in the .zarray byte order and
-    * C->F transposed unless the chunk is already F order.
-    */
-  private def cutoutChunks(spark: SparkSession, dir: String, m: Zarr2Meta,
-      bbox: Bbox, isF: Boolean, key: Vec3 => String): DataFrame = {
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    // ByteOrder is not Serializable — ship a flag, rehydrate per task
-    val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
-    ScanSizing.cutoutGrid(spark, bbox, Bbox(Vec3(0, 0, 0), m.shape), cs,
-        cs.x * cs.y * cs.z * dtb, m.fillValue) { g =>
-      val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN
-      val p = Paths.get(dir, key(g))
-      val vox =
-        if (!Files.exists(p)) null
-        else {
-          val raw = unpack(m, Files.readAllBytes(p))
-          if (isF) Codec.decodeRawToLongs(raw, dtb, bo)
-          else Zarr3IO.decodeChunkToF(raw, cs, dtb, bo)
-        }
-      (cs, vox)
-    }
-  }
+  def cutoutVoxels(spark: SparkSession, dir: String, bbox: Bbox): DataFrame =
+    ChunkLayout.cutout(spark, layout(dir, readMeta(dir)), bbox)
 }

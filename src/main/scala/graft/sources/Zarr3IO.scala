@@ -101,20 +101,9 @@ object Zarr3IO {
 
   private val om = new ObjectMapper()
 
-  /** Second-stage (de)compression per the codec chain. */
-  private def pack(m: Zarr3Meta, b: Array[Byte]): Array[Byte] = m.compressor match {
-    case "gzip" => Codec.gzip(b)
-    case "zstd" => Codec.zstd(b)
-    // blosc typesize = dtype width so byte-shuffle groups value lanes
-    case "blosc" => Blosc.compress(b, m.dtypeBytes)
-    case _ => b
-  }
-  private def unpack(m: Zarr3Meta, b: Array[Byte]): Array[Byte] = m.compressor match {
-    case "gzip" => Codec.gunzip(b)
-    case "zstd" => Codec.unzstd(b)
-    case "blosc" => Blosc.decompress(b)
-    case _ => b
-  }
+  /** Second-stage compression per the codec chain. */
+  private def pack(m: Zarr3Meta, b: Array[Byte]): Array[Byte] =
+    Compressors.compress(m.compressor, b, m.dtypeBytes)
 
   /** Append the compressor codec object to a codec array node. */
   private def addCompressorCodec(
@@ -316,10 +305,10 @@ object Zarr3IO {
 
   // ---- sharding_indexed (zarr v3 sharding spec) ----
 
-  private val Missing = -1L // 0xFFFFFFFFFFFFFFFF: absent inner chunk
+  private[sources] val MissingSlot = -1L // 0xFFFFFFFFFFFFFFFF: absent inner chunk
 
   /** Index slot of inner-grid coords (C order: z fastest). */
-  private def innerSlot(c: Vec3, ig: Vec3): Int =
+  private[sources] def innerSlot(c: Vec3, ig: Vec3): Int =
     ((c.x * ig.y + c.y) * ig.z + c.z).toInt
 
   private def crc32c(b: Array[Byte], len: Int): Int = {
@@ -364,7 +353,7 @@ object Zarr3IO {
         }
         z += 1
       }
-      if (allFill) { offsets(slot) = Missing; sizes(slot) = Missing }
+      if (allFill) { offsets(slot) = MissingSlot; sizes(slot) = MissingSlot }
       else {
         val enc0 = encodeChunkFromF(sub, inner, dtb)
         val enc = pack(m, enc0)
@@ -389,168 +378,78 @@ object Zarr3IO {
   /** Parse a shard's trailing index; verifies the crc32c. */
   def readShardIndex(file: java.nio.file.Path, m: Zarr3Meta): Array[(Long, Long)] = {
     val ig = m.innerGrid
-    val n = (ig.x * ig.y * ig.z).toInt
-    val idxLen = 16 * n + 4
-    val ch = java.nio.channels.FileChannel.open(file)
-    try {
-      val sz = ch.size()
-      require(sz >= idxLen, s"shard smaller than its index ($sz < $idxLen)")
-      val bb = java.nio.ByteBuffer.allocate(idxLen)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      ch.position(sz - idxLen)
-      while (bb.hasRemaining) ch.read(bb)
-      bb.flip()
-      val raw = bb.array()
-      val want = java.nio.ByteBuffer.wrap(raw, 16 * n, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-      val got = crc32c(raw, 16 * n)
-      if (want != got)
-        throw new IllegalArgumentException( // the decoder-boundary contract
-          s"shard index crc32c mismatch: stored $want computed $got")
-      (0 until n).map(i => (bb.getLong(i * 16), bb.getLong(i * 16 + 8))).toArray
-    } finally ch.close()
+    val raf = new java.io.RandomAccessFile(file.toFile, "r")
+    try shardIndex(raf, (ig.x * ig.y * ig.z).toInt) finally raf.close()
   }
 
-  /** Range-read one inner chunk's encoded bytes from a shard file. */
-  private def readRange(file: java.nio.file.Path, off: Long, len: Long): Array[Byte] = {
-    val ch = java.nio.channels.FileChannel.open(file)
-    try {
-      // the (offset, nbytes) pair comes from the shard's own index —
-      // crc32c catches corruption but not a CRAFTED index, so bound
-      // the range like ShardedIO.rangedRead: inside the file, and
-      // under the decode ceiling (len.toInt would wrap a 2^40 claim
-      // negative; an off past EOF would make read() return -1 and the
-      // fill loop below spin forever)
-      val sz = ch.size()
-      // overflow-safe form: off + len can wrap negative for a crafted
-      // entry (off near 2^63), which would pass `off + len <= sz`
-      require(off >= 0 && len >= 0 && len <= sz && off <= sz - len,
-        s"corrupt zarr3 shard index: range [$off, len $len) outside " +
-          s"the $sz-byte shard object")
-      require(len <= graft.core.Codec.MaxDecodedChunkBytes,
-        s"corrupt zarr3 shard index: $len-byte inner chunk exceeds the " +
-          s"${graft.core.Codec.MaxDecodedChunkBytes}-byte ceiling")
-      val bb = java.nio.ByteBuffer.allocate(len.toInt)
-      ch.position(off)
-      while (bb.hasRemaining && ch.read(bb) >= 0) ()
-      require(!bb.hasRemaining,
-        s"corrupt zarr3 shard object: EOF inside range [$off, ${off + len})")
-      bb.array()
-    } finally ch.close()
+  /** The (offset, nbytes) index of `n` inner chunks at the end of an
+    * open shard object, crc32c-checked. */
+  private[sources] def shardIndex(raf: java.io.RandomAccessFile,
+      n: Int): Array[(Long, Long)] = {
+    val raw = ShardedIO.rangedRead(raf, raf.length - (16 * n + 4), 16 * n + 4,
+      "zarr3 shard index")
+    val bb = java.nio.ByteBuffer.wrap(raw).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val want = bb.getInt(16 * n)
+    val got = crc32c(raw, 16 * n)
+    if (want != got)
+      throw new IllegalArgumentException( // the decoder-boundary contract
+        s"shard index crc32c mismatch: stored $want computed $got")
+    Array.tabulate(n)(i => (bb.getLong(i * 16), bb.getLong(i * 16 + 8)))
   }
 
   /** Write shard rows (sx, sy, sz, vox: F-order full OUTER-shard Long
     * array) as shard objects `c/<sx>/<sy>/<sz>`.
     */
   def writeShards(shards: DataFrame, dir: String, m: Zarr3Meta): Unit = {
-    val dirStr = dir
     shards.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       rows.foreach { r =>
-        val bytes = synthesizeShard(r.getSeq[Long](3).toArray, m)
-        val p = Paths.get(dirStr, "c", r.getLong(0).toString,
-          r.getLong(1).toString)
-        Files.createDirectories(p)
-        Files.write(p.resolve(r.getLong(2).toString), bytes)
+        val p = Paths.get(dir, "c", r.getLong(0).toString,
+          r.getLong(1).toString, r.getLong(2).toString)
+        Files.createDirectories(p.getParent)
+        Files.write(p, synthesizeShard(r.getSeq[Long](3).toArray, m))
       }
     }
   }
 
   /** C-order chunk bytes -> F-order Long voxels (the bytes-codec
-    * transpose at the canonical-order boundary).
+    * transpose at the canonical-order boundary; C order of shape
+    * (x, y, z) is z fastest, F order x fastest).
     */
   def decodeChunkToF(payload: Array[Byte], cs: Vec3, dtb: Int,
       order: java.nio.ByteOrder = java.nio.ByteOrder.LITTLE_ENDIAN)
-      : Array[Long] = {
-    val c = Codec.decodeRawToLongs(payload, dtb, order)
-    require(c.length == cs.x * cs.y * cs.z,
-      s"chunk has ${c.length} voxels, expected ${cs.x * cs.y * cs.z}")
-    val out = new Array[Long](c.length)
-    var x = 0L
-    while (x < cs.x) {
-      var y = 0L
-      while (y < cs.y) {
-        var z = 0L
-        while (z < cs.z) {
-          // C order of shape (x,y,z): z fastest; F order: x fastest
-          out((x + cs.x * (y + cs.y * z)).toInt) =
-            c((z + cs.z * (y + cs.y * x)).toInt)
-          z += 1
-        }
-        y += 1
-      }
-      x += 1
-    }
-    out
-  }
+      : Array[Long] =
+    Codec.decodeRawToLongs(ChunkLayout.transpose(payload, cs, dtb, cToF = true),
+      dtb, order)
 
   /** F-order voxels -> C-order chunk bytes (write-side transpose). */
   def encodeChunkFromF(vox: Array[Long], cs: Vec3, dtb: Int,
       order: java.nio.ByteOrder = java.nio.ByteOrder.LITTLE_ENDIAN)
-      : Array[Byte] = {
-    val c = new Array[Long](vox.length)
-    var x = 0L
-    while (x < cs.x) {
-      var y = 0L
-      while (y < cs.y) {
-        var z = 0L
-        while (z < cs.z) {
-          c((z + cs.z * (y + cs.y * x)).toInt) =
-            vox((x + cs.x * (y + cs.y * z)).toInt)
-          z += 1
-        }
-        y += 1
-      }
-      x += 1
-    }
-    Codec.encodeRawFromLongs(c, dtb, order)
-  }
+      : Array[Byte] =
+    ChunkLayout.transpose(Codec.encodeRawFromLongs(vox, dtb, order), cs, dtb,
+      cToF = false)
 
   /** Write chunk rows (gx, gy, gz, vox: F-order full-chunk Long array)
     * as zarr chunk objects `c/<gx>/<gy>/<gz>`.
     */
-  def writeChunks(chunks: DataFrame, dir: String, m: Zarr3Meta): Unit = {
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val dirStr = dir
-    chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.foreach { r =>
-        val bytes = encodeFrameFromF(m, r.getSeq[Long](3).toArray, cs, dtb)
-        val payload = pack(m, bytes)
-        val key = spatialKey(m, r.getLong(0), r.getLong(1), r.getLong(2))
-        val p = Paths.get(dirStr, "c", key(0), key(1))
-        Files.createDirectories(p)
-        Files.write(p.resolve(key(2)), payload)
-      }
-    }
-  }
+  def writeChunks(chunks: DataFrame, dir: String, m: Zarr3Meta): Unit =
+    writeFrames(chunks, dir, m, lead = 0)
 
   /** Chunk-granular read of a plain spatial array: one row per
     * EXISTING chunk object, voxels decoded to the canonical F-order
     * block — the dual of [[writeChunks]] and the transcode source
     * shape (absent keys are skipped; they stay absent in a transcode
-    * target too). One decode per chunk, never a voxel-row explosion.
+    * target too). The array's chunk scan, one decode per chunk, never
+    * a voxel-row explosion.
     */
   def readChunksF(spark: SparkSession, dir: String): DataFrame = {
     val m = readMeta(dir)
     require(m.timeFrames.isEmpty && m.channels.isEmpty &&
       m.innerChunkShape.isEmpty,
       s"$dir: plain spatial array expected for chunk-granular read")
-    val g = m.gridSize
-    val cs = m.chunkShape
     val dtb = m.dtypeBytes
-    val dirStr = dir
-    import spark.implicits._
-    val grid = for {
-      gz <- 0L until g.z; gy <- 0L until g.y; gx <- 0L until g.x
-    } yield Vec3(gx, gy, gz)
-    ScanSizing.scanGrid(spark, grid, cs.x * cs.y * cs.z * dtb) { c =>
-      val key = spatialKey(m, c.x, c.y, c.z)
-      val p = Paths.get(dirStr, "c", key(0), key(1), key(2))
-      if (!Files.exists(p)) None
-      else Some((c.x, c.y, c.z,
-        decodeFrameToF(m, unpack(m, Files.readAllBytes(p)), cs, dtb)
-          .toSeq))
-    }.toDF("gx", "gy", "gz", "vox")
+    val vox = udf((p: Array[Byte]) => Codec.decodeRawToLongs(p, dtb))
+    ChunkLayout.scan(spark, layout(dir, m)).where(col("payload").isNotNull)
+      .select(col("gx"), col("gy"), col("gz"), vox(col("payload")).as("vox"))
   }
 
   /** Write 4-D chunk rows (tc, gx, gy, gz, vox) where `vox` is
@@ -563,9 +462,6 @@ object Zarr3IO {
     * t parameter; zarr3/image.py:166-181).
     */
   def writeChunksT(chunks: DataFrame, dir: String, m: Zarr3Meta): Unit = {
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val tc = m.timeChunk
     require(m.timeFrames.isDefined, "writeChunksT requires a time axis")
     // this writer emits plain x-fastest frames under c/<tc>/<gx|gy|gz>
     // keys — a channel axis or zyx spatial order would need
@@ -573,28 +469,7 @@ object Zarr3IO {
     // would produce files readMeta-compatible readers misplace
     require(m.channels.isEmpty && !m.zyx,
       "writeChunksT supports 4-D (t + xyz) only; use writeChunksTC")
-    val frameVox = (cs.x * cs.y * cs.z).toInt
-    val dirStr = dir
-    chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.foreach { r =>
-        val vox = r.getSeq[Long](4).toArray
-        require(vox.length == frameVox * tc,
-          s"expected $tc frames of $frameVox voxels, got ${vox.length}")
-        val out = new java.io.ByteArrayOutputStream(vox.length * dtb)
-        var f = 0L
-        while (f < tc) {
-          out.write(encodeChunkFromF(
-            java.util.Arrays.copyOfRange(vox, (f * frameVox).toInt,
-              ((f + 1) * frameVox).toInt), cs, dtb))
-          f += 1
-        }
-        val p = Paths.get(dirStr, "c", r.getLong(0).toString,
-          r.getLong(1).toString, r.getLong(2).toString)
-        Files.createDirectories(p)
-        Files.write(p.resolve(r.getLong(3).toString),
-          pack(m, out.toByteArray))
-      }
-    }
+    writeFrames(chunks, dir, m, lead = 1)
   }
 
   /** Write 5-D chunk rows (tc, cc, gx, gy, gz, vox) where `vox` is
@@ -603,119 +478,65 @@ object Zarr3IO {
     * `c/<tc>/<cc>/<gx>/<gy>/<gz>`.
     */
   def writeChunksTC(chunks: DataFrame, dir: String, m: Zarr3Meta): Unit = {
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
     require(m.timeFrames.isDefined && m.channels.isDefined,
       "writeChunksTC requires both t and c axes")
-    val nf = m.timeChunk * m.channelChunk
+    writeFrames(chunks, dir, m, lead = 2)
+  }
+
+  /** Write rows of `lead` lead-axis grid indices, then (gx, gy, gz, vox)
+    * as objects `c/<lead>/<spatial key>` (the default chunk_key_encoding
+    * follows dimension_names, so a zyx array keys `.../<gz>/<gy>/<gx>`).
+    * `vox` holds the object's timeChunk x channelChunk F-order
+    * full-chunk frames, t-major — the C order of (t, c, x, y, z) — and
+    * each frame is encoded on its own.
+    */
+  private def writeFrames(chunks: DataFrame, dir: String, m: Zarr3Meta,
+      lead: Int): Unit = {
+    val cs = m.chunkShape
+    val dtb = m.dtypeBytes
+    val nf = (m.timeChunk * m.channelChunk).toInt
     val frameVox = (cs.x * cs.y * cs.z).toInt
-    val dirStr = dir
     chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       rows.foreach { r =>
-        val vox = r.getSeq[Long](5).toArray
+        val vox = r.getSeq[Long](lead + 3).toArray
         require(vox.length == frameVox * nf,
           s"expected $nf frames of $frameVox voxels, got ${vox.length}")
         val out = new java.io.ByteArrayOutputStream(vox.length * dtb)
-        var f = 0L
-        while (f < nf) {
-          out.write(encodeFrameFromF(m,
-            java.util.Arrays.copyOfRange(vox, (f * frameVox).toInt,
-              ((f + 1) * frameVox).toInt), cs, dtb))
-          f += 1
-        }
-        val key = spatialKey(m, r.getLong(2), r.getLong(3), r.getLong(4))
-        val p = Paths.get(dirStr, "c", r.getLong(0).toString,
-          r.getLong(1).toString, key(0), key(1))
-        Files.createDirectories(p)
-        Files.write(p.resolve(key(2)), pack(m, out.toByteArray))
+        for (f <- 0 until nf) out.write(encodeFrameFromF(m,
+          java.util.Arrays.copyOfRange(vox, f * frameVox, (f + 1) * frameVox), cs, dtb))
+        val p = Paths.get(dir, ChunkLayout.Keys.Grid(
+          "c" +: (0 until lead).map(r.getLong(_).toString), "/", m.zyx)
+          .name(Vec3(r.getLong(lead), r.getLong(lead + 1), r.getLong(lead + 2))))
+        Files.createDirectories(p.getParent)
+        Files.write(p, pack(m, out.toByteArray))
       }
     }
   }
 
-  /** Decode one chunk frame to F-order xyz Longs, honoring the
-    * array's spatial order: a zyx array's C-order bytes are x-fastest
-    * — already this engine's F order, so no transpose.
+  /** One F-order xyz frame to chunk bytes, honoring the array's
+    * spatial order: a zyx array's C-order bytes are x-fastest — already
+    * this engine's F order, so no transpose.
     */
-  private def decodeFrameToF(m: Zarr3Meta, payload: Array[Byte], cs: Vec3,
-      dtb: Int): Array[Long] =
-    if (m.zyx) {
-      val v = Codec.decodeRawToLongs(payload, dtb)
-      require(v.length == cs.x * cs.y * cs.z,
-        s"chunk has ${v.length} voxels, expected ${cs.x * cs.y * cs.z}")
-      v
-    } else decodeChunkToF(payload, cs, dtb)
-
-  /** Write-side dual of [[decodeFrameToF]]. */
   private def encodeFrameFromF(m: Zarr3Meta, vox: Array[Long], cs: Vec3,
       dtb: Int): Array[Byte] =
     if (m.zyx) Codec.encodeRawFromLongs(vox, dtb)
     else encodeChunkFromF(vox, cs, dtb)
 
-  /** Spatial chunk-key components in the array's dimension order (the
-    * default chunk_key_encoding follows dimension_names, so a zyx
-    * array keys chunks `c/<gz>/<gy>/<gx>`).
-    */
-  private def spatialKey(m: Zarr3Meta, gx: Long, gy: Long, gz: Long)
-      : Seq[String] =
-    if (m.zyx) Seq(gz.toString, gy.toString, gx.toString)
-    else Seq(gx.toString, gy.toString, gz.toString)
-
-  /** Unsharded cutout core: enumerate the pruned grid at planning
-    * time, read + unpack chunk objects in executor tasks, slice out
-    * frame `frameSlot` (lead t/c axes; 0 and whole-chunk for 3-D),
-    * transpose, clip, emit. Only the requested frame's byte range is
-    * transposed/emitted — the chunk is unpacked whole (compression is
-    * chunk-scoped) but other frames are never decoded.
-    */
-  private def cutoutUnsharded(spark: SparkSession, dir: String,
-      m: Zarr3Meta, bbox: Bbox, prefix: Seq[Long], frameSlot: Long)
-      : DataFrame = {
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val frameBytes = (cs.x * cs.y * cs.z).toInt * dtb
-    val fOff = (frameSlot * frameBytes).toInt
-    val dirStr = dir
-    val keyParts = prefix.map(_.toString)
-    ScanSizing.cutoutGrid(spark, bbox, Bbox(Vec3(0, 0, 0), m.shape), cs,
-        cs.x * cs.y * cs.z * dtb, m.fillValue) { g =>
-      var p = Paths.get(dirStr, "c")
-      (keyParts ++ spatialKey(m, g.x, g.y, g.z)).foreach(k => p = p.resolve(k))
-      // zarr defines an absent chunk key as a fill_value-filled chunk
-      // (the reference raises EmptyVolumeException unless
-      // fill_missing; zarr3/image.py:49-139)
-      val vox =
-        if (!Files.exists(p)) null
-        else {
-          val raw = unpack(m, Files.readAllBytes(p))
-          // a short object would silently zero-pad via copyOfRange —
-          // fail loudly instead: zarr chunks are always full-size
-          require(raw.length >= fOff + frameBytes,
-            s"truncated zarr chunk $p: ${raw.length} bytes, " +
-              s"frame needs [$fOff, ${fOff + frameBytes})")
-          val frame =
-            if (fOff == 0 && raw.length == frameBytes) raw
-            else java.util.Arrays.copyOfRange(raw, fOff, fOff + frameBytes)
-          decodeFrameToF(m, frame, cs, dtb)
-        }
-      (cs, vox)
-    }
-  }
-
-  /** Cutout one xyz bbox at a single (t, c) point of the lead axes
-    * (the reference's download(..., t=...) parameter and channel
-    * slicing; zarr3/image.py:141-149, zarr3/metadata.py:211-261).
+  /** The scan layout of the array at `dir` (meta `m`) at one (t, c)
+    * point of its lead axes: full-size chunks in C order, an absent key
+    * — or, sharded, an absent shard or a Missing index slot — reading
+    * as fill_value (zarr semantics; the reference raises
+    * EmptyVolumeException unless fill_missing, zarr3/image.py:49-139).
+    * Unsharded, the chunk is unpacked whole (compression is
+    * chunk-scoped) and only frame (t, c)'s bytes are transposed; a zyx
+    * array's C-order frame is already F order. Sharded, the scan's
+    * chunks are the inner chunks, each shard's read as one index read
+    * and one ranged read per inner chunk the request needs.
     * Arrays without a t (resp. c) axis require t=0 (resp. c=0).
     */
-  def cutoutVoxelsAt(spark: SparkSession, dir: String, bbox: Bbox,
-      t: Long = 0L, c: Long = 0L): DataFrame =
-    cutoutVoxelsAtMeta(spark, dir, readMeta(dir), bbox, t, c)
-
-  /** [[cutoutVoxelsAt]] with a pre-resolved meta — the consolidated
-    * group path supplies the meta from the root object so the member
-    * `zarr.json` is never opened.
-    */
-  private def cutoutVoxelsAtMeta(spark: SparkSession, dir: String,
-      m: Zarr3Meta, bbox: Bbox, t: Long, c: Long): DataFrame = {
+  private[sources] def layout(dir: String, m: Zarr3Meta, t: Long = 0L,
+      c: Long = 0L): ChunkLayout = {
+    import ChunkLayout.{Keys, Shards, Step}
     m.timeFrames match {
       case Some(tf) => require(t >= 0 && t < tf, s"t=$t out of range [0, $tf)")
       case None => require(t == 0, s"$dir has no time axis (t=$t)")
@@ -724,14 +545,32 @@ object Zarr3IO {
       case Some(nc) => require(c >= 0 && c < nc, s"c=$c out of range [0, $nc)")
       case None => require(c == 0, s"$dir has no channel axis (c=$c)")
     }
-    if (m.innerChunkShape.isDefined) cutoutVoxelsSharded(spark, dir, m, bbox)
-    else {
-      val prefix = m.timeFrames.map(_ => t / m.timeChunk).toSeq ++
-        m.channels.map(_ => c / m.channelChunk).toSeq
-      val slot = (t % m.timeChunk) * m.channelChunk + (c % m.channelChunk)
-      cutoutUnsharded(spark, dir, m, bbox, prefix, slot)
+    val bounds = Bbox(Vec3(0, 0, 0), m.shape)
+    val unpack = Step.Decompress(m.compressor)
+    m.innerChunkShape match {
+      case Some(inner) => ChunkLayout(dir, "zarr3 sharding_indexed", dir, bounds,
+        inner, clamp = false, Keys.Grid(Seq("c"), "/", zyx = false),
+        Shards.Indexed(m.innerGrid), ChunkLayout.Missing.Fill,
+        Seq(unpack, Step.CToF), "raw", m.dtypeBytes, m.fillValue)
+      case None =>
+        val lead = m.timeFrames.map(_ => t / m.timeChunk).toSeq ++
+          m.channels.map(_ => c / m.channelChunk).toSeq
+        val slot = (t % m.timeChunk) * m.channelChunk + (c % m.channelChunk)
+        ChunkLayout(dir, "zarr3", dir, bounds, m.chunkShape, clamp = false,
+          Keys.Grid("c" +: lead.map(_.toString), "/", m.zyx), Shards.Unsharded,
+          ChunkLayout.Missing.Fill,
+          Seq(unpack, Step.Frame(slot)) ++ (if (m.zyx) Nil else Seq(Step.CToF)),
+          "raw", m.dtypeBytes, m.fillValue)
     }
   }
+
+  /** Cutout one xyz bbox at a single (t, c) point of the lead axes
+    * (the reference's download(..., t=...) parameter and channel
+    * slicing; zarr3/image.py:141-149, zarr3/metadata.py:211-261).
+    */
+  def cutoutVoxelsAt(spark: SparkSession, dir: String, bbox: Bbox,
+      t: Long = 0L, c: Long = 0L): DataFrame =
+    ChunkLayout.cutout(spark, layout(dir, readMeta(dir), t, c), bbox)
 
   /** S18 time-axis cutout: one xyz bbox at a single timepoint `t`. */
   def cutoutVoxelsT(spark: SparkSession, dir: String, bbox: Bbox,
@@ -740,56 +579,12 @@ object Zarr3IO {
     cutoutVoxelsAt(spark, dir, bbox, t = t)
   }
 
-  /** S18 cutout of a 3-D array. Sharded arrays dispatch to the
-    * index-driven range-read path.
-    */
+  /** S18 cutout of a 3-D array, sharded or not. */
   def cutoutVoxels(spark: SparkSession, dir: String, bbox: Bbox): DataFrame = {
     val m = readMeta(dir)
     require(m.timeFrames.isEmpty && m.channels.isEmpty,
       s"$dir has a lead t/c axis — use cutoutVoxelsAt(bbox, t, c)")
-    if (m.innerChunkShape.isDefined) cutoutVoxelsSharded(spark, dir, m, bbox)
-    else cutoutUnsharded(spark, dir, m, bbox, Seq.empty, 0L)
-  }
-
-  /** Sharded cutout: one task per NEEDED shard (planning-time grid
-    * pruning), each reading the trailing index once (crc-checked) and
-    * then range-reading only the inner chunks that intersect the
-    * request — never the whole shard object. Each such inner chunk is
-    * one chunk row for the shared decode stage; absent shard files and
-    * Missing index slots ride as null payloads that read as fill_value
-    * (the sharded analog of the unsharded absent-chunk-key rule).
-    */
-  private def cutoutVoxelsSharded(spark: SparkSession, dir: String,
-      m: Zarr3Meta, bbox: Bbox): DataFrame = {
-    val inner = m.innerChunkShape.get
-    val ig = m.innerGrid
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val bounds = Bbox(Vec3(0, 0, 0), m.shape)
-    val clip = bbox.intersection(bounds)
-    val dirStr = dir
-    // the full-shard volume OVERestimates the ranged read, which only
-    // costs parallelism
-    ScanSizing.decodeGrid(spark, Geom.gridpoints(bbox, bounds, cs),
-        cs.x * cs.y * cs.z * dtb, clip, m.fillValue) { sg =>
-      val file = Paths.get(dirStr, "c", sg.x.toString, sg.y.toString,
-        sg.z.toString)
-      val shardLo = sg * cs
-      val index: Option[Array[(Long, Long)]] =
-        if (Files.exists(file)) Some(readShardIndex(file, m)) else None
-      for {
-        cx <- 0L until ig.x; cy <- 0L until ig.y; cz <- 0L until ig.z
-        lo = shardLo + Vec3(cx, cy, cz) * inner
-        if Bbox(lo, lo + inner).intersection(clip).volume > 0
-      } yield {
-        val vox = index.map(_(innerSlot(Vec3(cx, cy, cz), ig))) match {
-          case Some((off, len)) if off != Missing =>
-            decodeChunkToF(unpack(m, readRange(file, off, len)), inner, dtb)
-          case _ => null // whole shard absent, or a Missing slot
-        }
-        ScanSizing.chunkRow(lo, inner, vox)
-      }
-    }
+    ChunkLayout.cutout(spark, layout(dir, m), bbox)
   }
 
   // ---- OME-NGFF 0.5 multiscale GROUP (zarr v3 group node) ----
@@ -936,16 +731,18 @@ object Zarr3IO {
   def cutoutVoxelsGroupAt(spark: SparkSession, dir: String, bbox: Bbox,
       mip: Int, t: Long = 0L, c: Long = 0L,
       consolidated: Boolean = false): DataFrame =
-    if (consolidated) {
-      val (paths, metaOf) = readConsolidatedGroup(dir)
-      require(mip >= 0 && mip < paths.size,
-        s"mip $mip out of range [0, ${paths.size})")
-      val p = paths(mip)
-      cutoutVoxelsAtMeta(spark, s"$dir/$p", metaOf(p), bbox, t, c)
-    } else {
-      val paths = readGroupDatasets(dir)
-      require(mip >= 0 && mip < paths.size,
-        s"mip $mip out of range [0, ${paths.size})")
-      cutoutVoxelsAt(spark, s"$dir/${paths(mip)}", bbox, t, c)
-    }
+    ChunkLayout.cutout(spark, groupLayout(dir, mip, t, c, consolidated), bbox)
+
+  /** The layout of group level `mip` at (t, c); with `consolidated` its
+    * meta comes from the root's consolidated_metadata block. */
+  private def groupLayout(dir: String, mip: Int, t: Long, c: Long,
+      consolidated: Boolean): ChunkLayout = {
+    val (paths, metaOf) =
+      if (consolidated) readConsolidatedGroup(dir)
+      else (readGroupDatasets(dir), (p: String) => readMeta(s"$dir/$p"))
+    require(mip >= 0 && mip < paths.size,
+      s"mip $mip out of range [0, ${paths.size})")
+    val p = paths(mip)
+    layout(s"$dir/$p", metaOf(p), t, c)
+  }
 }

@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Explode, ScalaUDF}
-import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.{ExternalRDDScanExec, GenerateExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.graftshim.{CollectBridge, DecodeVoxelsExec}
@@ -13,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.functions.{ContainsGateRule, DecodeVoxels}
 import graft.ops.{ChunkEngine, Derived}
-import graft.sources.{N5IO, PrecomputedIO}
+import graft.sources.{N5IO, NgScan, PrecomputedIO}
 
 /** Differential spec for the cutout decode stage: `decodeToVoxels`
   * over seeded chunk rows, in every encoding it dispatches, must give
@@ -21,7 +23,8 @@ import graft.sources.{N5IO, PrecomputedIO}
   * chunk order and then z-major, x-fastest order, for unaligned,
   * edge-crossing, empty and single-voxel boxes. Every grid cutout
   * (precomputed, N5, zarr2, OME-zarr2, zarr3 unsharded and sharded, the
-  * chunk table) must plan that one generator.
+  * chunk table) must plan that one generator, and every stored grid
+  * format must read through the one `neuroglancer` chunk scan.
   *
   * In every session a directly collected generator runs as a
   * [[DecodeVoxelsExec]], whose collect ships clipped chunk blocks:
@@ -173,9 +176,12 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** `df`'s rows are exactly `want`, and its executed plan emits them
-    * from a `DecodeVoxels` generator with no ScalaUDF and no Explode. */
+    * from a `DecodeVoxels` generator with no ScalaUDF and no Explode.
+    * With `oneScan` (every stored grid format), the plan is a
+    * [[DecodeVoxelsExec]] root over a `neuroglancer` BatchScanExec, with
+    * no RDD scan and no Exchange: no second chunk pipeline. */
   private def assertOneEmitter(name: String, df: DataFrame,
-      want: Set[(Long, Long, Long, Long)]): Unit = {
+      want: Set[(Long, Long, Long, Long)], oneScan: Boolean = true): Unit = {
     val got = GridFixtures.rows(df)
     assert(got.length == want.size && got.toSet == want, s"$name: rows")
     val plan = df.queryExecution.executedPlan
@@ -190,6 +196,17 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"$name: ScalaUDF in plan:\n$plan")
     assert(!exprs.exists(_.isInstanceOf[Explode]),
       s"$name: Explode in plan:\n$plan")
+    if (oneScan) {
+      assert(plan.isInstanceOf[DecodeVoxelsExec],
+        s"$name: plan root is not DecodeVoxelsExec:\n$plan")
+      assert(all.exists {
+        case b: BatchScanExec => b.scan.isInstanceOf[NgScan]
+        case _ => false
+      }, s"$name: no neuroglancer BatchScanExec in plan:\n$plan")
+      assert(!all.exists(n => n.isInstanceOf[RDDScanExec] ||
+        n.isInstanceOf[ExternalRDDScanExec[_]] || n.isInstanceOf[Exchange]),
+        s"$name: RDD scan or Exchange in plan:\n$plan")
+    }
   }
 
   test("a cutout's executed plan has no ScalaUDF and no Explode between " +
@@ -242,7 +259,7 @@ class DecodeVoxelsSpec extends AnyFunSuite with BeforeAndAfterAll {
         (x, y, z, if (g == Vec3(1, 0, 0)) 0L else lo.x + lo.y + i)
       }
     assertOneEmitter("chunk table", ChunkEngine.cutoutVoxels(
-      table.toDF("gx", "gy", "gz", "payload"), cbox), want.toSet)
+      table.toDF("gx", "gy", "gz", "payload"), cbox), want.toSet, oneScan = false)
   }
 
   /** `df` plans a [[DecodeVoxelsExec]] root, and its `executeCollect`,

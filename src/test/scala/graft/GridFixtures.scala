@@ -119,6 +119,11 @@ final class GridFixtures(spark: SparkSession, root: String, val dims: Vec3,
       "sx", "sy", "sz", "vox"), zarr3Sharded, m3s)
   }
 
+  /** Every format's directory, by its [[cutouts]] name. */
+  val dirs: Map[String, String] = Map("precomputed" -> precomputed, "n5" -> n5,
+    "zarr2 C" -> zarr2C, "zarr2 F" -> zarr2F, "ome-zarr2" -> ome,
+    "zarr3" -> zarr3, "zarr3 sharded" -> zarr3Sharded)
+
   /** Every format's cutout, by name; precomputed reads absent chunks as
     * `fill`. */
   def cutouts: Seq[(String, Bbox => DataFrame)] = Seq(

@@ -10,15 +10,18 @@ import org.apache.spark.sql.types.Decimal
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.core._
-import graft.sources.{Neuroglancer, NgScanBuilder, PrecomputedIO, ShardedIO}
+import graft.sources.{ChunkLayout, Neuroglancer, NgScanBuilder, PrecomputedIO, ShardedIO}
 
 /** The `neuroglancer` scan applies every chunk-key filter it accepts
-  * exactly, so Spark keeps no post-scan `Filter` for it: over a layer
-  * whose voxel offset is not zero and whose last chunk on each axis is
-  * clamped, unsharded and sharded, each accepted form returns the rows
-  * of an unfiltered scan filtered in Scala; the executed plan keeps a
-  * `FilterExec` only for the filters the scan did not accept; and a
-  * cutout with a new bbox compiles no code.
+  * exactly, so Spark keeps no post-scan `Filter` for it: over a
+  * precomputed layer whose voxel offset is not zero and whose last chunk
+  * on each axis is clamped, unsharded and sharded, and over the same
+  * unaligned volume (at the origin) as N5, zarr2 C and F, OME-zarr2,
+  * zarr3 and sharded zarr3 ([[GridFixtures]]; zarr's edge chunks are
+  * full-size), each accepted form returns the rows of an unfiltered scan
+  * filtered in Scala; the executed plan keeps a `FilterExec` only for
+  * the filters the scan did not accept; and a cutout with a new bbox
+  * compiles no code.
   */
 class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -28,7 +31,6 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dims = Vec3(13, 11, 7)
   private val cs = Vec3(4, 4, 3) // 4x3x3 grid: every last chunk clamped
   private val bounds = Bbox(offset, offset + dims)
-  private val grid = dims.ceilDiv(cs)
   private val seeded = new scala.util.Random(20261019)
   private val src = Array.fill((dims.x * dims.y * dims.z).toInt)(
     seeded.nextLong() & 0xffffffffL)
@@ -43,8 +45,12 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
       chunkSize = cs, size = dims, voxelOffset = offset)))
   private val sharding = ShardingSpec(preshiftBits = 0, minishardBits = 1,
     shardBits = 2, minishardIndexEncoding = "gzip", dataEncoding = "gzip")
-  private val layers = Seq("unsharded" -> s"$dir/unsharded",
-    "sharded" -> s"$dir/sharded")
+
+  /** A grid the scan reads: its directory, voxel bounds, values and
+    * cutout. */
+  private case class Layer(name: String, path: String, bounds: Bbox,
+      value: Vec3 => Long, cutout: Bbox => DataFrame)
+  private var layers: Seq[Layer] = Nil
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder().master("local[4]")
@@ -61,11 +67,21 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
         yield value(x, y, z)
       (g.x, g.y, g.z, Codec.encodeRawFromLongs(vox.toArray, 4))
     }.toDF("gx", "gy", "gz", "payload")
-    PrecomputedIO.writeInfo(layers(0)._2, meta)
-    PrecomputedIO.writeChunks(chunks, layers(0)._2, meta, 0)
+    val precomputed = Seq("unsharded", "sharded").map { name =>
+      val path = s"$dir/$name"
+      Layer(name, path, bounds, p => value(p.x, p.y, p.z),
+        PrecomputedIO.cutoutVoxels(spark, path, _))
+    }
+    PrecomputedIO.writeInfo(precomputed(0).path, meta)
+    PrecomputedIO.writeChunks(chunks, precomputed(0).path, meta, 0)
     val sm = meta.copy(scales = Seq(meta.scale(0).copy(sharding = Some(sharding))))
-    PrecomputedIO.writeInfo(layers(1)._2, sm)
-    ShardedIO.writeSharded(chunks, layers(1)._2, sm, 0)
+    PrecomputedIO.writeInfo(precomputed(1).path, sm)
+    ShardedIO.writeSharded(chunks, precomputed(1).path, sm, 0)
+    val fx = new GridFixtures(spark, s"$dir/grid", dims, cs, 4, 0L, Set.empty,
+      p => value(p.x + offset.x, p.y + offset.y, p.z + offset.z))
+    layers = precomputed ++ fx.cutouts.filter(_._1 != "precomputed").map {
+      case (name, cut) => Layer(name, fx.dirs(name), fx.bounds, fx.voxel, cut)
+    }
   }
 
   override def afterAll(): Unit = { if (spark != null) spark.stop() }
@@ -107,7 +123,8 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("x1", "y1", "z1").flatMap(c => Seq(">", ">=").map(c -> _)) ++
       Seq("x0", "y0", "z0").flatMap(c => Seq("<", "<=").map(c -> _))
     val rnd = new scala.util.Random(7)
-    for ((name, layer) <- layers) {
+    for (Layer(name, layer, bounds, _, _) <- layers) {
+      val grid = bounds.size.ceilDiv(cs)
       val all = chunkRows(PrecomputedIO.readChunks(spark, layer))
       assert(all.length == grid.x * grid.y * grid.z, name)
       for ((c, op) <- forms) {
@@ -135,7 +152,7 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("seeded bbox-overlap conjunctions return the overlapping chunks " +
       "and the cutout's voxels") {
     val rnd = new scala.util.Random(11)
-    def box(): Bbox = {
+    def box(bounds: Bbox): Bbox = {
       def span(lo: Long, n: Long) = {
         val a = lo - 2 + rnd.nextInt((n + 3).toInt)
         (a, a + 1 + rnd.nextInt((n + 2).toInt))
@@ -145,9 +162,9 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
         span(bounds.minpt.z, dims.z))
       Bbox(Vec3(x0, y0, z0), Vec3(x1, y1, z1))
     }
-    val boxes = Seq(Bbox(bounds.maxpt - Vec3(1, 1, 1), bounds.maxpt + Vec3(3, 3, 3)),
-      bounds) ++ Seq.fill(6)(box())
-    for ((name, layer) <- layers) {
+    for (Layer(name, layer, bounds, value, cutout) <- layers) {
+      val boxes = Seq(Bbox(bounds.maxpt - Vec3(1, 1, 1), bounds.maxpt + Vec3(3, 3, 3)),
+        bounds) ++ Seq.fill(6)(box(bounds))
       val all = chunkRows(PrecomputedIO.readChunks(spark, layer))
       for (b <- boxes) {
         val (lo, hi) = (b.minpt.toArray, b.maxpt.toArray)
@@ -161,9 +178,8 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
         val c = b.intersection(bounds)
         val expect = (for (z <- c.minpt.z until c.maxpt.z;
             y <- c.minpt.y until c.maxpt.y; x <- c.minpt.x until c.maxpt.x)
-          yield (x, y, z, value(x, y, z))).toSet
-        val vox = PrecomputedIO.cutoutVoxels(spark, layer, b)
-          .select("x", "y", "z", "label").collect()
+          yield (x, y, z, value(Vec3(x, y, z)))).toSet
+        val vox = cutout(b).select("x", "y", "z", "label").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         val same = vox.length == expect.size && vox.toSet == expect
         assert(same, s"$name cutout $b: ${vox.length} voxels, " +
@@ -173,7 +189,7 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a FilterExec holds only the filters the scan did not accept") {
-    for ((name, layer) <- layers) {
+    for (Layer(name, layer, _, _, _) <- layers) {
       val all = chunkRows(PrecomputedIO.readChunks(spark, layer))
       val df = PrecomputedIO.readChunks(spark, layer)
         .filter(col("gx") >= 1 && col("x0") < 13 && length(col("payload")) > 0)
@@ -188,16 +204,16 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("only integral literals are accepted; a fractional one stays post-scan") {
-    val layer = layers(0)._2
+    val layer = layers(0).path
     for (v <- Seq[Any](1.5, 1.5f, new java.math.BigDecimal("1.5"),
         Decimal(BigDecimal("1.5")))) {
-      val b = new NgScanBuilder(layer, 0, false)
+      val b = new NgScanBuilder(ChunkLayout.open(layer, 0, fillMissing = false))
       val rest = b.pushFilters(Array(GreaterThan("gx", v), LessThan("x0", 13L)))
       assert(rest.toSeq == Seq(GreaterThan("gx", v)), s"$v")
       assert(b.pushedFilters().toSeq == Seq(LessThan("x0", 13L)), s"$v")
     }
     for (v <- Seq[Any](1.toByte, 1.toShort, 1, 1L)) {
-      val b = new NgScanBuilder(layer, 0, false)
+      val b = new NgScanBuilder(ChunkLayout.open(layer, 0, fillMissing = false))
       assert(b.pushFilters(Array(GreaterThan("gx", v))).isEmpty, s"$v")
     }
     // a fractional comparison in a query, whatever form it reaches the
@@ -214,10 +230,11 @@ class NgPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
       run
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     }
-    for ((name, layer) <- layers) {
-      val cut = (b: Bbox) => PrecomputedIO.cutoutVoxels(spark, layer, b).collect()
-      cut(Bbox(offset + Vec3(1, 1, 1), offset + Vec3(6, 5, 4)))
-      val b = Bbox(offset + Vec3(2, 3, 1), offset + Vec3(11, 9, 6))
+    for (Layer(name, layer, bounds, _, cutout) <- layers) {
+      val cut = (b: Bbox) => cutout(b).collect()
+      val origin = bounds.minpt
+      cut(Bbox(origin + Vec3(1, 1, 1), origin + Vec3(6, 5, 4)))
+      val b = Bbox(origin + Vec3(2, 3, 1), origin + Vec3(11, 9, 6))
       var rows: Array[org.apache.spark.sql.Row] = null
       assert(compiles { rows = cut(b) } == 0, s"$name cutout")
       assert(rows.length == b.volume, name)
