@@ -75,17 +75,40 @@ object ShardCodec {
       labelGroup: Seq[(Long, Array[Byte], Array[Byte])]): Array[Byte] = {
     require(spec.dataEncoding == "raw",
       "preamble layout requires raw data encoding")
+    synthesize(spec, labelGroup)
+  }
+
+  /** Assemble a full shard file from (label, payload) pairs that all
+    * map to this shard (sharding.py:868-983 synthesize_shard_file).
+    * Payloads are compressed per spec.dataEncoding; minishard indices
+    * per spec.minishardIndexEncoding. Labels are sorted ascending
+    * within each minishard; minishards are emitted in ascending
+    * minishard number.
+    */
+  def synthesizeShard(spec: ShardingSpec, labelGroup: Seq[(Long, Array[Byte])])
+      : Array[Byte] =
+    synthesize(spec, labelGroup.map { case (label, bin) => (label, Array.emptyByteArray,
+      if (spec.dataEncoding == "gzip") Codec.gzip(bin) else bin) })
+
+  /** The shard file of (label, preamble, stored record) triples: per
+    * minishard the preambles and records back to back, then the
+    * minishard indexes and the fixed index. */
+  private def synthesize(spec: ShardingSpec,
+      labelGroup: Seq[(Long, Array[Byte], Array[Byte])]): Array[Byte] = {
     val byMinishard =
       mutable.SortedMap.empty[Long, mutable.ArrayBuffer[(Long, Array[Byte], Array[Byte])]]
-    labelGroup.foreach { case (label, pre, bin) =>
-      val (_, msn) = spec.shardLocation(label)
-      byMinishard.getOrElseUpdate(msn, mutable.ArrayBuffer.empty) +=
-        ((label, pre, bin))
+    labelGroup.foreach { case t @ (label, _, _) =>
+      byMinishard.getOrElseUpdate(spec.shardLocation(label)._2,
+        mutable.ArrayBuffer.empty) += t
     }
     val minishardnos = mutable.ArrayBuffer.empty[Long]
-    val indices = mutable.ArrayBuffer.empty[Array[Long]]
+    val indices = mutable.ArrayBuffer.empty[Array[Long]] // flat (3,N) C-order
     val datas = mutable.ArrayBuffer.empty[Array[Byte]]
     byMinishard.foreach { case (msn, grp) =>
+      // uint64 label space: sort UNSIGNED like the reference's numpy
+      // uint64 sort (sharding.py:902; SURVEY §7 risk register) — a
+      // signed Long sort would misorder labels >= 2^63 and corrupt the
+      // ascending delta encoding
       val sorted = grp.sortWith((a, b) =>
         java.lang.Long.compareUnsigned(a._1, b._1) < 0)
       val n = sorted.size
@@ -96,8 +119,10 @@ object ShardCodec {
       sorted.foreach { case (label, pre, bin) =>
         out.write(pre)
         out.write(bin)
-        idx(i) = label - lastLabel
-        idx(n + i) = pre.length.toLong // gap: preamble precedes record
+        idx(i) = label - lastLabel // delta label
+        // offset delta: the gap a preamble leaves (the first record's
+        // also gets its minishard's start in assembleShard)
+        idx(n + i) = pre.length.toLong
         idx(2 * n + i) = bin.length.toLong
         lastLabel = label
         i += 1
@@ -136,54 +161,6 @@ object ShardCodec {
     }
     fixed.array() ++ dataPart ++
       indexParts.foldLeft(Array.emptyByteArray)(_ ++ _)
-  }
-
-  /** Assemble a full shard file from (label, payload) pairs that all
-    * map to this shard (sharding.py:868-983 synthesize_shard_file).
-    * Payloads are compressed per spec.dataEncoding; minishard indices
-    * per spec.minishardIndexEncoding. Labels are sorted ascending
-    * within each minishard; minishards are emitted in ascending
-    * minishard number.
-    */
-  def synthesizeShard(spec: ShardingSpec, labelGroup: Seq[(Long, Array[Byte])])
-      : Array[Byte] = {
-    val byMinishard = mutable.SortedMap.empty[Long, mutable.ArrayBuffer[(Long, Array[Byte])]]
-    labelGroup.foreach { case (label, bin) =>
-      val (_, msn) = spec.shardLocation(label)
-      byMinishard.getOrElseUpdate(msn, mutable.ArrayBuffer.empty) += ((label, bin))
-    }
-    val minishardnos = mutable.ArrayBuffer.empty[Long]
-    val indices = mutable.ArrayBuffer.empty[Array[Long]] // flat (3,N) C-order
-    val datas = mutable.ArrayBuffer.empty[Array[Byte]]
-    byMinishard.foreach { case (msn, grp) =>
-      // uint64 label space: sort UNSIGNED like the reference's numpy
-      // uint64 sort (sharding.py:902; SURVEY §7 risk register) — a
-      // signed Long sort would misorder labels >= 2^63 and corrupt the
-      // ascending delta encoding
-      val sorted = grp.sortWith((a, b) =>
-        java.lang.Long.compareUnsigned(a._1, b._1) < 0)
-      val n = sorted.size
-      val idx = new Array[Long](3 * n)
-      val out = new java.io.ByteArrayOutputStream()
-      var lastLabel = 0L
-      var i = 0
-      sorted.foreach { case (label, bin0) =>
-        val bin =
-          if (spec.dataEncoding == "gzip") Codec.gzip(bin0) else bin0
-        idx(i) = label - lastLabel // delta label
-        idx(n + i) = 0L // offset delta (first gets minishard start below)
-        idx(2 * n + i) = bin.length.toLong
-        out.write(bin)
-        lastLabel = label
-        i += 1
-      }
-      minishardnos += msn
-      indices += idx
-      datas += out.toByteArray
-    }
-    // offset run + fixed index + final layout shared with the
-    // preamble variant
-    assembleShard(spec, minishardnos.toSeq, indices.toSeq, datas.toSeq)
   }
 
   // ---- whole-file reader helpers (byte-array based; the Spark path

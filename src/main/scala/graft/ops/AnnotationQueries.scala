@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.functions._
-import graft.core.{AnnotationCodec, Bbox, Geom, Morton, ShardCodec, ShardingSpec, Vec3}
+import graft.core.{AnnotationCodec, Bbox, Geom, Morton, ShardingSpec, Vec3}
 import graft.core.AnnotationCodec.{Annotation, AnnotationSpec, PropSpec}
 
 /** Annotation layers over REAL binary chunk files (F18 + P8 extended
@@ -303,57 +303,25 @@ object AnnotationQueries {
         spatial = Seq(AnnotationCodec.SpatialLevel("spatial1",
           Seq(2L, 2L, 1L), Seq(32L, 32L, 32L), Long.MaxValue,
           sharding = Some(spec))))
-      // group label-keyed binaries by shard number; each task
-      // synthesizes one full shard file (S12 shuffle shape). Runs once
-      // for the by-id single-annotation objects and once for the
-      // relationship index's multi-annotation lists (reader.py:321-339).
-      def synthesize(srcDir: String, outKey: String): Unit = {
-        val outDir = s"$ShardedLayerDir/$outKey"
-        Files.createDirectories(Paths.get(outDir))
-        val names = Files.list(Paths.get(srcDir)).iterator.asScala
-          .map(_.getFileName.toString).filter(_.matches("\\d+")).toSeq.sorted
-        names.toDS()
-          .map { n =>
-            (spec.shardLocation(n.toLong)._1, n.toLong,
-              Files.readAllBytes(Paths.get(srcDir, n)))
-          }
-          .groupByKey(_._1)
-          .mapGroups { (shard, it) =>
-            val items = it.map(t => (t._2, t._3)).toSeq
-            (shard, ShardCodec.synthesizeShard(spec, items))
-          }
-          .foreach { t: (Long, Array[Byte]) =>
-            Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
-            ()
-          }
+      // label-keyed binaries into shard files (S12 shuffle shape): the
+      // by-id single-annotation objects, the relationship index's
+      // multi-annotation lists (reader.py:321-339), and the spatial
+      // level's cells keyed by their compressed morton code
+      // (annotation/reader.py:253-257)
+      val byName = (n: String) => n.toLong
+      val cell = (n: String) => {
+        val Array(gx, gy, gz) = n.split("_").map(_.toLong)
+        Morton.encode(Vec3(gx, gy, gz), Vec3(2, 2, 1))
       }
-      synthesize(s"$Root/by_id", "by_id")
-      synthesize(s"$Root/rel_presynaptic_to", "rel_presynaptic_to")
-      // sharded spatial level: cell files keyed by the cell's
-      // compressed morton code (annotation/reader.py:253-257)
-      locally {
-        val srcDir = s"$Root/points/spatial1"
-        val outDir = s"$ShardedLayerDir/spatial1"
-        Files.createDirectories(Paths.get(outDir))
-        val grid = Vec3(2, 2, 1)
-        val items = Files.list(Paths.get(srcDir)).iterator.asScala
-          .map(_.getFileName.toString).toSeq.sorted
-        items.toDS()
-          .map { n =>
-            val Array(gx, gy, gz) = n.split("_").map(_.toLong)
-            (spec.shardLocation(Morton.encode(Vec3(gx, gy, gz), grid))._1,
-              Morton.encode(Vec3(gx, gy, gz), grid),
-              Files.readAllBytes(Paths.get(srcDir, n)))
-          }
-          .groupByKey(_._1)
-          .mapGroups { (shard, it) =>
-            val cells = it.map(t => (t._2, t._3)).toSeq
-            (shard, ShardCodec.synthesizeShard(spec, cells))
-          }
-          .foreach { t: (Long, Array[Byte]) =>
-            Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
-            ()
-          }
+      Seq((s"$Root/by_id", "by_id", "\\d+", byName),
+        (s"$Root/rel_presynaptic_to", "rel_presynaptic_to", "\\d+", byName),
+        (s"$Root/points/spatial1", "spatial1", "\\d+_\\d+_\\d+", cell)).foreach {
+        case (src, out, names, label) =>
+          val objects = Files.list(Paths.get(src)).iterator.asScala
+            .map(_.getFileName.toString).filter(_.matches(names)).toSeq.sorted
+          graft.sources.ShardedIO.writeLabeled(objects.toDS()
+            .map(n => (label(n), Files.readAllBytes(Paths.get(src, n))))
+            .toDF("label", "payload"), s"$ShardedLayerDir/$out", spec)
       }
     }
   }

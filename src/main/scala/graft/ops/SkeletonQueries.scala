@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{ShardCodec, ShardingSpec, SkeletonCodec}
+import graft.core.{ShardingSpec, SkeletonCodec}
 import graft.core.SkeletonCodec.Skeleton
 
 /** Skeleton pipeline over REAL precomputed skeleton binaries
@@ -126,30 +126,16 @@ object SkeletonQueries {
     // rebuild when the unsharded source rebuilt
     Fixtures.guard(s"$Root/.built_sharded_from", stamp,
         wipe = Seq(ShardedDir)) {
-      Files.createDirectories(Paths.get(ShardedDir))
       import s.implicits._
       import scala.jdk.CollectionConverters._
       val skelDirStr = SkelDir
-      val shardedStr = ShardedDir
-      val spec = skelShardSpec
       val names = Files.list(Paths.get(SkelDir)).iterator.asScala
         .map(_.getFileName.toString).filter(_.matches("\\d+")).toSeq.sorted
-      // group skeleton binaries by shard, synthesize each shard file in
-      // its own task (S12 shuffle shape, non-image payloads)
-      names.toDS()
-        .map { n =>
-          (spec.shardLocation(n.toLong)._1, n.toLong,
-            Files.readAllBytes(Paths.get(skelDirStr, n)))
-        }
-        .groupByKey(_._1)
-        .mapGroups { (shard, it) =>
-          val items = it.map(t => (t._2, t._3)).toSeq
-          (shard, ShardCodec.synthesizeShard(spec, items))
-        }
-        .foreach { t: (Long, Array[Byte]) =>
-          Files.write(Paths.get(shardedStr, spec.shardFilename(t._1)), t._2)
-          ()
-        }
+      // skeleton binaries into shard files keyed by segid (S12 shuffle
+      // shape, non-image payloads)
+      graft.sources.ShardedIO.writeLabeled(names.toDS()
+        .map(n => (n.toLong, Files.readAllBytes(Paths.get(skelDirStr, n))))
+        .toDF("label", "payload"), ShardedDir, skelShardSpec)
     }
   }
 

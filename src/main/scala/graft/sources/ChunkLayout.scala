@@ -1,9 +1,10 @@
 package graft.sources
 
 import java.io.RandomAccessFile
-import java.nio.file.{Files, NoSuchFileException, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption,
+  StandardOpenOption}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.graftshim.ScanShim
 import graft.core._
 import graft.functions.DecodeVoxels
@@ -17,7 +18,9 @@ import graft.functions.DecodeVoxels
   * A row's payload is the chunk after its object-level codecs, in
   * `encoding`: precomputed chunks in the scale's encoding, every other
   * format's as little-endian F-order raw at `dtypeBytes`, so every
-  * cutout decodes through the one [[DecodeVoxels]] stage.
+  * cutout decodes through the one [[DecodeVoxels]] stage. The one chunk
+  * sink ([[ChunkLayout.write]]) takes payloads of the same form and
+  * runs the steps backwards ([[objectOf]]).
   *
   * @param dir       the layer or array directory the scan is named by
   * @param label     what the scan's description names after `dir`
@@ -48,10 +51,18 @@ final case class ChunkLayout(dir: String, label: String, root: String,
       Bbox(lo, lo + chunkSize)
     }
 
-  /** The object holding the chunk (or, sharded, the shard) at `g`. */
-  def objectPath(g: Vec3): Path = keys match {
-    case Keys.BboxName => Paths.get(root, chunkBbox(g).toFilename)
-    case k: Keys.Grid => Paths.get(root, k.name(g))
+  /** The object holding the chunk at `g`: its own object, or its shard.
+    * `lead` (t/c grid indices) replaces the key head's last entries. */
+  def objectPath(g: Vec3, lead: Seq[Long] = Nil): Path = {
+    def key(p: Vec3) = keys match {
+      case Keys.BboxName => Paths.get(root, chunkBbox(p).toFilename)
+      case k: Keys.Grid => Paths.get(root, k.name(p, lead))
+    }
+    shards match {
+      case Shards.Unsharded => key(g)
+      case Shards.Minishard(spec) => Paths.get(root, spec.shardFilename(shardOf(g)))
+      case Shards.Indexed(per) => key(Vec3(g.x / per.x, g.y / per.y, g.z / per.z))
+    }
   }
 
   /** The shard file a grid point's chunk lives in (-1 unsharded): the
@@ -88,13 +99,12 @@ final case class ChunkLayout(dir: String, label: String, root: String,
       case Shards.Minishard(spec) =>
         val byLabel = pts.map(g => Morton.encode(g, gridSize) -> g).toMap
         byLabel.keys.toSeq.groupBy(spec.shardLocation(_)._1).iterator
-          .flatMap { case (shard, labels) => ShardedIO.readLabelsRanged(
-            s"$root/${spec.shardFilename(shard)}", spec, labels) }
+          .flatMap { case (_, labels) => ShardedIO.readLabelsRanged(
+            objectPath(byLabel(labels.head)).toString, spec, labels) }
           .map { case (l, p) => (byLabel(l), p) }
       case Shards.Indexed(per) =>
         pts.groupBy(shardOf).iterator.flatMap { case (_, gs) =>
-          val shard = objectPath(Vec3(gs.head.x / per.x, gs.head.y / per.y,
-            gs.head.z / per.z))
+          val shard = objectPath(gs.head)
           if (!needPayload) gs.map(_ -> null)
           else if (!Files.exists(shard)) gs.flatMap(absent)
           else {
@@ -134,7 +144,7 @@ final case class ChunkLayout(dir: String, label: String, root: String,
     var dims = want
     var b = obj
     steps.foreach {
-      case Step.Decompress(c) => b = Compressors.decompress(c, b, chunkSize)
+      case Step.Decompress(c, _) => b = Compressors.decompress(c, b, chunkSize)
       case Step.N5Header =>
         val (d, body) = N5IO.header(b, dtypeBytes)
         // edge blocks carry clamped dims; a header claiming MORE than
@@ -144,7 +154,7 @@ final case class ChunkLayout(dir: String, label: String, root: String,
             s"blockSize $chunkSize")
         dims = d
         b = body
-      case Step.Frame(slot) =>
+      case Step.Frame(slot, _) =>
         val n = (dims.x * dims.y * dims.z).toInt * dtypeBytes
         val off = (slot * n).toInt
         // a short object must fail, not zero-pad: zarr chunks are full-size
@@ -155,6 +165,49 @@ final case class ChunkLayout(dir: String, label: String, root: String,
       case Step.SwapBytes => b = swapBytes(b, dtypeBytes)
     }
     if (dims == want) b else fit(b, dims, want, dtypeBytes)
+  }
+
+  /** The object holding `chunks` (one chunk unsharded, a shard's chunks
+    * sharded) and its bytes: each payload through [[steps]] backwards,
+    * then the shard synthesized. A chunk whose payload equals `elide`
+    * is not stored: it gets no object unsharded (None), no minishard
+    * entry, or a Missing slot in a zarr3 shard. `method` is a
+    * precomputed object's second-stage codec and name suffix.
+    */
+  def objectOf(chunks: Seq[Chunk], method: String = "none",
+      elide: Option[Array[Byte]] = None): Option[(Path, Array[Byte])] = {
+    val kept = chunks.filterNot(c => elide.exists(java.util.Arrays.equals(_, c.payload)))
+    val path = objectPath(chunks.head.g, chunks.head.lead)
+    shards match {
+      case Shards.Unsharded => kept.headOption.map(c =>
+        Paths.get(path.toString + PrecomputedIO.suffix(method)) ->
+          Compressors.compress(method, encode(c.payload, c.g)))
+      case Shards.Minishard(spec) => Some(path -> ShardCodec.synthesizeShard(spec,
+        kept.map(c => Morton.encode(c.g, gridSize) -> encode(c.payload, c.g))))
+      case Shards.Indexed(per) => Some(path -> Zarr3IO.shardObject(
+        (per.x * per.y * per.z).toInt, kept.map(c => Zarr3IO.innerSlot(
+          Vec3(c.g.x % per.x, c.g.y % per.y, c.g.z % per.z), per) -> encode(c.payload, c.g))))
+    }
+  }
+
+  /** A payload -> the chunk's stored bytes: [[steps]] undone in reverse.
+    * The payload of a framed object holds all its frames, t-major. */
+  private def encode(payload: Array[Byte], g: Vec3): Array[Byte] = {
+    val dims = chunkBbox(g).size
+    val frame = (dims.x * dims.y * dims.z).toInt * dtypeBytes
+    if (steps.nonEmpty) {
+      val frames = steps.collectFirst { case Step.Frame(_, n) => n }.getOrElse(1L)
+      require(payload.length == frames * frame, s"chunk ${objectPath(g)}: " +
+        s"${payload.length}-byte payload, expected $frames frame(s) of $frame")
+    }
+    steps.foldRight(payload) {
+      case (Step.Decompress(c, blosc), b) => Compressors.compress(c, b, dtypeBytes, blosc)
+      case (Step.N5Header, b) => N5IO.withHeader(dims, b)
+      case (Step.Frame(_, _), b) => b
+      case (Step.CToF, b) => Array.concat(b.grouped(frame)
+        .map(transpose(_, dims, dtypeBytes, cToF = false)).toSeq: _*)
+      case (Step.SwapBytes, b) => swapBytes(b, dtypeBytes)
+    }
   }
 }
 
@@ -168,9 +221,12 @@ object ChunkLayout {
     /** `head`, then x, y, z (z, y, x if `zyx`), joined by `sep`: zarr2
       * `[t.][c.]x.y.z`, zarr3 `c/[t/][c/]x/y/z`, N5 `s<mip>/x/y/z` */
     final case class Grid(head: Seq[String], sep: String, zyx: Boolean) extends Keys {
-      def name(g: Vec3): String =
-        (head ++ (if (zyx) Seq(g.z, g.y, g.x) else Seq(g.x, g.y, g.z))
-          .map(_.toString)).mkString(sep)
+      /** `lead` (t/c grid indices) in place of the head's last entries */
+      def name(g: Vec3, lead: Seq[Long] = Nil): String = {
+        require(lead.size <= head.size, s"${lead.size} lead indices for key head $head")
+        (head.dropRight(lead.size) ++ (lead ++ (if (zyx) Seq(g.z, g.y, g.x)
+          else Seq(g.x, g.y, g.z))).map(_.toString)).mkString(sep)
+      }
     }
   }
 
@@ -193,12 +249,15 @@ object ChunkLayout {
     case object Raise extends Missing // a failed task
   }
 
-  /** One object-to-payload step. */
+  /** One object-to-payload step; the sink runs each backwards. */
   sealed trait Step extends Serializable
   object Step {
-    final case class Decompress(codec: String) extends Step // via [[Compressors]]
+    /** via [[Compressors]]; `blosc` is what a blosc write uses */
+    final case class Decompress(codec: String,
+        blosc: Compressors.BloscConf = Compressors.BloscConf()) extends Step
     case object N5Header extends Step // strip N5's block header, take its dims
-    final case class Frame(slot: Long) extends Step // one of several xyz frames
+    /** frame `slot` of the object's `of` xyz frames */
+    final case class Frame(slot: Long, of: Long) extends Step
     case object CToF extends Step // C-order (x, y, z) to F order
     case object SwapBytes extends Step // big-endian values to little-endian
   }
@@ -232,7 +291,8 @@ object ChunkLayout {
         if (has("zarr.json")) Zarr3IO.layout(dir, Zarr3IO.readMeta(dir))
         else if (has(".zattrs")) Zarr2IO.omeLayout(dir, 0L, 0L, mip, consolidated = false)
         else if (has(".zarray")) Zarr2IO.layout(dir, Zarr2IO.readMeta(dir))
-        else if (has("attributes.json")) N5IO.layout(dir, s"s$mip", fillMissing)
+        else if (has("attributes.json")) N5IO.layout(dir, s"s$mip",
+          N5IO.readMeta(dir, s"s$mip"), fillMissing)
         else throw e
     }
 
@@ -253,6 +313,82 @@ object ChunkLayout {
     * the overlapping chunks' rows decoded by the [[DecodeVoxels]] stage. */
   def cutout(spark: SparkSession, layout: ChunkLayout, bbox: Bbox): DataFrame =
     DecodeVoxels.stage(chunksIn(spark, layout, bbox), layout.decoder(bbox))
+
+  /** One chunk to write: lead t/c grid indices, grid point, payload. */
+  final case class Chunk(lead: Seq[Long], g: Vec3, payload: Array[Byte])
+
+  /** The one chunk sink, the inverse of the scan: rows (the lead t/c grid
+    * indices where the key head names them, then gx, gy, gz, payload),
+    * payloads in the form the scan emits, written as `layout`'s objects
+    * ([[ChunkLayout.objectOf]]) through the one [[put]]. Unsharded, each
+    * row is one object written by its own task (S9, tx.py:314-475);
+    * sharded, the rows are grouped by [[ChunkLayout.shardOf]] and each
+    * shard is synthesized whole (S12, sharding.py:868-983).
+    */
+  def write(rows: DataFrame, layout: ChunkLayout, method: String = "none",
+      elide: Option[Array[Byte]] = None): Unit = {
+    require(Set("gzip", "br", "none")(method),
+      s"unsupported chunk compression codec: $method")
+    require(method == "none" || layout.keys == Keys.BboxName,
+      s"${layout.label}: second-stage $method is for precomputed chunks")
+    Files.createDirectories(Paths.get(layout.root))
+    def chunkOf(r: Row): Chunk = {
+      val n = r.length - 4
+      Chunk((0 until n).map(r.getLong), Vec3(r.getLong(n), r.getLong(n + 1),
+        r.getLong(n + 2)), r.getAs[Array[Byte]](n + 3))
+    }
+    if (layout.shards == Shards.Unsharded)
+      rows.foreachPartition { it: Iterator[Row] =>
+        it.foreach(r => layout.objectOf(Seq(chunkOf(r)), method, elide)
+          .foreach { case (p, b) => put(p, b) })
+      }
+    else putGroups(rows, r => layout.shardOf(chunkOf(r).g))(rs =>
+      layout.objectOf(rs.map(chunkOf), method, elide))
+  }
+
+  /** Sink rows of the zarr/N5 writers' rows: the lead columns at
+    * positions `lead`, the grid point at `g0`, and the F-order voxel
+    * longs after it as a little-endian payload of `dtb`-byte values. */
+  private[sources] def rawRows(chunks: DataFrame, lead: Seq[Int], g0: Int,
+      dtb: Int): DataFrame = {
+    val c = chunks.columns.map(chunks.col)
+    val raw = udf((v: Array[Long]) => Codec.encodeRawFromLongs(v, dtb))
+    chunks.select((lead ++ (g0 to g0 + 2)).map(c) :+ raw(c(g0 + 3)).as("payload"): _*)
+  }
+
+  /** `rows` grouped by `key` (one shuffle) and each group put as the
+    * object `obj` makes of it. */
+  private[sources] def putGroups(rows: DataFrame, key: Row => Long)(
+      obj: Seq[Row] => Option[(Path, Array[Byte])]): Unit =
+    rows.groupByKey(key)(Encoders.scalaLong)
+      .flatMapGroups { (_: Long, it: Iterator[Row]) =>
+        obj(it.toSeq).foreach { case (p, b) => put(p, b) }; Iterator.empty[Boolean]
+      }(Encoders.scalaBoolean)
+      .foreach((_: Boolean) => ())
+
+  /** The one object put: `bytes` go to a dot-prefixed temporary sibling
+    * of `p`, which is then renamed onto `p` atomically, so a concurrent
+    * reader or directory listing never sees a partly written object. A
+    * failed put removes its temporary. Nothing is fsynced, so a crash
+    * may still lose the object or leave a temporary, which the stream's
+    * `gridOf` ignores. */
+  def put(p: Path, bytes: Array[Byte]): Unit = {
+    val tmp = p.resolveSibling(s".${p.getFileName}." +
+      java.lang.Long.toHexString(java.util.concurrent.ThreadLocalRandom.current.nextLong))
+    try {
+      try Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+      catch {
+        case _: NoSuchFileException =>
+          Files.createDirectories(p.getParent)
+          Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+      }
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case e: Throwable =>
+        try Files.deleteIfExists(tmp) catch { case d: Exception => e.addSuppressed(d) }
+        throw e
+    }
+  }
 
   /** `b`, an x-fastest (F) or z-fastest (C) block of `cs` values of
     * `dtb` bytes, in the other order. */
@@ -282,7 +418,8 @@ object ChunkLayout {
     out
   }
 
-  /** `b`'s values of `dtb` bytes with their byte order reversed. */
+  /** `b`'s values of `dtb` bytes with their byte order reversed (its own
+    * inverse). */
   private def swapBytes(b: Array[Byte], dtb: Int): Array[Byte] = {
     require(b.length % dtb == 0, s"payload ${b.length}B not a multiple of $dtb")
     val in = java.nio.ByteBuffer.wrap(b)

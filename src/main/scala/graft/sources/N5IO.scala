@@ -120,9 +120,12 @@ object N5IO {
     * canonical uint16/32/64 N5 volumes.
     */
   def encodeBlock(vox: Array[Long], dims: Vec3, dtb: Int,
-      compression: String): Array[Byte] = {
-    val data = Codec.encodeRawFromLongs(vox, dtb, ByteOrder.BIG_ENDIAN)
-    val body = Compressors.compress(compression, data, dtb)
+      compression: String): Array[Byte] =
+    withHeader(dims, Compressors.compress(compression,
+      Codec.encodeRawFromLongs(vox, dtb, ByteOrder.BIG_ENDIAN), dtb))
+
+  /** `body` behind a block header of clamped `dims` ([[header]] undone). */
+  private[sources] def withHeader(dims: Vec3, body: Array[Byte]): Array[Byte] = {
     val buf = ByteBuffer.allocate(16 + body.length).order(ByteOrder.BIG_ENDIAN)
     buf.putShort(0) // mode
     buf.putShort(3) // ndim
@@ -170,33 +173,25 @@ object N5IO {
     (dims, java.util.Arrays.copyOfRange(binary, 16, binary.length))
   }
 
-  /** Write chunk rows (gx, gy, gz, vox clamped-F-order) as blocks. */
+  /** Write chunk rows (gx, gy, gz, vox clamped-F-order) as the blocks of
+    * dataset `ds`, through the one chunk sink ([[ChunkLayout.write]]). */
   def writeBlocks(chunks: DataFrame, dir: String, m: N5Meta,
       ds: String = "s0"): Unit =
-    chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.foreach { r =>
-        val g = Vec3(r.getLong(0), r.getLong(1), r.getLong(2))
-        val p = Paths.get(dir, ds, g.x.toString, g.y.toString, g.z.toString)
-        Files.createDirectories(p.getParent)
-        Files.write(p, encodeBlock(r.getSeq[Long](3).toArray, Geom.chunkBbox(g,
-          Bbox(Vec3(0, 0, 0), m.dimensions), m.blockSize).size, m.dtypeBytes,
-          m.compression))
-      }
-    }
+    ChunkLayout.write(ChunkLayout.rawRows(chunks, Nil, 0, m.dtypeBytes),
+      layout(dir, ds, m, fillMissing = false))
 
-  /** The scan layout of dataset `ds` of the container at `dir`: clamped
-    * blocks keyed `<ds>/x/y/z`, each a big-endian header, the body under
-    * the dataset's compression, and big-endian values. A header's dims
-    * may not exceed the block size; a block whose dims differ from its
-    * clamped grid cell is cropped, or padded with 0, to it. A missing
-    * block is an ERROR, mirroring the reference's EmptyVolumeException
-    * (n5/image.py:44-52) and the precomputed fill_missing option, or
-    * reads as 0 under `fillMissing`.
+  /** The scan layout of dataset `ds` (meta `m`) of the container at
+    * `dir`: clamped blocks keyed `<ds>/x/y/z`, each a big-endian header,
+    * the body under the dataset's compression, and big-endian values. A
+    * header's dims may not exceed the block size; a block whose dims
+    * differ from its clamped grid cell is cropped, or padded with 0, to
+    * it. A missing block is an ERROR, mirroring the reference's
+    * EmptyVolumeException (n5/image.py:44-52) and the precomputed
+    * fill_missing option, or reads as 0 under `fillMissing`.
     */
-  private[sources] def layout(dir: String, ds: String,
+  private[sources] def layout(dir: String, ds: String, m: N5Meta,
       fillMissing: Boolean): ChunkLayout = {
     import ChunkLayout.{Keys, Missing, Shards, Step}
-    val m = readMeta(dir, ds)
     ChunkLayout(dir, s"n5 $ds", dir, Bbox(Vec3(0, 0, 0), m.dimensions),
       m.blockSize, clamp = true, Keys.Grid(Seq(ds), "/", zyx = false),
       Shards.Unsharded, if (fillMissing) Missing.Fill else Missing.Raise,
@@ -212,7 +207,7 @@ object N5IO {
     */
   def cutoutVoxels(spark: SparkSession, dir: String, bbox: Bbox,
       fillMissing: Boolean = false, ds: String = "s0"): DataFrame =
-    ChunkLayout.cutout(spark, layout(dir, ds, fillMissing), bbox)
+    ChunkLayout.cutout(spark, layout(dir, ds, readMeta(dir, ds), fillMissing), bbox)
 
   /** Cutout one level of a multiScale pyramid: requires the root
     * `"multiScale": true` attribute and the `s<mip>` dataset to

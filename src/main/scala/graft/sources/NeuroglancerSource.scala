@@ -1,6 +1,5 @@
 package graft.sources
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -144,8 +143,8 @@ final class NgTable(props: Map[String, String],
     val scale = meta.scale(mip)
     require(!scale.isSharded, s"scale ${scale.key} is sharded, so per-chunk " +
       "objects would never be read back — use ShardedIO.writeSharded")
-    val gzipped = Option(info.options.get("compress")).map(_.toBoolean)
-      .getOrElse(Codec.shouldCompress(scale.encoding))
+    val method = if (Option(info.options.get("compress")).map(_.toBoolean)
+      .getOrElse(Codec.shouldCompress(scale.encoding))) "gzip" else "none"
     val sch = info.schema()
     // surface shape AND type errors at plan time, like the lock
     // check — r.getLong/r.getBinary in executor tasks would otherwise
@@ -163,7 +162,8 @@ final class NgTable(props: Map[String, String],
         s"neuroglancer sink column $n must be $dt, got $actual")
     }
     val idx = need.map { case (n, _) => sch.fieldIndex(n) }.toArray
-    new NgWriteBuilder(path, scale, gzipped, idx)
+    new NgWriteBuilder(ChunkLayout.precomputed(path, meta, mip, fillMissing = false),
+      method, idx)
   }
 }
 
@@ -176,10 +176,10 @@ final class NgTable(props: Map[String, String],
   * are idempotent and commit/abort have nothing to finalize — the
   * same semantics as the reference's per-chunk uploads.
   */
-final class NgWriteBuilder(layerDir: String, scale: ScaleMeta,
-    gzipped: Boolean, idx: Array[Int]) extends WriteBuilder {
+final class NgWriteBuilder(layout: ChunkLayout, method: String, idx: Array[Int])
+    extends WriteBuilder {
   override def build(): Write = new Write {
-    private val factory = new NgWriterFactory(layerDir, scale, gzipped, idx)
+    private val factory = new NgWriterFactory(layout, method, idx)
     override def toBatch: BatchWrite = new NgBatchWrite(factory)
     override def toStreaming: StreamingWrite = new NgStreamingWrite(factory)
   }
@@ -218,28 +218,25 @@ final class NgStreamingWrite(factory: NgWriterFactory) extends StreamingWrite {
   * (puts are idempotent and named by grid key), so the streaming
   * 3-arg overload delegates to the batch one.
   */
-final class NgWriterFactory(layerDir: String, scale: ScaleMeta,
-    gzipped: Boolean, idx: Array[Int])
+final class NgWriterFactory(layout: ChunkLayout, method: String, idx: Array[Int])
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new NgDataWriter(layerDir, scale, gzipped, idx)
+    new NgDataWriter(layout, method, idx)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     createWriter(partitionId, taskId)
 }
 
-final class NgDataWriter(layerDir: String, scale: ScaleMeta,
-    gzipped: Boolean, idx: Array[Int]) extends DataWriter[InternalRow] {
-  private val dir = java.nio.file.Paths.get(layerDir, scale.key)
-  java.nio.file.Files.createDirectories(dir)
+/** Writes each row as its chunk object ([[ChunkLayout.objectOf]] and the
+  * one [[ChunkLayout.put]], the sink's unsharded path). */
+final class NgDataWriter(layout: ChunkLayout, method: String, idx: Array[Int])
+    extends DataWriter[InternalRow] {
   private var n = 0L
 
   override def write(r: InternalRow): Unit = {
     val g = Vec3(r.getLong(idx(0)), r.getLong(idx(1)), r.getLong(idx(2)))
-    val payload = r.getBinary(idx(3))
-    PrecomputedIO.writeChunkObject(dir.toString,
-      Geom.chunkBbox(g, scale.bounds, scale.chunkSize).toFilename, payload,
-      if (gzipped) "gzip" else "none")
+    layout.objectOf(Seq(ChunkLayout.Chunk(Nil, g, r.getBinary(idx(3)))), method)
+      .foreach { case (p, b) => ChunkLayout.put(p, b) }
     n += 1
   }
   override def commit(): WriterCommitMessage = NgCommitMessage(n)
@@ -405,24 +402,20 @@ object NgScan {
   /** The one grid-to-partition split, shared by the batch scan and the
     * stream, sized by [[ScanSizing.partitions]]. On a sharded grid the
     * points are grouped by shard file and whole groups are packed into
-    * the partitions, so each task reads a shard's index once.
+    * the partitions, so each task reads a shard's index once; the sizing
+    * counts one open per group (a chunk, or a shard and its chunks).
     */
   private[sources] def partitionsOf(layout: ChunkLayout,
       pts: Seq[Vec3]): Array[InputPartition] = {
     if (pts.isEmpty) return Array.empty
     val cs = layout.chunkSize
-    val per = Geom.ceilDiv(pts.size, ScanSizing.partitions(SparkSession.active,
-      pts.size, cs.x * cs.y * cs.z * layout.dtypeBytes)).toInt
     val groups =
-      if (layout.shards == ChunkLayout.Shards.Unsharded) pts.grouped(per).toSeq
+      if (layout.shards == ChunkLayout.Shards.Unsharded) pts.map(Seq(_))
       else pts.groupBy(layout.shardOf).toSeq.sortBy(_._1).map(_._2)
-    val parts = ArrayBuffer(ArrayBuffer.empty[Vec3])
-    for (grp <- groups) {
-      if (parts.last.size >= per) parts += ArrayBuffer.empty
-      parts.last ++= grp
-    }
-    parts.map(p => NgInputPartition(layout,
-      p.map(_.toArray).toArray): InputPartition).toArray
+    val per = Geom.ceilDiv(groups.size, ScanSizing.partitions(SparkSession.active,
+      groups.size, cs.x * cs.y * cs.z * layout.dtypeBytes * pts.size / groups.size)).toInt
+    groups.grouped(per).map(p => NgInputPartition(layout,
+      p.flatten.map(_.toArray).toArray): InputPartition).toArray
   }
 }
 

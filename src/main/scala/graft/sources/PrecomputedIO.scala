@@ -62,15 +62,10 @@ object PrecomputedIO {
       .collectFirst { case (f, codec) if Files.exists(f) =>
         Compressors.decompress(codec, Files.readAllBytes(f), chunkSize) }
 
-  /** The one object put for precomputed chunks: `payload` under
-    * `dir/name`, second-stage compressed per `method` ("gzip" -> `.gz`,
-    * "br" -> `.br`, "none" -> bare name; the dual of [[readChunkObject]]).
-    */
-  def writeChunkObject(dir: String, name: String, payload: Array[Byte],
-      method: String): Unit = {
-    val (sfx, codec) = Suffixes.find(_._2 == method).getOrElse(Suffixes.head)
-    Files.write(Paths.get(dir, name + sfx), Compressors.compress(codec, payload))
-  }
+  /** The object-name suffix of second-stage `method` ("gzip" -> `.gz`,
+    * "br" -> `.br`, "none" -> bare name; the dual of [[readChunkObject]]). */
+  private[sources] def suffix(method: String): String =
+    Suffixes.find(_._2 == method).fold("")(_._1)
 
   /** Decoded-payload ceiling for one chunk (brotli's second-stage bound:
     * chunk voxels x widest dtype (uint64) + slack, so a corrupt object
@@ -83,10 +78,13 @@ object PrecomputedIO {
 
   /** S9 aligned write: chunk rows (gx, gy, gz, payload) — payload
     * already encoded for the scale's encoding — written as real chunk
-    * objects. Executor-side, one file per chunk (tx.py:314-475
-    * threaded_upload_chunks; Spark tasks replace the thread pool).
-    * With `deleteBlack`, all-background chunks are elided (S14,
-    * tx.py:445-456) — pass background payload bytes to compare.
+    * objects through the one chunk sink ([[ChunkLayout.write]]):
+    * executor-side, one object put per chunk (tx.py:314-475
+    * threaded_upload_chunks; Spark tasks replace the thread pool), named
+    * by its bbox plus the second-stage suffix. With `deleteBlack`,
+    * all-background chunks are elided (S14, tx.py:445-456) — pass
+    * background payload bytes to compare. A sharded scale is written by
+    * [[ShardedIO.writeSharded]].
     */
   def writeChunks(chunks: DataFrame, layerDir: String, meta: VolumeMeta,
       mip: Int, deleteBlack: Option[Array[Byte]] = None,
@@ -98,8 +96,8 @@ object PrecomputedIO {
       throw new IllegalStateException(
         s"mip $mip is write-locked (scale ${meta.scale(mip).key})")
     val scale = meta.scale(mip)
-    val dir = Paths.get(layerDir, scale.key)
-    Files.createDirectories(dir)
+    require(!scale.isSharded,
+      s"scale ${scale.key} is sharded — use ShardedIO.writeSharded")
     // compress=Some(b) overrides the per-encoding policy, like the
     // reference's `compress` kwarg on upload (tx.py:35-61); codec
     // selects the second-stage method itself ("gzip" | "br" | "none",
@@ -108,21 +106,9 @@ object PrecomputedIO {
     val method = codec.getOrElse(
       if (compress.getOrElse(Codec.shouldCompress(scale.encoding))) "gzip"
       else "none")
-    require(Set("gzip", "br", "none")(method),
-      s"unsupported chunk compression codec: $method")
-    val bounds = scale.bounds
-    val cs = scale.chunkSize
-    val dirStr = dir.toString
-    chunks.select(col("gx"), col("gy"), col("gz"), col("payload"))
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        rows.foreach { r =>
-          val g = Vec3(r.getLong(0), r.getLong(1), r.getLong(2))
-          val payload = r.getAs[Array[Byte]](3)
-          val black = deleteBlack.exists(bg => java.util.Arrays.equals(bg, payload))
-          if (!black) writeChunkObject(dirStr,
-            Geom.chunkBbox(g, bounds, cs).toFilename, payload, method)
-        }
-      }
+    ChunkLayout.write(chunks.select(col("gx"), col("gy"), col("gz"), col("payload")),
+      ChunkLayout.precomputed(layerDir, meta, mip, fillMissing = false), method,
+      deleteBlack)
   }
 
   /** S8 raw-file read via the DSv2 source: chunk rows over a bbox

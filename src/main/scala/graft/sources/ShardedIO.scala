@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.RandomAccessFile
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -19,10 +19,10 @@ import graft.core._
   * Chunk reads are the `neuroglancer` scan's: it plans each shard's
   * chunks into one task, which reads them with [[readLabelsRanged]].
   *
-  * Write = S12 shard synthesis: `groupByKey(shard)` shuffles each
-  * shard's chunks to one task, which assembles the file with
-  * ShardCodec.synthesizeShard (sharding.py:868-983). One shuffle,
-  * then embarrassingly parallel file assembly.
+  * Write = S12 shard synthesis through the one chunk sink: one shuffle
+  * groups each shard's chunks into one task, which assembles the file
+  * with ShardCodec.synthesizeShard (sharding.py:868-983), then
+  * embarrassingly parallel file assembly.
   */
 object ShardedIO {
 
@@ -60,10 +60,6 @@ object ShardedIO {
   private def fixedIndex(raf: RandomAccessFile, spec: ShardingSpec): Array[(Long, Long)] =
     ShardCodec.decodeFixedIndex(
       rangedRead(raf, 0L, ShardCodec.indexLength(spec), "fixed index"), spec)
-
-  private def mortonUdf(grid: Vec3) =
-    udf((gx: Long, gy: Long, gz: Long) =>
-      Morton.encode(Vec3(gx, gy, gz), grid))
 
   /** Ranged read of a label set from ONE shard file — fixed index,
     * then only the needed minishard indexes, then data ranges
@@ -123,33 +119,29 @@ object ShardedIO {
     } finally raf.close()
   }
 
-  /** S12: write chunk rows (gx, gy, gz, payload) as shard files. */
+  /** S12: write chunk rows (gx, gy, gz, payload) as shard files, through
+    * the one chunk sink ([[ChunkLayout.write]]): one shuffle groups each
+    * shard's chunks, keyed by morton code, into one task, which
+    * synthesizes the file whole. */
   def writeSharded(chunks: DataFrame, layerDir: String, meta: VolumeMeta,
       mip: Int): Unit = {
     val scale = meta.scale(mip)
-    val spec = scale.sharding.getOrElse(
-      throw new IllegalArgumentException(s"scale ${scale.key} is not sharded"))
-    val grid = scale.gridSize
-    val dir = Paths.get(layerDir, scale.key)
-    Files.createDirectories(dir)
-    val dirStr = dir.toString
-    val s = chunks.sparkSession
-    import s.implicits._
-    val withShard = chunks
-      .withColumn("morton", mortonUdf(grid)(col("gx"), col("gy"), col("gz")))
-      .withColumn("shard",
-        udf((m: Long) => spec.shardLocation(m)._1).apply(col("morton")))
-      .select(col("shard"), col("morton"), col("payload"))
-      .as[(Long, Long, Array[Byte])]
-    withShard.groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val items = it.map(t => (t._2, t._3)).toSeq
-        (shard, ShardCodec.synthesizeShard(spec, items))
-      }
-      .foreach { t: (Long, Array[Byte]) =>
-        Files.write(Paths.get(dirStr, spec.shardFilename(t._1)), t._2)
-        ()
-      }
+    require(scale.isSharded, s"scale ${scale.key} is not sharded")
+    ChunkLayout.write(chunks.select(col("gx"), col("gy"), col("gz"), col("payload")),
+      ChunkLayout.precomputed(layerDir, meta, mip, fillMissing = false))
+  }
+
+  /** The label-keyed shard writer (sharding.py:868-983
+    * synthesize_shard_files) for non-grid payloads — by-id annotations,
+    * relationship lists, spatial cells, skeletons: rows (label, payload)
+    * grouped by shard file in one shuffle, each shard synthesized whole
+    * and put under `dir` ([[ChunkLayout.put]]). */
+  def writeLabeled(rows: DataFrame, dir: String, spec: ShardingSpec): Unit = {
+    def shard(r: Row) = spec.shardLocation(r.getLong(0))._1
+    Files.createDirectories(Paths.get(dir))
+    ChunkLayout.putGroups(rows, shard)(rs =>
+      Some(Paths.get(dir, spec.shardFilename(shard(rs.head))) ->
+        ShardCodec.synthesizeShard(spec, rs.map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)))))
   }
 
   /** S6/J3/A7: the minishard-index DataFrame — one row per stored

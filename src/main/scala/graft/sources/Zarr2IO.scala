@@ -159,48 +159,13 @@ object Zarr2IO {
   val Compressors: Set[String] =
     Set("none", "zlib", "blosc", "zstd", "gzip", "bz2", "lzma")
 
-  private def pack(m: Zarr2Meta, b: Array[Byte]): Array[Byte] =
-    graft.sources.Compressors.compress(m.compressor, b, m.dtypeBytes,
-      graft.sources.Compressors.BloscConf(m.bloscCname, m.bloscClevel,
-        m.bloscShuffle))
-
-  /** Write chunk rows (gx, gy, gz, vox F-order full-chunk array). */
-  def writeChunks(chunks: DataFrame, dir: String, m: Zarr2Meta): Unit =
-    writeBlocks(chunks, dir, m, None)
-
-  /** Write rows of the lead-axis grid indices (tc, cc; OME only), then
-    * (gx, gy, gz, vox F-order full-chunk array), as the chunk objects
-    * [[layout]] reads: named by its keys, in the .zarray byte order,
-    * and C-order unless F (a plain array's declared order) or OME —
-    * whose C order of (t=1, c=1, z, y, x) is x-fastest, F order of the
-    * spatial block.
+  /** Write chunk rows (gx, gy, gz, vox F-order full-chunk array) as the
+    * chunk objects [[layout]] reads, through the one chunk sink
+    * ([[ChunkLayout.write]]): keyed `x.y.z`, in the .zarray byte order,
+    * C-order unless the array's order is F.
     */
-  private def writeBlocks(chunks: DataFrame, dir: String, m: Zarr2Meta,
-      ome: Option[Zarr2Ome]): Unit = {
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    // ByteOrder is not Serializable — ship a flag, rehydrate per task
-    val be = m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN
-    val cOrder = ome.isEmpty && m.order == "C"
-    val lead = ome.toSeq.flatMap(o => o.timeFrames.map(_ => 0).toSeq ++
-      o.channels.map(_ => 1).toSeq)
-    val g0 = if (ome.isDefined) 2 else 0
-    chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      val bo = if (be) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN
-      rows.foreach { r =>
-        val vox = r.getSeq[Long](g0 + 3).toArray
-        val bytes =
-          if (cOrder) Zarr3IO.encodeChunkFromF(vox, cs, dtb, bo)
-          else Codec.encodeRawFromLongs(vox, dtb, bo)
-        val p = Paths.get(dir, ChunkLayout.Keys.Grid(lead.map(r.getLong(_).toString),
-          m.separator, zyx = ome.isDefined)
-          .name(Vec3(r.getLong(g0), r.getLong(g0 + 1), r.getLong(g0 + 2))))
-        Files.createDirectories(p.getParent)
-        Files.write(p, pack(m, bytes))
-      }
-    }
-  }
+  def writeChunks(chunks: DataFrame, dir: String, m: Zarr2Meta): Unit =
+    ChunkLayout.write(ChunkLayout.rawRows(chunks, Nil, 0, m.dtypeBytes), layout(dir, m))
 
   // ---- OME-zarr (zarr v2 + .zattrs multiscales axes) ----
   // The reference's zarr2 datasource is really an OME-zarr reader:
@@ -424,12 +389,16 @@ object Zarr2IO {
   }
 
   /** Write OME chunk rows (tc, cc, gx, gy, gz, vox F-order full-chunk
-    * array — one spatial block per (t, c)). Keys join grid indices in
-    * zarr axis order: [t.][c.]gz.gy.gx (zarr2/metadata.py:211-223
-    * chunk_name).
+    * array — one spatial block per (t, c)) through the one chunk sink.
+    * Keys join the grid indices of the axes the array has in zarr axis
+    * order: [t.][c.]gz.gy.gx (zarr2/metadata.py:211-223 chunk_name); the
+    * C order of (t=1, c=1, z, y, x) is x-fastest, the block's F order.
     */
-  def writeChunksOme(chunks: DataFrame, dir: String, o: Zarr2Ome): Unit =
-    writeBlocks(chunks, dir, o.meta, Some(o))
+  def writeChunksOme(chunks: DataFrame, dir: String, o: Zarr2Ome): Unit = {
+    val lead = o.timeFrames.map(_ => 0).toSeq ++ o.channels.map(_ => 1).toSeq
+    ChunkLayout.write(ChunkLayout.rawRows(chunks, lead, 2, o.meta.dtypeBytes),
+      layout(dir, o.meta, lead.map(_ => 0L), ome = true))
+  }
 
   /** The scan layout of the zarr2 array at `dir`: full-size chunks,
     * an absent key reads as fill_value (zarr v2 semantics; the
@@ -446,7 +415,8 @@ object Zarr2IO {
       Bbox(Vec3(0, 0, 0), m.shape), m.chunkShape, clamp = false,
       Keys.Grid(lead.map(_.toString), m.separator, zyx = ome),
       Shards.Unsharded, Missing.Fill,
-      Step.Decompress(m.compressor) +:
+      Step.Decompress(m.compressor, graft.sources.Compressors.BloscConf(
+        m.bloscCname, m.bloscClevel, m.bloscShuffle)) +:
         ((if (m.byteOrder == java.nio.ByteOrder.BIG_ENDIAN) Seq(Step.SwapBytes)
           else Nil) ++ (if (ome || m.order == "F") Nil else Seq(Step.CToF))),
       "raw", m.dtypeBytes, m.fillValue)

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -100,10 +100,6 @@ object Zarr3IO {
   }
 
   private val om = new ObjectMapper()
-
-  /** Second-stage compression per the codec chain. */
-  private def pack(m: Zarr3Meta, b: Array[Byte]): Array[Byte] =
-    Compressors.compress(m.compressor, b, m.dtypeBytes)
 
   /** Append the compressor codec object to a codec array node. */
   private def addCompressorCodec(
@@ -317,63 +313,60 @@ object Zarr3IO {
     c.getValue.toInt
   }
 
-  /** Synthesize one shard object: encoded inner chunks back to back,
-    * then the (offset, nbytes) uint64-le index in C order of the inner
-    * grid, then the index's crc32c (le). Inner chunks whose voxels are
-    * ALL fill_value are elided (written as Missing/Missing — the
-    * sharding spec's representation of an absent sub-chunk).
+  /** One shard object of `n` inner-chunk slots from the stored inner
+    * chunks (slot, bytes): the chunks back to back in slot order, then
+    * the (offset, nbytes) uint64-le index in C order of the inner grid,
+    * then the index's crc32c (le). An absent slot is Missing/Missing —
+    * the sharding spec's representation of an absent sub-chunk.
     */
-  def synthesizeShard(outerVox: Array[Long], m: Zarr3Meta): Array[Byte] = {
-    val inner = m.innerChunkShape.get
-    val ig = m.innerGrid
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val n = (ig.x * ig.y * ig.z).toInt
-    val offsets = new Array[Long](n)
-    val sizes = new Array[Long](n)
-    val parts = new Array[Array[Byte]](n)
-    var pos = 0L
-    for (cx <- 0L until ig.x; cy <- 0L until ig.y; cz <- 0L until ig.z) {
-      val slot = innerSlot(Vec3(cx, cy, cz), ig)
-      val sub = new Array[Long]((inner.x * inner.y * inner.z).toInt)
-      var allFill = true
-      var z = 0L
-      while (z < inner.z) {
-        var y = 0L
-        while (y < inner.y) {
-          var x = 0L
-          while (x < inner.x) {
-            val v = outerVox(((cx * inner.x + x) + cs.x *
-              ((cy * inner.y + y) + cs.y * (cz * inner.z + z))).toInt)
-            sub((x + inner.x * (y + inner.y * z)).toInt) = v
-            if (v != m.fillValue) allFill = false
-            x += 1
-          }
-          y += 1
-        }
-        z += 1
-      }
-      if (allFill) { offsets(slot) = MissingSlot; sizes(slot) = MissingSlot }
-      else {
-        val enc0 = encodeChunkFromF(sub, inner, dtb)
-        val enc = pack(m, enc0)
-        parts(slot) = enc
-        offsets(slot) = pos
-        sizes(slot) = enc.length.toLong
-        pos += enc.length
-      }
-    }
+  private[sources] def shardObject(n: Int, parts: Seq[(Int, Array[Byte])]): Array[Byte] = {
     val idxBytes = new Array[Byte](16 * n + 4)
-    val bb = java.nio.ByteBuffer.wrap(idxBytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < n) { bb.putLong(offsets(i)); bb.putLong(sizes(i)); i += 1 }
-    bb.putInt(crc32c(idxBytes, 16 * n))
-    val out = new java.io.ByteArrayOutputStream(pos.toInt + idxBytes.length)
-    parts.foreach(p => if (p != null) out.write(p))
+    val bb = java.nio.ByteBuffer.wrap(idxBytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until n).foreach { i => bb.putLong(16 * i, MissingSlot); bb.putLong(16 * i + 8, MissingSlot) }
+    val out = new java.io.ByteArrayOutputStream()
+    parts.sortBy(_._1).foreach { case (slot, b) =>
+      bb.putLong(16 * slot, out.size.toLong); bb.putLong(16 * slot + 8, b.length.toLong)
+      out.write(b)
+    }
+    bb.putInt(16 * n, crc32c(idxBytes, 16 * n))
     out.write(idxBytes)
     out.toByteArray
   }
+
+  /** The inner chunks of the F-order OUTER-shard block `vox` at shard
+    * grid point `sg`, as sink chunks (little-endian F-order payloads). */
+  private def innerChunks(vox: Array[Long], sg: Vec3, m: Zarr3Meta)
+      : Seq[ChunkLayout.Chunk] = {
+    val inner = m.innerChunkShape.get
+    val ig = m.innerGrid
+    val cs = m.chunkShape
+    require(vox.length == cs.x * cs.y * cs.z,
+      s"shard block has ${vox.length} voxels, expected $cs")
+    for (cx <- 0L until ig.x; cy <- 0L until ig.y; cz <- 0L until ig.z) yield {
+      val sub = new Array[Long]((inner.x * inner.y * inner.z).toInt)
+      for (z <- 0L until inner.z; y <- 0L until inner.y)
+        System.arraycopy(vox, (cx * inner.x + cs.x * ((cy * inner.y + y) +
+          cs.y * (cz * inner.z + z))).toInt, sub, (inner.x * (y + inner.y * z)).toInt,
+          inner.x.toInt)
+      ChunkLayout.Chunk(Nil, sg * ig + Vec3(cx, cy, cz),
+        Codec.encodeRawFromLongs(sub, m.dtypeBytes))
+    }
+  }
+
+  /** An inner chunk whose voxels are ALL fill_value: the sink stores it
+    * as a Missing slot. */
+  private def fillChunk(m: Zarr3Meta): Array[Byte] = {
+    val inner = m.innerChunkShape.get
+    Codec.encodeRawFromLongs(Array.fill((inner.x * inner.y * inner.z).toInt)(m.fillValue),
+      m.dtypeBytes)
+  }
+
+  /** One shard object of the F-order OUTER-shard block `outerVox`, as
+    * [[writeShards]] writes it ([[ChunkLayout.objectOf]]); all-fill
+    * inner chunks are Missing slots. */
+  def synthesizeShard(outerVox: Array[Long], m: Zarr3Meta): Array[Byte] =
+    layout("", m).objectOf(innerChunks(outerVox, Vec3(0, 0, 0), m),
+      elide = Some(fillChunk(m))).get._2
 
   /** Parse a shard's trailing index; verifies the crc32c. */
   def readShardIndex(file: java.nio.file.Path, m: Zarr3Meta): Array[(Long, Long)] = {
@@ -398,41 +391,28 @@ object Zarr3IO {
   }
 
   /** Write shard rows (sx, sy, sz, vox: F-order full OUTER-shard Long
-    * array) as shard objects `c/<sx>/<sy>/<sz>`.
+    * array) as shard objects `c/<sx>/<sy>/<sz>`: each row's shard is
+    * [[synthesizeShard]]'s object ([[ChunkLayout.objectOf]], all-fill
+    * inner chunks as Missing slots), put by the row's task through the
+    * one [[ChunkLayout.put]].
     */
   def writeShards(shards: DataFrame, dir: String, m: Zarr3Meta): Unit = {
-    shards.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.foreach { r =>
-        val p = Paths.get(dir, "c", r.getLong(0).toString,
-          r.getLong(1).toString, r.getLong(2).toString)
-        Files.createDirectories(p.getParent)
-        Files.write(p, synthesizeShard(r.getSeq[Long](3).toArray, m))
-      }
+    val lay = layout(dir, m)
+    val fill = Some(fillChunk(m))
+    Files.createDirectories(Paths.get(lay.root))
+    shards.foreachPartition { it: Iterator[Row] =>
+      it.foreach(r => lay.objectOf(innerChunks(r.getSeq[Long](3).toArray,
+        Vec3(r.getLong(0), r.getLong(1), r.getLong(2)), m), elide = fill)
+        .foreach { case (p, b) => ChunkLayout.put(p, b) })
     }
   }
 
-  /** C-order chunk bytes -> F-order Long voxels (the bytes-codec
-    * transpose at the canonical-order boundary; C order of shape
-    * (x, y, z) is z fastest, F order x fastest).
-    */
-  def decodeChunkToF(payload: Array[Byte], cs: Vec3, dtb: Int,
-      order: java.nio.ByteOrder = java.nio.ByteOrder.LITTLE_ENDIAN)
-      : Array[Long] =
-    Codec.decodeRawToLongs(ChunkLayout.transpose(payload, cs, dtb, cToF = true),
-      dtb, order)
-
-  /** F-order voxels -> C-order chunk bytes (write-side transpose). */
-  def encodeChunkFromF(vox: Array[Long], cs: Vec3, dtb: Int,
-      order: java.nio.ByteOrder = java.nio.ByteOrder.LITTLE_ENDIAN)
-      : Array[Byte] =
-    ChunkLayout.transpose(Codec.encodeRawFromLongs(vox, dtb, order), cs, dtb,
-      cToF = false)
-
   /** Write chunk rows (gx, gy, gz, vox: F-order full-chunk Long array)
-    * as zarr chunk objects `c/<gx>/<gy>/<gz>`.
+    * as zarr chunk objects `c/<gx>/<gy>/<gz>` (a forwarder to the one
+    * chunk sink, [[ChunkLayout.write]]).
     */
   def writeChunks(chunks: DataFrame, dir: String, m: Zarr3Meta): Unit =
-    writeFrames(chunks, dir, m, lead = 0)
+    writeLead(chunks, dir, m, lead = 0)
 
   /** Chunk-granular read of a plain spatial array: one row per
     * EXISTING chunk object, voxels decoded to the canonical F-order
@@ -469,7 +449,7 @@ object Zarr3IO {
     // would produce files readMeta-compatible readers misplace
     require(m.channels.isEmpty && !m.zyx,
       "writeChunksT supports 4-D (t + xyz) only; use writeChunksTC")
-    writeFrames(chunks, dir, m, lead = 1)
+    writeLead(chunks, dir, m, lead = 1)
   }
 
   /** Write 5-D chunk rows (tc, cc, gx, gy, gz, vox) where `vox` is
@@ -480,47 +460,20 @@ object Zarr3IO {
   def writeChunksTC(chunks: DataFrame, dir: String, m: Zarr3Meta): Unit = {
     require(m.timeFrames.isDefined && m.channels.isDefined,
       "writeChunksTC requires both t and c axes")
-    writeFrames(chunks, dir, m, lead = 2)
+    writeLead(chunks, dir, m, lead = 2)
   }
 
   /** Write rows of `lead` lead-axis grid indices, then (gx, gy, gz, vox)
-    * as objects `c/<lead>/<spatial key>` (the default chunk_key_encoding
-    * follows dimension_names, so a zyx array keys `.../<gz>/<gy>/<gx>`).
-    * `vox` holds the object's timeChunk x channelChunk F-order
-    * full-chunk frames, t-major — the C order of (t, c, x, y, z) — and
-    * each frame is encoded on its own.
+    * through the one chunk sink: objects `c/<lead>/<spatial key>` (the
+    * default chunk_key_encoding follows dimension_names, so a zyx array
+    * keys `.../<gz>/<gy>/<gx>`). `vox` holds the object's timeChunk x
+    * channelChunk F-order full-chunk frames, t-major — the C order of
+    * (t, c, x, y, z) — and each frame is transposed on its own.
     */
-  private def writeFrames(chunks: DataFrame, dir: String, m: Zarr3Meta,
-      lead: Int): Unit = {
-    val cs = m.chunkShape
-    val dtb = m.dtypeBytes
-    val nf = (m.timeChunk * m.channelChunk).toInt
-    val frameVox = (cs.x * cs.y * cs.z).toInt
-    chunks.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.foreach { r =>
-        val vox = r.getSeq[Long](lead + 3).toArray
-        require(vox.length == frameVox * nf,
-          s"expected $nf frames of $frameVox voxels, got ${vox.length}")
-        val out = new java.io.ByteArrayOutputStream(vox.length * dtb)
-        for (f <- 0 until nf) out.write(encodeFrameFromF(m,
-          java.util.Arrays.copyOfRange(vox, f * frameVox, (f + 1) * frameVox), cs, dtb))
-        val p = Paths.get(dir, ChunkLayout.Keys.Grid(
-          "c" +: (0 until lead).map(r.getLong(_).toString), "/", m.zyx)
-          .name(Vec3(r.getLong(lead), r.getLong(lead + 1), r.getLong(lead + 2))))
-        Files.createDirectories(p.getParent)
-        Files.write(p, pack(m, out.toByteArray))
-      }
-    }
-  }
-
-  /** One F-order xyz frame to chunk bytes, honoring the array's
-    * spatial order: a zyx array's C-order bytes are x-fastest — already
-    * this engine's F order, so no transpose.
-    */
-  private def encodeFrameFromF(m: Zarr3Meta, vox: Array[Long], cs: Vec3,
-      dtb: Int): Array[Byte] =
-    if (m.zyx) Codec.encodeRawFromLongs(vox, dtb)
-    else encodeChunkFromF(vox, cs, dtb)
+  private def writeLead(chunks: DataFrame, dir: String, m: Zarr3Meta,
+      lead: Int): Unit =
+    ChunkLayout.write(ChunkLayout.rawRows(chunks, 0 until lead, lead, m.dtypeBytes),
+      layout(dir, m))
 
   /** The scan layout of the array at `dir` (meta `m`) at one (t, c)
     * point of its lead axes: full-size chunks in C order, an absent key
@@ -559,7 +512,8 @@ object Zarr3IO {
         ChunkLayout(dir, "zarr3", dir, bounds, m.chunkShape, clamp = false,
           Keys.Grid("c" +: lead.map(_.toString), "/", m.zyx), Shards.Unsharded,
           ChunkLayout.Missing.Fill,
-          Seq(unpack, Step.Frame(slot)) ++ (if (m.zyx) Nil else Seq(Step.CToF)),
+          Seq(unpack, Step.Frame(slot, m.timeChunk * m.channelChunk)) ++
+            (if (m.zyx) Nil else Seq(Step.CToF)),
           "raw", m.dtypeBytes, m.fillValue)
     }
   }

@@ -151,11 +151,11 @@ class FormatSpec extends AnyFunSuite {
   }
 
   test("zarr3 C<->F transpose round-trip") {
-    import graft.sources.Zarr3IO
+    import graft.sources.ChunkLayout.transpose
     val cs = Vec3(4, 3, 2)
     val f = Array.tabulate(24)(_.toLong)
-    val enc = Zarr3IO.encodeChunkFromF(f, cs, 4)
-    assert(Zarr3IO.decodeChunkToF(enc, cs, 4).toSeq === f.toSeq)
+    val enc = transpose(Codec.encodeRawFromLongs(f, 4), cs, 4, cToF = false)
+    assert(Codec.decodeRawToLongs(transpose(enc, cs, 4, cToF = true), 4).toSeq === f.toSeq)
     // C order: last dim (z) fastest — element (x=1,y=0,z=0) sits at
     // C-index 1*3*2=6; F-index of that voxel is 1
     val c = Codec.decodeRawToLongs(enc, 4)

@@ -5,8 +5,9 @@ import graft.core._
 import graft.sources.{N5IO, PrecomputedIO, ShardedIO, Zarr2IO, Zarr3IO}
 
 /** One seeded volume stored in every grid format a cutout reads:
-  * precomputed raw, N5, zarr2 (C and F order), OME-zarr2, zarr3 and
-  * sharded zarr3 (shards of 2x2x2 blocks). The volume starts at the
+  * precomputed raw (unsharded, and sharded in [[precomputedSharded]]),
+  * N5, zarr2 (C and F order), OME-zarr2, zarr3 and sharded zarr3
+  * (shards of 2x2x2 blocks). The volume starts at the
   * origin and its extent is a multiple of no block axis, so every axis
   * ends in an edge block.
   *
@@ -15,7 +16,8 @@ import graft.sources.{N5IO, PrecomputedIO, ShardedIO, Zarr2IO, Zarr3IO}
   * fill: zarr keys (fill_value), sharded zarr3 inner chunks (Missing
   * slots, or no shard object when every block of a shard is absent)
   * and precomputed chunks (read with `fillMissing` and `background =
-  * fill`). N5 reads absent blocks as 0, so it stores every block until
+  * fill`; a sharded precomputed chunk absent from its shard gives no
+  * row). N5 reads absent blocks as 0, so it stores every block until
   * [[dropAbsentN5Blocks]] deletes them.
   */
 final class GridFixtures(spark: SparkSession, root: String, val dims: Vec3,
@@ -65,6 +67,7 @@ final class GridFixtures(spark: SparkSession, root: String, val dims: Vec3,
   }, "gx", "gy", "gz", "vox")
 
   val precomputed: String = s"$root/precomputed"
+  val precomputedSharded: String = s"$root/precomputed_sharded"
   val n5: String = s"$root/n5"
   val zarr2C: String = s"$root/zarr2_C"
   val zarr2F: String = s"$root/zarr2_F"
@@ -80,10 +83,16 @@ final class GridFixtures(spark: SparkSession, root: String, val dims: Vec3,
       numChannels = 1, scales = Seq(ScaleMeta(key = "1_1_1",
         encoding = "raw", resolution = Seq(1, 1, 1), chunkSize = block,
         size = dims, voxelOffset = Vec3(0, 0, 0))))
-    PrecomputedIO.writeInfo(precomputed, pm)
-    PrecomputedIO.writeChunks(stored.map { g =>
+    val chunks = stored.map { g =>
       (g.x, g.y, g.z, Codec.encodeRawFromLongs(vox(g * block, clamped(g)).toArray, dtb))
-    }.toDF("gx", "gy", "gz", "payload"), precomputed, pm, 0)
+    }.toDF("gx", "gy", "gz", "payload")
+    PrecomputedIO.writeInfo(precomputed, pm)
+    PrecomputedIO.writeChunks(chunks, precomputed, pm, 0)
+    val sm = pm.copy(scales = Seq(pm.scale(0).copy(sharding = Some(ShardingSpec(
+      preshiftBits = 0, minishardBits = 1, shardBits = 2,
+      minishardIndexEncoding = "gzip", dataEncoding = "gzip")))))
+    PrecomputedIO.writeInfo(precomputedSharded, sm)
+    ShardedIO.writeSharded(chunks, precomputedSharded, sm, 0)
 
     val nm = N5IO.N5Meta(dims, block, UintTypes(dtb), "gzip")
     N5IO.writeMeta(n5, nm)
@@ -160,22 +169,10 @@ object GridFixtures {
     val palette = Array(1L, 3L, Long.MinValue + 9L, -2L, 1L << 40)
     val fx = new GridFixtures(spark, root, Vec3(13, 9, 7), Vec3(4, 4, 3), 8,
       0L, Set.empty, p => palette(((p.x * 7 + p.y * 3 + p.z) % palette.length).toInt))
-    val s = spark
-    import s.implicits._
-    val pm = PrecomputedIO.readInfo(fx.precomputed)
-    val sm = pm.copy(scales = Seq(pm.scale(0).copy(sharding = Some(ShardingSpec(
-      preshiftBits = 0, minishardBits = 1, shardBits = 2,
-      minishardIndexEncoding = "gzip", dataEncoding = "gzip")))))
-    val sharded = s"$root/precomputed_sharded"
-    PrecomputedIO.writeInfo(sharded, sm)
-    ShardedIO.writeSharded(Geom.gridpoints(fx.bounds, fx.bounds, fx.block).map { g =>
-      val b = Geom.chunkBbox(g, fx.bounds, fx.block)
-      (g.x, g.y, g.z, Codec.encodeRawFromLongs(fx.vox(b.minpt, b.size).toArray, 8))
-    }.toDF("gx", "gy", "gz", "payload"), sharded, sm, 0)
     val box = Bbox(Vec3(1, 2, 1), Vec3(12, 9, 6))
     Seq[(String, SparkSession => DataFrame)](
       ("precomputed", PrecomputedIO.cutoutVoxels(_, fx.precomputed, box)),
-      ("sharded precomputed", ShardedIO.cutoutVoxelsSharded(_, sharded, box)),
+      ("sharded precomputed", ShardedIO.cutoutVoxelsSharded(_, fx.precomputedSharded, box)),
       ("zarr2", Zarr2IO.cutoutVoxels(_, fx.zarr2C, box)))
       .map { case (name, cut) => (name, cut, fx.expect(box)) }
   }

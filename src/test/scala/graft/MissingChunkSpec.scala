@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
-import graft.sources.{N5IO, PrecomputedIO, ShardedIO, Zarr3IO}
+import graft.sources.{N5IO, PrecomputedIO, Zarr3IO}
 
 /** Differential spec of every format's missing-chunk rule, each read
   * through the one `neuroglancer` chunk scan over one unaligned volume
@@ -108,18 +108,7 @@ class MissingChunkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("precomputed sharded: an absent chunk gives no row, with or " +
       "without fill_missing") {
-    val s = spark
-    import s.implicits._
-    val pm = PrecomputedIO.readInfo(fx.precomputed)
-    val sm = pm.copy(scales = Seq(pm.scale(0).copy(sharding = Some(ShardingSpec(
-      preshiftBits = 0, minishardBits = 1, shardBits = 2,
-      minishardIndexEncoding = "gzip", dataEncoding = "gzip")))))
-    val path = s"$dir/precomputed_sharded"
-    PrecomputedIO.writeInfo(path, sm)
-    ShardedIO.writeSharded((grid -- absent).toSeq.map { g =>
-      val b = Geom.chunkBbox(g, fx.bounds, fx.block)
-      (g.x, g.y, g.z, Codec.encodeRawFromLongs(fx.vox(b.minpt, b.size).toArray, 4))
-    }.toDF("gx", "gy", "gz", "payload"), path, sm, 0)
+    val path = fx.precomputedSharded
     val stored = fx.expect(box).filterNot { case (x, y, z, _) =>
       absent(Vec3(x / 4, y / 4, z / 3)) }
     for (fill <- Seq(false, true)) {

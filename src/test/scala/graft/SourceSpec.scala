@@ -541,7 +541,10 @@ class SourceSpec extends AnyFunSuite with BeforeAndAfterAll {
           r.getAs[Array[Byte]](3).toSeq)).toMap
     val want = Geom.gridpoints(bounds, bounds, cs)
       .filter(g => g.x >= 1 && g.y <= 1 && g.z == 1).toSet
-    spark.conf.set("spark.graft.scan.minBytesPerTask", (96L << 10).toString)
+    // the 6 pruned chunks lie in 2 shards; with one open charged per
+    // shard group they estimate ~130 KiB of work, so 32 KiB per task
+    // gives each group its own task
+    spark.conf.set("spark.graft.scan.minBytesPerTask", (32L << 10).toString)
     try {
       val df = pruned(sharded)
       val parts = df.queryExecution.optimizedPlan.collect {

@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Vec3
-import graft.sources.Zarr3IO
+import graft.core.{Codec, Vec3}
+import graft.sources.{ChunkLayout, Zarr3IO}
 import graft.sources.Zarr3IO.Zarr3Meta
 
 /** zarr v3 sharding_indexed container: shard synthesis + index
@@ -18,6 +18,12 @@ class Zarr3ShardSpec extends AnyFunSuite {
     dataType = "uint32", fillValue = 0L, compressor = "gzip",
     innerChunkShape = Some(Vec3(8, 8, 4)))
   // inner grid 2x2x2 = 8 slots
+
+  /** C-order chunk bytes <-> F-order voxels, as the sink and scan do */
+  private def toF(b: Array[Byte], cs: Vec3, dtb: Int): Array[Long] =
+    Codec.decodeRawToLongs(ChunkLayout.transpose(b, cs, dtb, cToF = true), dtb)
+  private def fromF(v: Array[Long], cs: Vec3, dtb: Int): Array[Byte] =
+    ChunkLayout.transpose(Codec.encodeRawFromLongs(v, dtb), cs, dtb, cToF = false)
 
   private def mkVox(): Array[Long] = {
     val vox = new Array[Long]((16 * 16 * 8).toInt)
@@ -49,7 +55,7 @@ class Zarr3ShardSpec extends AnyFunSuite {
       if (off != -1L) {
         val bytes = java.util.Arrays.copyOfRange(shard, off.toInt,
           (off + len).toInt)
-        val sub = Zarr3IO.decodeChunkToF(
+        val sub = toF(
           graft.core.Codec.gunzip(bytes), inner, m.dtypeBytes)
         for (z <- 0L until inner.z; y <- 0L until inner.y;
             x <- 0L until inner.x) {
@@ -94,7 +100,7 @@ class Zarr3ShardSpec extends AnyFunSuite {
     val inner = mz.innerChunkShape.get
     val (off, len) = idx(0) // inner chunk (0,0,0) is present
     assert(off != -1L)
-    val sub = Zarr3IO.decodeChunkToF(
+    val sub = toF(
       graft.core.Codec.unzstd(
         java.util.Arrays.copyOfRange(shard, off.toInt, (off + len).toInt)),
       inner, mz.dtypeBytes)
@@ -126,10 +132,10 @@ class Zarr3ShardSpec extends AnyFunSuite {
     val f0 = Array.tabulate(n)(i => (i * 7L + 3) % 199)
     val f1 = Array.tabulate(n)(i => (i * 13L + 11) % 211)
     val dtb = 4
-    val bytes = Zarr3IO.encodeChunkFromF(f0, cs, dtb) ++
-      Zarr3IO.encodeChunkFromF(f1, cs, dtb)
+    val bytes = fromF(f0, cs, dtb) ++
+      fromF(f1, cs, dtb)
     val frameBytes = n * dtb
-    val back = Zarr3IO.decodeChunkToF(
+    val back = toF(
       java.util.Arrays.copyOfRange(bytes, frameBytes, 2 * frameBytes),
       cs, dtb)
     assert(back.sameElements(f1))
