@@ -216,22 +216,17 @@ object AnnotationQueries {
       // sections, one object per annotation id (reader.py:103-137). The
       // fixture materializes the aid % 35 == 0 subset — enough for the
       // point-lookup entry without 10k tiny files per sf.
-      val byIdDir = Paths.get(s"$Root/by_id")
-      Files.createDirectories(byIdDir)
-      val byIdStr = byIdDir.toString
-      pointsDf(s, sfDir).filter(col("aid") % 35 === 0)
-        .foreachPartition { rows: Iterator[Row] =>
-          rows.foreach { r =>
-            val aid = r.getLong(0)
-            val ann = Annotation(aid,
-              Array(r.getLong(1).toFloat, r.getLong(2).toFloat,
-                r.getLong(3).toFloat),
-              (4 until 11).map(i => r.getLong(i).toDouble).toArray)
-            val rels = Seq(Seq(relSegid(0, aid)), Seq(relSegid(1, aid)))
-            Files.write(Paths.get(byIdStr, aid.toString),
-              AnnotationCodec.encodeSingle(PointSpec, ann, rels))
-          }
-        }
+      import s.implicits._
+      graft.sources.ShardedIO.writeLabeled(
+        pointsDf(s, sfDir).filter(col("aid") % 35 === 0).map { r =>
+          val aid = r.getLong(0)
+          val ann = Annotation(aid,
+            Array(r.getLong(1).toFloat, r.getLong(2).toFloat,
+              r.getLong(3).toFloat),
+            (4 until 11).map(i => r.getLong(i).toDouble).toArray)
+          val rels = Seq(Seq(relSegid(0, aid)), Seq(relSegid(1, aid)))
+          (aid, AnnotationCodec.encodeSingle(PointSpec, ann, rels))
+        }.toDF("label", "payload"), s"$Root/by_id", None)
     }
   }
 
@@ -295,6 +290,7 @@ object AnnotationQueries {
         s"${Fixtures.srcStamp(sfDir)}|v3|annsh-v3", wipe = Seq(ShardedLayerDir)) {
       import s.implicits._
       import scala.jdk.CollectionConverters._
+      import graft.sources.ShardedIO.{readLabeled, writeLabeled}
       val spec = annShardSpec
       AnnotationCodec.writeInfo(ShardedLayerDir, PointSpec,
         byId = Some(("by_id", Some(spec))),
@@ -308,20 +304,21 @@ object AnnotationQueries {
       // multi-annotation lists (reader.py:321-339), and the spatial
       // level's cells keyed by their compressed morton code
       // (annotation/reader.py:253-257)
-      val byName = (n: String) => n.toLong
-      val cell = (n: String) => {
-        val Array(gx, gy, gz) = n.split("_").map(_.toLong)
-        Morton.encode(Vec3(gx, gy, gz), Vec3(2, 2, 1))
-      }
-      Seq((s"$Root/by_id", "by_id", "\\d+", byName),
-        (s"$Root/rel_presynaptic_to", "rel_presynaptic_to", "\\d+", byName),
-        (s"$Root/points/spatial1", "spatial1", "\\d+_\\d+_\\d+", cell)).foreach {
-        case (src, out, names, label) =>
-          val objects = Files.list(Paths.get(src)).iterator.asScala
-            .map(_.getFileName.toString).filter(_.matches(names)).toSeq.sorted
-          graft.sources.ShardedIO.writeLabeled(objects.toDS()
-            .map(n => (label(n), Files.readAllBytes(Paths.get(src, n))))
-            .toDF("label", "payload"), s"$ShardedLayerDir/$out", spec)
+      def labeled(src: String) = readLabeled(graft.sources.ScanSizing
+        .listedNames(s, Paths.get(src), _.matches("\\d+"), 0L,
+          repartitionBySize = false).map(_.toLong), src, None)
+      val spatial1 = s"$Root/points/spatial1"
+      val cells = Files.list(Paths.get(spatial1)).iterator.asScala
+        .map(_.getFileName.toString).filter(_.matches("\\d+_\\d+_\\d+")).toSeq.sorted
+        .toDS().map { n =>
+          val Array(gx, gy, gz) = n.split("_").map(_.toLong)
+          (Morton.encode(Vec3(gx, gy, gz), Vec3(2, 2, 1)),
+            Files.readAllBytes(Paths.get(spatial1, n)))
+        }
+      Seq("by_id" -> labeled(s"$Root/by_id"),
+        "rel_presynaptic_to" -> labeled(s"$Root/rel_presynaptic_to"),
+        "spatial1" -> cells).foreach { case (out, rows) =>
+        writeLabeled(rows.toDF("label", "payload"), s"$ShardedLayerDir/$out", Some(spec))
       }
     }
   }
@@ -662,12 +659,11 @@ object AnnotationQueries {
         val relDir = s"$Root/rel_presynaptic_to"
         val spec = PointSpec
         // streamed listing (no O(objects) driver Seq) + open-cost sizing
-        graft.sources.ScanSizing
-          .listedNames(s, Paths.get(relDir), _.toLong < 8, 0L)
-          .flatMap { n =>
-            val segid = n.toLong
-            AnnotationCodec.decode(spec,
-              Files.readAllBytes(Paths.get(relDir, n))).map { a =>
+        graft.sources.ShardedIO.readLabeled(graft.sources.ScanSizing
+            .listedNames(s, Paths.get(relDir), _.toLong < 8, 0L).map(_.toLong),
+            relDir, None)
+          .flatMap { case (segid, bin) =>
+            AnnotationCodec.decode(spec, bin).map { a =>
               (segid, a.id, a.geometry(0).toLong, a.geometry(1).toLong,
                 a.geometry(2).toLong)
             }
@@ -690,12 +686,11 @@ object AnnotationQueries {
         // streamed listing (no O(objects) driver Seq) + file-count-aware
         // sizing: was names/8 = 357 launch-dominated tasks of 8 tiny
         // files each at bench scale
-        graft.sources.ScanSizing
-          .listedNames(s, Paths.get(byIdDir), _ => true, 0L)
-          .map { n =>
-            val aid = n.toLong
-            val (a, rels) = AnnotationCodec.decodeSingle(spec, 2, aid,
-              Files.readAllBytes(Paths.get(byIdDir, n)))
+        graft.sources.ShardedIO.readLabeled(graft.sources.ScanSizing
+            .listedNames(s, Paths.get(byIdDir), _ => true, 0L).map(_.toLong),
+            byIdDir, None)
+          .map { case (aid, bin) =>
+            val (a, rels) = AnnotationCodec.decodeSingle(spec, 2, aid, bin)
             (aid, a.geometry(0).toLong, a.geometry(1).toLong,
               a.geometry(2).toLong, a.props(0).toLong,
               rels(0).head, rels(1).head)
@@ -717,34 +712,22 @@ object AnnotationQueries {
       (s, dir) => {
         ensureSharded(s, dir)
         import s.implicits._
-        import scala.jdk.CollectionConverters._
         // route on the layer's declared id index, like the reference
-        val (key, shOpt) = AnnotationCodec.readByIdIndex(ShardedLayerDir).get
-        val spec = shOpt.getOrElse(
-          throw new IllegalStateException("fixture id index not sharded"))
+        val (key, sharding) = AnnotationCodec.readByIdIndex(ShardedLayerDir).get
         val annSpec = PointSpec
-        val shardDir = s"$ShardedLayerDir/$key"
         // the id set under test: the same by-id subset p8e reads —
-        // streamed listing, no repartition (groupByKey re-keys anyway)
-        graft.sources.ScanSizing
-          .listedNames(s, Paths.get(s"$Root/by_id"), _ => true, 0L,
-            repartitionBySize = false)
-          .map(_.toLong)
-          .groupByKey(aid => spec.shardLocation(aid)._1)
-          .flatMapGroups { (shardNo, it) =>
-            // index + coalesced byte-range reads (sharding.py:731-766
-            // shape) — NEVER the whole shard file; at real annotation
-            // scale shards are multi-GB and only the requested ids'
-            // ranges should move
-            val path =
-              Paths.get(shardDir, spec.shardFilename(shardNo)).toString
-            graft.sources.ShardedIO.readLabelsRanged(path, spec, it.toSeq)
-              .iterator.map { case (aid, bin) =>
-                val (a, rels) = AnnotationCodec.decodeSingle(annSpec, 2, aid, bin)
-                (aid, a.geometry(0).toLong, a.geometry(1).toLong,
-                  a.geometry(2).toLong, a.props(0).toLong,
-                  rels(0).head, rels(1).head)
-              }
+        // streamed listing, no repartition (the read re-keys by shard);
+        // index + coalesced byte-range reads (sharding.py:731-766 shape),
+        // NEVER the whole shard file
+        graft.sources.ShardedIO.readLabeled(graft.sources.ScanSizing
+            .listedNames(s, Paths.get(s"$Root/by_id"), _ => true, 0L,
+              repartitionBySize = false).map(_.toLong),
+            s"$ShardedLayerDir/$key", sharding)
+          .map { case (aid, bin) =>
+            val (a, rels) = AnnotationCodec.decodeSingle(annSpec, 2, aid, bin)
+            (aid, a.geometry(0).toLong, a.geometry(1).toLong,
+              a.geometry(2).toLong, a.props(0).toLong,
+              rels(0).head, rels(1).head)
           }.toDF("aid", "ax", "ay", "az", "score", "presyn", "postsyn")
       },
       Some(s"""WITH $PtsCte
@@ -765,25 +748,16 @@ object AnnotationQueries {
       (s, dir) => {
         ensureSharded(s, dir)
         import s.implicits._
-        val (key, shOpt) = AnnotationCodec
+        val (key, sharding) = AnnotationCodec
           .readRelationshipIndex(ShardedLayerDir, "presynaptic_to").get
-        val spec = shOpt.getOrElse(
-          throw new IllegalStateException("relation index not sharded"))
         val annSpec = PointSpec
-        val shardDir = s"$ShardedLayerDir/$key"
-        val segids = (0L until 8L)
-        s.createDataset(segids.toSeq)
-          .groupByKey(segid => spec.shardLocation(segid)._1)
-          .flatMapGroups { (shardNo, it) =>
-            val path =
-              Paths.get(shardDir, spec.shardFilename(shardNo)).toString
-            graft.sources.ShardedIO.readLabelsRanged(path, spec, it.toSeq)
-              .iterator.flatMap { case (segid, bin) =>
-                AnnotationCodec.decode(annSpec, bin).map { a =>
-                  (segid, a.id, a.geometry(0).toLong,
-                    a.geometry(1).toLong, a.geometry(2).toLong)
-                }
-              }
+        graft.sources.ShardedIO.readLabeled(s.createDataset(0L until 8L),
+            s"$ShardedLayerDir/$key", sharding)
+          .flatMap { case (segid, bin) =>
+            AnnotationCodec.decode(annSpec, bin).map { a =>
+              (segid, a.id, a.geometry(0).toLong,
+                a.geometry(1).toLong, a.geometry(2).toLong)
+            }
           }.toDF("segid", "aid", "ax", "ay", "az")
       },
       Some(s"""WITH $PtsCte
@@ -805,12 +779,9 @@ object AnnotationQueries {
         import s.implicits._
         val lvl = AnnotationCodec.readSpatial(ShardedLayerDir)
           .find(_.key == "spatial1").get
-        val spec = lvl.sharding.getOrElse(
-          throw new IllegalStateException("spatial level not sharded"))
         val grid = Vec3(lvl.gridShape(0), lvl.gridShape(1), lvl.gridShape(2))
         val cs = Vec3(lvl.chunkSize(0), lvl.chunkSize(1), lvl.chunkSize(2))
         val annSpec = PointSpec
-        val shardDir = s"$ShardedLayerDir/${lvl.key}"
         // query bbox: x [0,30), y [10,60), z [0,32) -> cells gx=0 only
         val (bx0, bx1, by0, by1, bz0, bz1) = (0L, 30L, 10L, 60L, 0L, 32L)
         val cells = for {
@@ -819,18 +790,13 @@ object AnnotationQueries {
           gz <- (bz0 / cs.z) to ((bz1 - 1) / cs.z)
           if gx < grid.x && gy < grid.y && gz < grid.z
         } yield Morton.encode(Vec3(gx, gy, gz), grid)
-        s.createDataset(cells.toSeq)
-          .groupByKey(code => spec.shardLocation(code)._1)
-          .flatMapGroups { (shardNo, it) =>
-            val path =
-              Paths.get(shardDir, spec.shardFilename(shardNo)).toString
-            graft.sources.ShardedIO.readLabelsRanged(path, spec, it.toSeq)
-              .iterator.flatMap { case (_, bin) =>
-                AnnotationCodec.decode(annSpec, bin).map { a =>
-                  (a.id, a.geometry(0).toLong, a.geometry(1).toLong,
-                    a.geometry(2).toLong)
-                }
-              }
+        graft.sources.ShardedIO.readLabeled(s.createDataset(cells),
+            s"$ShardedLayerDir/${lvl.key}", lvl.sharding)
+          .flatMap { case (_, bin) =>
+            AnnotationCodec.decode(annSpec, bin).map { a =>
+              (a.id, a.geometry(0).toLong, a.geometry(1).toLong,
+                a.geometry(2).toLong)
+            }
           }
           // crop to the original (non-cell-aligned) bbox, reader.py:306
           .filter(t => t._2 >= bx0 && t._2 < bx1 && t._3 >= by0 &&
@@ -868,10 +834,8 @@ object AnnotationQueries {
         AnnotationCodec.writeInfo(target, spec,
           byId = Some(("by_id", None)),
           relationships = Relations.map(r => (r, s"rel_$r")))
-        val byIdDir = Paths.get(target, "by_id")
-        Files.createDirectories(byIdDir)
-        val byIdStr = byIdDir.toString
-        table(s, dir, "events").filter(col("event_id") % 20 === 0)
+        val byIdDir = s"$target/by_id"
+        val rows = table(s, dir, "events").filter(col("event_id") % 20 === 0)
           .select(col("event_id").cast("long").as("aid"),
             (col("event_id") % 64).cast("long").as("ax"),
             (col("user_id") % 64).cast("long").as("ay"),
@@ -881,28 +845,26 @@ object AnnotationQueries {
             ((col("user_id") * 3) % 256).cast("long").as("g"),
             ((col("user_id") * 7) % 256).cast("long").as("b"),
             ((col("user_id") * 11) % 256).cast("long").as("a"))
-          .foreachPartition { rows: Iterator[Row] =>
-            rows.foreach { row =>
-              val aid = row.getLong(0)
-              val ann = Annotation(aid,
-                (1 to 3).map(i => row.getLong(i).toFloat).toArray,
-                (4 to 8).map(i => row.getLong(i).toDouble).toArray)
-              val rels = Seq(Seq(relSegid(0, aid)), Seq(relSegid(1, aid)))
-              Files.write(Paths.get(byIdStr, aid.toString),
-                AnnotationCodec.encodeSingle(spec, ann, rels))
-            }
+          .map { row =>
+            val aid = row.getLong(0)
+            val ann = Annotation(aid,
+              (1 to 3).map(i => row.getLong(i).toFloat).toArray,
+              (4 to 8).map(i => row.getLong(i).toDouble).toArray)
+            val rels = Seq(Seq(relSegid(0, aid)), Seq(relSegid(1, aid)))
+            (aid, AnnotationCodec.encodeSingle(spec, ann, rels))
           }
+        graft.sources.ShardedIO.writeLabeled(rows.toDF("label", "payload"),
+          byIdDir, None)
         // read side: spec + relationship count re-derived from the
         // written info, one decode per by-id object
         val rspec = AnnotationCodec.readInfo(target)
         val nRels = AnnotationCodec.readRelationships(target).size
         // streamed listing (no O(objects) driver Seq) + open-cost sizing
-        graft.sources.ScanSizing
-          .listedNames(s, byIdDir, _ => true, 0L)
-          .map { nm =>
-            val aid = nm.toLong
-            val (a, rels) = AnnotationCodec.decodeSingle(rspec, nRels, aid,
-              Files.readAllBytes(Paths.get(byIdStr, aid.toString)))
+        graft.sources.ShardedIO.readLabeled(graft.sources.ScanSizing
+            .listedNames(s, Paths.get(byIdDir), _ => true, 0L).map(_.toLong),
+            byIdDir, None)
+          .map { case (aid, bin) =>
+            val (a, rels) = AnnotationCodec.decodeSingle(rspec, nRels, aid, bin)
             (aid, a.geometry(0).toLong, a.geometry(1).toLong,
               a.geometry(2).toLong, a.props(0).toLong, a.props(1).toLong,
               a.props(2).toLong, a.props(3).toLong, a.props(4).toLong,

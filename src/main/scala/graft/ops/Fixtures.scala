@@ -1,6 +1,7 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_list, struct}
@@ -69,6 +70,22 @@ object Fixtures {
     if (Files.exists(p)) Files.readString(p) else ""
   }
 
+  /** The file every JVM's [[guard]] locks: beside the fixture tree, as a
+    * wiped lock file would let two JVMs lock two different files. */
+  private val LockFile = "/tmp/graft_fixture.lock"
+  private var locked = false
+
+  /** `body` under an exclusive `FileChannel.lock` on [[LockFile]]; a
+    * guard inside a guard's build runs under the lock already held. */
+  private def exclusive(body: => Unit): Unit = synchronized {
+    if (locked) body
+    else {
+      val ch = FileChannel.open(Paths.get(LockFile), StandardOpenOption.CREATE,
+        StandardOpenOption.WRITE)
+      try { ch.lock(); locked = true; body } finally { locked = false; ch.close() }
+    }
+  }
+
   /** The one rebuild guard. The fixture is current when `marker` holds
     * `stamp` (with `nonce`: starts with it) and every `requires` path
     * exists; then `build` does not run. Otherwise it logs the rebuild
@@ -76,12 +93,12 @@ object Fixtures {
     * `build` and writes the marker last, so a build that throws leaves
     * no marker and the next call rebuilds. With `nonce` the marker is
     * `stamp` plus a per-build nonce, which derived fixtures read back
-    * through [[stampOf]]. Callers hold their builder's lock; markers
-    * guard one JVM only.
+    * through [[stampOf]]. All of it runs under the cross-JVM lock, so a
+    * guard that finds another JVM building waits, then finds its marker.
     */
   def guard(marker: String, stamp: String, wipe: Seq[String] = Nil,
       requires: Seq[String] = Nil, nonce: Boolean = false)(build: => Unit)
-      : Unit = {
+      : Unit = exclusive {
     val m = Paths.get(marker)
     val current = Files.exists(m) && {
       val have = Files.readString(m)

@@ -77,8 +77,8 @@ object MeshQueries {
             (shard, ShardCodec.synthesizeShardWithPreambles(spec, items))
           }
           .foreach { t: (Long, Array[Byte]) =>
-            Files.write(Paths.get(outDir, spec.shardFilename(t._1)), t._2)
-            ()
+            graft.sources.ChunkLayout.put(
+              Paths.get(outDir, spec.shardFilename(t._1)), t._2)
           }
       }
     }

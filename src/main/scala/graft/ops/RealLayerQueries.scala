@@ -536,21 +536,17 @@ object RealLayerQueries {
     // S4 point lookups over the SHARDED layer (test_cloudvolume.py:
     // 285 test_point_reads_sharded): points group by owning SHARD
     // (chunk -> morton -> shard), each task ranged-reads only the
-    // chunks its points land in — no whole-shard read. The chunk
-    // encoding is raw, so once readLabelsRanged has decompressed a
-    // chunk's payload (the shard's dataEncoding=gzip container is
-    // per-chunk) each point value comes out by direct offset math
-    // with no further decode. The random-access pattern of
+    // chunks its points land in through the scan's chunk read
+    // (`ChunkLayout.read`, `ShardedIO.readLabels`) — no whole-shard
+    // read. The chunk encoding is raw, so once the shard's gzip data
+    // encoding is undone each point value comes out by direct offset
+    // math with no further decode. The random-access pattern of
     // proofreading tools against a petabyte sharded layer.
     "s4c_point_lookup_sharded" -> Q(
       (s, dir) => {
         ensure(s, dir)
-        val spec = shardSpec
-        val scale = metaSharded.scale(0)
-        val grid = scale.gridSize
-        val bounds = scale.bounds
-        val cs = scale.chunkSize
-        val shardDir = s"$LayerShardedDir/${scale.key}"
+        val layout = graft.sources.ChunkLayout.precomputed(LayerShardedDir,
+          metaSharded, 0, fillMissing = false)
         val pts = Derived.table(s, dir, "orders")
           .filter(col("o_orderkey") % 7 === 2)
           .select(col("o_orderkey").cast("long").as("pid"),
@@ -559,23 +555,13 @@ object RealLayerQueries {
             ((col("o_orderkey") * 5) % SZ).cast("long").as("z"))
         import s.implicits._
         pts.as[(Long, Long, Long, Long)]
-          .groupByKey { t =>
-            val m = Morton.encode(
-              Vec3(t._2 / CX, t._3 / CY, t._4 / CZ), grid)
-            spec.shardLocation(m)._1
-          }
-          .flatMapGroups { (shardNo, it) =>
-            val wanted = it.toSeq
-            val byMorton = wanted.groupBy(t =>
-              Morton.encode(Vec3(t._2 / CX, t._3 / CY, t._4 / CZ), grid))
-            val path = Paths.get(shardDir,
-              spec.shardFilename(shardNo)).toString
-            graft.sources.ShardedIO
-              .readLabelsRanged(path, spec, byMorton.keys.toSeq)
-              .iterator.flatMap { case (m, payload) =>
-                val g = Morton.decode(m, grid)
-                val cb = Geom.chunkBbox(g, bounds, cs)
-                byMorton(m).map { case (pid, x, y, z) =>
+          .groupByKey(t => layout.shardOf(Vec3(t._2 / CX, t._3 / CY, t._4 / CZ)))
+          .flatMapGroups { (_, it) =>
+            val byChunk = it.toSeq.groupBy(t => Vec3(t._2 / CX, t._3 / CY, t._4 / CZ))
+            layout.read(byChunk.keys.toSeq, needPayload = true)
+              .flatMap { case (g, payload) =>
+                val cb = layout.chunkBbox(g)
+                byChunk(g).map { case (pid, x, y, z) =>
                   val idx = (x - cb.minpt.x) + cb.size.x *
                     ((y - cb.minpt.y) + cb.size.y * (z - cb.minpt.z))
                   val bb = java.nio.ByteBuffer.wrap(payload)

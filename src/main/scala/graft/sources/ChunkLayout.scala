@@ -98,9 +98,7 @@ final case class ChunkLayout(dir: String, label: String, root: String,
       }
       case Shards.Minishard(spec) =>
         val byLabel = pts.map(g => Morton.encode(g, gridSize) -> g).toMap
-        byLabel.keys.toSeq.groupBy(spec.shardLocation(_)._1).iterator
-          .flatMap { case (_, labels) => ShardedIO.readLabelsRanged(
-            objectPath(byLabel(labels.head)).toString, spec, labels) }
+        ShardedIO.readLabels(root, spec, byLabel.keys.toSeq)
           .map { case (l, p) => (byLabel(l), p) }
       case Shards.Indexed(per) =>
         pts.groupBy(shardOf).iterator.flatMap { case (_, gs) =>

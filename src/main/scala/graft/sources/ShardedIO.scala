@@ -1,8 +1,8 @@
 package graft.sources
 
 import java.io.RandomAccessFile
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -17,7 +17,10 @@ import graft.core._
   * pattern object-store byte-range GETs need at 100 TB.
   *
   * Chunk reads are the `neuroglancer` scan's: it plans each shard's
-  * chunks into one task, which reads them with [[readLabelsRanged]].
+  * chunks into one task, which reads them with [[readLabels]]. Every
+  * other label-keyed object (annotations, skeletons) is read with
+  * [[readLabeled]] and written with [[writeLabeled]], sharded or not as
+  * the layer's info declares.
   *
   * Write = S12 shard synthesis through the one chunk sink: one shuffle
   * groups each shard's chunks into one task, which assembles the file
@@ -56,18 +59,38 @@ object ShardedIO {
     buf
   }
 
-  /** A shard file's fixed index: (start, end) of each minishard index. */
-  private def fixedIndex(raf: RandomAccessFile, spec: ShardingSpec): Array[(Long, Long)] =
-    ShardCodec.decodeFixedIndex(
+  /** (minishard, entry) of minishards `msns` of an open shard file: the
+    * fixed index, then one bounded read per non-empty minishard index. */
+  private def indexEntries(raf: RandomAccessFile, spec: ShardingSpec,
+      msns: Seq[Long]): Seq[(Long, ShardCodec.MinishardEntry)] = {
+    val fixed = ShardCodec.decodeFixedIndex(
       rangedRead(raf, 0L, ShardCodec.indexLength(spec), "fixed index"), spec)
+    msns.flatMap { msn =>
+      val (s0, e0) = fixed(msn.toInt)
+      if (e0 <= s0) Seq.empty
+      else ShardCodec.decodeMinishardIndex(
+        rangedRead(raf, s0, e0 - s0, "minishard index"), spec).map(msn -> _)
+    }
+  }
+
+  /** (label, payload) of each of `labels` stored in the shard files of
+    * `dir`, read in the calling task: labels grouped by shard file, each
+    * shard read with [[readLabelsRanged]]. An absent label, or one in an
+    * unwritten shard, yields nothing (sharding.py:573-579). The task
+    * side of [[readLabeled]] and of the scan's sharded chunk reads. */
+  def readLabels(dir: String, spec: ShardingSpec,
+      labels: Seq[Long]): Iterator[(Long, Array[Byte])] =
+    labels.groupBy(spec.shardLocation(_)._1).iterator.flatMap { case (shard, ls) =>
+      readLabelsRanged(Paths.get(dir, spec.shardFilename(shard)).toString, spec, ls)
+    }
 
   /** Ranged read of a label set from ONE shard file — fixed index,
     * then only the needed minishard indexes, then data ranges
     * coalesced into bundled reads (sharding.py:731-766). Never loads
     * the whole shard: the executor-side access pattern that survives
-    * multi-GB shards (byte-range GETs at 100 TB). Shared by the image
-    * cutout and the annotation by-id lookup. Returns (label, payload)
-    * for the labels present, gunzipped per the spec's data encoding.
+    * multi-GB shards (byte-range GETs at 100 TB). Returns (label,
+    * payload) for the labels present, gunzipped per the spec's data
+    * encoding.
     */
   def readLabelsRanged(shardPath: String, spec: ShardingSpec,
       labels: Seq[Long]): Seq[(Long, Array[Byte])] =
@@ -90,15 +113,9 @@ object ShardedIO {
     if (!Files.exists(Paths.get(shardPath))) return Seq.empty
     val raf = new RandomAccessFile(shardPath, "r")
     try {
-      val fixed = fixedIndex(raf, spec)
-      // one index read per needed minishard
-      val neededMsn = labels.map(l => spec.shardLocation(l)._2).distinct
-      val entries = neededMsn.flatMap { msn =>
-        val (s0, e0) = fixed(msn.toInt)
-        if (e0 <= s0) Seq.empty
-        else ShardCodec.decodeMinishardIndex(
-          rangedRead(raf, s0, e0 - s0, "minishard index"), spec)
-      }.filter(e => want.contains(e.label))
+      val entries = indexEntries(raf, spec,
+        labels.map(l => spec.shardLocation(l)._2).distinct)
+        .map(_._2).filter(e => want.contains(e.label))
       // coalesce adjacent data ranges into bundled reads (S7/W3)
       val ranges = entries.map(e => (e.offset, e.offset + e.size))
       val bundles = ShardIndex.coalesceRanges(ranges)
@@ -119,6 +136,33 @@ object ShardedIO {
     } finally raf.close()
   }
 
+  /** Label `l`'s own object: `dir/<l as an unsigned (uint64) decimal>`. */
+  private def labelPath(dir: String, l: Long): Path =
+    Paths.get(dir, java.lang.Long.toUnsignedString(l))
+
+  /** The one label-keyed read (annotations by id, relationship or
+    * spatial cell, skeletons; ShardReader.get_data or a plain get,
+    * sharding.py:670-788): (id, payload) of each of the distinct `ids`
+    * stored under `dir`, laid out as the layer's info declares.
+    *  - `Some(spec)`: ids grouped by shard file in one shuffle, each
+    *    group read by one task with [[readLabels]].
+    *  - `None`: each id its own object, read where the id is (no exchange).
+    * An absent id, or one in an unwritten shard, yields no row. */
+  def readLabeled(ids: Dataset[Long], dir: String,
+      sharding: Option[ShardingSpec]): Dataset[(Long, Array[Byte])] = {
+    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
+    sharding match {
+      case Some(spec) =>
+        ids.groupByKey(spec.shardLocation(_)._1)(Encoders.scalaLong)
+          .flatMapGroups((_, it: Iterator[Long]) => readLabels(dir, spec, it.toSeq))(enc)
+      case None =>
+        ids.flatMap { id =>
+          try Some(id -> Files.readAllBytes(labelPath(dir, id)))
+          catch { case _: NoSuchFileException => None }
+        }(enc)
+    }
+  }
+
   /** S12: write chunk rows (gx, gy, gz, payload) as shard files, through
     * the one chunk sink ([[ChunkLayout.write]]): one shuffle groups each
     * shard's chunks, keyed by morton code, into one task, which
@@ -131,17 +175,24 @@ object ShardedIO {
       ChunkLayout.precomputed(layerDir, meta, mip, fillMissing = false))
   }
 
-  /** The label-keyed shard writer (sharding.py:868-983
-    * synthesize_shard_files) for non-grid payloads — by-id annotations,
-    * relationship lists, spatial cells, skeletons: rows (label, payload)
-    * grouped by shard file in one shuffle, each shard synthesized whole
-    * and put under `dir` ([[ChunkLayout.put]]). */
-  def writeLabeled(rows: DataFrame, dir: String, spec: ShardingSpec): Unit = {
-    def shard(r: Row) = spec.shardLocation(r.getLong(0))._1
+  /** The write half of [[readLabeled]]: rows (label, payload) under
+    * `dir`, every object through [[ChunkLayout.put]]. `Some(spec)`
+    * groups rows by shard file in one shuffle and synthesizes each shard
+    * whole (sharding.py:868-983); `None` puts one object per row. */
+  def writeLabeled(rows: DataFrame, dir: String,
+      sharding: Option[ShardingSpec]): Unit = {
     Files.createDirectories(Paths.get(dir))
-    ChunkLayout.putGroups(rows, shard)(rs =>
-      Some(Paths.get(dir, spec.shardFilename(shard(rs.head))) ->
-        ShardCodec.synthesizeShard(spec, rs.map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)))))
+    sharding match {
+      case Some(spec) =>
+        def shard(r: Row) = spec.shardLocation(r.getLong(0))._1
+        ChunkLayout.putGroups(rows, shard)(rs =>
+          Some(Paths.get(dir, spec.shardFilename(shard(rs.head))) ->
+            ShardCodec.synthesizeShard(spec, rs.map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)))))
+      case None =>
+        rows.foreachPartition { it: Iterator[Row] =>
+          it.foreach(r => ChunkLayout.put(labelPath(dir, r.getLong(0)), r.getAs[Array[Byte]](1)))
+        }
+    }
   }
 
   /** S6/J3/A7: the minishard-index DataFrame — one row per stored
@@ -162,14 +213,10 @@ object ShardedIO {
     spark.createDataset(shardFiles).flatMap { path =>
       val raf = new RandomAccessFile(path, "r")
       try {
-        val fixed = fixedIndex(raf, spec)
         val name = Paths.get(path).getFileName.toString
-        fixed.zipWithIndex.flatMap { case ((s0, e0), msn) =>
-          if (e0 <= s0) Seq.empty
-          else ShardCodec.decodeMinishardIndex(
-              rangedRead(raf, s0, e0 - s0, "minishard index"), spec)
-            .map(e => (name, msn.toLong, e.label, e.offset, e.size))
-        }.toSeq
+        indexEntries(raf, spec, 0L until (1L << spec.minishardBits)).map {
+          case (msn, e) => (name, msn, e.label, e.offset, e.size)
+        }
       } finally raf.close()
     }.toDF("shard_file", "minishard", "label", "offset", "size")
   }

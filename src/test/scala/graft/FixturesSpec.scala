@@ -141,6 +141,26 @@ class FixturesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(derivedRuns == 2)
   }
 
+  test("a guard waits for another JVM's build under the lock, then skips it") {
+    val d = dir(); val marker = s"$d/.built_from"
+    val (ready, built) = (s"$d/ready", s"$d/tree/built")
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val child = new ProcessBuilder(java, "-Xmx128m", "-cp",
+      System.getProperty("java.class.path"), FixtureLockHolder.getClass.getName.stripSuffix("$"),
+      marker, "s1", ready, built).inheritIO().start()
+    try {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!exists(ready) && child.isAlive && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(exists(ready), "the child JVM never started its build")
+      var runs = 0
+      Fixtures.guard(marker, "s1", wipe = Seq(s"$d/tree")) { runs += 1 }
+      assert(runs == 0, "the guard rebuilt while another JVM was building")
+      assert(read(marker) == "s1" && read(built) == "child")
+      assert(child.waitFor() == 0)
+    } finally child.destroyForcibly()
+  }
+
   test("rmTree deletes a nested tree and ignores a missing one") {
     val d = dir()
     touch(s"$d/t/a/b/c"); touch(s"$d/t/d")
@@ -205,5 +225,21 @@ class FixturesSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got(g) == expected(g, Bbox(lo, lo + block)), s"block $g")
     }
     assert(got.values.forall(_.size == block.x * block.y * block.z))
+  }
+}
+
+/** A second JVM for [[FixturesSpec]]: builds the fixture at `marker`
+  * under [[Fixtures.guard]], touching `ready` when its build starts and
+  * writing `built` two seconds later, before the guard writes the marker.
+  */
+object FixtureLockHolder {
+  def main(args: Array[String]): Unit = {
+    val Array(marker, stamp, ready, built) = args
+    Fixtures.guard(marker, stamp, wipe = Seq(Paths.get(built).getParent.toString)) {
+      Files.writeString(Paths.get(ready), "")
+      Thread.sleep(2000)
+      Files.createDirectories(Paths.get(built).getParent)
+      Files.writeString(Paths.get(built), "child")
+    }
   }
 }
